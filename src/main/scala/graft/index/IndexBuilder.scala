@@ -14,7 +14,10 @@ import graft.analysis.Analyzer
   *  - docs      — forward/stored fields (.fdt/.fdx analog)
   *  - postings  — (term, docid, tf, len, positions) logical view
   *                (.frq/.prx analog)
-  *  - termDict  — (term, df, cf) (.tis/.tii analog; broadcastable)
+  *  - termDict  — (term, df, cf), one row per term (.tis/.tii analog):
+  *                the whole-dictionary view for suggest, trigrams and
+  *                CheckIndex. Query-time df lookups read [[dictRows]]
+  *                instead (Searcher.dfOf).
   *  - docLens   — exact per-doc token counts (exact-int replacement for
   *                the lossy norm byte, Similarity.cs:398-413 — BM25 wants
   *                exact lengths)
@@ -33,7 +36,19 @@ final case class InvertedIndex(
     deleted: Option[DataFrame] = None,
     /** Optional persisted (gram, term, df) dictionary trigram index
       * ([[Trigrams]]) — bounds fuzzy/suggest candidate scans. */
-    trigrams: Option[DataFrame] = None) {
+    trigrams: Option[DataFrame] = None,
+    /** Per-segment (term, df, cf) rows NOT aggregated across segments
+      * (a segmented store's union of its segment dict tables), so a
+      * term appears once per segment that holds it; None when
+      * `termDict` already has one row per term. */
+    segmentDicts: Option[DataFrame] = None) {
+
+  /** Dictionary rows for df lookups: a single-stage scan with no
+    * aggregate or shuffle, so an `In` filter on it pushes down to every
+    * segment's dict table; callers sum df per term on the driver
+    * (TermInfosReader.Get over each segment's .tis,
+    * TermInfosReader.cs:178-224). */
+  def dictRows: DataFrame = segmentDicts.getOrElse(termDict)
 
   /** Anti-join the live delete set (deleted docs are skipped at
     * iteration, stats stay stale until merge — SegmentTermDocs.Next /
@@ -67,7 +82,8 @@ final case class InvertedIndex(
       .select(col("term"), col("docid"), col("tf"), col("len"))
   }
 
-  /** Scoring-only variant of [[postingsForTermSet]]. */
+  /** Scoring-only postings for a computed (small) term-set DataFrame —
+    * broadcast semi-joined against the block table before decode. */
   def postingsForTermSetScoring(terms: DataFrame): DataFrame = blocks match {
     case Some(b) =>
       live(PostingBlocks.toScoring(b.join(broadcast(terms), Seq("term"))))
@@ -75,9 +91,18 @@ final case class InvertedIndex(
       .select(col("term"), col("docid"), col("tf"), col("len"))
   }
 
-  /** Scoring-only variant of [[postingsWhereTerm]]. */
-  def postingsWhereTermScoring(dictPred: Column): DataFrame =
-    postingsForTermSetScoring(termDict.filter(dictPred).select("term"))
+  /** Scoring-only postings for every term matching a dictionary
+    * predicate (constant-score multi-term rewrites, MultiTermQuery.cs:84).
+    * The predicate is a pure function of `term`, so a block-backed
+    * index applies it to the block table directly — a pushed-down scan
+    * filter instead of a dictionary scan broadcast into the blocks; the
+    * in-memory flavor matches its cached one-row-per-term dictionary
+    * rather than every posting. */
+  def postingsWhereTermScoring(dictPred: Column): DataFrame = blocks match {
+    case Some(b) => live(PostingBlocks.toScoring(b.filter(dictPred)))
+    case None =>
+      postingsForTermSetScoring(termDict.filter(dictPred).select("term"))
+  }
 
   /** Payload-materializing variant of [[postingsFor]] — adds the
     * `payloads` column (parallel to positions). Block-backed indexes
@@ -92,21 +117,6 @@ final case class InvertedIndex(
         "payload query over an index built without payloads " +
           "(use IndexBuilder.buildPay or a block-backed store)")
       postings.filter(col("term").isin(terms: _*))
-  }
-
-  /** Postings for every term matching a dictionary predicate (multi-term
-    * rewrites: prefix/wildcard/range/fuzzy — MultiTermQuery.cs:58-200).
-    * The matched term set is joined (broadcast) against blocks before
-    * decode. */
-  def postingsWhereTerm(dictPred: Column): DataFrame =
-    postingsForTermSet(termDict.filter(dictPred).select("term"))
-
-  /** Postings for a computed (small) term-set DataFrame — broadcast
-    * semi-joined against the block table before decode. */
-  def postingsForTermSet(terms: DataFrame): DataFrame = blocks match {
-    case Some(b) =>
-      live(PostingBlocks.toPostings(b.join(broadcast(terms), Seq("term"))))
-    case None => postings.join(broadcast(terms), Seq("term"))
   }
 }
 
@@ -422,8 +432,11 @@ object IndexBuilder {
         lineageTag) match {
       case None => prev.getOrElse(Manifest(0L, Nil))
       case Some(meta) =>
+        // the live delete sets carry forward: appended docids sit past
+        // every deleted one, so the old sets hide exactly what they did
         val m = Manifest(prev.map(_.version + 1).getOrElse(1L),
-          prev.map(_.segments).getOrElse(Nil) :+ meta)
+          prev.map(_.segments).getOrElse(Nil) :+ meta,
+          prev.map(_.deletes).getOrElse(Nil))
         SegmentStore.commit(root, m)
         m
     }

@@ -260,8 +260,12 @@ object SegmentStore {
       views: Seq[SegmentView]): InvertedIndex = {
     val docs0 = views.map(_.docs).reduce(_ unionByName _)
     val blocks = views.map(_.blocks).reduce(_ unionByName _)
-    // global dict: docid spaces are disjoint → df/cf add across segments
-    val dict = views.map(_.dict).reduce(_ unionByName _).groupBy("term")
+    // global dict: docid spaces are disjoint → df/cf add across segments.
+    // Query-time df lookups read the un-aggregated union instead (one
+    // pushed-down scan, per-term sums on the driver); the aggregate only
+    // runs for whole-dictionary consumers.
+    val segDicts = views.map(_.dict).reduce(_ unionByName _)
+    val dict = segDicts.groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"))
     // live delete set applied as an anti-join on docid (SegmentTermDocs
     // skipping deleted docs); stats/df stay un-discounted until a merge
@@ -270,9 +274,11 @@ object SegmentStore {
       if (m.deletes.isEmpty) None
       else Some(m.deletes
         .map(d => spark.read.parquet(s"$root/$d"))
-        .reduce(_ unionByName _).select("docid").distinct())
+        .reduce(_ unionByName _).select("docid"))
     // no broadcast hint: Spark auto-broadcasts small delete sets; a
-    // massive delete backlog falls back to a shuffled anti-join
+    // massive delete backlog falls back to a shuffled anti-join. No
+    // distinct either: an anti-join ignores duplicates, and a distinct
+    // would add an aggregate (a shuffle job) to every query on the store
     def live(df: DataFrame): DataFrame = deleted match {
       case Some(del) => df.join(del, Seq("docid"), "left_anti")
       case None => df
@@ -283,7 +289,8 @@ object SegmentStore {
     val n = m.numDocs
     InvertedIndex(docs, postings, dict, docLens,
       n, m.sumLen.toDouble / n,
-      blocks = Some(blocks), deleted = deleted)
+      blocks = Some(blocks), deleted = deleted,
+      segmentDicts = Some(segDicts))
   }
 
   /** Drop segment directories not referenced by the latest manifest

@@ -173,6 +173,18 @@ object MediaCodecs {
     b
   }
 
+  /** Offset of the RIFF chunk after the one at `off` whose body is
+    * `len` bytes (chunks are word-aligned), capped at `end`. A negative
+    * length would stall or rewind the walk — a crafted file could loop
+    * it forever — so it is rejected; the sum is taken in Long so a huge
+    * length ends the walk instead of wrapping to a negative offset. The
+    * result is always at least off + 8 or `end`, so the walk strictly
+    * advances. */
+  private def nextChunk(off: Int, len: Int, end: Int): Int = {
+    require(len >= 0, s"bad RIFF chunk length $len at offset $off")
+    math.min(off.toLong + 8 + len + (len & 1), end.toLong).toInt
+  }
+
   /** Parse a RIFF/WAVE file by chunk iteration (fmt + data located by
     * walking, tolerating interleaved chunks); meanVal = mean |sample|
     * over the PCM16 payload. */
@@ -195,11 +207,11 @@ object MediaCodecs {
         case "data" => dataOff = off + 8; dataLen = len
         case _ => () // LIST/fact/...: skip
       }
-      off += 8 + len + (len & 1) // chunks are word-aligned
+      off = nextChunk(off, len, b.length)
     }
     require(sampleRate > 0 && dataOff >= 0, "missing fmt or data chunk")
     require(channels == 1 && bits == 16, "only mono PCM16 supported")
-    require(dataOff + dataLen <= b.length, "truncated WAV data")
+    require(dataOff.toLong + dataLen <= b.length, "truncated WAV data")
     val n = dataLen / 2
     var sum = 0.0
     var i = 0
@@ -223,7 +235,7 @@ object MediaCodecs {
       val id = new String(b, off, 4, "US-ASCII")
       val len = le32(b, off + 4)
       if (id == "data") dataOff = off + 8
-      else off += 8 + len + (len & 1)
+      else off = nextChunk(off, len, b.length)
     }
     val out = new Array[Short](d.nSamples.toInt)
     var i = 0
@@ -280,7 +292,11 @@ object MediaCodecs {
     val fps = tok('F').map(_.takeWhile(_ != ':').toInt).getOrElse(25)
     val cs = tok('C').getOrElse("420")
     require(cs.startsWith("420"), s"only C420 supported (got C$cs)")
-    val frameLen = w * h * 3 / 2
+    // a non-positive size would make frameLen <= 0 and send the frame
+    // walk back to the same FRAME marker forever; Long keeps large sizes
+    // from wrapping
+    require(w > 0 && h > 0, s"Y4M: non-positive frame size ${w}x$h")
+    val frameLen = w.toLong * h * 3 / 2
     var off = nl + 1
     var frames = 0
     var firstMean = 0.0
@@ -302,7 +318,7 @@ object MediaCodecs {
         firstMean = if (w * h == 0) 0.0 else sum / (w * h)
       }
       frames += 1
-      off = dataOff + frameLen
+      off = (dataOff + frameLen).toInt
     }
     Decoded(w, h, frames, 0L, 0,
       frames.toLong * 1000 / fps, firstMean)
@@ -311,7 +327,9 @@ object MediaCodecs {
   /** Frame-sample: (width, height, luma plane of frame 0, row-major).
     * The frame-extraction op a video preprocessing pipeline runs. */
   def y4mFirstFrameLuma(b: Array[Byte]): (Int, Int, Array[Int]) = {
-    decodeY4m(b) // validates header + all frame markers
+    // validates header + all frame markers; a frame must exist, so the
+    // luma plane below lies inside the file
+    require(decodeY4m(b).frames > 0, "Y4M: no frames")
     val nl = b.indexOf('\n'.toByte)
     val toks = new String(b, 0, nl, "US-ASCII").split(' ')
     def tok(p: Char) = toks.find(t => t.nonEmpty && t.charAt(0) == p)

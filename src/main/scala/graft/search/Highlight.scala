@@ -124,15 +124,12 @@ object Highlight {
 
   /** Per-term QueryScorer weights from the index stats: boost ×
     * (ln(N/(df+1)) + 1) — QueryTermExtractor.cs:70 exactly (absent
-    * terms keep df = 0, like Searcher.docFreq on an unseen term). The
-    * dictionary lookup is a ≤|query| row collect. */
+    * terms keep df = 0, like Searcher.docFreq on an unseen term). df
+    * comes from the driver-side dictionary lookup [[Searcher.dfOf]]. */
   def termWeights(idx: InvertedIndex, q: Query): Map[String, Double] = {
     val boosts = QueryAst.termBoosts(q)
     if (boosts.isEmpty) return Map.empty
-    val dfs = idx.termDict
-      .filter(col("term").isin(boosts.keys.toSeq: _*))
-      .select("term", "df").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfs = new Searcher(idx).dfOf(boosts.keySet)
     val n = idx.numDocs.toDouble
     boosts.map { case (t, b) =>
       t -> b * (math.log(n / (dfs.getOrElse(t, 0L) + 1.0)) + 1.0)

@@ -28,17 +28,43 @@ import graft.index.InvertedIndex
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
 
   /** Per-(term, docid) BM25 partial scores for a set of query terms.
-    * Broadcast dictionary join supplies df (TermInfosReader analog —
-    * SURVEY §4.2: term dict is broadcastable per the north rule). */
+    * df is resolved on the driver by the memoized [[dfOf]] (the
+    * TermInfosReader lookup, SURVEY §4.2) and enters the plan through
+    * [[dfCol]], so the plan scans postings only: no dictionary scan,
+    * aggregate or broadcast. Terms absent from the dictionary have no
+    * postings and are left out of the scan. */
   def termScores(terms: Set[String]): DataFrame = {
-    val ts = terms.toSeq
-    val dict = idx.termDict.filter(col("term").isin(ts: _*))
-      .select(col("term"), col("df"))
-    idx.postingsForScoring(ts)
-      .join(broadcast(dict), Seq("term"))
+    val dfs = dfOf(terms)
+    idx.postingsForScoring(dfs.keys.toSeq.sorted)
       .select(col("term"), col("docid"),
-        sim.score(idx.numDocs, idx.avgdl, col("df"), col("tf"), col("len"))
+        sim.score(idx.numDocs, idx.avgdl, dfCol(dfs), col("tf"), col("len"))
           .as("tscore"))
+  }
+
+  /** The df of a posting row's `term` as a plan column, for terms whose
+    * df the driver already holds: a literal for one term; for term sets
+    * a hash-map lookup captured in the task closure — O(1) per posting,
+    * where `element_at` over a map literal scans its keys and a
+    * broadcast of a local relation costs a job per query. df stays a
+    * column so idf is computed in-plan exactly as before. */
+  private def dfCol(dfs: Map[String, Long]): Column =
+    if (dfs.size <= 1) lit(dfs.values.headOption.getOrElse(0L))
+    else Searcher.lookup(dfs, col("term"))
+
+  /** `scored` (which has a `term` column) with one row per posting and
+    * clause its term sits in, the clause fields as columns `names`. The
+    * clause rows, keyed by term, ride in a hash map captured in the task
+    * closure and are exploded per posting: a broadcast join of the same
+    * driver-built rows would cost a job per query. */
+  private def perClause[C <: Product: scala.reflect.runtime.universe.TypeTag](
+      scored: DataFrame, clauses: Seq[(String, C)],
+      names: String*): DataFrame = {
+    val byTerm = clauses.groupMap(_._1)(_._2)
+    scored
+      .select(col("*"), explode(Searcher.lookup(byTerm, col("term"))).as("__c"))
+      .select(scored.columns.map(col).toSeq ++ names.zipWithIndex.map {
+        case (n, i) => col("__c").getField(s"_${i + 1}").as(n)
+      }: _*)
   }
 
   /** The deterministic-fold aggregate shared by every multi-part scorer:
@@ -138,8 +164,8 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   /** Single-scan grouped boolean: ONE postings scan for EVERY term leaf
     * of a (possibly one-level-nested) boolean tree — the round-2 plan
     * re-scanned blocks once per nested sub-query. Clause membership is
-    * recovered via a broadcast clause map (a term in several clauses
-    * joins to several rows); one hash agg per doc collects the rows
+    * recovered via [[perClause]] (a term in several clauses yields
+    * several rows); one hash agg per doc collects the rows
     * sorted by (gid, ord), then per-GROUP inner boolean algebra and the
     * outer algebra are pure column expressions over that array
     * (BooleanScorer2 algebra, BooleanQuery.cs:350-424). Scores sum in
@@ -147,11 +173,9 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   private def groupedBool(
       rows: Seq[(String, String, String, String, Double)],
       groups: Seq[FlatGroup], outerMsm: Int): DataFrame = {
-    val spark = idx.docs.sparkSession
-    import spark.implicits._
-    val cmap = rows.toDF("term", "gid", "ord", "occur", "boost")
-    val scored = termScores(rows.map(_._1).toSet)
-      .join(broadcast(cmap), Seq("term"))
+    val scored = perClause(termScores(rows.map(_._1).toSet),
+        rows.map { case (t, g, o, oc, b) => (t, (g, o, oc, b)) },
+        "gid", "ord", "occur", "boost")
       .select(col("docid"), col("gid"), col("ord"), col("occur"),
         (col("tscore") * col("boost")).as("score"))
     val allSorted = sort_array(collect_list(
@@ -162,8 +186,9 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     def cntOf(a: Column, tag: String): Column = occCnt(a, tag)
     val agg = scored.groupBy(col("docid")).agg(allSorted.as("all"))
     // per-group matched flag + score as derived columns (small, driver-
-    // enumerated group list — clause count is capped at MaxClauseCount)
-    val withG = groups.foldLeft(agg) { (df, g) =>
+    // enumerated group list — clause count is capped at MaxClauseCount),
+    // all in ONE projection: each withColumn would re-analyze the plan
+    val groupCols = groups.flatMap { g =>
       val a = garr(g)
       val inner =
         if (g.nMust > 0) {
@@ -174,9 +199,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       val gscore = sim.applyCoord(
         if (g.nMust > 0) sumOf(a, "m") + sumOf(a, "s") else sumOf(a, "s"),
         cntOf(a, "m") + cntOf(a, "s"), g.nMust + g.nShould)
-      df.withColumn(s"${g.gid}_ok", matched)
-        .withColumn(s"${g.gid}_sc", when(matched, gscore).otherwise(lit(0.0)))
+      Seq(matched.as(s"${g.gid}_ok"),
+        when(matched, gscore).otherwise(lit(0.0)).as(s"${g.gid}_sc"))
     }
+    val withG = agg.select(col("docid") +: groupCols: _*)
     val (mustG, shouldG, notG) = (groups.filter(_.outerOccur == "m"),
       groups.filter(_.outerOccur == "s"), groups.filter(_.outerOccur == "n"))
     def okCnt(gs: Seq[FlatGroup]): Column =
@@ -184,13 +210,12 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         .reduceOption(_ + _).getOrElse(lit(0))
     def scSum(gs: Seq[FlatGroup]): Column =
       gs.map(g => col(s"${g.gid}_sc")).reduceOption(_ + _).getOrElse(lit(0.0))
-    var out = withG.filter(okCnt(notG) === 0)
-    if (mustG.nonEmpty) out = out.filter(okCnt(mustG) === mustG.size)
-    if (shouldG.nonEmpty) {
-      val floor = if (mustG.isEmpty) math.max(1, outerMsm) else outerMsm
-      if (floor > 0) out = out.filter(okCnt(shouldG) >= floor)
-    }
-    out.select(col("docid"),
+    val minShould = if (mustG.isEmpty) math.max(1, outerMsm) else outerMsm
+    val keep = Seq(Some(okCnt(notG) === 0),
+      Option.when(mustG.nonEmpty)(okCnt(mustG) === mustG.size),
+      Option.when(shouldG.nonEmpty && minShould > 0)(
+        okCnt(shouldG) >= minShould))
+    withG.filter(keep.flatten.reduce(_ && _)).select(col("docid"),
       sim.applyCoord(scSum(mustG) + scSum(shouldG),
         okCnt(mustG) + okCnt(shouldG), mustG.size + shouldG.size)
         .as("score"))
@@ -279,8 +304,6 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       // PayloadTermQuery.cs:26-40 — one payload-materializing postings
       // scan; payloads reduce per doc IN STORED (position) ORDER, so the
       // float fold is deterministic
-      val dict = idx.termDict.filter(col("term") === t)
-        .select(col("term"), col("df"))
       val payD = col("payloads").cast("array<double>")
       val payScore = fn match {
         case PayAvg =>
@@ -291,10 +314,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       }
       val base =
         if (includeSpan)
-          sim.score(idx.numDocs, idx.avgdl, col("df"), col("tf"), col("len"))
+          sim.score(idx.numDocs, idx.avgdl, dfCol(dfOf(Set(t))), col("tf"),
+            col("len"))
         else lit(1.0)
       idx.postingsForPay(Seq(t))
-        .join(broadcast(dict), Seq("term"))
         .select(col("docid"), (base * payScore).as("score"))
 
     case PayloadNearQ(a, b, slop, fn, includeSpan) =>
@@ -583,8 +606,12 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
 
     case DateRangeQ(field, lo, hi, res, il, ih) =>
       // the parser's GetRangeQuery date path (QueryParser.cs:749):
-      // compare the DateTools-encoded key — a monotone date_format, so
-      // Catalyst can still prune on the underlying timestamp column
+      // compare the DateTools-encoded key. The filter is on a
+      // date_format() expression, which Parquet statistics cannot see,
+      // so it is NOT pushed to the scan and prunes nothing: every docs
+      // row is read. The key is monotone in the timestamp, so exact
+      // native `ts` bounds could be derived on the driver and pushed
+      // down instead (ROADMAP direction 2)
       val key = graft.model.DateTools.dateToString(col(field), res)
       val conds = Seq(
         lo.map(v => if (il) key >= v else key > v),
@@ -700,13 +727,9 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     case DisMaxQ(ds, tie) if ds.forall(asSimpleTerm(_).isDefined) =>
       // single-scan variant of the general case below (one postings scan
       // for all disjuncts, same deterministic ord-sorted sum)
-      val spark = idx.docs.sparkSession
-      import spark.implicits._
       val cl = ds.zipWithIndex.map { case (c, i) =>
-        val (t, b) = asSimpleTerm(c).get; (t, f"d$i%04d", b) }
-      val cmap = cl.toDF("term", "ord", "boost")
-      val rows = termScores(cl.map(_._1).toSet)
-        .join(broadcast(cmap), Seq("term"))
+        val (t, b) = asSimpleTerm(c).get; (t, (f"d$i%04d", b)) }
+      val rows = perClause(termScores(cl.map(_._1).toSet), cl, "ord", "boost")
         .select(col("docid"), col("ord"),
           (col("tscore") * col("boost")).as("score"))
       rows.groupBy(col("docid")).agg(
@@ -724,22 +747,50 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** Multi-term rewrite dispatch (MultiTermQuery.cs:58-200). The auto
-    * heuristic counts matched dictionary terms at PLAN time (a tiny agg —
-    * the reference's term enum walk happens at rewrite time too). */
+    * heuristic enumerates the matched dictionary terms at PLAN time, as
+    * the reference's term enum walk does at rewrite time: one bounded
+    * collect decides scoring vs constant and, when scoring, is also the
+    * literal term set of the postings scan. */
   private def multiTerm(dictPred: Column, rw: MultiTermRewrite): DataFrame =
     rw match {
       case ConstantScore => constantOverTerms(dictPred)
-      case ScoringBoolean => scoredOverTerms(dictPred)
+      case ScoringBoolean => scoredOverTerms(dictMatches(dictPred, None).get)
       case AutoRewrite =>
-        // the decision only needs "≤ cap or not": cap the count so each
-        // partition's scan stops after cap+1 matches (LocalLimit early
-        // termination) instead of counting the whole dictionary
-        if (idx.termDict.filter(dictPred)
-            .limit(Searcher.AutoRewriteTermCap + 1).count()
-            <= Searcher.AutoRewriteTermCap)
-          scoredOverTerms(dictPred)
-        else constantOverTerms(dictPred)
+        dictMatches(dictPred, Some(Searcher.AutoRewriteTermCap)) match {
+          case Some(terms) => scoredOverTerms(terms)
+          case None => constantOverTerms(dictPred)
+        }
     }
+
+  /** Every dictionary term matching `pred`, with its df memoized for
+    * [[dfOf]]; None once more than `cap` distinct terms match. One
+    * single-stage scan of the per-segment dictionaries, summed on the
+    * driver; each partition stops reading once it alone has shown more
+    * than `cap` distinct terms, so at most (cap + 1) × segments rows per
+    * partition reach the driver. */
+  private def dictMatches(pred: Column, cap: Option[Int]): Option[Set[String]] = {
+    val spark = idx.docs.sparkSession
+    import spark.implicits._
+    val rows = idx.dictRows.filter(pred).select(col("term"), col("df"))
+      .as[(String, Long)]
+    val got = Searcher.sumDf(cap match {
+      case Some(c) =>
+        rows.mapPartitions { it =>
+          val seen = scala.collection.mutable.HashSet.empty[String]
+          it.takeWhile { case (t, _) =>
+            val more = seen.size <= c
+            if (more) seen += t
+            more
+          }
+        }.collect()
+      case None => rows.collect()
+    })
+    if (cap.exists(got.size > _)) None
+    else {
+      got.foreach { case (t, df) => dfMemo.put(t, Some(df)) }
+      Some(got.keySet)
+    }
+  }
 
   /** Fuzzy candidate (term, df) set for one query term — the pigeonhole
     * filter (Navarro's partition lemma) with the persisted-trigram
@@ -768,18 +819,13 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       .select(col("docid")).distinct()
       .select(col("docid"), lit(1.0).as("score"))
 
-  /** Scoring-boolean multi-term rewrite (MultiTermQuery.cs:117-151):
-    * every expanded term is BM25-scored; per-doc sum in sorted term
-    * order (deterministic float fold, same as FuzzyQ). */
-  private def scoredOverTerms(dictPred: Column): DataFrame = {
-    val dict = idx.termDict.filter(dictPred).select(col("term"), col("df"))
-    idx.postingsForTermSetScoring(dict.select("term"))
-      .join(broadcast(dict), Seq("term"))
-      .select(col("docid"), col("term").as("ord"),
-        sim.score(idx.numDocs, idx.avgdl, col("df"), col("tf"), col("len"))
-          .as("score"))
+  /** Scoring-boolean multi-term rewrite (MultiTermQuery.cs:117-151)
+    * over the expanded term set: every term is BM25-scored; per-doc sum
+    * in sorted term order (deterministic float fold, same as FuzzyQ). */
+  private def scoredOverTerms(terms: Set[String]): DataFrame =
+    termScores(terms)
+      .select(col("docid"), col("term").as("ord"), col("tscore").as("score"))
       .groupBy(col("docid")).agg(ordSumAgg.as("score"))
-  }
 
   /** Phrase scoring. Exact (slop=0): n-way docid join of the term posting
     * rows, then count aligned start positions with array expressions
@@ -861,12 +907,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       val rx = col("term").rlike("^(?:" + p + ")$")
       val pfx = Searcher.regexLiteralPrefix(p)
       val pred = if (pfx.nonEmpty) col("term").startsWith(pfx) && rx else rx
-      val ts = idx.termDict.filter(pred).select(col("term"))
-        .limit(Searcher.MaxClauseCount + 1)
-        .collect().map(_.getString(0)).toSeq.sorted
-      require(ts.size <= Searcher.MaxClauseCount,
+      val ts = dictMatches(pred, Some(Searcher.MaxClauseCount))
+      require(ts.isDefined,
         s"span regex '$p' expands past maxClauseCount=${Searcher.MaxClauseCount}")
-      SOr(ts.map(STerm))
+      SOr(ts.get.toSeq.sorted.map(STerm))
     case SNear(cs, sl, io) => SNear(cs.map(expandSpanRegexes), sl, io)
     case SFirst(sub, e) => SFirst(expandSpanRegexes(sub), e)
     case SNot(i, e) => SNot(expandSpanRegexes(i), expandSpanRegexes(e))
@@ -1078,19 +1122,24 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** Driver-side dictionary lookup (TermInfosReader analog — tiny:
-    * |query terms| rows), memoized per Searcher like the reference's
-    * per-thread TermInfo cache (TermInfosReader.cs:203-224): one query
-    * evaluation may resolve the same terms from several sub-plans (the
-    * WAND planner + its devolved disjunction, nested boolean groups),
-    * and each uncached call is a full driver-side job. */
+    * |query terms| × segments rows), memoized per Searcher like the
+    * reference's per-thread TermInfo cache (TermInfosReader.cs:203-224):
+    * one query evaluation may resolve the same terms from several
+    * sub-plans (the WAND planner + its devolved disjunction, nested
+    * boolean groups), and each uncached call is a driver-side job. The
+    * miss path is one single-stage scan of the per-segment dictionaries
+    * with the term set pushed down as `In`; per-term sums across
+    * segments happen here on the driver. Every df the query layer
+    * scores with comes from this memo. */
   private val dfMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
   def dfOf(terms: Set[String]): Map[String, Long] = {
     val missing = terms.filter(t => !dfMemo.containsKey(t))
     if (missing.nonEmpty) {
-      val got = idx.termDict.filter(col("term").isin(missing.toSeq: _*))
+      val got = Searcher.sumDf(idx.dictRows
+        .filter(col("term").isin(missing.toSeq.sorted: _*))
         .select(col("term"), col("df")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+        .map(r => (r.getString(0), r.getLong(1))))
       missing.foreach(t => dfMemo.put(t, got.get(t)))
     }
     terms.flatMap(t => dfMemo.get(t).map(t -> _)).toMap
@@ -1144,10 +1193,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       metas += ((qid, q.must.size, q.should.size, q.minShouldMatch))
     }
     val rs = rows.result()
-    val cmap = rs.toDF("term", "qid", "ord", "occur", "boost")
     val meta = metas.result().toDF("qid", "n_must", "n_should", "msm")
-    val scored = termScores(rs.map(_._1).toSet)
-      .join(broadcast(cmap), Seq("term"))
+    val scored = perClause(termScores(rs.map(_._1).toSet),
+        rs.map { case (t, qid, o, oc, b) => (t, (qid, o, oc, b)) },
+        "qid", "ord", "occur", "boost")
       .select(col("qid"), col("docid"), col("ord"), col("occur"),
         (col("tscore") * col("boost")).as("score"))
     def sumOf(tag: String): Column = occSum(col("all"), tag)
@@ -1370,14 +1419,12 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * (the reference asserts Explain == Score, CheckHits.cs:41,349; our
     * spec asserts idf * tfnorm == score the same way). */
   def explainTerm(t: String): DataFrame = {
-    val dict = idx.termDict.filter(col("term") === t)
-      .select(col("term"), col("df"))
+    val df = dfCol(dfOf(Set(t)))
     idx.postingsForScoring(Seq(t))
-      .join(broadcast(dict), Seq("term"))
-      .select(col("docid"), col("term"), col("tf"), col("len"), col("df"),
-        sim.idfCol(idx.numDocs, col("df")).as("idf"),
+      .select(col("docid"), col("term"), col("tf"), col("len"), df.as("df"),
+        sim.idfCol(idx.numDocs, df).as("idf"),
         sim.tfNorm(col("tf"), col("len"), idx.avgdl).as("tfnorm"),
-        sim.score(idx.numDocs, idx.avgdl, col("df"), col("tf"), col("len"))
+        sim.score(idx.numDocs, idx.avgdl, df, col("tf"), col("len"))
           .as("score"))
   }
 }
@@ -1398,6 +1445,15 @@ object Searcher {
 
   /** Auto-rewrite term-count cutoff (MultiTermQuery.cs:61-79). */
   val AutoRewriteTermCap = 350
+
+  /** Per-term df sums over per-segment dictionary rows. */
+  private[search] def sumDf(rows: Array[(String, Long)]): Map[String, Long] =
+    rows.groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** `m(key)` as a column: a hash lookup in the task closure. */
+  private[search] def lookup[V: scala.reflect.runtime.universe.TypeTag](
+      m: Map[String, V], key: Column): Column =
+    udf((k: String) => m(k)).apply(key)
 
   /** Sort columns for a SortField spec + the mandatory docid tie-break. */
   def sortOrder(sorts: Seq[SortField]): Seq[Column] =

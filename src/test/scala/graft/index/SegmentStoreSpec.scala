@@ -207,6 +207,38 @@ class SegmentStoreSpec extends AnyFunSuite {
       .filter(col("count") > 1).count() == 0)
   }
 
+  test("delete -> append -> reopen keeps deleted docs hidden until merge") {
+    val root = tmp()
+    val convs = turns.select("conv_id").distinct().orderBy("conv_id")
+      .collect().map(_.getString(0))
+    val cut = convs(convs.length / 2)
+    IndexBuilder.buildSegments(spark, turns.filter(col("conv_id") < cut),
+      root, 2, 4)
+    val watermark = SegmentStore.latest(root).get.maxDocid
+    val deleted = SegmentStore.open(spark, root).postingsFor(Seq("deploy"))
+      .select("docid").distinct().collect().map(_.getLong(0)).toSet
+    assert(deleted.nonEmpty)
+    IndexBuilder.deleteByTerm(spark, root, "deploy")
+    IndexBuilder.appendSegment(spark, turns.filter(col("conv_id") >= cut),
+      root, 4)
+    assert(SegmentStore.latest(root).get.deletes.size == 1,
+      "the append must carry the delete list forward")
+    val reopened = SegmentStore.open(spark, root)
+    val live = reopened.docs.select("docid").collect().map(_.getLong(0)).toSet
+    assert(live.intersect(deleted).isEmpty)
+    // only the appended half's "deploy" docs match
+    val hits = new Searcher(reopened).score(TermQ("deploy")).collect()
+      .map(_.getLong(0)).toSet
+    assert(hits.nonEmpty && hits.forall(_ > watermark))
+    // a full merge expunges exactly the hidden docs
+    IndexBuilder.forceMerge(spark, root, 4)
+    assert(SegmentStore.latest(root).get.deletes.isEmpty)
+    val merged = SegmentStore.open(spark, root)
+    assert(merged.numDocs == live.size)
+    assert(rows(merged.docs, "docid", "conv_id", "turn_idx", "text") ==
+      rows(reopened.docs, "docid", "conv_id", "turn_idx", "text"))
+  }
+
   test("updateByKeyword replaces a conv atomically (one commit)") {
     val root = tmp()
     IndexBuilder.buildSegments(spark, turns, root, 2, 4)

@@ -1,5 +1,9 @@
 package graft.ops
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.util.Try
+
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -95,5 +99,44 @@ class MediaCodecsFuzzSpec extends AnyFunSuite {
     // the boundary cuts ARE valid shorter videos (0- and 1-frame)
     assert(MediaCodecs.decodeY4m(y4m.take(frameBoundary(0))).frames == 0)
     assert(MediaCodecs.decodeY4m(y4m.take(frameBoundary(1))).frames == 1)
+  }
+
+  /** Outcome of `body`, run on another thread so that a decoder stuck in
+    * a loop (which never checks for interrupts) fails the test after
+    * `limit` instead of stalling the suite. */
+  private def bounded[A](body: => A, limit: FiniteDuration = 10.seconds): Try[A] =
+    Await.result(Future(Try(body))(ExecutionContext.global), limit)
+
+  private def le32(v: Int): Array[Byte] =
+    Array(v, v >> 8, v >> 16, v >> 24).map(_.toByte)
+
+  test("RIFF chunks with a negative length are rejected, not looped on") {
+    val ascii = (s: String) => s.getBytes("US-ASCII")
+    for (len <- Seq(-8, -1, -2, -16, Int.MinValue)) {
+      // a junk chunk whose length would stall (-8) or rewind the walk,
+      // before and after a valid fmt chunk
+      val junk = ascii("JUNK") ++ le32(len) ++ new Array[Byte](8)
+      val fmt = MediaCodecs.encodeWav(Array[Short](1, 2)).slice(12, 36)
+      for (body <- Seq(junk, fmt ++ junk)) {
+        val b = ascii("RIFF") ++ le32(4 + body.length) ++ ascii("WAVE") ++ body
+        assert(bounded(MediaCodecs.decodeWav(b)).isFailure, s"len=$len")
+        assert(bounded(MediaCodecs.wavSamples(b)).isFailure, s"len=$len")
+      }
+    }
+    // a chunk length past the end ends the walk instead of wrapping
+    val huge = MediaCodecs.encodeWav(Array[Short](1, 2)).clone()
+    Array.copy(le32(Int.MaxValue), 0, huge, 40, 4) // the data chunk's length
+    assert(bounded(MediaCodecs.decodeWav(huge)).isFailure)
+  }
+
+  test("Y4M headers with a non-positive or huge frame size are rejected") {
+    val frame = "FRAME\n".getBytes("US-ASCII") ++ new Array[Byte](64)
+    for ((w, h) <- Seq((4, -1), (-4, 1), (-4, -2), (0, 8), (16, 0), (0, 0),
+        (100000, 100000))) {
+      val b = s"YUV4MPEG2 W$w H$h F25:1 C420\n".getBytes("US-ASCII") ++
+        frame ++ frame
+      assert(bounded(MediaCodecs.decodeY4m(b)).isFailure, s"W$w H$h")
+      assert(bounded(MediaCodecs.y4mFirstFrameLuma(b)).isFailure, s"W$w H$h")
+    }
   }
 }
