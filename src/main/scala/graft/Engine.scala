@@ -14,7 +14,8 @@ import graft.search._
   * /root/reference/src/core/Index/IndexReader.cs:65).
   *
   * Three flavors, all serving the same logical InvertedIndex:
-  *  - `index`      — in-memory build (no storage round-trip)
+  *  - `index`      — in-memory build: a cached block table (no storage
+  *                   round-trip)
   *  - `indexSeg`   — segmented build → SegmentStore (compressed posting
   *                   blocks, manifest commit) → re-opened from disk
   *  - `indexCompacted` — segmented build, then forceMerge + GC, re-opened
@@ -57,9 +58,9 @@ object Engine {
     * assigner, graft.analysis.Payloads). */
   def indexPayload(spark: SparkSession, sfDir: String): InvertedIndex =
     cache.getOrElseUpdate(key(spark, sfDir, "pay"),
-      IndexBuilder.buildPay(Transcripts.fromDocuments(spark, sfDir),
-        graft.analysis.Payloads.positionBoost(PayloadFirstN, PayloadBoost),
-        parts(spark)))
+      IndexBuilder.build(Transcripts.fromDocuments(spark, sfDir),
+        parts(spark), assigner = Some(graft.analysis.Payloads.positionBoost(
+          PayloadFirstN, PayloadBoost))))
 
   /** Segmented payload flavor: the same positionBoost payloads PERSISTED
     * through the block store — the payload bit rides the position stream
@@ -169,7 +170,7 @@ object Engine {
       val t0 = System.nanoTime()
       val idx = f
       idx.docs.count()
-      idx.termDict.count() // materializes the mem flavor's postings cache
+      idx.termDict.count() // materializes a mem flavor's block + dict caches
       name -> (System.nanoTime() - t0) / 1e9
     }
     val flavors = Seq(

@@ -38,7 +38,7 @@ object CheckIndex {
     }
 
     val idx = SegmentStore.open(spark, root)
-    val blocks = idx.blocks.get
+    val blocks = idx.blockTable
 
     // (2) block stats vs decoded content — one pass, partition-local
     val badBlocks = blocks.as[BlockRow].flatMap { r =>

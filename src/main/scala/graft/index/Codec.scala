@@ -148,45 +148,6 @@ object Codec {
     buf.toArray
   }
 
-  def decodePositions(blob: Array[Byte], tf: Long): Array[Int] = {
-    val out = new Array[Int](tf.toInt)
-    var p = 0
-    var prev = 0L
-    var k = 0
-    while (k < out.length) {
-      val (code, p1) = readVLong(blob, p); p = p1
-      if ((code & 1L) == 1L) { val (_, p2) = readVLong(blob, p); p = p2 }
-      prev += code >>> 1
-      out(k) = prev.toInt
-      k += 1
-    }
-    out
-  }
-
-  /** Positions + payloads; an occurrence without a stored payload reads
-    * as 1.0f (the reference's DefaultSimilarity.ScorePayload identity —
-    * payload-less occurrences are scored neutrally,
-    * /root/reference/src/core/Search/Payloads/PayloadFunction.cs:30). */
-  def decodePosPay(blob: Array[Byte], tf: Long): (Array[Int], Array[Float]) = {
-    val pos = new Array[Int](tf.toInt)
-    val pay = new Array[Float](tf.toInt)
-    var p = 0
-    var prev = 0L
-    var k = 0
-    while (k < pos.length) {
-      val (code, p1) = readVLong(blob, p); p = p1
-      prev += code >>> 1
-      pos(k) = prev.toInt
-      pay(k) =
-        if ((code & 1L) == 1L) {
-          val (bits, p2) = readVLong(blob, p); p = p2
-          java.lang.Float.intBitsToFloat(bits.toInt)
-        } else 1.0f
-      k += 1
-    }
-    (pos, pay)
-  }
-
   /** A pre-shuffle posting: positions already VByte-encoded (compact on
     * the wire, no per-element boxing through the exchange). */
   final case class RawPosting(term: String, docid: Long, tf: Long,
@@ -367,7 +328,9 @@ object Codec {
   }
 
   /** A posting with its per-occurrence payloads materialized (1.0f for
-    * occurrences that stored none). */
+    * occurrences that stored none: the reference's
+    * DefaultSimilarity.ScorePayload identity scores them neutrally,
+    * PayloadFunction.cs:30). */
   final case class PostingPay(docid: Long, tf: Long, len: Long,
       positions: Array[Int], payloads: Array[Float])
 

@@ -4,35 +4,35 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.analysis.Analyzer
-
 /** Logical (table-agnostic) inverted index.
   *
   * One table per concern, mirroring the reference's per-segment files
   * (/root/reference/src/core/Index/IndexFileNames.cs:29-97) as columnar
   * DataFrames:
-  *  - docs      — forward/stored fields (.fdt/.fdx analog)
-  *  - postings  — (term, docid, tf, len, positions) logical view
-  *                (.frq/.prx analog)
-  *  - termDict  — (term, df, cf), one row per term (.tis/.tii analog):
-  *                the whole-dictionary view for suggest, trigrams and
-  *                CheckIndex. Query-time df lookups read [[dictRows]]
-  *                instead (Searcher.dfOf).
-  *  - docLens   — exact per-doc token counts (exact-int replacement for
-  *                the lossy norm byte, Similarity.cs:398-413 — BM25 wants
-  *                exact lengths)
-  *  - blocks    — optional at-rest compressed form (delta+VByte blocks
-  *                with skip/WAND stats); present when opened from a
-  *                SegmentStore.
+  *  - docs       — forward/stored fields (.fdt/.fdx analog)
+  *  - blockTable — the posting lists (.frq/.prx analog): delta+VByte
+  *                 blocks of ≤128 postings per term with skip/WAND
+  *                 stats. The ONLY posting form: an in-memory build
+  *                 caches it, a SegmentStore reads it from parquet — the
+  *                 reference's RAMDirectory holds the same segment files
+  *                 as FSDirectory, only the Directory differs.
+  *  - termDict   — (term, df, cf), one row per term (.tis/.tii analog):
+  *                 the whole-dictionary view for suggest, trigrams and
+  *                 CheckIndex. Query-time df lookups read [[dictRows]]
+  *                 instead (Searcher.dfOf).
+  *  - docLens    — exact per-doc token counts (exact-int replacement for
+  *                 the lossy norm byte, Similarity.cs:398-413 — BM25
+  *                 wants exact lengths)
+  * The logical (term, docid, tf, len, positions) view, [[postings]], is
+  * one decode of the block table.
   */
 final case class InvertedIndex(
     docs: DataFrame,
-    postings: DataFrame,
+    blockTable: DataFrame,
     termDict: DataFrame,
     docLens: DataFrame,
     numDocs: Long,
     avgdl: Double,
-    blocks: Option[DataFrame] = None,
     deleted: Option[DataFrame] = None,
     /** Optional persisted (gram, term, df) dictionary trigram index
       * ([[Trigrams]]) — bounds fuzzy/suggest candidate scans. */
@@ -42,6 +42,10 @@ final case class InvertedIndex(
       * term appears once per segment that holds it; None when
       * `termDict` already has one row per term. */
     segmentDicts: Option[DataFrame] = None) {
+
+  /** [[blockTable]] as an Option; kept only for the benchmark program
+    * (perfbench), which reads `blocks.get`. */
+  def blocks: Option[DataFrame] = Some(blockTable)
 
   /** Dictionary rows for df lookups: a single-stage scan with no
     * aggregate or shuffle, so an `In` filter on it pushes down to every
@@ -58,194 +62,87 @@ final case class InvertedIndex(
     case None => df
   }
 
-  /** Postings restricted to a fixed term set. When the index is
-    * block-backed, the term predicate is applied to the BLOCK table (a
-    * plain Parquet filter → pushdown + row-group pruning) and only
-    * surviving blocks are decoded — the decode flatMap is a pushdown
-    * barrier, so filtering after decode would read every block
-    * (TermInfosReader seek analog,
+  /** The logical postings view: (term, docid, tf, len, positions) for
+    * every live posting — TermVectors, CheckIndex and the gate dumps read
+    * it; queries use the term-restricted accessors below. */
+  def postings: DataFrame = live(PostingBlocks.toPostings(blockTable))
+
+  /** Postings restricted to a fixed term set. The term predicate is
+    * applied to the BLOCK table (a plain Parquet filter → pushdown +
+    * row-group pruning) and only surviving blocks are decoded — the
+    * decode flatMap is a pushdown barrier, so filtering after decode
+    * would read every block (TermInfosReader seek analog,
     * /root/reference/src/core/Index/TermInfosReader.cs:178-196). */
-  def postingsFor(terms: Seq[String]): DataFrame = blocks match {
-    case Some(b) =>
-      live(PostingBlocks.toPostings(b.filter(col("term").isin(terms: _*))))
-    case None => postings.filter(col("term").isin(terms: _*))
-  }
+  def postingsFor(terms: Seq[String]): DataFrame =
+    live(PostingBlocks.toPostings(blocksOf(terms)))
+
+  private def blocksOf(terms: Seq[String]): DataFrame =
+    blockTable.filter(col("term").isin(terms: _*))
 
   /** Scoring-only postings for a fixed term set: (term, docid, tf, len),
     * positions never decoded (TermDocs semantics — SegmentTermDocs.cs:30
-    * reads .frq without .prx). The BM25 paths use this; the mem flavor
-    * relies on Catalyst column pruning instead. */
-  def postingsForScoring(terms: Seq[String]): DataFrame = blocks match {
-    case Some(b) =>
-      live(PostingBlocks.toScoring(b.filter(col("term").isin(terms: _*))))
-    case None => postings.filter(col("term").isin(terms: _*))
-      .select(col("term"), col("docid"), col("tf"), col("len"))
-  }
+    * reads .frq without .prx). The BM25 paths use this. */
+  def postingsForScoring(terms: Seq[String]): DataFrame =
+    live(PostingBlocks.toScoring(blocksOf(terms)))
 
   /** Scoring-only postings for a computed (small) term-set DataFrame —
     * broadcast semi-joined against the block table before decode. */
-  def postingsForTermSetScoring(terms: DataFrame): DataFrame = blocks match {
-    case Some(b) =>
-      live(PostingBlocks.toScoring(b.join(broadcast(terms), Seq("term"))))
-    case None => postings.join(broadcast(terms), Seq("term"))
-      .select(col("term"), col("docid"), col("tf"), col("len"))
-  }
+  def postingsForTermSetScoring(terms: DataFrame): DataFrame =
+    live(PostingBlocks.toScoring(blockTable.join(broadcast(terms), Seq("term"))))
 
   /** Scoring-only postings for every term matching a dictionary
     * predicate (constant-score multi-term rewrites, MultiTermQuery.cs:84).
-    * The predicate is a pure function of `term`, so a block-backed
-    * index applies it to the block table directly — a pushed-down scan
-    * filter instead of a dictionary scan broadcast into the blocks; the
-    * in-memory flavor matches its cached one-row-per-term dictionary
-    * rather than every posting. */
-  def postingsWhereTermScoring(dictPred: Column): DataFrame = blocks match {
-    case Some(b) => live(PostingBlocks.toScoring(b.filter(dictPred)))
-    case None =>
-      postingsForTermSetScoring(termDict.filter(dictPred).select("term"))
-  }
+    * The predicate is a pure function of `term`, so it applies to the
+    * block table directly — a pushed-down scan filter instead of a
+    * dictionary scan broadcast into the blocks. */
+  def postingsWhereTermScoring(dictPred: Column): DataFrame =
+    live(PostingBlocks.toScoring(blockTable.filter(dictPred)))
 
   /** Payload-materializing variant of [[postingsFor]] — adds the
-    * `payloads` column (parallel to positions). Block-backed indexes
-    * decode payloads straight from the position stream's payload bit;
-    * mem-flavor indexes must have been built with
-    * [[IndexBuilder.buildPay]]. */
-  def postingsForPay(terms: Seq[String]): DataFrame = blocks match {
-    case Some(b) =>
-      live(PostingBlocks.toPostingsPay(b.filter(col("term").isin(terms: _*))))
-    case None =>
-      require(postings.columns.contains("payloads"),
-        "payload query over an index built without payloads " +
-          "(use IndexBuilder.buildPay or a block-backed store)")
-      postings.filter(col("term").isin(terms: _*))
-  }
+    * `payloads` column (parallel to positions), decoded from the
+    * position stream's payload bit; an occurrence that stored none
+    * reads as 1.0f, so an index built without an assigner scores every
+    * payload neutrally. */
+  def postingsForPay(terms: Seq[String]): DataFrame =
+    live(PostingBlocks.toPostingsPay(blocksOf(terms)))
+}
+
+object InvertedIndex {
+
+  /** An index over a block table — the one derivation shared by the
+    * in-memory build and [[SegmentStore]]: doc lengths are a lens-only
+    * decode of the blocks padded with the zero-length docs of `docs`,
+    * avgdl = sumLen / numDocs, and `docs` is filtered by the live delete
+    * set (stats stay un-discounted, the reference's behavior). */
+  def ofBlocks(docs: DataFrame, blocks: DataFrame, termDict: DataFrame,
+      numDocs: Long, sumLen: Long, deleted: Option[DataFrame] = None,
+      segmentDicts: Option[DataFrame] = None): InvertedIndex =
+    InvertedIndex(
+      deleted.fold(docs)(del => docs.join(del, Seq("docid"), "left_anti")),
+      blocks, termDict, PostingBlocks.docLensFromBlocks(blocks, docs),
+      numDocs, sumLen.toDouble / numDocs, deleted,
+      segmentDicts = segmentDicts)
 }
 
 object IndexBuilder {
 
-  /** Tokenize + invert an already-docid'd docs table into
-    * (postings, docLens).
-    *
-    * The inversion is PARTITION-LOCAL (the reference's per-thread in-RAM
-    * inversion, TermsHashPerField.cs:27-137, with Spark partitions as the
-    * thread states): each doc is tokenized and inverted to
-    * (term → positions) in memory, emitting already-aggregated posting
-    * rows — NO shuffle here at all. The only build shuffle is the
-    * (term, docid) range-exchange when blocks are encoded (the
-    * FreqProxTermsWriter k-way merge analog). `len` is denormalized into
-    * postings (the norms analog lives with the posting, so query-time
-    * scoring needs no per-doc join — at 10^12 docs that join would
-    * dominate every query). Positions are emitted in token order
-    * (ascending). docLens is derived lazily for dumps; collection stats
-    * come from cheap aggregates (sumLen = Σ tf). */
-  def invertRaw(docs: DataFrame,
-      kind: graft.analysis.Analyzers.Kind = graft.analysis.Analyzers.Standard)
-      : org.apache.spark.sql.Dataset[Codec.RawPosting] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("docid"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (docid, text) =>
-          val toks = graft.analysis.Analyzers.tokenize(kind, text)
-          val len = toks.size.toLong
-          val m = scala.collection.mutable.LinkedHashMap
-            .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-          toks.foreach { t =>
-            m.getOrElseUpdate(t.term,
-              new scala.collection.mutable.ArrayBuffer[Int](4)) += t.pos
-          }
-          m.iterator.map { case (t, ps) =>
-            Codec.RawPosting(t, docid, ps.length.toLong, len,
-              Codec.encodePositions(ps.toArray))
-          }
-        }
-      }
-  }
-
-  /** Payload-carrying partition-local inversion: identical to
-    * [[invertRaw]] except each occurrence's payload (from `assigner`;
-    * NaN = none) rides in the position blob via the codec's payload bit
-    * — the blob then flows VERBATIM through the range shuffle, run
-    * stitching, and segment persistence, so every storage flavor keeps
-    * payloads for free (the reference threads payloads through
-    * FreqProxTermsWriter the same way, FreqProxTermsWriter.cs:70-157). */
-  def invertRawPay(docs: DataFrame, assigner: graft.analysis.Payloads.Assigner)
-      : org.apache.spark.sql.Dataset[Codec.RawPosting] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("docid"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (docid, text) =>
-          val toks = Analyzer.fastTokenize(text)
-          val len = toks.size.toLong
-          val m = scala.collection.mutable.LinkedHashMap
-            .empty[String, (scala.collection.mutable.ArrayBuffer[Int],
-              scala.collection.mutable.ArrayBuffer[Float])]
-          toks.foreach { t =>
-            val e = m.getOrElseUpdate(t.term,
-              (new scala.collection.mutable.ArrayBuffer[Int](4),
-                new scala.collection.mutable.ArrayBuffer[Float](4)))
-            e._1 += t.pos
-            e._2 += assigner(t.term, t.pos)
-          }
-          m.iterator.map { case (t, (ps, ws)) =>
-            Codec.RawPosting(t, docid, ps.length.toLong, len,
-              Codec.encodePosPay(ps.toArray, ws.toArray))
-          }
-        }
-      }
-  }
-
-  /** Logical-view inversion with payloads materialized as a column
-    * (mem-flavor payload indexes). */
-  def invertPay(docs: DataFrame,
-      assigner: graft.analysis.Payloads.Assigner): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    invertRawPay(docs, assigner).map { r =>
-      val (ps, ws) = Codec.decodePosPay(r.pos_blob, r.tf)
-      PayPostingRow(r.term, r.docid, r.tf, r.len, ps.toSeq, ws.toSeq)
-    }.toDF()
-  }
-
-  /** Logical-view inversion (in-memory indexes / tests): decodes the raw
-    * position blobs back to arrays. The analyzer kind is pluggable —
-    * the IndexWriter-takes-Analyzer contract (IndexWriter.cs:334). */
-  def invert(docs: DataFrame,
-      kind: graft.analysis.Analyzers.Kind = graft.analysis.Analyzers.Standard)
-      : (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val postings = invertRaw(docs, kind).map { r =>
-      PostingRow(r.term, r.docid, r.tf, r.len,
-        Codec.decodePositions(r.pos_blob, r.tf).toSeq)
-    }.toDF()
-
-    // exact field length per doc; docs whose text is all stopwords get 0
-    val docLens = docs.select(col("docid"))
-      .join(postings.groupBy(col("docid")).agg(max(col("len")).as("len")),
-        Seq("docid"), "left")
-      .select(col("docid"), coalesce(col("len"), lit(0L)).as("len"))
-    (postings, docLens)
-  }
-
-  private def dictOf(postings: DataFrame): DataFrame =
-    postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-
-  /** In-memory build (tests / small interactive sessions); `kind`
-    * selects the analyzer chain for the whole index. */
+  /** In-memory build (tests / small interactive sessions): the same
+    * tokenize → invert → encode pass [[buildSegments]] writes, kept as a
+    * cached block table instead of parquet (RAMDirectory analog). `kind`
+    * selects the analyzer chain for the whole index (the
+    * IndexWriter-takes-Analyzer contract, IndexWriter.cs:334); with
+    * `assigner` set every occurrence carries its payload in the position
+    * stream, for the payload queries. */
   def build(transcripts: DataFrame, numPartitions: Int = 32,
-      kind: graft.analysis.Analyzers.Kind = graft.analysis.Analyzers.Standard)
+      kind: graft.analysis.Analyzers.Kind = graft.analysis.Analyzers.Standard,
+      assigner: Option[graft.analysis.Payloads.Assigner] = None)
       : InvertedIndex = {
     val assigned = DocIds.assign(transcripts,
       Seq(col("conv_id"), col("turn_idx")), numPartitions)
-    val docs = assigned.docs
-    val (postings, docLens) = invert(docs, kind)
-    val termDict = dictOf(postings)
-
-    docs.cache(); postings.cache(); docLens.cache(); termDict.cache()
+    val docs = assigned.docs.cache()
+    val blocks = PostingBlocks.buildFromDocs(docs, numPartitions, assigner,
+      kind).toDF().cache()
+    val termDict = PostingBlocks.dictFromBlocks(blocks).cache()
 
     // count() materializes the docs cache (MEMORY_AND_DISK — eviction
     // spills, never recomputes), so the inner range-shuffled base can go
@@ -255,34 +152,11 @@ object IndexBuilder {
       " (avgdl would be NaN and BM25 scores would silently propagate it)")
     // sumLen = Σ tf over postings ≡ Σ len over docs (integer arithmetic —
     // exactly reproducible across engines)
-    val sumLen = postings.agg(coalesce(sum(col("tf")), lit(0L)))
+    val sumLen = blocks.agg(coalesce(sum(col("sum_tf")), lit(0L)))
       .collect()(0).getLong(0)
-    InvertedIndex(docs, postings, termDict, docLens, n, sumLen.toDouble / n)
-  }
-
-  /** In-memory build whose postings carry per-occurrence payloads (the
-    * `payloads` column). Every non-payload query works on it unchanged —
-    * the extra column is simply pruned from their plans. */
-  def buildPay(transcripts: DataFrame,
-      assigner: graft.analysis.Payloads.Assigner,
-      numPartitions: Int = 32): InvertedIndex = {
-    val assigned = DocIds.assign(transcripts,
-      Seq(col("conv_id"), col("turn_idx")), numPartitions)
-    val docs = assigned.docs
-    val postings = invertPay(docs, assigner)
-    val docLens = docs.select(col("docid"))
-      .join(postings.groupBy(col("docid")).agg(max(col("len")).as("len")),
-        Seq("docid"), "left")
-      .select(col("docid"), coalesce(col("len"), lit(0L)).as("len"))
-    val termDict = dictOf(postings)
-    docs.cache(); postings.cache(); docLens.cache(); termDict.cache()
-    val n = docs.count()
-    assigned.release()
-    require(n > 0, "empty input: refusing to build an index with no docs" +
-      " (avgdl would be NaN and BM25 scores would silently propagate it)")
-    val sumLen = postings.agg(coalesce(sum(col("tf")), lit(0L)))
-      .collect()(0).getLong(0)
-    InvertedIndex(docs, postings, termDict, docLens, n, sumLen.toDouble / n)
+    val idx = InvertedIndex.ofBlocks(docs, blocks, termDict, n, sumLen)
+    idx.docLens.cache()
+    idx
   }
 
   /** Segmented, resumable build into a SegmentStore.
@@ -303,15 +177,11 @@ object IndexBuilder {
       // bare functions with no stable identity, so a resume under a
       // DIFFERENT assigner can only be detected if the caller names it
       payTag: String = ""): Manifest = {
-    val tAssign = System.nanoTime()
     // assign() pins its sorted base; `docs` is a cheap projection of it
     val assigned = DocIds.assign(transcripts,
       Seq(col("conv_id"), col("turn_idx")), numPartitions)
     val docs = assigned.docs
     val total = assigned.total
-    if (sys.env.contains("SPARK_GRAFT_BUILD_TIMING"))
-      System.err.println(
-        f"[build] assign+count   ${(System.nanoTime() - tAssign) / 1e9}%8.2fs")
     val span = math.max(1L, (total + numBatches - 1) / numBatches)
     val metas = (0 until numBatches).flatMap { b =>
       val lo = b * span
@@ -330,14 +200,6 @@ object IndexBuilder {
         SegmentStore.readLineage(root, id) match {
           case Some(m) if m.lineage == lineage => Some(m) // resume: skip
           case _ =>
-            def timed[T](what: String)(f: => T): T = {
-              val t0 = System.nanoTime()
-              val r = f
-              if (sys.env.contains("SPARK_GRAFT_BUILD_TIMING"))
-                System.err.println(
-                  f"[build] batch=$b $what%-14s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-              r
-            }
             val slice = docs.filter(col("docid") >= lo && col("docid") < hi)
             // Tokenize+invert+encode+write in ONE pass: raw postings are
             // never cached (a 10^12-turn batch would not fit anywhere);
@@ -345,13 +207,13 @@ object IndexBuilder {
             // afterwards, doc lengths are decoded from blocks on demand —
             // the Lucene shape: segment files are written once, stats
             // are read from the segment.
-            timed("blocks")(SegmentStore.writeTable(root, id, "blocks",
+            SegmentStore.writeTable(root, id, "blocks",
               PostingBlocks.buildFromDocs(slice, numPartitions, assigner,
-                kind).toDF()))
+                kind).toDF())
             val blocksDf = SegmentStore.readTable(spark, root, id, "blocks")
-            timed("dict")(SegmentStore.writeTable(root, id, "dict",
-              PostingBlocks.dictFromBlocks(blocksDf)))
-            timed("docs")(SegmentStore.writeTable(root, id, "docs", slice))
+            SegmentStore.writeTable(root, id, "dict",
+              PostingBlocks.dictFromBlocks(blocksDf))
+            SegmentStore.writeTable(root, id, "docs", slice)
             // docids are dense in [0, total): the slice size is exact
             // arithmetic — no count job
             val n = hi - lo
@@ -371,10 +233,6 @@ object IndexBuilder {
     m
   }
 
-  /** Append a new batch of turns as one segment, re-basing its docids
-    * past the store's current maxDoc — the MergeDocIDRemapper analog
-    * (/root/reference/src/core/Index/MergeDocIDRemapper.cs); also the
-    * streaming-sink unit (one micro-batch = one segment, SURVEY.md §2.8). */
   /** Write (but do NOT commit) one appended segment re-based past the
     * store watermark. Returns None for an empty batch. Shared by
     * [[appendSegment]] and [[updateByKeyword]] — the latter folds the
@@ -425,6 +283,10 @@ object IndexBuilder {
     Some(meta)
   }
 
+  /** Append a new batch of turns as one segment, re-basing its docids
+    * past the store's current maxDoc — the MergeDocIDRemapper.cs analog;
+    * also the streaming-sink unit (one micro-batch = one segment,
+    * SURVEY.md §2.8). */
   def appendSegment(spark: SparkSession, turns: DataFrame, root: String,
       numPartitions: Int = 32, lineageTag: String = "append"): Manifest = {
     val prev = SegmentStore.latest(root)

@@ -51,37 +51,6 @@ final case class PayPostingRow(
   */
 object PostingBlocks {
 
-  /** postings: (term, docid, tf, len, positions) → block table. */
-  def fromPostings(postings: DataFrame, numPartitions: Int): Dataset[BlockRow] = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    postings
-      .select(col("term"), col("docid"), col("tf").cast("long"),
-        col("len").cast("long"), col("positions").cast("array<int>"))
-      .as[(String, Long, Long, Long, Seq[Int])]
-      .repartitionByRange(numPartitions, col("term"), col("docid"))
-      .sortWithinPartitions(col("term"), col("docid"))
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[BlockRow] {
-          override def hasNext: Boolean = in.hasNext
-          override def next(): BlockRow = {
-            val term = in.head._1
-            val chunk = new scala.collection.mutable.ArrayBuffer[Codec.Posting](
-              Codec.BlockSize)
-            while (in.hasNext && in.head._1 == term &&
-                chunk.size < Codec.BlockSize) {
-              val (_, d, tf, len, ps) = in.next()
-              chunk += Codec.Posting(d, tf, len, ps.toArray)
-            }
-            val b = Codec.encode(term, chunk.iterator).next()
-            BlockRow(b.term, b.n, b.minDocid, b.maxDocid, b.maxTf,
-              b.minLen, b.sumTf, b.docs, b.lens, b.pos)
-          }
-        }
-      }
-  }
-
   /** THE build path: docs → per-partition partial inversion into
     * compressed per-term posting RUNS (one shuffle row per term per
     * input partition, delta+VByte from the start — the reference's
@@ -92,18 +61,21 @@ object PostingBlocks {
     * distinct docid-contiguous input partitions never overlap, so the
     * merge is concatenation with one gap re-link).
     *
+    * Each doc is tokenized by `kind` and grouped by term in token order,
+    * so positions ascend within a posting. The doc's token count `len`
+    * rides with every posting (the norms analog: query-time scoring
+    * needs no per-doc join). With `assigner` set, each occurrence's
+    * payload rides in the position blob via the codec's payload bit
+    * (NaN = none) — the blob then flows VERBATIM through the range
+    * shuffle, stitching, and segment parquet, so every index keeps
+    * payloads for free (FreqProxTermsWriter.cs:70-157 threads payloads
+    * the same way); without one, no payload array is allocated.
+    *
     * Scale properties: shuffle volume ≈ compressed index size (not
     * ~40 bytes × postings); hot terms still split across reducers by the
     * run-start component of the range key; map memory is one partition's
     * compact blobs. Input partitions MUST be docid-contiguous and
     * docid-sorted (DocIds.assign output is). */
-  /** Tokenize+invert+encode docs straight into compressed block runs.
-    * With `assigner` set, each occurrence's payload rides in the
-    * position blob via the codec's payload bit (NaN = none) — the blob
-    * then flows VERBATIM through the range shuffle, stitching, and
-    * segment parquet, so the persisted store keeps payloads for free
-    * (FreqProxTermsWriter.cs:70-157 threads payloads the same way). The
-    * payload-free path stays allocation-identical to before. */
   def buildFromDocs(docs: DataFrame, numPartitions: Int,
       assigner: Option[graft.analysis.Payloads.Assigner] = None,
       kind: graft.analysis.Analyzers.Kind = graft.analysis.Analyzers.Standard)
@@ -114,42 +86,23 @@ object PostingBlocks {
       .as[(Long, String)]
       .mapPartitions { it =>
         val builders = new java.util.LinkedHashMap[String, Codec.RunBuilder]
-        assigner match {
-          case None => it.foreach { case (docid, text) =>
-            val toks = graft.analysis.Analyzers.tokenize(kind, text)
-            val len = toks.size.toLong
-            val m = scala.collection.mutable.LinkedHashMap
-              .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-            toks.foreach { t =>
-              m.getOrElseUpdate(t.term,
-                new scala.collection.mutable.ArrayBuffer[Int](4)) += t.pos
-            }
-            m.foreach { case (t, ps) =>
-              var b = builders.get(t)
-              if (b == null) { b = new Codec.RunBuilder(t); builders.put(t, b) }
-              b.add(docid, ps.length.toLong, len,
-                Codec.encodePositions(ps.toArray))
-            }
+        it.foreach { case (docid, text) =>
+          val toks = graft.analysis.Analyzers.tokenize(kind, text)
+          val len = toks.size.toLong
+          val m = scala.collection.mutable.LinkedHashMap
+            .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
+          toks.foreach { t =>
+            m.getOrElseUpdate(t.term,
+              new scala.collection.mutable.ArrayBuffer[Int](4)) += t.pos
           }
-          case Some(a) => it.foreach { case (docid, text) =>
-            val toks = graft.analysis.Analyzers.tokenize(kind, text)
-            val len = toks.size.toLong
-            val m = scala.collection.mutable.LinkedHashMap
-              .empty[String, (scala.collection.mutable.ArrayBuffer[Int],
-                scala.collection.mutable.ArrayBuffer[Float])]
-            toks.foreach { t =>
-              val e = m.getOrElseUpdate(t.term,
-                (new scala.collection.mutable.ArrayBuffer[Int](4),
-                  new scala.collection.mutable.ArrayBuffer[Float](4)))
-              e._1 += t.pos
-              e._2 += a(t.term, t.pos)
-            }
-            m.foreach { case (t, (ps, ws)) =>
-              var b = builders.get(t)
-              if (b == null) { b = new Codec.RunBuilder(t); builders.put(t, b) }
-              b.add(docid, ps.length.toLong, len,
-                Codec.encodePosPay(ps.toArray, ws.toArray))
-            }
+          m.foreach { case (t, ps) =>
+            var b = builders.get(t)
+            if (b == null) { b = new Codec.RunBuilder(t); builders.put(t, b) }
+            val pos = ps.toArray
+            b.add(docid, pos.length.toLong, len, assigner match {
+              case None => Codec.encodePositions(pos)
+              case Some(a) => Codec.encodePosPay(pos, pos.map(a(t, _)))
+            })
           }
         }
         import scala.jdk.CollectionConverters._
@@ -196,10 +149,9 @@ object PostingBlocks {
       }
   }
 
-  /** Raw-posting variant of [[fromPostings]] — the hot build path:
-    * positions are already VByte blobs, so the exchange moves compact
-    * binary instead of boxed int arrays, and block encode concatenates
-    * blobs without re-coding. */
+  /** Raw postings → block table (the merge path): positions are already
+    * VByte blobs, so the exchange moves compact binary instead of boxed
+    * int arrays, and block encode concatenates blobs without re-coding. */
   def fromRaw(raw: Dataset[Codec.RawPosting],
       numPartitions: Int): Dataset[BlockRow] = {
     val spark = raw.sparkSession

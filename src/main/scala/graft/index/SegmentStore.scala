@@ -182,13 +182,8 @@ object SegmentStore {
   }
 
   /** Write one table of a segment-in-progress. */
-  def writeTable(root: String, id: String, sub: String, df: DataFrame): Unit = {
-    val t0 = System.nanoTime()
+  def writeTable(root: String, id: String, sub: String, df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(s"${segDir(root, id)}/$sub")
-    if (sys.env.contains("SPARK_GRAFT_BUILD_TIMING"))
-      System.err.println(
-        f"[write] $id $sub%-8s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-  }
 
   def readTable(spark: SparkSession, root: String, id: String,
       sub: String): DataFrame =
@@ -279,18 +274,8 @@ object SegmentStore {
     // massive delete backlog falls back to a shuffled anti-join. No
     // distinct either: an anti-join ignores duplicates, and a distinct
     // would add an aggregate (a shuffle job) to every query on the store
-    def live(df: DataFrame): DataFrame = deleted match {
-      case Some(del) => df.join(del, Seq("docid"), "left_anti")
-      case None => df
-    }
-    val docs = live(docs0)
-    val postings = live(PostingBlocks.toPostings(blocks))
-    val docLens = PostingBlocks.docLensFromBlocks(blocks, docs0)
-    val n = m.numDocs
-    InvertedIndex(docs, postings, dict, docLens,
-      n, m.sumLen.toDouble / n,
-      blocks = Some(blocks), deleted = deleted,
-      segmentDicts = Some(segDicts))
+    InvertedIndex.ofBlocks(docs0, blocks, dict, m.numDocs, m.sumLen,
+      deleted, segmentDicts = Some(segDicts))
   }
 
   /** Drop segment directories not referenced by the latest manifest

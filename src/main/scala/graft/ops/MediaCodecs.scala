@@ -48,6 +48,19 @@ object MediaCodecs {
   final case class Decoded(width: Int, height: Int, frames: Int,
       nSamples: Long, sampleRate: Int, durationMs: Long, meanVal: Double)
 
+  /** The one kind → parser dispatch, shared by the batch decode, the
+    * transform check and the streaming decode: "image" is BMP, "audio"
+    * WAV, "video" Y4M; any other kind is rejected. */
+  def decode(kind: String, blob: Array[Byte]): Decoded = kind match {
+    case "image" => decodeBmp(blob)
+    case "audio" => decodeWav(blob)
+    case "video" => decodeY4m(blob)
+    case other => unknownKind(other)
+  }
+
+  def unknownKind(kind: String): Nothing =
+    throw new IllegalArgumentException(s"unknown media kind '$kind'")
+
   // ======================================================== BMP ====
 
   /** Row stride of a 24bpp BMP: 3 bytes/px rounded up to 4. */
@@ -87,22 +100,30 @@ object MediaCodecs {
     b
   }
 
-  /** Parse a 24bpp uncompressed BMP; meanVal = mean over pixels of
-    * (r+g+b)/3, iterated in the file's own bottom-up padded layout. */
+  /** Parse a 24bpp uncompressed bottom-up BMP; meanVal = mean over
+    * pixels of (r+g+b)/3, iterated in the file's own padded layout.
+    * Top-down files (negative height) are rejected: [[bmpGray]] reads
+    * rows bottom-up, the only order [[encodeBmp]] writes. */
   def decodeBmp(b: Array[Byte]): Decoded = {
     require(b.length >= 54 && b(0) == 'B' && b(1) == 'M', "not a BMP")
     val dataOff = le32(b, 10)
     val hdrSize = le32(b, 14)
     require(hdrSize >= 40, s"unsupported BMP header size $hdrSize")
+    require(dataOff >= 54, s"BMP pixel offset $dataOff inside the header")
     val width = le32(b, 18)
-    val heightRaw = le32(b, 22)
-    val height = math.abs(heightRaw) // negative = top-down, legal
+    val height = le32(b, 22)
+    require(height >= 0, s"top-down BMP (height $height) unsupported")
+    require(width > 0 && height > 0, s"empty BMP ${width}x$height")
     val bpp = le16(b, 28)
     val compression = le32(b, 30)
     require(bpp == 24 && compression == 0,
       s"only 24bpp uncompressed supported (bpp=$bpp comp=$compression)")
+    // in Long and by division, so crafted dimensions cannot wrap the
+    // bound; once it holds, stride * height fits the array (an Int)
+    require(dataOff <= b.length &&
+      height <= (b.length - dataOff) / ((3L * width + 3) / 4 * 4),
+      "truncated BMP pixels")
     val stride = bmpStride(width)
-    require(b.length >= dataOff + stride * height, "truncated BMP pixels")
     var sum = 0.0
     var row = 0
     while (row < height) {
@@ -115,8 +136,7 @@ object MediaCodecs {
       }
       row += 1
     }
-    val n = width.toLong * height
-    Decoded(width, height, 1, 0L, 0, 0L, if (n == 0) 0.0 else sum / n)
+    Decoded(width, height, 1, 0L, 0, 0L, sum / (width.toLong * height))
   }
 
   /** Grayscale payload of a 24bpp BMP, row-major from the TOP (the
@@ -185,17 +205,18 @@ object MediaCodecs {
     math.min(off.toLong + 8 + len + (len & 1), end.toLong).toInt
   }
 
-  /** Parse a RIFF/WAVE file by chunk iteration (fmt + data located by
-    * walking, tolerating interleaved chunks); meanVal = mean |sample|
-    * over the PCM16 payload. */
-  def decodeWav(b: Array[Byte]): Decoded = {
+  /** The chunk walk shared by [[decodeWav]] and [[wavSamples]]: checks
+    * the RIFF/WAVE magic, reads the fmt fields and stops at the FIRST
+    * data chunk (the format puts fmt before data), so both read the same
+    * samples. Returns (sample rate, data offset, sample count). */
+  private def wavData(b: Array[Byte]): (Int, Int, Int) = {
     require(b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
       b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' &&
       b(11) == 'E', "not a RIFF/WAVE file")
     var off = 12
     var sampleRate = 0; var channels = 0; var bits = 0
     var dataOff = -1; var dataLen = 0
-    while (off + 8 <= b.length) {
+    while (dataOff < 0 && off + 8 <= b.length) {
       val id = new String(b, off, 4, "US-ASCII")
       val len = le32(b, off + 4)
       id match {
@@ -207,12 +228,19 @@ object MediaCodecs {
         case "data" => dataOff = off + 8; dataLen = len
         case _ => () // LIST/fact/...: skip
       }
-      off = nextChunk(off, len, b.length)
+      off = nextChunk(off, len, b.length) // also rejects a negative length
     }
     require(sampleRate > 0 && dataOff >= 0, "missing fmt or data chunk")
     require(channels == 1 && bits == 16, "only mono PCM16 supported")
     require(dataOff.toLong + dataLen <= b.length, "truncated WAV data")
-    val n = dataLen / 2
+    (sampleRate, dataOff, dataLen / 2)
+  }
+
+  /** Parse a RIFF/WAVE file by chunk iteration (fmt + data located by
+    * walking, tolerating interleaved chunks); meanVal = mean |sample|
+    * over the PCM16 payload. */
+  def decodeWav(b: Array[Byte]): Decoded = {
+    val (sampleRate, dataOff, n) = wavData(b)
     var sum = 0.0
     var i = 0
     while (i < n) {
@@ -224,22 +252,13 @@ object MediaCodecs {
       n.toLong * 1000 / sampleRate, if (n == 0) 0.0 else sum / n)
   }
 
-  /** PCM16 sample payload of a mono WAV (chunk-walked like
-    * [[decodeWav]]). */
+  /** PCM16 sample payload of a mono WAV (the samples [[decodeWav]]
+    * summarizes). */
   def wavSamples(b: Array[Byte]): Array[Short] = {
-    val d = decodeWav(b) // validates
-    // re-walk to the data chunk
-    var off = 12
-    var dataOff = -1
-    while (off + 8 <= b.length && dataOff < 0) {
-      val id = new String(b, off, 4, "US-ASCII")
-      val len = le32(b, off + 4)
-      if (id == "data") dataOff = off + 8
-      else off = nextChunk(off, len, b.length)
-    }
-    val out = new Array[Short](d.nSamples.toInt)
+    val (_, dataOff, n) = wavData(b)
+    val out = new Array[Short](n)
     var i = 0
-    while (i < out.length) {
+    while (i < n) {
       out(i) = le16(b, dataOff + 2 * i).toShort; i += 1
     }
     out

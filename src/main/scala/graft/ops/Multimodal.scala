@@ -146,11 +146,7 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions(_.grouped(DecodeBatch).flatMap(_.map { m =>
-      val d = m.kind match {
-        case "image" => MediaCodecs.decodeBmp(m.blob)
-        case "audio" => MediaCodecs.decodeWav(m.blob)
-        case _       => MediaCodecs.decodeY4m(m.blob)
-      }
+      val d = MediaCodecs.decode(m.kind, m.blob)
       MediaDecoded(m.doc_id, m.kind, m.blob.length.toLong, d.width,
         d.height, d.frames, d.nSamples, d.sampleRate, d.durationMs,
         d.meanVal)
@@ -208,10 +204,11 @@ object Multimodal {
       var i = 0
       while (i < out.length) { out(i) = s(2 * i); i += 1 }
       MediaRow(m.doc_id, "audio", MediaCodecs.encodeWav(out))
-    case _ =>
+    case "video" =>
       val (w, h, luma) = MediaCodecs.y4mFirstFrameLuma(m.blob)
       MediaRow(m.doc_id, "image",
         MediaCodecs.encodeBmp(w, h, k => luma(k)))
+    case other => MediaCodecs.unknownKind(other)
   }
 
   /** Gate query: full decode -> transform -> re-encode -> decode chain
@@ -223,11 +220,7 @@ object Multimodal {
     realMediaTable(spark, sfDir)
       .mapPartitions(_.grouped(DecodeBatch).flatMap(_.map { m =>
         val t = transformRow(m)
-        val d = t.kind match {
-          case "image" => MediaCodecs.decodeBmp(t.blob)
-          case "audio" => MediaCodecs.decodeWav(t.blob)
-          case _       => MediaCodecs.decodeY4m(t.blob)
-        }
+        val d = MediaCodecs.decode(t.kind, t.blob)
         (m.doc_id, m.kind, t.kind, t.blob.length.toLong,
           d.width, d.height, d.nSamples)
       }))

@@ -86,8 +86,7 @@ object Wand {
 
   private def plan(idx: InvertedIndex, terms: Seq[String], k: Int,
       dfs: Map[String, Long]): Option[Plan] = {
-    val blocks = idx.blocks.getOrElse(
-      sys.error("WAND needs a block-backed index (SegmentStore.open)"))
+    val blocks = idx.blockTable
     val spark = blocks.sparkSession
     import spark.implicits._
     val searcher = new Searcher(idx)
@@ -205,7 +204,7 @@ object Wand {
 
   private def topKPruned(idx: InvertedIndex, terms: Seq[String], k: Int,
       dfs: Map[String, Long]): DataFrame = {
-    val spark = idx.blocks.get.sparkSession
+    val spark = idx.blockTable.sparkSession
     plan(idx, terms, k, dfs) match {
       case None =>
         spark.range(0).select(col("id").as("docid"), lit(0.0).as("score"))

@@ -48,12 +48,7 @@ object StreamingMediaDecode {
     media.mapPartitions(_.grouped(Multimodal.DecodeBatch).flatMap(_.map {
       m =>
         try {
-          val d = m.kind match {
-            case "image" => MediaCodecs.decodeBmp(m.blob)
-            case "audio" => MediaCodecs.decodeWav(m.blob)
-            case "video" => MediaCodecs.decodeY4m(m.blob)
-            case other => sys.error(s"unknown media kind '$other'")
-          }
+          val d = MediaCodecs.decode(m.kind, m.blob)
           MediaDecodedOr(m.doc_id, m.kind, m.blob.length.toLong, d.width,
             d.height, d.frames, d.nSamples, d.sampleRate, d.durationMs,
             d.meanVal, null)

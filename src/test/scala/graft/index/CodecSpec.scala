@@ -113,8 +113,9 @@ class CodecSpec extends AnyFunSuite {
   test("positions blob round-trip") {
     samples(Gen.listOf(Gen.chooseNum(0, 99999)), 200).foreach { raw =>
       val ps = raw.sorted.toArray
-      assert(Codec.decodePositions(Codec.encodePositions(ps),
-        ps.length.toLong).toSeq == ps.toSeq)
+      val b = Codec.encodeRaw("t", Iterator.single(Codec.RawPosting("t", 0L,
+        ps.length.toLong, 1L, Codec.encodePositions(ps)))).next()
+      assert(Codec.decode(b).next().positions.toSeq == ps.toSeq)
     }
   }
 

@@ -129,6 +129,36 @@ class MediaCodecsFuzzSpec extends AnyFunSuite {
     assert(bounded(MediaCodecs.decodeWav(huge)).isFailure)
   }
 
+  test("BMP headers with bad dimensions or orientation are rejected") {
+    val ok = MediaCodecs.encodeBmp(4, 3, _ % 256)
+    def withDims(w: Int, h: Int): Array[Byte] = {
+      val b = ok.clone()
+      Array.copy(le32(w), 0, b, 18, 4)
+      Array.copy(le32(h), 0, b, 22, 4)
+      b
+    }
+    // negative widths; dimensions whose byte count overflows an Int (or
+    // a Long, when multiplied naively); top-down (negative height)
+    val cases = Seq((-4, 3), (-1, 1), (Int.MinValue, 3),
+      (1 << 30, 1 << 30), (Int.MaxValue, Int.MaxValue), (715827883, 2),
+      (4, -3), (4, Int.MinValue), (0, 3), (4, 0))
+    for ((w, h) <- cases) {
+      val r = bounded(MediaCodecs.decodeBmp(withDims(w, h)))
+      assert(r.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]),
+        s"${w}x$h: $r")
+      val g = bounded(MediaCodecs.bmpGray(withDims(w, h)))
+      assert(g.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]),
+        s"${w}x$h: $g")
+    }
+    // a pixel offset inside the header or past the end
+    for (off <- Seq(0, 53, -1, Int.MaxValue)) {
+      val b = ok.clone()
+      Array.copy(le32(off), 0, b, 10, 4)
+      assert(bounded(MediaCodecs.decodeBmp(b)).failed.toOption
+        .exists(_.isInstanceOf[IllegalArgumentException]), s"offset $off")
+    }
+  }
+
   test("Y4M headers with a non-positive or huge frame size are rejected") {
     val frame = "FRAME\n".getBytes("US-ASCII") ++ new Array[Byte](64)
     for ((w, h) <- Seq((4, -1), (-4, 1), (-4, -2), (0, 8), (16, 0), (0, 0),

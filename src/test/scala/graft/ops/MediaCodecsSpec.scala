@@ -83,6 +83,23 @@ class MediaCodecsSpec extends AnyFunSuite {
     assert(d.nSamples == 2 && math.abs(d.meanVal - 5.0) < 1e-9)
   }
 
+  test("WAV with two data chunks: both decoders read the first") {
+    val first = Array[Short](100, -100, 300)
+    val base = MediaCodecs.encodeWav(first)
+    // a second, longer data chunk after the first
+    val second = "data".getBytes("US-ASCII") ++ Array[Byte](8, 0, 0, 0) ++
+      MediaCodecs.encodeWav(Array[Short](7, 7, 7, 7)).drop(44)
+    val b = base ++ second
+    val riffLen = b.length - 8
+    b(4) = (riffLen & 0xff).toByte
+    b(5) = ((riffLen >> 8) & 0xff).toByte
+    val d = MediaCodecs.decodeWav(b)
+    val s = MediaCodecs.wavSamples(b)
+    assert(s.length == d.nSamples)
+    assert(s.toSeq == first.toSeq)
+    assert(math.abs(d.meanVal - 500 / 3.0) < 1e-9)
+  }
+
   test("WAV rejects non-RIFF and missing data chunk") {
     intercept[IllegalArgumentException] {
       MediaCodecs.decodeWav("not audio at all".getBytes)
@@ -191,6 +208,17 @@ class MediaCodecsSpec extends AnyFunSuite {
   }
 
   // ==================== Spark path end-to-end ====================
+
+  test("decodeFeatures rejects an unknown media kind") {
+    val spark = SparkFixture.spark
+    import spark.implicits._
+    val text = Seq(MediaRow(1L, "text", "plain words".getBytes("UTF-8")))
+      .toDS()
+    val e = intercept[Exception](Multimodal.decodeFeatures(text).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.getMessage != null &&
+        c.getMessage.contains("unknown media kind 'text'")))
+  }
 
   test("decoded(): real decode over the corpus, no shuffle before sort") {
     val spark = SparkFixture.spark

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
 import graft.analysis.{Analyzer, Payloads}
-import graft.index.{Codec, DocIds, IndexBuilder, InvertedIndex, PostingBlocks}
+import graft.index.{Codec, IndexBuilder, SegmentStore}
 import graft.model.Transcripts
 
 /** Payload family invariants (PayloadTermQuery.cs:26-40,
@@ -18,17 +18,20 @@ class PayloadSpec extends AnyFunSuite {
   test("codec: positions+payloads round-trip; absence reads as 1.0") {
     val pos = Array(1, 4, 9, 10, 300)
     val pay = Array(2.5f, Float.NaN, 0.25f, Float.NaN, 7f)
-    val blob = Codec.encodePosPay(pos, pay)
-    val (gp, gw) = Codec.decodePosPay(blob, pos.length.toLong)
-    assert(gp.toSeq == pos.toSeq)
-    assert(gw.toSeq == Seq(2.5f, 1.0f, 0.25f, 1.0f, 7f))
+    // one posting whose position blob is `blob`, through the block codec
+    def block(blob: Array[Byte]) = Codec.encodeRaw("t", Iterator.single(
+      Codec.RawPosting("t", 3L, pos.length.toLong, 9L, blob))).next()
+    val b = block(Codec.encodePosPay(pos, pay))
+    val Seq(p) = Codec.decodePay(b).toSeq
+    assert(p.positions.toSeq == pos.toSeq)
+    assert(p.payloads.toSeq == Seq(2.5f, 1.0f, 0.25f, 1.0f, 7f))
     // payload-skipping decode sees the same positions
-    assert(Codec.decodePositions(blob, pos.length.toLong).toSeq == pos.toSeq)
+    assert(Codec.decode(b).next().positions.toSeq == pos.toSeq)
     // payload-free encoding decodes identically through BOTH paths
-    val blob0 = Codec.encodePositions(pos)
-    assert(Codec.decodePositions(blob0, pos.length.toLong).toSeq == pos.toSeq)
-    val (gp0, gw0) = Codec.decodePosPay(blob0, pos.length.toLong)
-    assert(gp0.toSeq == pos.toSeq && gw0.forall(_ == 1.0f))
+    val b0 = block(Codec.encodePositions(pos))
+    assert(Codec.decode(b0).next().positions.toSeq == pos.toSeq)
+    val p0 = Codec.decodePay(b0).next()
+    assert(p0.positions.toSeq == pos.toSeq && p0.payloads.forall(_ == 1.0f))
   }
 
   test("delimited tokenizer: term|weight split with float payloads") {
@@ -41,17 +44,17 @@ class PayloadSpec extends AnyFunSuite {
     assert(toks(3).payload.isNaN) // unparseable weight -> no payload
   }
 
-  test("payload query: mem and block flavors agree and match brute force") {
+  test("payload query: mem and persisted flavors agree and match brute force") {
     val t = Transcripts.synthetic(spark, 600, seed = 7L, partitions = 4)
     val assigner = Payloads.positionBoost(3, 2.0f)
-    val mem = IndexBuilder.buildPay(t, assigner, 4)
+    val mem = IndexBuilder.build(t, 4, assigner = Some(assigner))
 
-    // block-backed twin over the SAME docids: blocks from the
-    // payload-carrying raw inversion (blobs flow verbatim)
-    val blocks = PostingBlocks.fromRaw(
-      IndexBuilder.invertRawPay(mem.docs, assigner), 4).toDF().cache()
-    val blk = InvertedIndex(mem.docs, mem.postings, mem.termDict,
-      mem.docLens, mem.numDocs, mem.avgdl, blocks = Some(blocks))
+    // the same payload build persisted as segments and re-opened (the
+    // payload blobs flow verbatim through the shuffle and parquet)
+    val root = java.nio.file.Files.createTempDirectory("graft_paymem_").toString
+    IndexBuilder.buildSegments(spark, t, root, numBatches = 2,
+      numPartitions = 4, assigner = Some(assigner))
+    val blk = SegmentStore.open(spark, root)
 
     val term = "error"
     for (fn <- Seq(PayAvg: PayloadFn, PayMin, PayMax)) {
@@ -60,7 +63,7 @@ class PayloadSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getDouble(1)))
       val gotBlk = new Searcher(blk).topK(q, 20).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
-      assert(gotMem.toSeq == gotBlk.toSeq, s"mem != blocks for $fn")
+      assert(gotMem.toSeq == gotBlk.toSeq, s"mem != persisted for $fn")
 
       // brute force from raw text + the assigner definition
       val docs = mem.docs.select("docid", "text").collect()
@@ -90,17 +93,16 @@ class PayloadSpec extends AnyFunSuite {
         assert(bd == gd && math.abs(bs - gs) < 1e-9, s"fn=$fn")
       }
     }
-    blocks.unpersist()
   }
 
   test("payloads survive the persisted segment store (build → parquet → open)") {
     val t = Transcripts.synthetic(spark, 400, seed = 11L, partitions = 4)
     val assigner = Payloads.positionBoost(3, 2.0f)
-    val mem = IndexBuilder.buildPay(t, assigner, 4)
+    val mem = IndexBuilder.build(t, 4, assigner = Some(assigner))
     val root = java.nio.file.Files.createTempDirectory("graft_payseg_").toString
     IndexBuilder.buildSegments(spark, t, root, numBatches = 3,
       numPartitions = 4, assigner = Some(assigner))
-    val seg = graft.index.SegmentStore.open(spark, root)
+    val seg = SegmentStore.open(spark, root)
     for (fn <- Seq(PayAvg: PayloadFn, PayMin, PayMax)) {
       val q = PayloadTermQ("error", fn)
       val gotMem = new Searcher(mem).topK(q, 20).collect()
@@ -115,7 +117,7 @@ class PayloadSpec extends AnyFunSuite {
     val root2 = java.nio.file.Files.createTempDirectory("graft_plainseg_").toString
     IndexBuilder.buildSegments(spark, t, root2, numBatches = 3,
       numPartitions = 4)
-    val plain = graft.index.SegmentStore.open(spark, root2)
+    val plain = SegmentStore.open(spark, root2)
     val a = new Searcher(seg).topK(TermQ("error"), 20).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val b = new Searcher(plain).topK(TermQ("error"), 20).collect()
@@ -125,7 +127,8 @@ class PayloadSpec extends AnyFunSuite {
 
   test("payload span-near: N=2 equals PayloadNearQ; N=3 matches brute force") {
     val t = Transcripts.synthetic(spark, 500, seed = 9L, partitions = 2)
-    val idx = IndexBuilder.buildPay(t, Payloads.positionBoost(3, 2.0f), 2)
+    val idx = IndexBuilder.build(t, 2,
+      assigner = Some(Payloads.positionBoost(3, 2.0f)))
     val sr = new Searcher(idx)
     val docsTerms = idx.docs.select("docid", "text").collect()
       .map(r => r.getLong(0) ->
@@ -213,7 +216,8 @@ class PayloadSpec extends AnyFunSuite {
 
   test("payload near: span-matched docs only, payloads from both ends") {
     val t = Transcripts.synthetic(spark, 500, seed = 5L, partitions = 2)
-    val idx = IndexBuilder.buildPay(t, Payloads.positionBoost(3, 2.0f), 2)
+    val idx = IndexBuilder.build(t, 2,
+      assigner = Some(Payloads.positionBoost(3, 2.0f)))
     val sr = new Searcher(idx)
     // pick an ORDERED pair (a before b) that co-occurs in this corpus:
     // scan raw analyzed docs for adjacent-ish term pairs
@@ -245,7 +249,8 @@ class PayloadSpec extends AnyFunSuite {
 
   test("includeSpanScore=false scores by payload function alone") {
     val t = Transcripts.synthetic(spark, 300, seed = 11L, partitions = 2)
-    val idx = IndexBuilder.buildPay(t, Payloads.positionBoost(3, 2.0f), 2)
+    val idx = IndexBuilder.build(t, 2,
+      assigner = Some(Payloads.positionBoost(3, 2.0f)))
     val got = new Searcher(idx)
       .topK(PayloadTermQ("error", PayMax, includeSpanScore = false), 1000)
       .collect().map(_.getDouble(1)).toSet
