@@ -260,6 +260,18 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val skipScaling = sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")
+    // the full self-record goes under java.io.tmpdir unless
+    // SPARK_GRAFT_BENCH_SELF names a path, so a run never overwrites the
+    // committed BENCH_SELF.json. Best-effort: the path written, or None.
+    val selfPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SELF",
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+        "BENCH_SELF.json").toString)
+    def writeSelf(record: String): Option[String] =
+      try {
+        Files.write(java.nio.file.Paths.get(selfPath),
+          (record + "\n").getBytes("UTF-8"))
+        Some(selfPath)
+      } catch { case _: Throwable => None }
 
     // ---- part 1: build throughput at N vs 4N cores ----
     // N is CALIBRATED unless SPARK_GRAFT_SCALE_N pins it. Two layers:
@@ -646,12 +658,7 @@ object Bench {
 
     // ---- part 2: per-query wall time on the sf dir ----
     if (sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")) {
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_SELF", "BENCH_SELF.json")),
-        (s"""{"metric":"build_only","build":$scalingJson}""" + "\n")
-          .getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      writeSelf(s"""{"metric":"build_only","build":$scalingJson}""")
       println(s"""{"metric":"build_only","build":$scalingCompactJson}""")
       return
     }
@@ -911,20 +918,17 @@ object Bench {
         val err = s"""{"err":"${e.getClass.getSimpleName}"}"""
         (err, err)
       }
-    // full record → BENCH_SELF.json (committed, the CORRECTNESS_SELF
-    // pattern); stdout gets a COMPACT headline the driver's bounded
-    // tail capture can always parse (round-4's 5 KB one-liner overflowed
+    // full record → the self-record path; stdout gets a COMPACT headline
+    // that a bounded tail capture can always parse (round-4's 5 KB one-liner overflowed
     // it → BENCH_r04 parsed:null). Compact = no per-query maps (top-8
     // slowest only), no sf1 query sweep, pointers to the full record.
     val line =
       f"""{"metric":"total_query_sec","value":$total%.2f,"unit":"sec","queries":$qs,"queries_retried":$retriedJson,"flavor_build_sec":$fl,"wand":$wandJson,"ann":$annJson,"ann_clustered":$annClusteredJson,"sf1":$sf1Json,"sf":"$sfDir","build":$scalingJson}"""
-    // committed self-record first: if anything below throws, the full
-    // measurement is already on disk. Best-effort — cwd may be read-only.
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SELF", "BENCH_SELF.json")),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    // self-record first: if anything below throws, the full
+    // measurement is already on disk
+    val fullRecord = writeSelf(line)
+      .map(p => "\"" + p.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+      .getOrElse("null")
     // "queries" keeps the driver-contract shape but holds only the 8
     // slowest entries; queries_n says how many the full record carries.
     // The stdout line must survive a 2000-char tail capture WITH sbt's
@@ -939,7 +943,7 @@ object Bench {
         s""""queries_n":${results.size},""" +
         (if (withSf1) s""""sf1":$sf1CompactJson,""" else "") +
         s""""sf":"$sfDir","build":$scalingCompactJson,""" +
-        s""""full_record":"BENCH_SELF.json"}"""
+        s""""full_record":$fullRecord}"""
     val compact = Seq(compactLine(true, true), compactLine(true, false),
       compactLine(false, false)).find(_.length <= 1700)
       .getOrElse(compactLine(false, false))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -257,23 +257,15 @@ object Engine {
       .filter(col("docid").isin(docids: _*))
   }
 
-  /** Highlighter over the persisted term-vectors table
-    * (FastVectorHighlighter.cs:26 shape): hit MATCHES come from the
-    * docid-partitioned tvec parquet (positions in raw-token
-    * coordinates), not from re-matching the analyzed tokens; only the
-    * k hit docs' vectors are fetched (range-pruned scan). Output is
-    * identical to the re-analysis path for non-stopword query terms —
-    * both gate entries share one oracle. */
-  def highlightTvec(spark: SparkSession, sfDir: String, q: Query,
-      k: Int): DataFrame = {
+  /** (rank, docid, text, hit positions) of the query's top-k hits, the
+    * positions of every query term read from the persisted term vectors
+    * — the prologue of [[highlightTvec]] and [[highlightTvecN]]. */
+  private def tvecHits(spark: SparkSession, sfDir: String, q: Query,
+      k: Int): Dataset[(Long, Long, String, Seq[Int])] = {
     import spark.implicits._
     val idx = indexSeg(spark, sfDir)
     val terms = QueryAst.terms(q)
-    val hits = new Searcher(idx).topK(q, k)
-      .withColumn("rank",
-        row_number().over(
-          Window.orderBy(col("score").desc, col("docid").asc)).cast("long"))
-      .select(col("rank"), col("docid"))
+    val hits = Highlight.rankedHits(new Searcher(idx), q, k)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val tv = termVectorsOf(spark, sfDir, hits.map(_._2))
       .filter(col("term").isin(terms.toSeq: _*))
@@ -285,6 +277,19 @@ object Engine {
       .select(col("rank"), col("docid"), col("text"),
         coalesce(col("hitpos"), array().cast("array<int>")).as("hitpos"))
       .as[(Long, Long, String, Seq[Int])]
+  }
+
+  /** Highlighter over the persisted term-vectors table
+    * (FastVectorHighlighter.cs:26 shape): hit MATCHES come from the
+    * docid-partitioned tvec parquet (positions in raw-token
+    * coordinates), not from re-matching the analyzed tokens; only the
+    * k hit docs' vectors are fetched (range-pruned scan). Output is
+    * identical to the re-analysis path for non-stopword query terms —
+    * both gate entries share one oracle. */
+  def highlightTvec(spark: SparkSession, sfDir: String, q: Query,
+      k: Int): DataFrame = {
+    import spark.implicits._
+    tvecHits(spark, sfDir, q, k)
       .map { case (r, d, t, ps) =>
         (r, d, Highlight.bestFragmentFromPositions(t, ps.toSet)) }
       .toDF("rank", "docid", "snippet")
@@ -300,11 +305,7 @@ object Engine {
     import spark.implicits._
     val idx = indexSeg(spark, sfDir)
     val weights = Highlight.termWeights(idx, q)
-    val hits = new Searcher(idx).topK(q, k)
-      .withColumn("rank",
-        row_number().over(
-          Window.orderBy(col("score").desc, col("docid").asc)).cast("long"))
-      .select(col("rank"), col("docid"))
+    val hits = Highlight.rankedHits(new Searcher(idx), q, k)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val tv = termVectorsOf(spark, sfDir, hits.map(_._2))
       .filter(col("term").isin(weights.keys.toSeq: _*))
@@ -335,24 +336,7 @@ object Engine {
   def highlightTvecN(spark: SparkSession, sfDir: String, q: Query,
       k: Int, maxFrags: Int): DataFrame = {
     import spark.implicits._
-    val idx = indexSeg(spark, sfDir)
-    val terms = QueryAst.terms(q)
-    val hits = new Searcher(idx).topK(q, k)
-      .withColumn("rank",
-        row_number().over(
-          Window.orderBy(col("score").desc, col("docid").asc)).cast("long"))
-      .select(col("rank"), col("docid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val tv = termVectorsOf(spark, sfDir, hits.map(_._2))
-      .filter(col("term").isin(terms.toSeq: _*))
-      .groupBy(col("docid"))
-      .agg(flatten(collect_list(col("positions"))).as("hitpos"))
-    hits.toDF("rank", "docid")
-      .join(tv, Seq("docid"), "left")
-      .join(idx.docs.select(col("docid"), col("text")), Seq("docid"))
-      .select(col("rank"), col("docid"), col("text"),
-        coalesce(col("hitpos"), array().cast("array<int>")).as("hitpos"))
-      .as[(Long, Long, String, Seq[Int])]
+    tvecHits(spark, sfDir, q, k)
       .flatMap { case (r, d, t, ps) =>
         val raw = graft.analysis.Analyzer.rawTokens(t)
         val hitSet = ps.toSet

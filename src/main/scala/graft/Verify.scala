@@ -35,12 +35,16 @@ object Verify {
     if (filt.nonEmpty)
       Files.write(marker, s"filter=$filt\n".getBytes("UTF-8"))
     else Files.deleteIfExists(marker)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (filt.isEmpty || name.contains(filt))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val entries = SparkEntry.queries.filter { case (name, _) =>
+      filt.isEmpty || name.contains(filt) }
+    val failed = entries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -59,5 +63,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // one bounded summary line: at most 20 failed names are listed
+    println(s"""{"entries":${entries.size},"dumped":""" +
+      s"""${entries.size - failed.size},"failed":""" +
+      failed.take(20).map(q).mkString("[", ",", "]") + "}")
   }
 }

@@ -19,21 +19,8 @@ object Highlight {
 
   def bestFragment(text: String, terms: Set[String], window: Int = Window): String = {
     val raw = Analyzer.rawTokens(text)
-    if (raw.isEmpty) return ""
-    val hit = raw.map(t => terms.contains(t))
-    val n = raw.length
-    val w = math.min(window, n)
-    var best = 0; var bestScore = -1
-    var i = 0
-    var run = hit.slice(0, w).count(identity)
-    while (i + w <= n) {
-      if (run > bestScore) { bestScore = run; best = i }
-      if (i + w < n) run += (if (hit(i + w)) 1 else 0) - (if (hit(i)) 1 else 0)
-      i += 1
-    }
-    raw.slice(best, best + w).map { t =>
-      if (terms.contains(t)) s"[$t]" else t
-    }.mkString(" ")
+    bestFragmentFromPositions(text,
+      raw.indices.filter(p => terms.contains(raw(p))).toSet, window)
   }
 
   /** Position-set variant (FastVectorHighlighter.cs:26 shape): matches
@@ -136,6 +123,25 @@ object Highlight {
     }
   }
 
+  /** The query's top-k hits as (rank, docid) — the prologue every
+    * highlighter shares. Rank is an explicit materialized column
+    * (row_number over the mandatory (score desc, docid asc) order,
+    * computed over the k hit rows): DataFrame ordering is not
+    * guaranteed to survive a join or a typed map. */
+  def rankedHits(searcher: Searcher, q: Query, k: Int): DataFrame =
+    searcher.topK(q, k)
+      .withColumn("rank",
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .orderBy(col("score").desc, col("docid").asc)).cast("long"))
+      .select(col("rank"), col("docid"))
+
+  /** (rank, docid, text) of the hits, for the re-analysis highlighters. */
+  private def hitTexts(idx: InvertedIndex, searcher: Searcher, q: Query,
+      k: Int): DataFrame =
+    rankedHits(searcher, q, k)
+      .join(idx.docs.select(col("docid"), col("text")), Seq("docid"))
+      .select(col("rank"), col("docid"), col("text"))
+
   /** Weighted variant of [[highlightN]]: fragments ranked by the
     * idf-weighted distinct-term score instead of raw hit count. */
   def highlightWeighted(idx: InvertedIndex, searcher: Searcher, q: Query,
@@ -143,13 +149,7 @@ object Highlight {
     val spark = idx.docs.sparkSession
     import spark.implicits._
     val weights = termWeights(idx, q)
-    searcher.topK(q, k)
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("docid").asc)).cast("long"))
-      .join(idx.docs.select(col("docid"), col("text")), Seq("docid"))
-      .select(col("rank"), col("docid"), col("text"))
-      .as[(Long, Long, String)]
+    hitTexts(idx, searcher, q, k).as[(Long, Long, String)]
       .flatMap { case (r, d, t) =>
         val raw = Analyzer.rawTokens(t)
         topFragmentsWeighted(raw,
@@ -167,13 +167,7 @@ object Highlight {
     val spark = idx.docs.sparkSession
     import spark.implicits._
     val terms = QueryAst.terms(q)
-    searcher.topK(q, k)
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("docid").asc)).cast("long"))
-      .join(idx.docs.select(col("docid"), col("text")), Seq("docid"))
-      .select(col("rank"), col("docid"), col("text"))
-      .as[(Long, Long, String)]
+    hitTexts(idx, searcher, q, k).as[(Long, Long, String)]
       .flatMap { case (r, d, t) =>
         val raw = Analyzer.rawTokens(t)
         topFragments(raw, p => terms.contains(raw(p)), window, maxFrags)
@@ -182,22 +176,13 @@ object Highlight {
       .toDF("rank", "docid", "frag", "fscore", "snippet")
   }
 
-  /** (rank, docid, snippet) for the query's top-k hits. Rank is an
-    * explicit materialized column (row_number over the mandatory
-    * (score desc, docid asc) order, computed over the k collected rows)
-    * — DataFrame ordering is not guaranteed to survive the typed map. */
+  /** (rank, docid, snippet) for the query's top-k hits. */
   def highlight(idx: InvertedIndex, searcher: Searcher, q: Query,
       k: Int): DataFrame = {
     val spark = idx.docs.sparkSession
     import spark.implicits._
     val terms = QueryAst.terms(q)
-    searcher.topK(q, k)
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("docid").asc)).cast("long"))
-      .join(idx.docs.select(col("docid"), col("text")), Seq("docid"))
-      .select(col("rank"), col("docid"), col("text"))
-      .as[(Long, Long, String)]
+    hitTexts(idx, searcher, q, k).as[(Long, Long, String)]
       .map { case (r, d, t) => (r, d, bestFragment(t, terms)) }
       .toDF("rank", "docid", "snippet")
   }

@@ -27,6 +27,11 @@ object QueryParser {
 
   private val KeywordFields = Set("role", "tool", "conv_id")
 
+  /** Deepest `(` group nesting accepted: the parser recurses once per
+    * group, so unbounded nesting would end in a StackOverflowError
+    * instead of a clean rejection. */
+  val MaxNesting = 64
+
   def parse(input: String): Query = parse(input, Map.empty[String, String])
 
   /** `dateResolutions` is the reference's per-field SetDateResolution
@@ -98,6 +103,7 @@ object QueryParser {
       defaultFields: Seq[(String, Double)] = Seq("text" -> 1.0),
       dateRes: Map[String, String] = Map.empty) {
     var pos = 0
+    private var depth = 0
     def eof: Boolean = pos >= s.length
     def rest: String = s.substring(math.min(pos, s.length))
     def peek: Char = s.charAt(pos)
@@ -246,10 +252,14 @@ object QueryParser {
         else peek match {
           case '(' =>
             pos += 1
+            depth += 1
+            require(depth <= MaxNesting,
+              s"query nesting deeper than $MaxNesting groups at $pos")
             // the field scope threads INTO the group: role:(a b) applies
             // role to both sub-clauses (QueryParser.JJ Clause field arg)
             val q = parseBool(targets)
             skipWs(); require(!eof && peek == ')', "expected )"); pos += 1
+            depth -= 1
             Some(q)
           case '"' =>
             pos += 1

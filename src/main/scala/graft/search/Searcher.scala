@@ -8,22 +8,28 @@ import graft.index.InvertedIndex
 
 /** Query execution: AST → (docid, score) DataFrame plans.
   *
-  * The reference's scorer tree (doc-at-a-time merges over sorted docID
-  * iterators, /root/reference/src/core/Search/Scorer.cs:41) maps onto
-  * joins + hash aggregations on docid (SURVEY.md §2.5):
-  *   AND  → groupBy(docid) count-filter        (ConjunctionScorer.cs:25)
-  *   OR   → groupBy(docid) sum + minShouldMatch (DisjunctionSumScorer.cs:28)
-  *   NOT  → left anti join                      (ReqExclScorer.cs:30)
-  *   req+opt → left outer join + coalesce       (ReqOptSumScorer.cs:28)
+  * The reference scores every clause mix with one scorer tree
+  * (BooleanScorer2, BooleanQuery.cs:350-424; DisjunctionMaxQuery as a
+  * second fold over the same sub-scorers). Here that tree is one per-doc
+  * clause array ([[clauseArray]]): every clause of a boolean or DisMax
+  * node is a group of rows — (boosted) terms and one-level pure-term
+  * sub-booleans from one shared postings scan, every other clause from
+  * its own [[score]] frame — collected by one hash aggregate per doc.
+  * One group algebra ([[boolFold]], a higher-order fold driven by the
+  * node's group meta) gives each sub-boolean group's (ok, score); a
+  * clause that is one row per matching doc is its own result. The
+  * boolean fold (must/should/not counts, minShouldMatch, coord) or the
+  * DisMax fold (max + tie·(sum − max)) consumes them. [[topKBatch]]
+  * builds the same array for many queries, keyed by (qid, docid).
   * Scoring is a pluggable [[Similarity]] strategy (Similarity.cs:398-503):
   * BM25 by default (coord intentionally dropped, BM25-era Lucene drops it;
   * SURVEY §7.7), the reference's classic TF-IDF with coord via
   * [[ClassicSim]].
   *
-  * Determinism: clause scores are summed in sorted clause order via
-  * aggregate(sort_array(collect_list(...))) — float addition order is
-  * fixed regardless of shuffle layout, so scores are bit-stable run to run
-  * (SURVEY §7 hard-part #1).
+  * Determinism: multi-part scores are summed in sorted clause order
+  * (sort_array(collect_list(...)) then an ordered fold) — float addition
+  * order is fixed regardless of shuffle layout, so scores are bit-stable
+  * run to run (SURVEY §7 hard-part #1).
   */
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
 
@@ -67,7 +73,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       }: _*)
   }
 
-  /** The deterministic-fold aggregate shared by every multi-part scorer:
+  /** The deterministic-fold aggregate shared by the multi-term scorers:
     * collect the group's (ord, score) pairs, sort by ord, left-fold —
     * fixed float addition order regardless of shuffle layout, so scores
     * are bit-stable run to run (SURVEY §7 hard-part #1). */
@@ -76,149 +82,145 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       sort_array(collect_list(struct(col("ord"), col("score")))),
       lit(0.0), (acc, x) => acc + x.getField("score"))
 
-  /** Deterministic per-doc sum over clause frames; returns
-    * (docid, score, cnt). */
-  private def detSum(parts: Seq[DataFrame]): DataFrame = {
-    val u = parts.reduce(_ unionByName _)
-    u.groupBy(col("docid")).agg(
-      ordSumAgg.as("score"), count(lit(1)).as("cnt"))
-  }
-
-  private def withOrd(df: DataFrame, ord: String): DataFrame =
-    df.select(col("docid"), col("score"), lit(ord).as("ord"))
-
-  /** TermQ, possibly boost-wrapped — the "simple" clause shape the
-    * single-scan boolean path handles. */
+  /** TermQ, possibly boost-wrapped — the clause shape the shared scan of
+    * [[clauseArray]] reads. */
   private def asSimpleTerm(q: Query): Option[(String, Double)] = q match {
     case TermQ(t) => Some((t, 1.0))
     case BoostQ(sub, b) => asSimpleTerm(sub).map { case (t, b0) => (t, b0 * b) }
     case _ => None
   }
 
-  /** Ordered fold of occur-tagged clause contributions — THE shared
-    * scoring algebra of [[groupedBool]] and [[topKBatch]] (one
-    * definition so the batch-equals-single contract cannot drift):
-    * sum the `tag` entries of a sorted (…, ord, occur, score) struct
-    * array in array order. */
-  private def occSum(arr: Column, tag: String): Column =
-    aggregate(filter(arr, x => x.getField("occur") === tag),
-      lit(0.0), (acc, x) => acc + x.getField("score"))
-
-  /** Count of `tag` entries of the same struct array. */
-  private def occCnt(arr: Column, tag: String): Column =
-    size(filter(arr, x => x.getField("occur") === tag)).cast("long")
-
-  /** One flattened clause-group of a boolean tree: a simple term clause
-    * is a trivial group (nMust=1); a pure-term sub-BoolQ keeps its own
-    * inner (nMust, nShould, msm) algebra evaluated per doc from the same
-    * single scan. */
-  private final case class FlatGroup(gid: String, outerOccur: String,
-      nMust: Int, nShould: Int, msm: Int)
-
-  /** Flatten a BoolQ whose clauses are all simple terms or PURE-TERM
-    * sub-BoolQs into (rows = (term, gid, ord, occur, boost), groups).
-    * Ord/gid keys are %04d so lexicographic order == clause order all
-    * the way to MaxClauseCount (1024) — the sorted fold's order
-    * contract.
-    * Deeper nesting returns None (the compositional path then recurses,
-    * and each one-level-flattenable subtree still gets a single scan). */
-  private def flattenBool(q: BoolQ)
-      : Option[(Seq[(String, String, String, String, Double)], Seq[FlatGroup])] = {
-    def subRows(q2: BoolQ, gid: String)
-        : Option[Seq[(String, String, String, String, Double)]] = {
-      val cl =
-        q2.must.map(c => (c, "m")) ++ q2.should.map(c => (c, "s")) ++
-          q2.mustNot.map(c => (c, "n"))
-      require(cl.size <= Searcher.MaxClauseCount,
-        s"too many boolean clauses (maxClauseCount=${Searcher.MaxClauseCount})")
-      val simple = cl.zipWithIndex.map { case ((c, oc), i) =>
-        asSimpleTerm(c).map { case (t, b) => (t, gid, f"$oc$i%04d", oc, b) }
-      }
-      if (simple.forall(_.isDefined)) Some(simple.map(_.get)) else None
-    }
-    val outer =
-      q.must.map(c => (c, "m")) ++ q.should.map(c => (c, "s")) ++
-        q.mustNot.map(c => (c, "n"))
+  /** A BoolQ's clauses tagged m/s/n, in (must, should, mustNot) order. */
+  private def clausesOf(q: BoolQ): Seq[(Query, String)] = {
     require(q.must.nonEmpty || q.should.nonEmpty, "empty BooleanQuery")
-    require(outer.size <= Searcher.MaxClauseCount,
+    val cl = q.must.map((_, "m")) ++ q.should.map((_, "s")) ++
+      q.mustNot.map((_, "n"))
+    require(cl.size <= Searcher.MaxClauseCount,
       s"too many boolean clauses (maxClauseCount=${Searcher.MaxClauseCount})")
-    val parts = outer.zipWithIndex.map { case ((c, oc), i) =>
-      val gid = f"$oc$i%04d"
-      asSimpleTerm(c) match {
-        case Some((t, b)) =>
-          Some((Seq((t, gid, "m0000", "m", b)), FlatGroup(gid, oc, 1, 0, 0)))
-        case None => c match {
-          case sub: BoolQ if sub.must.nonEmpty || sub.should.nonEmpty =>
-            subRows(sub, gid).map(rs =>
-              (rs, FlatGroup(gid, oc, sub.must.size, sub.should.size,
-                sub.minShouldMatch)))
-          case _ => None
-        }
-      }
-    }
-    if (parts.forall(_.isDefined))
-      Some((parts.flatMap(_.get._1), parts.map(_.get._2)))
-    else None
+    cl
   }
 
-  /** Single-scan grouped boolean: ONE postings scan for EVERY term leaf
-    * of a (possibly one-level-nested) boolean tree — the round-2 plan
-    * re-scanned blocks once per nested sub-query. Clause membership is
-    * recovered via [[perClause]] (a term in several clauses yields
-    * several rows); one hash agg per doc collects the rows
-    * sorted by (gid, ord), then per-GROUP inner boolean algebra and the
-    * outer algebra are pure column expressions over that array
-    * (BooleanScorer2 algebra, BooleanQuery.cs:350-424). Scores sum in
-    * (gid, ord) order — deterministic run to run. */
-  private def groupedBool(
-      rows: Seq[(String, String, String, String, Double)],
-      groups: Seq[FlatGroup], outerMsm: Int): DataFrame = {
-    val scored = perClause(termScores(rows.map(_._1).toSet),
-        rows.map { case (t, g, o, oc, b) => (t, (g, o, oc, b)) },
-        "gid", "ord", "occur", "boost")
-      .select(col("docid"), col("gid"), col("ord"), col("occur"),
-        (col("tscore") * col("boost")).as("score"))
-    val allSorted = sort_array(collect_list(
-      struct(col("gid"), col("ord"), col("occur"), col("score"))))
-    def garr(g: FlatGroup): Column =
-      filter(col("all"), x => x.getField("gid") === g.gid)
-    def sumOf(a: Column, tag: String): Column = occSum(a, tag)
-    def cntOf(a: Column, tag: String): Column = occCnt(a, tag)
-    val agg = scored.groupBy(col("docid")).agg(allSorted.as("all"))
-    // per-group matched flag + score as derived columns (small, driver-
-    // enumerated group list — clause count is capped at MaxClauseCount),
-    // all in ONE projection: each withColumn would re-analyze the plan
-    val groupCols = groups.flatMap { g =>
-      val a = garr(g)
-      val inner =
-        if (g.nMust > 0) {
-          val base = cntOf(a, "m") === g.nMust
-          if (g.nShould > 0) base && cntOf(a, "s") >= g.msm else base
-        } else cntOf(a, "s") >= math.max(1, g.msm)
-      val matched = inner && cntOf(a, "n") === 0L
-      val gscore = sim.applyCoord(
-        if (g.nMust > 0) sumOf(a, "m") + sumOf(a, "s") else sumOf(a, "s"),
-        cntOf(a, "m") + cntOf(a, "s"), g.nMust + g.nShould)
-      Seq(matched.as(s"${g.gid}_ok"),
-        when(matched, gscore).otherwise(lit(0.0)).as(s"${g.gid}_sc"))
-    }
-    val withG = agg.select(col("docid") +: groupCols: _*)
-    val (mustG, shouldG, notG) = (groups.filter(_.outerOccur == "m"),
-      groups.filter(_.outerOccur == "s"), groups.filter(_.outerOccur == "n"))
-    def okCnt(gs: Seq[FlatGroup]): Column =
-      gs.map(g => when(col(s"${g.gid}_ok"), lit(1)).otherwise(lit(0)))
-        .reduceOption(_ + _).getOrElse(lit(0))
-    def scSum(gs: Seq[FlatGroup]): Column =
-      gs.map(g => col(s"${g.gid}_sc")).reduceOption(_ + _).getOrElse(lit(0.0))
-    val minShould = if (mustG.isEmpty) math.max(1, outerMsm) else outerMsm
-    val keep = Seq(Some(okCnt(notG) === 0),
-      Option.when(mustG.nonEmpty)(okCnt(mustG) === mustG.size),
-      Option.when(shouldG.nonEmpty && minShould > 0)(
-        okCnt(shouldG) >= minShould))
-    withG.filter(keep.flatten.reduce(_ && _)).select(col("docid"),
-      sim.applyCoord(scSum(mustG) + scSum(shouldG),
-        okCnt(mustG) + okCnt(shouldG), mustG.size + shouldG.size)
-        .as("score"))
+  /** The term rows (term, ord, occur, boost) and (nMust, nShould, msm)
+    * of a clause the shared scan can read: a (boosted) term — one must
+    * row — or a boolean whose clauses all are (boosted) terms. */
+  private def scanClause(c: Query)
+      : Option[(Seq[(String, Int, String, Double)], (Int, Int, Int))] =
+    asSimpleTerm(c).map { case (t, b) => (Seq((t, 0, "m", b)), (1, 0, 0)) }
+      .orElse(c match {
+        case sub: BoolQ if sub.must.nonEmpty || sub.should.nonEmpty =>
+          val rows = clausesOf(sub).zipWithIndex.map { case ((x, oc), j) =>
+            asSimpleTerm(x).map { case (t, b) => (t, j, oc, b) }
+          }
+          Option.when(rows.forall(_.isDefined))((rows.flatten,
+            (sub.must.size, sub.should.size, sub.minShouldMatch)))
+        case _ => None
+      })
+
+  /** The per-doc clause array of one node per `qid`, each node a list of
+    * occur-tagged clauses. Clause i is group `gid` = i, and a
+    * sub-boolean's clause j is its row `ord` = j, so (gid, ord) order is
+    * clause order. A group's term rows come from ONE [[termScores]] scan
+    * over every node's terms, exploded per clause with [[perClause]] (a
+    * term in several clauses yields several rows); any other clause is
+    * its own [[score]] frame, unioned in as one must row. One hash
+    * aggregate per docid — or (qid, docid) when `keyed` — collects the
+    * rows sorted by (gid, ord); [[membersOf]] then folds each group.
+    * Returns the array frame (key…, all), each node's group meta, and
+    * whether every node is flat: no clause is a sub-boolean, so every
+    * group is one row per matching doc. */
+  private def clauseArray(nodes: Seq[(String, Seq[(Query, String)])],
+      keyed: Boolean)
+      : (DataFrame, Map[String, Seq[Searcher.Group]], Boolean) = {
+    val key = if (keyed) Seq("qid", "docid") else Seq("docid")
+    val flat = nodes.forall(_._2.forall { case (c, _) =>
+      asSimpleTerm(c).isDefined || scanClause(c).isEmpty })
+    val terms = Seq.newBuilder[(String, (String, Int, Int, String, Double))]
+    val frames = Seq.newBuilder[DataFrame]
+    val groups = nodes.map { case (qid, cl) =>
+      qid -> cl.zipWithIndex.map { case ((c, oc), gid) =>
+        val (nMust, nShould, msm) = scanClause(c) match {
+          case Some((rows, shape)) =>
+            // a flat node's rows are its members: they carry its occur
+            rows.foreach { case (t, o, occ, b) =>
+              terms += ((t, (qid, gid, o, if (flat) oc else occ, b))) }
+            shape
+          case None =>
+            frames += score(c).select(lit(qid).as("qid"), col("docid"),
+              lit(gid).as("gid"), lit(0).as("ord"),
+              lit(if (flat) oc else "m").as("occur"), col("score"))
+            (1, 0, 0)
+        }
+        Searcher.Group(gid, oc, nMust, nShould, msm)
+      }
+    }.toMap
+    val ts = terms.result()
+    val scanned = Option.when(ts.nonEmpty)(
+      perClause(termScores(ts.map(_._1).toSet), ts,
+        "qid", "gid", "ord", "occur", "boost")
+        .select(col("qid"), col("docid"), col("gid"), col("ord"),
+          col("occur"), (col("tscore") * col("boost")).as("score")))
+    val arr = (scanned.toSeq ++ frames.result()).reduce(_ unionByName _)
+      .groupBy(key.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("gid"), col("ord"),
+        col("occur"), col("score")))).as("all"))
+    (arr, groups, flat)
+  }
+
+  /** BooleanScorer2's algebra (BooleanQuery.cs:350-424) as one ordered
+    * pass over a node's members `xs` (occur, score), of which `present`
+    * picks the node's own: every must member and at least msm should
+    * members (at least one when there is no must) present, no must-not
+    * member; the score adds the musts, then the shoulds, each in member
+    * order, and applies coord. `g` carries the node's (nMust, nShould,
+    * msm); `finish` maps (ok, score) to the result. One pass and a
+    * finish lambda, so nothing is evaluated twice per doc. */
+  private def boolFold(xs: Column, present: Column => Column, g: Column)(
+      finish: (Column, Column) => Column): Column = {
+    val zero = struct(lit(0).as("m"), lit(0).as("s"), lit(0).as("n"),
+      lit(0.0).as("sm"), lit(0.0).as("ss"), g.as("g"))
+    aggregate(xs, zero, (a, x) => {
+      def add(f: String, tag: String, v: Column): Column =
+        when(x.getField("occur") === tag, a.getField(f) + v)
+          .otherwise(a.getField(f)).as(f)
+      when(present(x), struct(add("m", "m", lit(1)), add("s", "s", lit(1)),
+        add("n", "n", lit(1)), add("sm", "m", x.getField("score")),
+        add("ss", "s", x.getField("score")), a.getField("g").as("g")))
+        .otherwise(a)
+    }, a => {
+      val (m, s, n) = (a.getField("m"), a.getField("s"), a.getField("n"))
+      val node = a.getField("g")
+      val (nMust, nShould, msm) = (node.getField("nMust"),
+        node.getField("nShould"), node.getField("msm"))
+      val ok = when(nMust > 0, m === nMust && (nShould === 0 || s >= msm))
+        .otherwise(s >= greatest(lit(1), msm)) && n === 0
+      finish(ok, sim.applyCoord(a.getField("sm") + a.getField("ss"), m + s,
+        nMust + nShould))
+    })
+  }
+
+  /** A node's fold members, each with an occur and a score, in clause
+    * order, and which of them are present. A flat node's rows are its
+    * members, all present; otherwise every group of `node` (a
+    * [[Searcher.Node]] column) is folded over its rows by [[boolFold]]
+    * to (occur, ok, score), present when ok. */
+  private def membersOf(node: Column,
+      flat: Boolean): (Column, Column => Column) =
+    if (flat) (col("all"), _ => lit(true))
+    else (transform(node.getField("groups"), g =>
+      boolFold(col("all"), _.getField("gid") === g.getField("gid"), g)(
+        (ok, sc) => struct(g.getField("occur").as("occur"), ok.as("ok"),
+          sc.as("score")))), _.getField("ok"))
+
+  /** The boolean fold of a node's members: (key…, score) per matching
+    * doc — a non-matching doc folds to an empty array, which `explode`
+    * drops. */
+  private def boolOf(arr: DataFrame, key: Seq[String], node: Column,
+      flat: Boolean): DataFrame = {
+    val (members, present) = membersOf(node, flat)
+    arr.select(key.map(col) :+ explode(
+      boolFold(members, present, node)((ok, sc) =>
+        when(ok, array(sc)).otherwise(array().cast("array<double>"))))
+      .as("score"): _*)
   }
 
   /** Evaluate to one row per matching doc: (docid: long, score: double). */
@@ -226,54 +228,11 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     case TermQ(t) =>
       termScores(Set(t)).select(col("docid"), col("tscore").as("score"))
 
-    // flattenBool is evaluated ONCE per query: grouped single-scan plan
-    // when the clause tree allows, per-clause compositional joins
-    // otherwise
-    case bq: BoolQ => flattenBool(bq) match {
-      case Some((rows, groups)) =>
-        groupedBool(rows, groups, bq.minShouldMatch)
-      case None =>
-      val BoolQ(must, should, mustNot, msm) = bq
-      require(must.nonEmpty || should.nonEmpty, "empty BooleanQuery")
-      require(must.size + should.size + mustNot.size <= Searcher.MaxClauseCount,
-        s"too many boolean clauses (maxClauseCount=${Searcher.MaxClauseCount})")
-      val mustD =
-        if (must.isEmpty) None
-        else Some(detSum(must.zipWithIndex.map { case (c, i) =>
-          withOrd(score(c), f"m$i%04d") })
-          .filter(col("cnt") === must.size)
-          .select(col("docid"), col("score").as("mscore")))
-      val shouldD =
-        if (should.isEmpty) None
-        else Some(detSum(should.zipWithIndex.map { case (c, i) =>
-          withOrd(score(c), f"s$i%04d") })
-          .select(col("docid"), col("score").as("sscore"),
-            col("cnt").as("scnt")))
-      val combined = (mustD, shouldD) match {
-        case (Some(m), Some(s)) =>
-          m.join(s, Seq("docid"), "left")
-            .filter(coalesce(col("scnt"), lit(0L)) >= msm)
-            .select(col("docid"),
-              sim.applyCoord(
-                col("mscore") + coalesce(col("sscore"), lit(0.0)),
-                lit(must.size.toLong) + coalesce(col("scnt"), lit(0L)),
-                must.size + should.size).as("score"))
-        case (Some(m), None) =>
-          m.select(col("docid"), col("mscore").as("score"))
-        case (None, Some(s)) =>
-          s.filter(col("scnt") >= math.max(1, msm))
-            .select(col("docid"),
-              sim.applyCoord(col("sscore"), col("scnt"), should.size)
-                .as("score"))
-        case _ => sys.error("unreachable")
-      }
-      if (mustNot.isEmpty) combined
-      else {
-        val excl = mustNot.map(score(_).select(col("docid")))
-          .reduce(_ unionByName _).distinct()
-        combined.join(excl, Seq("docid"), "left_anti")
-      }
-    }
+    case bq: BoolQ =>
+      val (arr, groups, flat) =
+        clauseArray(Seq("" -> clausesOf(bq)), keyed = false)
+      boolOf(arr, Seq("docid"), typedLit(Searcher.Node(bq.must.size,
+        bq.should.size, bq.minShouldMatch, groups(""))), flat)
 
     case p: PhraseQ => phrase(p)
 
@@ -724,26 +683,25 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
 
     case MoreLikeThisQ(src, topN) => moreLikeThis(src, topN)
 
-    case DisMaxQ(ds, tie) if ds.forall(asSimpleTerm(_).isDefined) =>
-      // single-scan variant of the general case below (one postings scan
-      // for all disjuncts, same deterministic ord-sorted sum)
-      val cl = ds.zipWithIndex.map { case (c, i) =>
-        val (t, b) = asSimpleTerm(c).get; (t, (f"d$i%04d", b)) }
-      val rows = perClause(termScores(cl.map(_._1).toSet), cl, "ord", "boost")
-        .select(col("docid"), col("ord"),
-          (col("tscore") * col("boost")).as("score"))
-      rows.groupBy(col("docid")).agg(
-        max(col("score")).as("mx"), ordSumAgg.as("sm"))
-        .select(col("docid"),
-          (col("mx") + lit(tie) * (col("sm") - col("mx"))).as("score"))
-
     case DisMaxQ(ds, tie) =>
-      val u = ds.zipWithIndex.map { case (c, i) => withOrd(score(c), f"d$i%04d") }
-        .reduce(_ unionByName _)
-      u.groupBy(col("docid")).agg(
-        max(col("score")).as("mx"), ordSumAgg.as("sm"))
-        .select(col("docid"),
-          (col("mx") + lit(tie) * (col("sm") - col("mx"))).as("score"))
+      // DisjunctionMaxQuery over the same clause array: the max of the
+      // matching disjuncts plus tie × the rest, summed in clause order
+      require(ds.nonEmpty, "empty DisjunctionMaxQuery")
+      val (arr, groups, flat) =
+        clauseArray(Seq("" -> ds.map((_, "s"))), keyed = false)
+      val (members, present) =
+        membersOf(typedLit(Searcher.Node(0, 0, 0, groups(""))), flat)
+      val zero = struct(lit(0).as("n"), lit(null).cast("double").as("mx"),
+        lit(0.0).as("sm"))
+      arr.select(col("docid"), explode(aggregate(members, zero,
+        (a, x) => when(present(x), struct(
+          (a.getField("n") + 1).as("n"),
+          greatest(a.getField("mx"), x.getField("score")).as("mx"),
+          (a.getField("sm") + x.getField("score")).as("sm")))
+          .otherwise(a),
+        a => when(a.getField("n") > 0, array(a.getField("mx") +
+          lit(tie) * (a.getField("sm") - a.getField("mx"))))
+          .otherwise(array().cast("array<double>")))).as("score"))
   }
 
   /** Multi-term rewrite dispatch (MultiTermQuery.cs:58-200). The auto
@@ -1113,12 +1071,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     if (ranked.isEmpty)
       return idx.docs.select(col("docid"), lit(1.0).as("score"))
         .filter(lit(false))
-    termScores(ranked.toSet)
-      .filter(col("docid") =!= src)
-      .groupBy(col("docid")).agg(
-        aggregate(
-          sort_array(collect_list(struct(col("term"), col("tscore")))),
-          lit(0.0), (acc, x) => acc + x.getField("tscore")).as("score"))
+    scoredOverTerms(ranked.toSet).filter(col("docid") =!= src)
   }
 
   /** Driver-side dictionary lookup (TermInfosReader analog — tiny:
@@ -1160,9 +1113,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * time, one dictionary+postings walk EACH).
     *
     * Registry queries must be flat term-bag booleans (every clause a
-    * possibly boosted TermQ — the [[groupedBool]] single-scan shape);
-    * per-doc algebra and the ordered score fold replicate the
-    * single-query flat path exactly, so each query's rows are rank-
+    * possibly boosted TermQ, so every query reads the one shared scan).
+    * The registry is one [[clauseArray]] keyed by (qid, docid), each
+    * query's group meta looked up by qid in the task closure, and the
+    * same boolean fold as [[score]] — so each query's rows are rank-
     * and score-identical to its own topK run.
     *
     * Output (qid, rank, docid, score) ordered by (qid, rank). The
@@ -1171,53 +1125,24 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * accordingly (the scan amortization is the win, the window is the
     * bound). */
   def topKBatch(queries: Seq[(String, BoolQ)], k: Int): DataFrame = {
-    val spark = idx.docs.sparkSession
-    import spark.implicits._
     require(queries.map(_._1).distinct.size == queries.size,
       "duplicate query ids in the batch registry")
-    val rows = Seq.newBuilder[(String, String, String, String, Double)]
-    val metas = Seq.newBuilder[(String, Int, Int, Int)]
-    queries.foreach { case (qid, q) =>
-      require(q.must.nonEmpty || q.should.nonEmpty,
-        s"empty BooleanQuery: $qid")
-      val cl = q.must.map((_, "m")) ++ q.should.map((_, "s")) ++
-        q.mustNot.map((_, "n"))
-      require(cl.size <= Searcher.MaxClauseCount,
-        s"too many boolean clauses (maxClauseCount=${Searcher.MaxClauseCount})")
-      cl.zipWithIndex.foreach { case ((c, oc), i) =>
-        val (t, b) = asSimpleTerm(c).getOrElse(sys.error(
+    val nodes = queries.map { case (qid, q) =>
+      val cl = clausesOf(q)
+      cl.zipWithIndex.foreach { case ((c, _), i) =>
+        require(asSimpleTerm(c).isDefined,
           s"topKBatch requires flat term-bag queries; clause $i of " +
-            s"'$qid' is not a (boosted) TermQ"))
-        rows += ((t, qid, f"$oc$i%04d", oc, b))
+            s"'$qid' is not a (boosted) TermQ")
       }
-      metas += ((qid, q.must.size, q.should.size, q.minShouldMatch))
+      qid -> cl
     }
-    val rs = rows.result()
-    val meta = metas.result().toDF("qid", "n_must", "n_should", "msm")
-    val scored = perClause(termScores(rs.map(_._1).toSet),
-        rs.map { case (t, qid, o, oc, b) => (t, (qid, o, oc, b)) },
-        "qid", "ord", "occur", "boost")
-      .select(col("qid"), col("docid"), col("ord"), col("occur"),
-        (col("tscore") * col("boost")).as("score"))
-    def sumOf(tag: String): Column = occSum(col("all"), tag)
-    def cntOf(tag: String): Column = occCnt(col("all"), tag)
-    val agg = scored.groupBy(col("qid"), col("docid"))
-      .agg(sort_array(collect_list(struct(col("ord"), col("occur"),
-        col("score")))).as("all"))
-      .join(broadcast(meta), Seq("qid"))
-    // per-query boolean algebra — the groupedBool inner shape with the
-    // group constants as columns
-    val matched =
-      when(col("n_must") > 0,
-        cntOf("m") === col("n_must") &&
-          (col("n_should") === lit(0) || cntOf("s") >= col("msm")))
-        .otherwise(cntOf("s") >= greatest(lit(1), col("msm"))) &&
-        cntOf("n") === 0L
-    val scoredDocs = agg.filter(matched)
-      .select(col("qid"), col("docid"),
-        sim.applyCoordCol(sumOf("m") + sumOf("s"), cntOf("m") + cntOf("s"),
-          col("n_must") + col("n_should")).as("score"))
-    scoredDocs
+    // every clause is a term, so the array is flat and a query's meta
+    // needs no groups
+    val (arr, _, flat) = clauseArray(nodes, keyed = true)
+    val meta = queries.map { case (qid, q) =>
+      qid -> Searcher.Node(q.must.size, q.should.size, q.minShouldMatch, Nil)
+    }.toMap
+    boolOf(arr, Seq("qid", "docid"), Searcher.lookup(meta, col("qid")), flat)
       .withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("docid").asc)).cast("long"))
       .filter(col("rank") <= k)
@@ -1336,7 +1261,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * `value`, and `value` must equal score(q) on every doc matching q.
     * Boolean trees are decomposed COMPOSITIONALLY (per-clause join +
     * msm/not algebra re-derived here), so the invariant cross-checks the
-    * optimized single-scan boolean paths against an independent
+    * clause-array fold of [[score]] against an independent
     * evaluation; non-decomposable scorers (phrase, span, dismax,
     * function) are single leaves carrying their full score. */
   def explain(q: Query): DataFrame =
@@ -1393,13 +1318,13 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       // sum): raw*(coord-1), so Σ parts == applyCoord(raw) — identity
       // (and no extra part) under Bm25Sim, the overlap/maxOverlap
       // factor under ClassicSim, keeping Explain==Score for EVERY
-      // Similarity (the scoring paths coord at lines 154/174/212)
+      // Similarity (the scoring path coords in boolFold)
       val rawParts = flatten(array(allParts: _*))
       val rawSum = aggregate(rawParts, lit(0.0),
         (a, x) => a + x.getField("value"))
       val overlap = lit(must.size.toLong) + scnt.cast("long")
       val maxOverlap = must.size + should.size
-      val coorded = sim.applyCoord(rawSum, overlap, maxOverlap)
+      val coorded = sim.applyCoord(rawSum, overlap, lit(maxOverlap))
       anti.select(col("docid"),
         when(coorded === rawSum, rawParts)
           .otherwise(concat(rawParts, array(struct(
@@ -1435,6 +1360,17 @@ object Searcher {
   final case class CachedFilter(bits: DataFrame) {
     def release(): Unit = bits.unpersist()
   }
+
+  /** One clause of a boolean or DisMax node as a group of the per-doc
+    * clause array: its occur in the node (m/s/n) and its own boolean
+    * algebra (nMust, nShould, msm) — (1, 0, 0) for a clause that is one
+    * row per matching doc. */
+  private[search] final case class Group(gid: Int, occur: String,
+      nMust: Int, nShould: Int, msm: Int)
+
+  /** A node's own (nMust, nShould, msm) and its groups in gid order. */
+  private[search] final case class Node(nMust: Int, nShould: Int, msm: Int,
+      groups: Seq[Group])
 
   /** BooleanQuery.maxClauseCount (BooleanQuery.cs:76). */
   val MaxClauseCount = 1024

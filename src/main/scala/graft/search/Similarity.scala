@@ -48,14 +48,9 @@ trait Similarity {
   /** Boolean overlap multiplier (DefaultSimilarity.Coord:81). Identity
     * under BM25 — kept OUT of the plan entirely then, so the default
     * strategy's physical plans are byte-identical to the pre-strategy
-    * engine. */
-  def applyCoord(score: Column, overlap: Column, maxOverlap: Int): Column
-
-  /** Column-typed twin of [[applyCoord]] for plans where maxOverlap is
-    * data, not a plan-time constant (the batched multi-query scan:
-    * one row per query carries its own clause count). */
-  def applyCoordCol(score: Column, overlap: Column,
-      maxOverlap: Column): Column
+    * engine. `maxOverlap` is a column: a node's clause count is data in
+    * the clause-array fold; pass `lit(n)` where it is known at plan time. */
+  def applyCoord(score: Column, overlap: Column, maxOverlap: Column): Column
 
   /** Scalar twin of [[tfNorm]] for driver-side evaluators (the
     * MemoryIndex single-doc scorer) — MUST mirror the column form's
@@ -72,10 +67,8 @@ object Bm25Sim extends Similarity {
   def idfCol(numDocs: Long, df: Column): Column = Bm25.idfCol(numDocs, df)
   def tfNorm(tf: Column, len: Column, avgdl: Double): Column =
     Bm25.tfNorm(tf, len, avgdl)
-  def applyCoord(score: Column, overlap: Column, maxOverlap: Int): Column =
+  def applyCoord(score: Column, overlap: Column, maxOverlap: Column): Column =
     score
-  def applyCoordCol(score: Column, overlap: Column,
-      maxOverlap: Column): Column = score
   def tfNormD(tf: Double, len: Long, avgdl: Double): Double =
     (tf * (Bm25.K1 + 1)) /
       (tf + Bm25.K1 * (1.0 - Bm25.B + Bm25.B * len / avgdl))
@@ -95,10 +88,7 @@ object ClassicSim extends Similarity {
     * collection-independent). */
   def tfNorm(tf: Column, len: Column, avgdl: Double): Column =
     sqrt(tf) * (lit(1.0) / sqrt(len))
-  def applyCoord(score: Column, overlap: Column, maxOverlap: Int): Column =
-    score * (overlap.cast("double") / lit(maxOverlap.toDouble))
-  def applyCoordCol(score: Column, overlap: Column,
-      maxOverlap: Column): Column =
+  def applyCoord(score: Column, overlap: Column, maxOverlap: Column): Column =
     score * (overlap.cast("double") / maxOverlap.cast("double"))
   def tfNormD(tf: Double, len: Long, avgdl: Double): Double =
     math.sqrt(tf) * (1.0 / math.sqrt(len.toDouble))

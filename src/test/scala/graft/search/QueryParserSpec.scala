@@ -1,5 +1,9 @@
 package graft.search
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.util.Try
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parser semantics per the reference grammar
@@ -135,6 +139,25 @@ class QueryParserSpec extends AnyFunSuite {
 
   test("unbalanced parens rejected") {
     intercept[IllegalArgumentException](QueryParser.parse("(spark table"))
+  }
+
+  test("group nesting is bounded: 100,000 '(' fail cleanly, 50 levels parse") {
+    val deep = "(" * 100000 + "spark"
+    val got = Await.result(
+      Future(Try(QueryParser.parse(deep)))(ExecutionContext.global), 10.seconds)
+    assert(got.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]),
+      s"$got")
+    val at = (n: Int) => "(" * n + "spark" + ")" * n
+    assert(QueryParser.parse(at(QueryParser.MaxNesting)) == TermQ("spark"))
+    intercept[IllegalArgumentException](
+      QueryParser.parse(at(QueryParser.MaxNesting + 1)))
+    // 50 nested groups, each a two-clause boolean
+    val nested = (1 to 50).foldRight("spark")((i, in) => s"(w$i $in)")
+    def depth(q: Query): Int = q match {
+      case BoolQ(_, should, _, _) => 1 + should.map(depth).max
+      case _ => 0
+    }
+    assert(depth(QueryParser.parse(nested)) == 50)
   }
 
   test("fuzz: random syntax strings parse cleanly or fail cleanly") {

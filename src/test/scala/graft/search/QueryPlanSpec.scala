@@ -144,25 +144,88 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val t = TermQ(words(rnd.nextInt(words.size)))
       if (rnd.nextBoolean()) t else BoostQ(t, 0.5 + rnd.nextInt(4))
     }
-    // shapes whose single-scan fold adds clause scores in the same
-    // order as explain's compositional sum, so equality is exact
-    val queries = (0 until 24).map(i => i % 3 match {
-      case 0 => term()
-      case 1 => BoolQ(should = Seq.fill(2 + rnd.nextInt(3))(term()))
-      case _ => BoolQ(must = Seq(term()), should = Seq(term()),
-        mustNot = Seq.fill(rnd.nextInt(2))(term()))
-    })
+    // phrases of two hot words, so most of them match somewhere
+    val hot = Transcripts.vocabulary.take(6)
+    def phrase(): Query = PhraseQ(Seq(hot(rnd.nextInt(hot.length)) -> 0,
+      hot(rnd.nextInt(hot.length)) -> 1), rnd.nextInt(3))
+    def role(): Query =
+      KeywordQ("role", Seq("user", "assistant", "tool")(rnd.nextInt(3)))
+    // shapes whose clause-array fold adds clause scores in the same
+    // order as explain's compositional sum (musts, then shoulds; at most
+    // one should beside a must; a nested boolean first in its node), so
+    // equality is exact. Every shape after the third mixes term clauses
+    // with clauses that are their own frames in the clause array.
+    val shapes: Seq[() => Query] = Seq(
+      () => term(),
+      () => BoolQ(should = Seq.fill(2 + rnd.nextInt(3))(term())),
+      () => BoolQ(must = Seq(term()), should = Seq(term()),
+        mustNot = Seq.fill(rnd.nextInt(2))(term())),
+      () => BoolQ(should = Seq(term(), phrase())),
+      () => BoolQ(must = Seq(role(), term()), mustNot = Seq(phrase())),
+      () => BoolQ(must = Seq(PrefixQ(hot(rnd.nextInt(3)).take(2),
+        AutoRewrite)), should = Seq(term())),
+      // two levels: a pure-term boolean inside a mixed one inside this
+      () => BoolQ(must = Seq(BoolQ(should = Seq(
+          BoolQ(should = Seq(term(), term())), phrase()))),
+        should = Seq(term())),
+      () => DisMaxQ(Seq(term(), phrase(),
+        BoolQ(must = Seq(term()), should = Seq(term()))), 0.3))
+    val classic = new Searcher(idx, ClassicSim)
+    // under coord an explain adds a correction part (raw + (coorded -
+    // raw) need not round to coorded), so ClassicSim gets shapes whose
+    // every clause must match: coord is 1 and no part is added
+    val classicShapes: Seq[() => Query] = Seq(
+      () => BoolQ(must = Seq(term(), phrase())),
+      () => BoolQ(must = Seq(role(), term())),
+      () => BoolQ(must = Seq(BoolQ(must = Seq(term(), term())), role())))
+    val queries =
+      (0 until 40).map(i => s -> shapes(i % shapes.size)()) ++
+        (0 until 9).map(i => classic -> classicShapes(i % classicShapes.size)())
     var compared = 0
-    queries.foreach { q =>
-      val ex = s.explain(q).select("docid", "value").collect()
+    queries.foreach { case (sr, q) =>
+      val ex = sr.explain(q).select("docid", "value").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      s.topK(q, 10).collect().foreach { r =>
+      sr.topK(q, 10).collect().foreach { r =>
         assert(ex.get(r.getLong(0)).contains(r.getDouble(1)),
           s"$q doc ${r.getLong(0)}: score ${r.getDouble(1)} explain " +
             ex.get(r.getLong(0)))
         compared += 1
       }
     }
-    assert(compared > 100)
+    assert(compared > 300)
+  }
+
+  test("a mixed DisMaxQ is max + tie * (sum - max) of its disjuncts' scores") {
+    val s = new Searcher(idx)
+    val hot = Transcripts.vocabulary.take(6)
+    val ds = Seq(TermQ("error"), PhraseQ(Seq(hot(0) -> 0, hot(1) -> 1), 1),
+      BoolQ(must = Seq(TermQ(hot(2))), should = Seq(TermQ("deploy"))),
+      KeywordQ("role", "tool"))
+    val tie = 0.25
+    val each = ds.map(d => s.score(d).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    val got = s.score(DisMaxQ(ds, tie)).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got.keySet == each.flatMap(_.keySet).toSet)
+    got.foreach { case (d, v) =>
+      val xs = each.flatMap(_.get(d))
+      val (mx, sm) = (xs.max, xs.foldLeft(0.0)(_ + _))
+      assert(v == mx + tie * (sm - mx), s"doc $d")
+    }
+  }
+
+  test("a boolean of two terms and a two-term phrase reads the blocks three times") {
+    val s = new Searcher(idx)
+    def blockReads(q: Query): Int =
+      collect(s.topK(q, 10).queryExecution.executedPlan) {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.getName == "blocks") => f
+      }.size
+    // one read of the block table is one scan per segment
+    val perRead = blockReads(TermQ("error"))
+    assert(perRead == 3)
+    // both terms in one scan, then one read per phrase slot
+    assert(blockReads(BoolQ(should = Seq(TermQ("error"), TermQ("deploy"),
+      PhraseQ(Seq("spark" -> 0, "table" -> 1))))) == 3 * perRead)
   }
 }
