@@ -1,7 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.storage.StorageLevel
 
 /** Logical (table-agnostic) inverted index.
@@ -9,7 +11,8 @@ import org.apache.spark.storage.StorageLevel
   * One table per concern, mirroring the reference's per-segment files
   * (/root/reference/src/core/Index/IndexFileNames.cs:29-97) as columnar
   * DataFrames:
-  *  - docs       — forward/stored fields (.fdt/.fdx analog)
+  *  - docs       — forward/stored fields (.fdt/.fdx analog), live docs
+  *                 only ([[storedDocs]] minus the delete set)
   *  - blockTable — the posting lists (.frq/.prx analog): delta+VByte
   *                 blocks of ≤128 postings per term with skip/WAND
   *                 stats. The ONLY posting form: an in-memory build
@@ -18,16 +21,23 @@ import org.apache.spark.storage.StorageLevel
   *                 as FSDirectory, only the Directory differs.
   *  - termDict   — (term, df, cf), one row per term (.tis/.tii analog):
   *                 the whole-dictionary view for suggest, trigrams and
-  *                 CheckIndex. Query-time df lookups read [[dictRows]]
-  *                 instead (Searcher.dfOf).
+  *                 CheckIndex. Query-time df lookups read the resident
+  *                 [[dictionary]] instead (Searcher.dfOf).
   *  - docLens    — exact per-doc token counts (exact-int replacement for
   *                 the lossy norm byte, Similarity.cs:398-413 — BM25
   *                 wants exact lengths)
   * The logical (term, docid, tf, len, positions) view, [[postings]], is
   * one decode of the block table.
+  *
+  * One value is one commit point: its [[dictionary]] and delete set are
+  * read once, on first use, and held on the driver (the reference keeps
+  * the term index and the deleted-docs BitVector in RAM per open
+  * reader, TermInfosReader.cs / BitVector.cs), so every Searcher,
+  * Highlight and Wand over it shares them. A reopen after a write is a
+  * new value and reads them afresh.
   */
 final case class InvertedIndex(
-    docs: DataFrame,
+    storedDocs: DataFrame,
     blockTable: DataFrame,
     termDict: DataFrame,
     docLens: DataFrame,
@@ -51,16 +61,49 @@ final case class InvertedIndex(
     * aggregate or shuffle, so an `In` filter on it pushes down to every
     * segment's dict table; callers sum df per term on the driver
     * (TermInfosReader.Get over each segment's .tis,
-    * TermInfosReader.cs:178-224). */
+    * TermInfosReader.cs:178-224). The fallback of a dictionary too large
+    * to hold ([[dictionary]] is None). */
   def dictRows: DataFrame = segmentDicts.getOrElse(termDict)
 
-  /** Anti-join the live delete set (deleted docs are skipped at
+  /** The term dictionary held on the driver: every term with its df
+    * summed over segments, sorted. None when it has more than
+    * [[InvertedIndex.ResidentRows]] per-segment rows; callers then scan
+    * [[dictRows]]. */
+  lazy val dictionary: Option[InvertedIndex.Dictionary] =
+    resident._1.map(InvertedIndex.Dictionary(_))
+
+  /** The live delete set held on the driver, sorted: Some(empty) when
+    * nothing is deleted, None when the set has more than
+    * [[InvertedIndex.ResidentRows]] rows (then [[live]] anti-joins
+    * [[deleted]]). */
+  lazy val deletedIds: Option[Array[Long]] =
+    if (deleted.isEmpty) Some(Array.emptyLongArray)
+    else resident._2.map(_.map(_._2).distinct.sorted)
+
+  /** The (term, df) dictionary rows and the deleted docids, read together
+    * by one single-stage job on first use of either. */
+  private lazy val resident = InvertedIndex.collectBounded(
+    deleted.foldLeft(dictRows.select(col("term"), col("df").as("n"))) {
+      (rows, del) => rows.unionByName(
+        del.select(lit(null).cast("string").as("term"), col("docid").as("n")))
+    })
+
+  /** Drop the rows of deleted docs (deleted docs are skipped at
     * iteration, stats stay stale until merge — SegmentTermDocs.Next /
-    * BufferedDeletes semantics). */
-  private def live(df: DataFrame): DataFrame = deleted match {
-    case Some(del) => df.join(del, Seq("docid"), "left_anti")
-    case None => df
+    * BufferedDeletes semantics): a lookup in the resident delete set,
+    * captured in the task closure, or an anti-join when the set is too
+    * large to hold. */
+  private[graft] def live(df: DataFrame): DataFrame = deletedIds match {
+    case Some(ids) if ids.isEmpty => df
+    case Some(_) => df.filter(notDeleted)
+    case None => df.join(deleted.get, Seq("docid"), "left_anti")
   }
+
+  private lazy val notDeleted: Column =
+    InvertedIndex.notIn(deletedIds.get)
+
+  /** Live stored documents. */
+  lazy val docs: DataFrame = live(storedDocs)
 
   /** The logical postings view: (term, docid, tf, len, positions) for
     * every live posting — TermVectors, CheckIndex and the gate dumps read
@@ -109,17 +152,90 @@ final case class InvertedIndex(
 
 object InvertedIndex {
 
+  /** Rows above which the per-segment dictionary (about 100 MB of terms
+    * and dfs) or the delete set (8 MB of docids in every task closure) is
+    * not held on the driver. */
+  val ResidentRows: Int = 1 << 20
+
+  /** A term dictionary on the driver: distinct terms in sorted order,
+    * each with its df summed over segments. */
+  final class Dictionary private (terms: Array[String], dfs: Array[Long]) {
+    private def search(t: String): Int =
+      java.util.Arrays.binarySearch(terms.asInstanceOf[Array[Object]], t)
+
+    def df(t: String): Option[Long] = {
+      val i = search(t)
+      if (i >= 0) Some(dfs(i)) else None
+    }
+
+    /** Every (term, df) whose term starts with `prefix`, in term order:
+      * one contiguous range of the sorted terms. */
+    def withPrefix(prefix: String): Iterator[(String, Long)] = {
+      val i = search(prefix)
+      Iterator.range(if (i >= 0) i else -i - 1, terms.length)
+        .takeWhile(j => terms(j).startsWith(prefix))
+        .map(j => (terms(j), dfs(j)))
+    }
+  }
+
+  object Dictionary {
+    def apply(rows: Array[(String, Long)]): Dictionary = {
+      val summed = rows.groupMapReduce(_._1)(_._2)(_ + _)
+      val terms = summed.keys.toArray
+      java.util.Arrays.sort(terms.asInstanceOf[Array[Object]])
+      new Dictionary(terms, terms.map(summed))
+    }
+  }
+
+  /** The (term, n) rows of `df` in one job, split into those with a
+    * term and those without; either side is None when it has more than
+    * [[ResidentRows]] rows. Each task returns at most ResidentRows + 1
+    * rows of each side, and the driver drops a side once its count
+    * passes the limit. */
+  private def collectBounded(df: DataFrame)
+      : (Option[Array[(String, Long)]], Option[Array[(String, Long)]]) = {
+    val cap = ResidentRows
+    val sides = Array.fill(2)(scala.collection.mutable.ArrayBuffer
+      .empty[(String, Long)])
+    val seen = Array(0L, 0L)
+    df.sparkSession.sparkContext.runJob(df.rdd,
+      (it: Iterator[Row]) => {
+        val kept = Array(0, 0)
+        it.takeWhile(_ => kept(0) <= cap || kept(1) <= cap)
+          .flatMap { r =>
+            val side = if (r.isNullAt(0)) 1 else 0
+            kept(side) += 1
+            Option.when(kept(side) <= cap + 1)((r.getString(0), r.getLong(1)))
+          }.toArray
+      },
+      (_: Int, part: Array[(String, Long)]) => part.foreach { row =>
+        val side = if (row._1 == null) 1 else 0
+        seen(side) += 1
+        if (seen(side) > cap) sides(side).clear() else sides(side) += row
+      })
+    val out = (0 to 1).map(i => Option.when(seen(i) <= cap)(sides(i).toArray))
+    (out(0), out(1))
+  }
+
+  /** docid is not in the sorted set `ids`: a binary search in the task
+    * closure. */
+  private def notIn(ids: Array[Long]): Column =
+    udf(new UDF1[java.lang.Long, java.lang.Boolean] {
+      def call(d: java.lang.Long): java.lang.Boolean =
+        java.util.Arrays.binarySearch(ids, d.longValue) < 0
+    }, BooleanType).apply(col("docid"))
+
   /** An index over a block table — the one derivation shared by the
     * in-memory build and [[SegmentStore]]: doc lengths are a lens-only
     * decode of the blocks padded with the zero-length docs of `docs`,
-    * avgdl = sumLen / numDocs, and `docs` is filtered by the live delete
-    * set (stats stay un-discounted, the reference's behavior). */
+    * avgdl = sumLen / numDocs, and [[InvertedIndex.docs]] drops the
+    * live delete set (stats stay un-discounted, the reference's
+    * behavior). */
   def ofBlocks(docs: DataFrame, blocks: DataFrame, termDict: DataFrame,
       numDocs: Long, sumLen: Long, deleted: Option[DataFrame] = None,
       segmentDicts: Option[DataFrame] = None): InvertedIndex =
-    InvertedIndex(
-      deleted.fold(docs)(del => docs.join(del, Seq("docid"), "left_anti")),
-      blocks, termDict, PostingBlocks.docLensFromBlocks(blocks, docs),
+    InvertedIndex(docs, blocks, termDict,
+      PostingBlocks.docLensFromBlocks(blocks, docs),
       numDocs, sumLen.toDouble / numDocs, deleted,
       segmentDicts = segmentDicts)
 }

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Block row as persisted (one term's ≤128 postings, compressed).
@@ -50,6 +50,19 @@ final case class PayPostingRow(
   * (/root/reference/src/core/Index/FreqProxTermsWriter.cs:70-157).
   */
 object PostingBlocks {
+
+  // the decode paths' encoders, derived once: `spark.implicits._`
+  // derives a product encoder by runtime reflection on every call, and
+  // the query layer decodes on every query
+  private lazy val BlockEnc: Encoder[BlockRow] = Encoders.product[BlockRow]
+  private lazy val PostingEnc: Encoder[PostingRow] =
+    Encoders.product[PostingRow]
+  private lazy val PayPostingEnc: Encoder[PayPostingRow] =
+    Encoders.product[PayPostingRow]
+  private lazy val ScoringEnc: Encoder[(String, Long, Long, Long)] =
+    Encoders.product[(String, Long, Long, Long)]
+  private lazy val DocLenEnc: Encoder[(Long, Long)] =
+    Encoders.product[(Long, Long)]
 
   /** THE build path: docs → per-partition partial inversion into
     * compressed per-term posting RUNS (one shuffle row per term per
@@ -179,44 +192,35 @@ object PostingBlocks {
   }
 
   /** Decode a block table back to the logical postings view. */
-  def toPostings(blocks: DataFrame): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks.as[BlockRow].flatMap { r =>
+  def toPostings(blocks: DataFrame): DataFrame =
+    blocks.as(BlockEnc).flatMap { r =>
       Codec.decode(Codec.Block(r.term, r.n, r.min_docid, r.max_docid,
         r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
         .map(p => PostingRow(r.term, p.docid, p.tf, p.len,
           p.positions.toSeq))
-    }.toDF()
-  }
+    }(PostingEnc).toDF()
 
   /** Scoring-only decode: (term, docid, tf, len), the position stream
     * untouched (TermDocs-vs-TermPositions split). The BM25 scoring paths
     * read THIS view — no per-posting positions array is ever allocated
     * for queries that don't inspect positions. */
-  def toScoring(blocks: DataFrame): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks.as[BlockRow].flatMap { r =>
+  def toScoring(blocks: DataFrame): DataFrame =
+    blocks.as(BlockEnc).flatMap { r =>
       Codec.decodeScoring(Codec.Block(r.term, r.n, r.min_docid,
         r.max_docid, r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
         .map { case (docid, tf, len) => (r.term, docid, tf, len) }
-    }.toDF("term", "docid", "tf", "len")
-  }
+    }(ScoringEnc).toDF("term", "docid", "tf", "len")
 
   /** Payload-materializing decode of a block table — the query path for
     * payload queries only (everything else uses [[toPostings]], which
     * skips payload bytes in-stream). */
-  def toPostingsPay(blocks: DataFrame): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks.as[BlockRow].flatMap { r =>
+  def toPostingsPay(blocks: DataFrame): DataFrame =
+    blocks.as(BlockEnc).flatMap { r =>
       Codec.decodePay(Codec.Block(r.term, r.n, r.min_docid, r.max_docid,
         r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
         .map(p => PayPostingRow(r.term, p.docid, p.tf, p.len,
           p.positions.toSeq, p.payloads.toSeq))
-    }.toDF()
-  }
+    }(PayPostingEnc).toDF()
 
   /** Block table → raw postings (blob positions, no int materialization)
     * — feed straight back into [[fromRaw]] for merges. */
@@ -241,12 +245,10 @@ object PostingBlocks {
     * untouched), padded with the zero-length docs (all-stopword turns)
     * from the docs table. */
   def docLensFromBlocks(blocks: DataFrame, docs: DataFrame): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val pairs = blocks.as[BlockRow].flatMap { r =>
+    val pairs = blocks.as(BlockEnc).flatMap { r =>
       Codec.decodeDocLens(Codec.Block(r.term, r.n, r.min_docid,
         r.max_docid, r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
-    }.toDF("docid", "len")
+    }(DocLenEnc).toDF("docid", "len")
     docs.select(col("docid"))
       .join(pairs.groupBy(col("docid")).agg(max(col("len")).as("len")),
         Seq("docid"), "left")

@@ -256,24 +256,21 @@ object SegmentStore {
     val docs0 = views.map(_.docs).reduce(_ unionByName _)
     val blocks = views.map(_.blocks).reduce(_ unionByName _)
     // global dict: docid spaces are disjoint → df/cf add across segments.
-    // Query-time df lookups read the un-aggregated union instead (one
-    // pushed-down scan, per-term sums on the driver); the aggregate only
-    // runs for whole-dictionary consumers.
+    // The query layer's resident dictionary reads the un-aggregated
+    // union instead (one single-stage scan, per-term sums on the
+    // driver); the aggregate only runs for whole-dictionary consumers.
     val segDicts = views.map(_.dict).reduce(_ unionByName _)
     val dict = segDicts.groupBy("term")
       .agg(sum("df").as("df"), sum("cf").as("cf"))
-    // live delete set applied as an anti-join on docid (SegmentTermDocs
-    // skipping deleted docs); stats/df stay un-discounted until a merge
-    // expunges — exactly the reference's behavior.
+    // live delete set (SegmentTermDocs skipping deleted docs), held on
+    // the driver by the opened index and read on first use; stats/df
+    // stay un-discounted until a merge expunges — exactly the
+    // reference's behavior.
     val deleted: Option[DataFrame] =
       if (m.deletes.isEmpty) None
       else Some(m.deletes
         .map(d => spark.read.parquet(s"$root/$d"))
         .reduce(_ unionByName _).select("docid"))
-    // no broadcast hint: Spark auto-broadcasts small delete sets; a
-    // massive delete backlog falls back to a shuffled anti-join. No
-    // distinct either: an anti-join ignores duplicates, and a distinct
-    // would add an aggregate (a shuffle job) to every query on the store
     InvertedIndex.ofBlocks(docs0, blocks, dict, m.numDocs, m.sumLen,
       deleted, segmentDicts = Some(segDicts))
   }

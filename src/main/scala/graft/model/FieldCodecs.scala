@@ -48,6 +48,45 @@ object DateTools {
   /** Round a timestamp DOWN to the resolution (DateTools.Round). */
   def round(ts: Column, resolution: String): Column =
     stringToDate(dateToString(ts, resolution), resolution)
+
+  /** The years whose keys sort in time order: `yyyy` is 4 digits from
+    * year 1 through 9999 (a year past 9999 formats as `+10000`, year 0
+    * and earlier with a sign). */
+  val KeyOrderFrom: java.time.Instant =
+    java.time.Instant.parse("0001-01-01T00:00:00Z")
+  val KeyOrderUntil: java.time.Instant =
+    java.time.Instant.parse("+10000-01-01T00:00:00Z")
+
+  private val Units: Map[String, java.time.temporal.ChronoUnit] = {
+    import java.time.temporal.ChronoUnit._
+    Map("year" -> YEARS, "month" -> MONTHS, "day" -> DAYS, "hour" -> HOURS,
+      "minute" -> MINUTES, "second" -> SECONDS, "millisecond" -> MILLIS)
+  }
+
+  private val FullKey =
+    java.time.format.DateTimeFormatter.ofPattern("uuuuMMddHHmmssSSS")
+
+  /** Timestamp bounds of a comparison against key `v` at `resolution`,
+    * for timestamps in key order (see [[KeyOrderFrom]]): a timestamp
+    * whose key is >= `v` is at or after the first, one whose key is
+    * <= `v` is before the second. `v` is read as the start of the
+    * instant it prefixes, and a day of slack on each side covers any
+    * session time zone, so the bounds are conservative. None when `v`
+    * is not a digit prefix of a valid key. */
+  def keyBounds(v: String, resolution: String)
+      : Option[(java.time.Instant, java.time.Instant)] = {
+    val template = "00000101000000000" // yyyy=0000 MM=01 dd=01 ...
+    Option.when(v.nonEmpty && v.length <= template.length &&
+        v.forall(c => c >= '0' && c <= '9'))(v + template.drop(v.length))
+      .flatMap(k => scala.util.Try(
+        java.time.LocalDateTime.parse(k, FullKey)).toOption)
+      .map { start =>
+        val utc = java.time.ZoneOffset.UTC
+        val day = java.time.Duration.ofDays(1)
+        (start.toInstant(utc).minus(day),
+          start.plus(1, Units(resolution)).toInstant(utc).plus(day))
+      }
+  }
 }
 
 object NumberTools {

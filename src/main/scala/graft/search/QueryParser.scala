@@ -324,7 +324,10 @@ object QueryParser {
               else if (isFuzzy) {
                 val t = unescape(w.substring(0, tilde)).toLowerCase
                 val edits =
-                  if (tilde == w.length - 1) 2 else w.substring(tilde + 1).toInt
+                  if (tilde == w.length - 1) 2
+                  else w.substring(tilde + 1).toIntOption.getOrElse(
+                    throw new IllegalArgumentException(
+                      s"fuzzy edit distance out of range before $pos"))
                 Some(FuzzyQ(Analyzer.stripPossessive(t), edits))
               } else if (hasUnescaped(w, "*?")) {
                 // an escaped wildcard inside a word that ALSO carries an
@@ -346,19 +349,31 @@ object QueryParser {
               }
             }
         }
-      // ^boost
+      // ^boost: the reference grammar requires a NUMBER operand
       skipWs()
       if (!eof && peek == '^') {
         pos += 1
-        val b = number().getOrElse(1.0)
-        base.map(BoostQ(_, b))
+        val b = number()
+        require(b.isDefined, s"expected a number after '^' at $pos")
+        base.map(BoostQ(_, b.get))
       } else base
     }
 
+    /** The NUMBER token at `pos` (digits, optionally '.' and digits — the
+      * reference grammar's boost and slop operand), None when no digit
+      * or dot follows. A run of digits and dots that is not a NUMBER, or
+      * one too large for a double, is rejected. */
     private def number(): Option[Double] = {
       val start = pos
       while (!eof && (s.charAt(pos).isDigit || s.charAt(pos) == '.')) pos += 1
-      if (pos > start) Some(s.substring(start, pos).toDouble) else None
+      Option.when(pos > start) {
+        val t = s.substring(start, pos)
+        require(t.matches("[0-9]+(\\.[0-9]+)?"),
+          s"malformed number '$t' at $start")
+        val v = t.toDouble
+        require(!v.isInfinite, s"number '$t' out of range at $start")
+        v
+      }
     }
   }
 }

@@ -1,8 +1,12 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.api.java.{UDF0, UDF1}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.index.InvertedIndex
 
@@ -30,44 +34,63 @@ import graft.index.InvertedIndex
   * (sort_array(collect_list(...)) then an ordered fold) — float addition
   * order is fixed regardless of shuffle layout, so scores are bit-stable
   * run to run (SURVEY §7 hard-part #1).
+  *
+  * Per-query fixed cost: a point query ([[topK]] of a term, boolean,
+  * phrase, prefix or keyword-and-term query) is one Spark job with no
+  * exchange. df and prefix expansions come from the index's resident
+  * dictionary and deletes from its resident delete set (no dictionary
+  * or delete-set job), a query that reads at most
+  * [[Searcher.SingleTaskRows]] estimated rows folds in one task
+  * ([[Searcher.oneTask]]), and per-query numbers (df, idf sums) reach the
+  * generated code as lookups and parameters, not literals, so a
+  * same-shape query compiles nothing new.
   */
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
+  import Searcher.{oneTask, param}
 
   /** Per-(term, docid) BM25 partial scores for a set of query terms.
-    * df is resolved on the driver by the memoized [[dfOf]] (the
-    * TermInfosReader lookup, SURVEY §4.2) and enters the plan through
-    * [[dfCol]], so the plan scans postings only: no dictionary scan,
-    * aggregate or broadcast. Terms absent from the dictionary have no
-    * postings and are left out of the scan. */
+    * df is resolved on the driver by [[dfOf]] (the TermInfosReader
+    * lookup, SURVEY §4.2) and enters the plan through [[dfCol]], so the
+    * plan scans postings only: no dictionary scan, aggregate or
+    * broadcast. Terms absent from the dictionary have no postings and
+    * are left out of the scan. df gets a projection of its own: idf
+    * reads it twice, and a lookup read twice in one expression is a
+    * common subexpression whose place in the generated code follows the
+    * closure's identity hash, so same-shape queries would compile
+    * different classes. */
   def termScores(terms: Set[String]): DataFrame = {
     val dfs = dfOf(terms)
     idx.postingsForScoring(dfs.keys.toSeq.sorted)
+      .select(col("term"), col("docid"), col("tf"), col("len"),
+        dfCol(dfs).as("df"))
       .select(col("term"), col("docid"),
-        sim.score(idx.numDocs, idx.avgdl, dfCol(dfs), col("tf"), col("len"))
+        sim.score(idx.numDocs, idx.avgdl, col("df"), col("tf"), col("len"))
           .as("tscore"))
   }
 
   /** The df of a posting row's `term` as a plan column, for terms whose
-    * df the driver already holds: a literal for one term; for term sets
-    * a hash-map lookup captured in the task closure — O(1) per posting,
-    * where `element_at` over a map literal scans its keys and a
-    * broadcast of a local relation costs a job per query. df stays a
-    * column so idf is computed in-plan exactly as before. */
+    * df the driver already holds: a hash-map lookup captured in the task
+    * closure — O(1) per posting, where `element_at` over a map literal
+    * scans its keys and a broadcast of a local relation costs a job per
+    * query. Never a literal, even for one term: a literal df is inlined
+    * into the generated code, so every distinct df would compile a new
+    * class. df stays a column so idf is computed in-plan exactly as
+    * before. */
   private def dfCol(dfs: Map[String, Long]): Column =
-    if (dfs.size <= 1) lit(dfs.values.headOption.getOrElse(0L))
-    else Searcher.lookup(dfs, col("term"))
+    Searcher.lookup(dfs, col("term"), LongType)
 
   /** `scored` (which has a `term` column) with one row per posting and
     * clause its term sits in, the clause fields as columns `names`. The
     * clause rows, keyed by term, ride in a hash map captured in the task
     * closure and are exploded per posting: a broadcast join of the same
     * driver-built rows would cost a job per query. */
-  private def perClause[C <: Product: scala.reflect.runtime.universe.TypeTag](
-      scored: DataFrame, clauses: Seq[(String, C)],
+  private def perClause(scored: DataFrame,
+      clauses: Seq[(String, (String, Int, Int, String, Double))],
       names: String*): DataFrame = {
     val byTerm = clauses.groupMap(_._1)(_._2)
     scored
-      .select(col("*"), explode(Searcher.lookup(byTerm, col("term"))).as("__c"))
+      .select(col("*"), explode(Searcher.lookup(byTerm, col("term"),
+        Searcher.ClauseRowsType)).as("__c"))
       .select(scored.columns.map(col).toSeq ++ names.zipWithIndex.map {
         case (n, i) => col("__c").getField(s"_${i + 1}").as(n)
       }: _*)
@@ -124,7 +147,9 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * term in several clauses yields several rows); any other clause is
     * its own [[score]] frame, unioned in as one must row. One hash
     * aggregate per docid — or (qid, docid) when `keyed` — collects the
-    * rows sorted by (gid, ord); [[membersOf]] then folds each group.
+    * rows sorted by (gid, ord); [[membersOf]] then folds each group. An
+    * unkeyed array that reads few rows is built in one task
+    * ([[Searcher.oneTask]]), so the aggregate needs no exchange.
     * Returns the array frame (key…, all), each node's group meta, and
     * whether every node is flat: no clause is a sub-boolean, so every
     * group is one row per matching doc. */
@@ -159,7 +184,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         "qid", "gid", "ord", "occur", "boost")
         .select(col("qid"), col("docid"), col("gid"), col("ord"),
           col("occur"), (col("tscore") * col("boost")).as("score")))
-    val arr = (scanned.toSeq ++ frames.result()).reduce(_ unionByName _)
+    val rows = (scanned.toSeq ++ frames.result()).reduce(_ unionByName _)
+    val arr = (if (keyed) rows
+        else oneTask(rows,
+          nodes.flatMap(_._2).map { case (c, _) => estRows(c) }.sum))
       .groupBy(key.map(col): _*)
       .agg(sort_array(collect_list(struct(col("gid"), col("ord"),
         col("occur"), col("score")))).as("all"))
@@ -226,28 +254,27 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   /** Evaluate to one row per matching doc: (docid: long, score: double). */
   def score(q: Query): DataFrame = q match {
     case TermQ(t) =>
-      termScores(Set(t)).select(col("docid"), col("tscore").as("score"))
+      oneTask(termScores(Set(t)), estRows(q))
+        .select(col("docid"), col("tscore").as("score"))
 
     case bq: BoolQ =>
       val (arr, groups, flat) =
         clauseArray(Seq("" -> clausesOf(bq)), keyed = false)
-      boolOf(arr, Seq("docid"), typedLit(Searcher.Node(bq.must.size,
+      boolOf(arr, Seq("docid"), Searcher.nodeLit(Searcher.Node(bq.must.size,
         bq.should.size, bq.minShouldMatch, groups(""))), flat)
 
     case p: PhraseQ => phrase(p)
 
     case PrefixQ(p, rw) =>
-      multiTerm(col("term").startsWith(p), rw)
+      multiTerm(col("term").startsWith(p), rw, Some((p, None)))
 
     case RegexQ(pat, rw) =>
       // whole-term match (RegexTermEnum anchors the pattern); a literal
       // pattern prefix becomes a startsWith pre-filter — a range scan on
       // a term-sorted dictionary instead of a full regex scan (the
       // WildcardTermEnum.cs:32 prefix-seek analog)
-      val rx = col("term").rlike("^(?:" + pat + ")$")
-      val pfx = Searcher.regexLiteralPrefix(pat)
-      multiTerm(
-        if (pfx.nonEmpty) col("term").startsWith(pfx) && rx else rx, rw)
+      val (pred, local) = Searcher.regexMatch(pat)
+      multiTerm(pred, rw, Some(local))
 
     case FunctionQ(e) =>
       // ValueSourceQuery: every live doc, score = f(forward columns)
@@ -314,7 +341,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       }
       val base =
         if (includeSpan)
-          lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl)
+          param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl)
         else lit(1.0)
       pa.join(pb, Seq("docid"))
         .withColumn("spans", spans)
@@ -412,7 +439,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       }
       val base =
         if (includeSpan)
-          lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl)
+          param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl)
         else lit(1.0)
       joined
         .withColumn("tfp", tfp)
@@ -425,10 +452,11 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       // to the literal prefix before matching): `spark*`-style patterns
       // become a dictionary RANGE predicate + residual regex, not a full
       // dictionary regex scan
-      val rx = col("term").rlike(Searcher.globToRegex(pat))
+      val rx = Searcher.globToRegex(pat)
       val pfx = pat.takeWhile(c => c != '*' && c != '?')
-      multiTerm(
-        if (pfx.nonEmpty) col("term").startsWith(pfx) && rx else rx, rw)
+      val pred = col("term").rlike(rx)
+      multiTerm(if (pfx.nonEmpty) col("term").startsWith(pfx) && pred else pred,
+        rw, Some((pfx, Some(rx))))
 
     case TermRangeQ(lo, hi, il, ih, rw, coll) =>
       // collated variant (TermRangeQuery.cs:96): the dictionary compare
@@ -439,7 +467,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       val conds = Seq(
         lo.map(v => if (il) t >= v else t > v),
         hi.map(v => if (ih) t <= v else t < v)).flatten
-      multiTerm(conds.reduceOption(_ && _).getOrElse(lit(true)), rw)
+      multiTerm(conds.reduceOption(_ && _).getOrElse(lit(true)), rw, None)
 
     case FuzzyQ(t, maxEdits) =>
       // scoring-boolean rewrite with similarity boost (FuzzyTermEnum):
@@ -565,17 +593,27 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
 
     case DateRangeQ(field, lo, hi, res, il, ih) =>
       // the parser's GetRangeQuery date path (QueryParser.cs:749):
-      // compare the DateTools-encoded key. The filter is on a
-      // date_format() expression, which Parquet statistics cannot see,
-      // so it is NOT pushed to the scan and prunes nothing: every docs
-      // row is read. The key is monotone in the timestamp, so exact
-      // native `ts` bounds could be derived on the driver and pushed
-      // down instead (ROADMAP direction 2)
-      val key = graft.model.DateTools.dateToString(col(field), res)
+      // compare the DateTools-encoded key. A date_format() expression
+      // is invisible to Parquet statistics, so conservative bounds on
+      // the timestamp itself, derived on the driver, go first as plain
+      // comparisons the scan can push down; the exact key predicate
+      // stays on top and decides, so the answer does not change. Only
+      // timestamps in key order are bounded (see DateTools.keyBounds)
+      import graft.model.DateTools
+      val ts = col(field)
+      val key = DateTools.dateToString(ts, res)
       val conds = Seq(
         lo.map(v => if (il) key >= v else key > v),
         hi.map(v => if (ih) key <= v else key < v)).flatten
-      idx.docs.filter(conds.reduceOption(_ && _).getOrElse(lit(true)))
+      val timestamp = idx.docs.schema.exists(f =>
+        f.name == field && f.dataType == TimestampType)
+      val native = if (!timestamp) Nil else Seq(
+        lo.flatMap(DateTools.keyBounds(_, res)).map { case (from, _) =>
+          ts >= lit(from) || ts < lit(DateTools.KeyOrderFrom) },
+        hi.flatMap(DateTools.keyBounds(_, res)).map { case (_, until) =>
+          ts < lit(until) || ts >= lit(DateTools.KeyOrderUntil) }).flatten
+      idx.docs.filter((native ++ conds).reduceOption(_ && _)
+          .getOrElse(lit(true)))
         .select(col("docid"), lit(1.0).as("score"))
 
     case ConstantScoreQ(sub, s) =>
@@ -602,7 +640,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
           size(filter(col("positions"), p => p < end)).cast("double"))
         .filter(col("tfp") > 0)
         .select(col("docid"),
-          (lit(idf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
+          (param(idf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
             .as("score"))
 
     case SpanNearQ(a, b, slop, inOrder) =>
@@ -632,7 +670,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         .withColumn("tfp", tfp)
         .filter(col("tfp") > 0)
         .select(col("docid"),
-          (lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
+          (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
             .as("score"))
 
     case SpanNotQ(a, b, slop, exc) =>
@@ -662,7 +700,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         .withColumn("tfp", tfp)
         .filter(col("tfp") > 0)
         .select(col("docid"),
-          (lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
+          (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
             .as("score"))
 
     case SpanOrQ(ts) =>
@@ -674,7 +712,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         .agg(sum(col("tf")).cast("double").as("tfp"),
           max(col("len")).as("len"))
         .select(col("docid"),
-          (lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
+          (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
             .as("score"))
 
     case SpanQ(sp) => spanQuery(sp)
@@ -690,7 +728,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       val (arr, groups, flat) =
         clauseArray(Seq("" -> ds.map((_, "s"))), keyed = false)
       val (members, present) =
-        membersOf(typedLit(Searcher.Node(0, 0, 0, groups(""))), flat)
+        membersOf(Searcher.nodeLit(Searcher.Node(0, 0, 0, groups(""))), flat)
       val zero = struct(lit(0).as("n"), lit(null).cast("double").as("mx"),
         lit(0.0).as("sm"))
       arr.select(col("docid"), explode(aggregate(members, zero,
@@ -706,31 +744,54 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
 
   /** Multi-term rewrite dispatch (MultiTermQuery.cs:58-200). The auto
     * heuristic enumerates the matched dictionary terms at PLAN time, as
-    * the reference's term enum walk does at rewrite time: one bounded
-    * collect decides scoring vs constant and, when scoring, is also the
-    * literal term set of the postings scan. */
-  private def multiTerm(dictPred: Column, rw: MultiTermRewrite): DataFrame =
-    rw match {
-      case ConstantScore => constantOverTerms(dictPred)
-      case ScoringBoolean => scoredOverTerms(dictMatches(dictPred, None).get)
-      case AutoRewrite =>
-        dictMatches(dictPred, Some(Searcher.AutoRewriteTermCap)) match {
-          case Some(terms) => scoredOverTerms(terms)
-          case None => constantOverTerms(dictPred)
-        }
+    * the reference's term enum walk does at rewrite time: the matches
+    * decide scoring vs constant and, when scoring, are also the literal
+    * term set of the postings scan. `local` is `dictPred` as a literal
+    * prefix plus an optional whole-term regex; with it the matches are a
+    * range of the resident dictionary ([[dictRange]]) and cost no job. */
+  private def multiTerm(dictPred: Column, rw: MultiTermRewrite,
+      local: Option[(String, Option[String])]): DataFrame =
+    dictRange(local) match {
+      case Some(ms) =>
+        if (rw == ScoringBoolean ||
+            rw == AutoRewrite && ms.size <= Searcher.AutoRewriteTermCap)
+          scoredOverTerms(ms.keySet)
+        else constantOverTerms(dictPred, ms.values.sum)
+      case None => rw match {
+        case ConstantScore => constantOverTerms(dictPred, Long.MaxValue)
+        case ScoringBoolean =>
+          scoredOverTerms(dictMatches(dictPred, None).get)
+        case AutoRewrite =>
+          dictMatches(dictPred, Some(Searcher.AutoRewriteTermCap)) match {
+            case Some(terms) => scoredOverTerms(terms)
+            case None => constantOverTerms(dictPred, Long.MaxValue)
+          }
+      }
+    }
+
+  /** The terms (with df) of the resident dictionary that start with a
+    * literal prefix and, when a regex is given, match it as a whole
+    * (java.util.regex, the engine `rlike` uses): a contiguous range of
+    * the sorted terms walked on the driver. None when the index holds no
+    * resident dictionary or there is no prefix form. */
+  private def dictRange(local: Option[(String, Option[String])])
+      : Option[Map[String, Long]] =
+    for (d <- idx.dictionary; (prefix, rx) <- local) yield {
+      val m = rx.map(java.util.regex.Pattern.compile(_).matcher(""))
+      d.withPrefix(prefix)
+        .filter { case (t, _) => m.forall(_.reset(t).find(0)) }.toMap
     }
 
   /** Every dictionary term matching `pred`, with its df memoized for
-    * [[dfOf]]; None once more than `cap` distinct terms match. One
-    * single-stage scan of the per-segment dictionaries, summed on the
-    * driver; each partition stops reading once it alone has shown more
-    * than `cap` distinct terms, so at most (cap + 1) × segments rows per
-    * partition reach the driver. */
+    * [[dfOf]]; None once more than `cap` distinct terms match. The path
+    * of an index without a resident dictionary: one single-stage scan of
+    * the per-segment dictionaries, summed on the driver; each partition
+    * stops reading once it alone has shown more than `cap` distinct
+    * terms, so at most (cap + 1) × segments rows per partition reach the
+    * driver. */
   private def dictMatches(pred: Column, cap: Option[Int]): Option[Set[String]] = {
-    val spark = idx.docs.sparkSession
-    import spark.implicits._
     val rows = idx.dictRows.filter(pred).select(col("term"), col("df"))
-      .as[(String, Long)]
+      .as(Searcher.TermDfEnc)
     val got = Searcher.sumDf(cap match {
       case Some(c) =>
         rows.mapPartitions { it =>
@@ -740,7 +801,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
             if (more) seen += t
             more
           }
-        }.collect()
+        }(Searcher.TermDfEnc).collect()
       case None => rows.collect()
     })
     if (cap.exists(got.size > _)) None
@@ -755,14 +816,22 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * bounded-scan fast path; shared by FuzzyQ and FuzzyLikeThisQ. The
     * candidate set is a SUPERSET of the true dist<=maxEdits matches (the
     * caller applies the exact levenshtein filter), with guaranteed
-    * recall. */
+    * recall. Without trigrams the pieces filter runs over the resident
+    * dictionary on the driver (a local relation), or over the aggregated
+    * dictionary table when none is held. */
   private def fuzzyCandidates(t: String, maxEdits: Int): DataFrame = {
     val pieces = Searcher.pigeonPieces(t, maxEdits)
-    idx.trigrams match {
-      case Some(tg) if pieces.forall(_.length >= 3) =>
+    (idx.trigrams, idx.dictionary) match {
+      case (Some(tg), _) if pieces.forall(_.length >= 3) =>
         val grams = pieces.map(_.substring(0, 3)).distinct
         tg.filter(col("gram").isin(grams: _*))
           .select(col("term"), col("df")).distinct()
+      case (_, Some(d)) =>
+        val rows = d.withPrefix("")
+          .collect { case (x, df) if pieces.exists(x.contains) => Row(x, df) }
+        idx.blockTable.sparkSession.createDataFrame(rows.toSeq.asJava,
+          StructType(Seq(StructField("term", StringType),
+            StructField("df", LongType))))
       case _ =>
         idx.termDict
           .filter(pieces.map(p => col("term").contains(p)).reduce(_ || _))
@@ -771,9 +840,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** Constant-score multi-term rewrite (MultiTermQuery.cs:84-114): match
-    * the dictionary predicate, semi-join into postings, dedup docs. */
-  private def constantOverTerms(dictPred: Column): DataFrame =
-    idx.postingsWhereTermScoring(dictPred)
+    * the dictionary predicate, semi-join into postings, dedup docs — in
+    * one task when the matched terms' postings (`rows`) are few. */
+  private def constantOverTerms(dictPred: Column, rows: Long): DataFrame =
+    oneTask(idx.postingsWhereTermScoring(dictPred), rows)
       .select(col("docid")).distinct()
       .select(col("docid"), lit(1.0).as("score"))
 
@@ -781,12 +851,30 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * over the expanded term set: every term is BM25-scored; per-doc sum
     * in sorted term order (deterministic float fold, same as FuzzyQ). */
   private def scoredOverTerms(terms: Set[String]): DataFrame =
-    termScores(terms)
+    oneTask(termScores(terms), dfOf(terms).values.sum)
       .select(col("docid"), col("term").as("ord"), col("tscore").as("score"))
       .groupBy(col("docid")).agg(ordSumAgg.as("score"))
 
-  /** Phrase scoring. Exact (slop=0): n-way docid join of the term posting
-    * rows, then count aligned start positions with array expressions
+  /** The rows a query's plan reads, estimated for [[Searcher.oneTask]]:
+    * Σ df of its terms from [[dfOf]] (a phrase reads each slot's
+    * postings), the matched terms' df for a prefix on the resident
+    * dictionary, and numDocs for any frame the dictionary cannot bound. */
+  private def estRows(q: Query): Long = q match {
+    case TermQ(t) => dfOf(Set(t)).getOrElse(t, 0L)
+    case BoostQ(sub, _) => estRows(sub)
+    case b: BoolQ => (b.must ++ b.should ++ b.mustNot).map(estRows).sum
+    case DisMaxQ(ds, _) => ds.map(estRows).sum
+    case PhraseQ(ts, _) =>
+      val dfs = dfOf(ts.map(_._1).toSet)
+      ts.map { case (t, _) => dfs.getOrElse(t, 0L) }.sum
+    case PrefixQ(p, _) =>
+      dictRange(Some((p, None))).fold(idx.numDocs)(_.values.sum)
+    case _ => idx.numDocs
+  }
+
+  /** Phrase scoring. Exact (slop=0): gather each doc's position arrays
+    * of every slot (one aggregate over the slots' posting rows), then
+    * count aligned start positions with array expressions
     * (positions stay packed — no row explosion). tf_phrase feeds the BM25
     * tf slot with the SUMMED idf of all phrase terms (PhraseWeight
     * semantics, PhraseQuery.cs:35). Sloppy (slop>0, 2 terms): freq =
@@ -801,13 +889,23 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     val sumIdf = p.terms
       .map { case (t, _) => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L)) }.sum
 
-    val slots = p.terms.zipWithIndex.map { case ((t, _), i) =>
-      val base = idx.postingsFor(Seq(t))
-      if (i == 0)
-        base.select(col("docid"), col("positions").as(s"pos$i"), col("len"))
-      else base.select(col("docid"), col("positions").as(s"pos$i"))
-    }
-    val joined = slots.reduce((a, b) => a.join(b, Seq("docid")))
+    // slot k's positions as `posk` for each doc holding every slot: one
+    // aggregate over the slots' posting rows, in one task when they are
+    // few. Not an n-way join: Spark shuffles a join of single-partition
+    // children once their estimated sizes, multiplied by each join,
+    // pass its single-partition limit
+    val n = p.terms.size
+    val rows = p.terms.zipWithIndex.map { case ((t, _), i) =>
+      idx.postingsFor(Seq(t))
+        .select(col("docid"), lit(i).as("slot"), col("positions"), col("len"))
+    }.reduce(_ unionByName _)
+    val joined = oneTask(rows, estRows(p))
+      .groupBy(col("docid"))
+      .agg(sort_array(collect_list(struct(col("slot"), col("positions"))))
+        .as("__slots"), max(col("len")).as("len"))
+      .filter(size(col("__slots")) === n)
+      .select(col("docid") +: col("len") +: (0 until n).map(k =>
+        col("__slots")(k).getField("positions").as(s"pos$k")): _*)
     val off0 = p.terms.head._2
 
     val tfp: Column =
@@ -844,7 +942,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       .withColumn("tfp", tfp)
       .filter(col("tfp") > 0)
       .select(col("docid"),
-        (lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
+        (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
           .as("score"))
   }
 
@@ -862,10 +960,12 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * multi-term rewrites applies to the span form too). */
   private def expandSpanRegexes(s: Span): Span = s match {
     case SRegex(p) =>
-      val rx = col("term").rlike("^(?:" + p + ")$")
-      val pfx = Searcher.regexLiteralPrefix(p)
-      val pred = if (pfx.nonEmpty) col("term").startsWith(pfx) && rx else rx
-      val ts = dictMatches(pred, Some(Searcher.MaxClauseCount))
+      val (pred, local) = Searcher.regexMatch(p)
+      val ts = dictRange(Some(local)) match {
+        case Some(ms) =>
+          Option.when(ms.size <= Searcher.MaxClauseCount)(ms.keySet)
+        case None => dictMatches(pred, Some(Searcher.MaxClauseCount))
+      }
       require(ts.isDefined,
         s"span regex '$p' expands past maxClauseCount=${Searcher.MaxClauseCount}")
       SOr(ts.get.toSeq.sorted.map(STerm))
@@ -1017,7 +1117,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       .withColumn("tfp", tfp)
       .filter(col("tfp") > 0)
       .select(col("docid"),
-        (lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
+        (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
           .as("score"))
   }
 
@@ -1049,7 +1149,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       .withColumn("tfp", size(filter(col("pos0"), pred)).cast("double"))
       .filter(col("tfp") > 0)
       .select(col("docid"),
-        (lit(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
+        (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
           .as("score"))
   }
 
@@ -1074,28 +1174,29 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     scoredOverTerms(ranked.toSet).filter(col("docid") =!= src)
   }
 
-  /** Driver-side dictionary lookup (TermInfosReader analog — tiny:
-    * |query terms| × segments rows), memoized per Searcher like the
-    * reference's per-thread TermInfo cache (TermInfosReader.cs:203-224):
-    * one query evaluation may resolve the same terms from several
-    * sub-plans (the WAND planner + its devolved disjunction, nested
-    * boolean groups), and each uncached call is a driver-side job. The
-    * miss path is one single-stage scan of the per-segment dictionaries
-    * with the term set pushed down as `In`; per-term sums across
-    * segments happen here on the driver. Every df the query layer
-    * scores with comes from this memo. */
+  /** Driver-side dictionary lookup (TermInfosReader analog, SURVEY
+    * §4.2): every df the query layer scores with comes from here. It
+    * reads the index's resident dictionary ([[InvertedIndex.dictionary]],
+    * loaded once per commit point and shared by every Searcher), so a
+    * lookup runs no job. An index whose dictionary is too large to hold
+    * falls back to one single-stage scan of the per-segment dictionaries
+    * with the term set pushed down as `In`, summed per term here and
+    * memoized per Searcher like the reference's per-thread TermInfo cache
+    * (TermInfosReader.cs:203-224). */
   private val dfMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
-  def dfOf(terms: Set[String]): Map[String, Long] = {
-    val missing = terms.filter(t => !dfMemo.containsKey(t))
-    if (missing.nonEmpty) {
-      val got = Searcher.sumDf(idx.dictRows
-        .filter(col("term").isin(missing.toSeq.sorted: _*))
-        .select(col("term"), col("df")).collect()
-        .map(r => (r.getString(0), r.getLong(1))))
-      missing.foreach(t => dfMemo.put(t, got.get(t)))
-    }
-    terms.flatMap(t => dfMemo.get(t).map(t -> _)).toMap
+  def dfOf(terms: Set[String]): Map[String, Long] = idx.dictionary match {
+    case Some(d) => terms.flatMap(t => d.df(t).map(t -> _)).toMap
+    case None =>
+      val missing = terms.filter(t => !dfMemo.containsKey(t))
+      if (missing.nonEmpty) {
+        val got = Searcher.sumDf(idx.dictRows
+          .filter(col("term").isin(missing.toSeq.sorted: _*))
+          .select(col("term"), col("df")).collect()
+          .map(r => (r.getString(0), r.getLong(1))))
+        missing.foreach(t => dfMemo.put(t, got.get(t)))
+      }
+      terms.flatMap(t => dfMemo.get(t).map(t -> _)).toMap
   }
 
   /** Top-k with the mandatory (score desc, docid asc) tie-break
@@ -1142,7 +1243,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     val meta = queries.map { case (qid, q) =>
       qid -> Searcher.Node(q.must.size, q.should.size, q.minShouldMatch, Nil)
     }.toMap
-    boolOf(arr, Seq("qid", "docid"), Searcher.lookup(meta, col("qid")), flat)
+    // the meta lookup in a projection of its own (see termScores)
+    boolOf(arr.withColumn("__node",
+        Searcher.lookup(meta, col("qid"), Searcher.NodeType)),
+      Seq("qid", "docid"), col("__node"), flat)
       .withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("docid").asc)).cast("long"))
       .filter(col("rank") <= k)
@@ -1386,10 +1490,70 @@ object Searcher {
   private[search] def sumDf(rows: Array[(String, Long)]): Map[String, Long] =
     rows.groupMapReduce(_._1)(_._2)(_ + _)
 
-  /** `m(key)` as a column: a hash lookup in the task closure. */
-  private[search] def lookup[V: scala.reflect.runtime.universe.TypeTag](
-      m: Map[String, V], key: Column): Column =
-    udf((k: String) => m(k)).apply(key)
+  /** Estimated rows at or below which a point query runs in one task
+    * ([[oneTask]]). */
+  val SingleTaskRows: Long = 1L << 20
+
+  /** `df` on one partition when the query reads at most
+    * [[SingleTaskRows]] rows (`rows`, an estimate): the fold above it
+    * then runs in the scan's task — one partition satisfies every
+    * clustered distribution, so no exchange is planned, and a
+    * point query is one job of one task instead of a shuffle-map job
+    * plus a result job. Larger reads keep the parallel scan and its
+    * exchange. */
+  private[search] def oneTask(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= SingleTaskRows) df.coalesce(1) else df
+
+  /** `m(key)` as a column of type `dt`: a hash lookup in the task
+    * closure. A Java UDF with its type given, so building one derives
+    * no encoder by reflection. */
+  private[search] def lookup[V](m: Map[String, V], key: Column,
+      dt: DataType): Column =
+    udf(new UDF1[String, Any] { def call(k: String): Any = m(k) }, dt)
+      .apply(key)
+
+  /** A per-query number (an idf or an idf sum) as a plan parameter. A
+    * literal would be inlined into the generated Java source, so each
+    * distinct value would compile a class of its own; this is a
+    * non-foldable call that returns `v`, and same-shape queries share
+    * one compiled plan. Marked nondeterministic only so the optimizer
+    * does not fold it back into a literal. */
+  private[search] def param(v: Double): Column =
+    udf(new UDF0[java.lang.Double] { def call(): java.lang.Double = v },
+      DoubleType)
+      .asNondeterministic().apply()
+
+  /** A [[Node]] (whose groups are never empty) as a struct literal
+    * built from column literals — no reflection per call, unlike
+    * `typedLit`. */
+  private[search] def nodeLit(n: Node): Column = {
+    val groups = n.groups.map(g => struct(lit(g.gid).as("gid"),
+      lit(g.occur).as("occur"), lit(g.nMust).as("nMust"),
+      lit(g.nShould).as("nShould"), lit(g.msm).as("msm")))
+    struct(lit(n.nMust).as("nMust"), lit(n.nShould).as("nShould"),
+      lit(n.msm).as("msm"), array(groups: _*).as("groups"))
+  }
+
+  private[search] lazy val NodeType: StructType = Encoders.product[Node].schema
+
+  /** Type of a term's clause rows in `perClause`. */
+  private[search] lazy val ClauseRowsType: DataType = ArrayType(
+    Encoders.product[(String, Int, Int, String, Double)].schema)
+
+  private[search] lazy val TermDfEnc = Encoders.product[(String, Long)]
+
+  /** A whole-term regex as (dictionary predicate, (literal prefix,
+    * regex)): the prefix is a startsWith pre-filter — a range on a
+    * term-sorted dictionary — and the regex is anchored, as
+    * RegexTermEnum matches whole terms. */
+  private[search] def regexMatch(pat: String)
+      : (Column, (String, Option[String])) = {
+    val rx = "^(?:" + pat + ")$"
+    val pfx = regexLiteralPrefix(pat)
+    val pred = col("term").rlike(rx)
+    (if (pfx.nonEmpty) col("term").startsWith(pfx) && pred else pred,
+      (pfx, Some(rx)))
+  }
 
   /** Sort columns for a SortField spec + the mandatory docid tie-break. */
   def sortOrder(sorts: Seq[SortField]): Seq[Column] =

@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.index.{Codec, InvertedIndex, PostingBlocks}
 
@@ -87,8 +88,6 @@ object Wand {
   private def plan(idx: InvertedIndex, terms: Seq[String], k: Int,
       dfs: Map[String, Long]): Option[Plan] = {
     val blocks = idx.blockTable
-    val spark = blocks.sparkSession
-    import spark.implicits._
     val searcher = new Searcher(idx)
     val live = terms.distinct.filter(dfs.contains)
     if (live.isEmpty) return None
@@ -111,10 +110,11 @@ object Wand {
     // from stats; per-term gmax via a tiny re-aggregation of the same
     // stat columns; keep block b of term t iff
     // ub_t(b) + Σ_{t'≠t} gmax_t' >= t0.
-    val idfDf = live.map(t => (t, idf(t), dfs(t))).toDF("term", "idf", "df")
+    // idf and df per term ride in the task closure (Searcher.lookup),
+    // not in a broadcast local relation
     val blocksLive = blocks.filter(col("term").isin(live: _*))
     val withUb = blocksLive
-      .join(broadcast(idfDf.select("term", "idf")), Seq("term"))
+      .withColumn("idf", Searcher.lookup(idf, col("term"), DoubleType))
       .withColumn("ub", col("idf") *
         Bm25.tfNorm(col("max_tf").cast("double"),
           col("min_len").cast("double"), idx.avgdl))
@@ -138,18 +138,15 @@ object Wand {
     // candidate docids (deletes excluded so the rescore never resurrects
     // a deleted doc), then exact deterministic rescoring of candidates
     // against ONLY the blocks whose docid range can contain them
-    val cand0 = PostingBlocks.toScoring(kept).select(col("docid")).distinct()
-    val candidates = idx.deleted match {
-      case Some(d) => cand0.join(d, Seq("docid"), "left_anti")
-      case None => cand0
-    }
+    val candidates =
+      idx.live(PostingBlocks.toScoring(kept).select(col("docid")).distinct())
     val rescoreBlocks = blocksLive.as("b")
       .join(broadcast(candidates.as("c")),
         col("c.docid").between(col("b.min_docid"), col("b.max_docid")),
         "left_semi")
     val result = PostingBlocks.toScoring(rescoreBlocks)
       .join(broadcast(candidates), Seq("docid"), "left_semi")
-      .join(broadcast(idfDf.select("term", "df")), Seq("term"))
+      .withColumn("df", Searcher.lookup(dfs, col("term"), LongType))
       .select(col("docid"), col("term"),
         Bm25.score(idx.numDocs, idx.avgdl, col("df"), col("tf"), col("len"))
           .as("tscore"))

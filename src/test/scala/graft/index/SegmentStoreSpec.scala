@@ -263,6 +263,56 @@ class SegmentStoreSpec extends AnyFunSuite {
     assert(hits == convDocs.map(_.getLong(0)).toSet)
   }
 
+  test("a reopen after append, update and delete reads the new dictionary and delete set") {
+    val root = tmp()
+    val convs = turns.select("conv_id").distinct().orderBy("conv_id")
+      .collect().map(_.getString(0))
+    val cut = convs(convs.length / 2)
+    IndexBuilder.buildSegments(spark, turns.filter(col("conv_id") < cut),
+      root, 2, 4)
+    var open = SegmentStore.reopen(spark, root, None)
+    // df as the index's stored dictionary table has it, for comparison
+    def tableDf(t: String): Long = open.index.termDict
+      .filter(col("term") === t).select("df").collect()
+      .headOption.map(_.getLong(0)).getOrElse(0L)
+    def dfOf(t: String): Long =
+      new Searcher(open.index).dfOf(Set(t)).getOrElse(t, 0L)
+    def reopen(): Unit = {
+      val next = SegmentStore.reopen(spark, root, Some(open))
+      assert(next.index ne open.index)
+      open = next
+    }
+    def hits(t: String): Set[Long] = new Searcher(open.index)
+      .score(TermQ(t)).collect().map(_.getLong(0)).toSet
+    val df0 = dfOf("error")
+    assert(df0 == tableDf("error") && open.index.deletedIds.exists(_.isEmpty))
+
+    IndexBuilder.appendSegment(spark, turns.filter(col("conv_id") >= cut),
+      root, 4)
+    reopen()
+    assert(dfOf("error") == tableDf("error") && dfOf("error") > df0)
+
+    val conv = convs.head
+    IndexBuilder.updateByKeyword(spark, root, "conv_id", conv,
+      turns.filter(col("conv_id") === conv)
+        .withColumn("text", concat(col("text"), lit(" freshly"))), 4)
+    reopen()
+    val oldIds = turns.filter(col("conv_id") === conv).count()
+    assert(dfOf("freshly") == oldIds)
+    assert(open.index.deletedIds.exists(_.length == oldIds))
+    assert(hits("freshly").size == oldIds)
+
+    val gone = hits("deploy")
+    assert(gone.nonEmpty)
+    IndexBuilder.deleteByTerm(spark, root, "deploy")
+    reopen()
+    assert(open.index.deletedIds.exists(_.length == oldIds + gone.size))
+    assert(hits("deploy").isEmpty)
+    assert(hits("error").intersect(gone).isEmpty)
+    // stats stay stale until a merge (reference behavior)
+    assert(dfOf("deploy") == tableDf("deploy") && dfOf("deploy") > 0)
+  }
+
   test("appending an empty batch is a no-op on the manifest") {
     val root = tmp()
     IndexBuilder.buildSegments(spark, turns, root, 2, 4)

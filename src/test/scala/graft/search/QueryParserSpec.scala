@@ -187,6 +187,63 @@ class QueryParserSpec extends AnyFunSuite {
     assert(parsed >= 50, s"only $parsed of ${inputs.size} parsed")
   }
 
+  test("a boost needs a NUMBER operand; bad operands fail with a position") {
+    assert(QueryParser.parse("foo^2") == BoostQ(TermQ("foo"), 2.0))
+    assert(QueryParser.parse("foo^0.5") == BoostQ(TermQ("foo"), 0.5))
+    assert(QueryParser.parse("\"foo bar\"~1.5") ==
+      PhraseQ(Seq("foo" -> 0, "bar" -> 1), 1))
+    // was: BoostQ(foo, 1.0) OR a stray term "abc"; a silent boost of
+    // 1.0; a raw NumberFormatException
+    Seq("foo^abc" -> 4, "foo^" -> 4, "foo^1.2.3" -> 4, "foo^.5" -> 4,
+        "foo^2." -> 4, "(a b)^ c" -> 6, "\"a b\"~1.2.3" -> 6).foreach {
+      case (q, at) =>
+        val e = intercept[IllegalArgumentException](QueryParser.parse(q))
+        assert(e.getMessage.contains(s"at $at"), s"$q: ${e.getMessage}")
+    }
+    // a number too large for a double, and an edit distance too large
+    // for an int
+    intercept[IllegalArgumentException](QueryParser.parse("foo^" + "9" * 400))
+    intercept[IllegalArgumentException](QueryParser.parse("tble~99999999999"))
+  }
+
+  test("fuzz: random strings over the query alphabet parse or fail cleanly") {
+    // time-bounded: random strings until the budget is spent, each a
+    // Query or an IllegalArgumentException, never another throwable
+    val alphabet = "ab spark:role\"~^()[]{}*?+-!&|\\0123456789. TOANDORNOT"
+    val operands = Seq("", "x", "2", "1.5", "1.2.3", ".", "9" * 40,
+      "9" * 400, "99999999999", "-1", "^", "~")
+    val rnd = new scala.util.Random(606)
+    def draw(): String = {
+      val sb = new StringBuilder
+      (0 until 1 + rnd.nextInt(24)).foreach { _ =>
+        rnd.nextInt(6) match {
+          case 0 => sb ++= Seq("~", "^")(rnd.nextInt(2)) +
+            operands(rnd.nextInt(operands.size))
+          case 1 => sb ++= Seq("text:", "role:", "ts:", ":")(rnd.nextInt(4))
+          case 2 => sb += '"'
+          case _ => sb += alphabet(rnd.nextInt(alphabet.length))
+        }
+      }
+      sb.toString
+    }
+    val deadline = System.nanoTime() + 3000000000L
+    var (tried, parsed) = (0, 0)
+    val bad = scala.collection.mutable.ArrayBuffer.empty[(String, Throwable)]
+    while (System.nanoTime() < deadline && bad.size < 5) {
+      val s = draw()
+      val got = Await.result(Future(Try(QueryParser.parse(s)))(
+        ExecutionContext.global), 10.seconds)
+      got match {
+        case scala.util.Success(_) => parsed += 1
+        case scala.util.Failure(_: IllegalArgumentException) =>
+        case scala.util.Failure(e) => bad += s -> e
+      }
+      tried += 1
+    }
+    assert(bad.isEmpty, bad.map { case (s, e) => s"'$s': $e" }.mkString("\n"))
+    assert(tried >= 1000 && parsed >= 100, s"$parsed of $tried parsed")
+  }
+
   test("similarQuery dedups in first-occurrence order, stops, caps") {
     assert(QueryAst.similarQuery("sort the Row by column SORT row") ==
       BoolQ(should = Seq(TermQ("sort"), TermQ("row"), TermQ("column"))))

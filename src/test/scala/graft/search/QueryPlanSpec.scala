@@ -6,13 +6,14 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.util.Random
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.{col, date_format}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,10 +22,11 @@ import graft.index.{IndexBuilder, SegmentStore}
 import graft.model.Transcripts
 
 /** Plan shape of the query layer on a segmented store. Every df a query
-  * scores with is resolved on the driver by the memoized
-  * [[Searcher.dfOf]], so a query plan never aggregates or broadcasts the
-  * term dictionary, and a query whose terms are already resolved runs
-  * only the jobs of its own postings plan. */
+  * scores with comes from the index's resident dictionary
+  * ([[Searcher.dfOf]]), deletes are a lookup in its resident delete set,
+  * a small point query folds in one task, and per-query numbers are plan
+  * parameters: a point query is one job with no exchange, reads no
+  * dictionary table, and a same-shape query compiles no new class. */
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkFixture.spark
 
@@ -96,12 +98,48 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     case _ => false
   }
 
-  /** Aggregates and broadcasts with a dictionary scan below them. */
-  private def dictAggOrBroadcast(plans: Seq[SparkPlan]): Seq[String] =
-    plans.flatMap(p => collect(p) {
-      case n @ (_: BaseAggregateExec | _: BroadcastExchangeExec)
-          if find(n)(isDictScan).isDefined => n.nodeName
-    })
+  private def exchanges(plans: Seq[SparkPlan]): Seq[String] =
+    plans.flatMap(p => collect(p) { case e: Exchange => e.nodeName })
+
+  /** Analyzed (term, position) runs of stored turns, for phrases that
+    * match. */
+  private lazy val runs: Seq[Seq[(String, Int)]] =
+    idx.docs.select("text").orderBy("docid").limit(200).collect().toSeq
+      .map(r => graft.analysis.Analyzer.tokenize(r.getString(0))
+        .map(t => t.term -> t.pos))
+      .filter(_.size >= 4)
+
+  /** The first `n` analyzed tokens of a stored turn as a phrase. */
+  private def phraseOf(doc: Int, n: Int, slop: Int = 0): PhraseQ =
+    PhraseQ(runs(doc).take(n), slop)
+
+  /** One query of every shape in the benchmark's point-query mix. */
+  private def pointQueries: Seq[Query] = Seq(
+    TermQ("error"),
+    BoolQ(must = Seq(TermQ("error"), TermQ("deploy"))),
+    BoolQ(should = Seq(TermQ("error"), TermQ("deploy"), TermQ("merge"))),
+    BoolQ(must = Seq(TermQ("spark")), mustNot = Seq(TermQ("error"))),
+    phraseOf(0, 2),
+    phraseOf(1, 3),
+    phraseOf(2, 2, slop = 2),
+    PrefixQ("de", AutoRewrite), // expands to a scored term set
+    PrefixQ("", AutoRewrite), // past the cap: constant score
+    BoolQ(must = Seq(KeywordQ("role", "assistant"), TermQ("error"))))
+
+  /** Every point query, on a fresh Searcher over `index` (its resident
+    * dictionary and delete set already read), runs one job and executes
+    * no exchange. */
+  private def assertOneJobEach(index: graft.index.InvertedIndex): Unit = {
+    index.dictionary; index.deletedIds
+    pointQueries.foreach { q =>
+      val s = new Searcher(index)
+      val (jobs, plans) =
+        record(assert(s.topK(q, 10).collect().nonEmpty, s"$q"))
+      assert(jobs == 1, s"$q\n${plans.mkString("\n")}")
+      assert(plans.nonEmpty && exchanges(plans).isEmpty,
+        s"$q: ${exchanges(plans)}")
+    }
+  }
 
   test("a warm term query runs one job, a warm two-term boolean two") {
     val s = new Searcher(idx)
@@ -115,23 +153,99 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(boolJobs <= 2)
   }
 
-  test("no query plan aggregates or broadcasts the term dictionary") {
-    val queries = Seq(
-      TermQ("spark"),
+  test("every point query shape runs one job with no exchange") {
+    assertOneJobEach(idx)
+  }
+
+  test("on a store with deletes every point query still runs one job") {
+    val root = Files.createTempDirectory("graft_plan_del_").toString
+    IndexBuilder.buildSegments(spark,
+      Transcripts.synthetic(spark, 1500, seed = 11L, partitions = 6), root,
+      numBatches = 3, numPartitions = 4)
+    val gone = Transcripts.vocabulary(40)
+    IndexBuilder.deleteByTerm(spark, root, gone)
+    val deleted = SegmentStore.open(spark, root)
+    assert(deleted.deletedIds.exists(_.nonEmpty))
+    assertOneJobEach(deleted)
+    // the delete set is applied
+    assert(new Searcher(deleted).topK(TermQ(gone), 10).collect().isEmpty)
+  }
+
+  test("a same-shape query on other terms compiles no class") {
+    val s = new Searcher(idx)
+    val pairs: Seq[(Query, Query)] = Seq(
+      TermQ("error") -> TermQ("deploy"),
+      BoolQ(must = Seq(TermQ("error"), TermQ("spark"))) ->
+        BoolQ(must = Seq(TermQ("deploy"), TermQ("merge"))),
+      phraseOf(3, 2) -> phraseOf(4, 2),
+      phraseOf(5, 3) -> phraseOf(6, 3),
+      phraseOf(7, 2, slop = 1) -> phraseOf(8, 2, slop = 1),
+      BoolQ(must = Seq(KeywordQ("role", "user"), TermQ("error"))) ->
+        BoolQ(must = Seq(KeywordQ("role", "tool"), TermQ("model"))))
+    def compiles(q: Query): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(s.topK(q, 10).collect().nonEmpty, s"$q")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    pairs.foreach { case (first, second) =>
+      // warm the shape: the code cache's LRU is approximate, so one run
+      // may evict some of its own classes; three runs settle it
+      assert((1 to 3).exists(_ => compiles(first) == 0), s"$first")
+      assert(compiles(second) == 0, s"$second compiled a class")
+    }
+  }
+
+  test("above the single-task row limit the fold keeps its exchange") {
+    val scored = new Searcher(idx).termScores(Set("error", "deploy"))
+    def folded(rows: Long) = exchanges(Seq(
+      Searcher.oneTask(scored, rows).groupBy(col("docid")).count()
+        .queryExecution.executedPlan))
+    assert(folded(Searcher.SingleTaskRows).isEmpty)
+    assert(folded(Searcher.SingleTaskRows + 1).nonEmpty)
+  }
+
+  test("no query reads a dictionary table") {
+    // the detector works: the dictionary rows are a dict table scan
+    assert(find(idx.dictRows.queryExecution.executedPlan)(isDictScan).isDefined)
+    idx.dictionary
+    val queries = pointQueries ++ Seq(
       BoolQ(must = Seq(TermQ("spark")), should = Seq(TermQ("table")),
         mustNot = Seq(TermQ("merge"))),
-      PrefixQ("s", AutoRewrite), // expands to a scored term set
-      PrefixQ("", AutoRewrite), // past the cap: constant score
-      PrefixQ("de", ScoringBoolean))
+      PrefixQ("s", AutoRewrite),
+      PrefixQ("de", ScoringBoolean),
+      RegexQ("de.*", AutoRewrite),
+      WildcardQ("sp?rk*", AutoRewrite))
     queries.foreach { q =>
-      // a fresh Searcher: the cold df lookups are recorded too
+      // a fresh Searcher: any df lookup it made would be recorded
       val s = new Searcher(idx)
-      val (_, plans) = record(assert(s.topK(q, 10).collect().nonEmpty))
-      // the lookups do read the dictionary (the detector works) ...
-      assert(plans.exists(find(_)(isDictScan).isDefined), s"$q")
-      // ... but only as plain scans
-      assert(dictAggOrBroadcast(plans).isEmpty, s"$q")
+      val (_, plans) =
+        record(assert(s.topK(q, 10).collect().nonEmpty, s"$q"))
+      assert(plans.nonEmpty && !plans.exists(find(_)(isDictScan).isDefined),
+        s"$q")
     }
+  }
+
+  test("a date range pushes conservative ts bounds to the docs scan") {
+    val s = new Searcher(idx)
+    // the corpus's turns are a minute apart from 2025-01-01T00:00Z
+    val q = DateRangeQ("ts", Some("2025010105"), Some("2025010110"), "hour")
+    val got = s.score(q)
+    val scans = collect(got.queryExecution.executedPlan) {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == "docs") => f
+    }
+    assert(scans.nonEmpty)
+    scans.foreach { f =>
+      val pushed = f.metadata.getOrElse("PushedFilters", "")
+      assert(pushed.contains("GreaterThanOrEqual(ts") &&
+        pushed.contains("LessThan(ts"), pushed)
+    }
+    // the answer is the key predicate's alone
+    val key = date_format(col("ts"), "yyyyMMddHH")
+    val want = idx.docs.filter(key >= "2025010105" && key <= "2025010110")
+      .select("docid").collect().map(_.getLong(0)).toSet
+    assert(want.size == 6 * 60)
+    assert(got.select("docid").collect().map(_.getLong(0)).toSet == want)
   }
 
   test("topK scores equal explain values exactly on random queries") {
