@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
@@ -51,7 +52,11 @@ final case class InvertedIndex(
       * (a segmented store's union of its segment dict tables), so a
       * term appears once per segment that holds it; None when
       * `termDict` already has one row per term. */
-    segmentDicts: Option[DataFrame] = None) {
+    segmentDicts: Option[DataFrame] = None,
+    /** Rows above which the dictionary or the delete set is not held on
+      * the driver: [[InvertedIndex.ResidentRows]]; a spec lowers it to
+      * run the scan and anti-join fallbacks on a small corpus. */
+    private[graft] val residentRows: Int = InvertedIndex.ResidentRows) {
 
   /** [[blockTable]] as an Option; kept only for the benchmark program
     * (perfbench), which reads `blocks.get`. */
@@ -67,26 +72,23 @@ final case class InvertedIndex(
 
   /** The term dictionary held on the driver: every term with its df
     * summed over segments, sorted. None when it has more than
-    * [[InvertedIndex.ResidentRows]] per-segment rows; callers then scan
-    * [[dictRows]]. */
+    * [[residentRows]] per-segment rows; callers then scan [[dictRows]]. */
   lazy val dictionary: Option[InvertedIndex.Dictionary] =
-    resident._1.map(InvertedIndex.Dictionary(_))
+    resident.head.map(InvertedIndex.Dictionary(_))
 
   /** The live delete set held on the driver, sorted: Some(empty) when
     * nothing is deleted, None when the set has more than
-    * [[InvertedIndex.ResidentRows]] rows (then [[live]] anti-joins
-    * [[deleted]]). */
+    * [[residentRows]] rows (then [[live]] anti-joins [[deleted]]). */
   lazy val deletedIds: Option[Array[Long]] =
     if (deleted.isEmpty) Some(Array.emptyLongArray)
-    else resident._2.map(_.map(_._2).distinct.sorted)
+    else resident(1).map(_.map(_._2).distinct.sorted)
 
-  /** The (term, df) dictionary rows and the deleted docids, read together
-    * by one single-stage job on first use of either. */
+  /** The (term, df) dictionary rows and the (null, docid) delete rows,
+    * read together on first use of either. */
   private lazy val resident = InvertedIndex.collectBounded(
-    deleted.foldLeft(dictRows.select(col("term"), col("df").as("n"))) {
-      (rows, del) => rows.unionByName(
-        del.select(lit(null).cast("string").as("term"), col("docid").as("n")))
-    })
+    dictRows.select(col("term"), col("df")) +:
+      deleted.toSeq.map(_.select(lit(null).cast("string"), col("docid"))),
+    residentRows)
 
   /** Drop the rows of deleted docs (deleted docs are skipped at
     * iteration, stats stay stale until merge — SegmentTermDocs.Next /
@@ -96,8 +98,13 @@ final case class InvertedIndex(
   private[graft] def live(df: DataFrame): DataFrame = deletedIds match {
     case Some(ids) if ids.isEmpty => df
     case Some(_) => df.filter(notDeleted)
-    case None => df.join(deleted.get, Seq("docid"), "left_anti")
+    case None => withoutDeleted(df)
   }
+
+  /** `df` anti-joined with the delete set: the fallback of [[live]], and
+    * the write paths' view, which need no resident read. */
+  private[index] def withoutDeleted(df: DataFrame): DataFrame =
+    deleted.fold(df)(df.join(_, Seq("docid"), "left_anti"))
 
   private lazy val notDeleted: Column =
     InvertedIndex.notIn(deletedIds.get)
@@ -187,34 +194,47 @@ object InvertedIndex {
     }
   }
 
-  /** The (term, n) rows of `df` in one job, split into those with a
-    * term and those without; either side is None when it has more than
-    * [[ResidentRows]] rows. Each task returns at most ResidentRows + 1
-    * rows of each side, and the driver drops a side once its count
-    * passes the limit. */
-  private def collectBounded(df: DataFrame)
-      : (Option[Array[(String, Long)]], Option[Array[(String, Long)]]) = {
-    val cap = ResidentRows
-    val sides = Array.fill(2)(scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long)])
-    val seen = Array(0L, 0L)
-    df.sparkSession.sparkContext.runJob(df.rdd,
-      (it: Iterator[Row]) => {
-        val kept = Array(0, 0)
-        it.takeWhile(_ => kept(0) <= cap || kept(1) <= cap)
-          .flatMap { r =>
-            val side = if (r.isNullAt(0)) 1 else 0
-            kept(side) += 1
-            Option.when(kept(side) <= cap + 1)((r.getString(0), r.getLong(1)))
-          }.toArray
-      },
-      (_: Int, part: Array[(String, Long)]) => part.foreach { row =>
-        val side = if (row._1 == null) 1 else 0
-        seen(side) += 1
-        if (seen(side) > cap) sides(side).clear() else sides(side) += row
-      })
-    val out = (0 to 1).map(i => Option.when(seen(i) <= cap)(sides(i).toArray))
-    (out(0), out(1))
+  /** Each frame's (string, long) rows on the driver, or None for a
+    * frame with more than `cap` rows. One job reads every frame: a task
+    * ships at most its share of `cap` (cap / the frame's partitions) and
+    * counts the rest, stopping once it alone has passed `cap`, so the
+    * driver receives at most about `cap` rows per frame. A frame that
+    * fits but had a partition above its share re-reads just those
+    * partitions in a second job. */
+  private[index] def collectBounded(frames: Seq[DataFrame], cap: Int)
+      : Seq[Option[Array[(String, Long)]]] = {
+    val rdds = frames.map(_.rdd.map(r => (r.getString(0), r.getLong(1))))
+    val all = rdds.head.sparkContext.union(rdds)
+    // UnionRDD lays out each frame's partitions in turn
+    val owner =
+      rdds.indices.flatMap(i => Seq.fill(rdds(i).getNumPartitions)(i))
+    val share = owner.map(i => cap / rdds(i).getNumPartitions).toArray
+    def read(parts: Seq[Int], keep: Array[Int]) =
+      all.sparkContext.runJob(all,
+        (ctx: TaskContext, it: Iterator[(String, Long)]) => {
+          val k = keep(ctx.partitionId)
+          val rows =
+            scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+          var n = 0L
+          while (n <= cap && it.hasNext) {
+            val r = it.next()
+            n += 1
+            if (n <= k) rows += r
+          }
+          (rows.toArray, n)
+        }, parts)
+    val first = read(owner.indices, share)
+    val fits = rdds.indices.map(i =>
+      owner.indices.filter(owner(_) == i).map(first(_)._2).sum <= cap)
+    val over = owner.indices
+      .filter(p => fits(owner(p)) && first(p)._2 > share(p))
+    // no job for an empty partition list: Spark would still post one
+    val again: Map[Int, (Array[(String, Long)], Long)] =
+      if (over.isEmpty) Map.empty
+      else over.zip(read(over, Array.fill(owner.size)(cap))).toMap
+    rdds.indices.map(i => Option.when(fits(i))(owner.indices
+      .filter(owner(_) == i).flatMap(p => again.getOrElse(p, first(p))._1)
+      .toArray))
   }
 
   /** docid is not in the sorted set `ids`: a binary search in the task
@@ -433,7 +453,8 @@ object IndexBuilder {
     val m = SegmentStore.latest(root).getOrElse(sys.error("empty store"))
     val idx = SegmentStore.open(spark, root)
     val dir = f"del_v${m.version + 1}%05d"
-    idx.docs.filter(col(field) === value).select("docid")
+    idx.withoutDeleted(idx.storedDocs.filter(col(field) === value))
+      .select("docid")
       .write.mode("overwrite").parquet(s"$root/$dir")
     val meta = writeAppendedSegment(spark, newTurns, root, Some(m),
       numPartitions, s"update $field=$value")
@@ -485,8 +506,9 @@ object IndexBuilder {
     * expunges (reference behavior). */
   def deleteByTerm(spark: SparkSession, root: String, term: String): Manifest = {
     val idx = SegmentStore.open(spark, root)
-    deleteDocids(spark, root,
-      idx.postingsFor(Seq(term)).select("docid").distinct(), s"term=$term")
+    deleteDocids(spark, root, idx.withoutDeleted(PostingBlocks.toScoring(
+      idx.blockTable.filter(col("term") === term)).select("docid").distinct()),
+      s"term=$term")
   }
 
   /** Delete by a NOT_ANALYZED keyword column (e.g. conv_id) — the
@@ -495,7 +517,8 @@ object IndexBuilder {
       value: String): Manifest = {
     val idx = SegmentStore.open(spark, root)
     deleteDocids(spark, root,
-      idx.docs.filter(col(field) === value).select("docid"),
+      idx.withoutDeleted(idx.storedDocs.filter(col(field) === value))
+        .select("docid"),
       s"$field=$value")
   }
 

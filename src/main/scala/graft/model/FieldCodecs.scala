@@ -63,6 +63,9 @@ object DateTools {
       "minute" -> MINUTES, "second" -> SECONDS, "millisecond" -> MILLIS)
   }
 
+  /** Key lengths of the resolutions, year (yyyy) to millisecond. */
+  private val KeyLengths = Set(4, 6, 8, 10, 12, 14, 17)
+
   private val FullKey =
     java.time.format.DateTimeFormatter.ofPattern("uuuuMMddHHmmssSSS")
 
@@ -71,12 +74,13 @@ object DateTools {
     * whose key is >= `v` is at or after the first, one whose key is
     * <= `v` is before the second. `v` is read as the start of the
     * instant it prefixes, and a day of slack on each side covers any
-    * session time zone, so the bounds are conservative. None when `v`
-    * is not a digit prefix of a valid key. */
+    * session time zone, so the bounds are conservative. None unless `v`
+    * is a valid key of some resolution: the start of a partial key
+    * ("20041") is not its smallest completion ("200410" >= "20041"). */
   def keyBounds(v: String, resolution: String)
       : Option[(java.time.Instant, java.time.Instant)] = {
     val template = "00000101000000000" // yyyy=0000 MM=01 dd=01 ...
-    Option.when(v.nonEmpty && v.length <= template.length &&
+    Option.when(KeyLengths.contains(v.length) &&
         v.forall(c => c >= '0' && c <= '9'))(v + template.drop(v.length))
       .flatMap(k => scala.util.Try(
         java.time.LocalDateTime.parse(k, FullKey)).toOption)

@@ -32,6 +32,11 @@ object QueryParser {
     * instead of a clean rejection. */
   val MaxNesting = 64
 
+  /** Largest `term~N` edit distance accepted: Lucene's Levenshtein
+    * automata stop at 2 (LevenshteinAutomata.MAXIMUM_SUPPORTED_DISTANCE),
+    * and the candidate filter splits the term into N + 1 pieces. */
+  val MaxFuzzyEdits = 2
+
   def parse(input: String): Query = parse(input, Map.empty[String, String])
 
   /** `dateResolutions` is the reference's per-field SetDateResolution
@@ -325,9 +330,10 @@ object QueryParser {
                 val t = unescape(w.substring(0, tilde)).toLowerCase
                 val edits =
                   if (tilde == w.length - 1) 2
-                  else w.substring(tilde + 1).toIntOption.getOrElse(
-                    throw new IllegalArgumentException(
-                      s"fuzzy edit distance out of range before $pos"))
+                  else w.substring(tilde + 1).toIntOption
+                    .filter(_ <= MaxFuzzyEdits).getOrElse(
+                      throw new IllegalArgumentException(
+                        s"fuzzy edit distance out of range before $pos"))
                 Some(FuzzyQ(Analyzer.stripPossessive(t), edits))
               } else if (hasUnescaped(w, "*?")) {
                 // an escaped wildcard inside a word that ALSO carries an

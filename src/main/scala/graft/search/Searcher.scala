@@ -1491,8 +1491,12 @@ object Searcher {
     rows.groupMapReduce(_._1)(_._2)(_ + _)
 
   /** Estimated rows at or below which a point query runs in one task
-    * ([[oneTask]]). */
-  val SingleTaskRows: Long = 1L << 20
+    * ([[oneTask]]): the measured crossover. On 4 local cores, one task
+    * against the parallel plan for OR, AND and phrase folds was 6–20%
+    * faster up to about 4k rows, about even from 5k to 16k, and slower
+    * from 32k (by 3–14%) to 512k rows (by 2.3x), on stores of 12k and
+    * 300k synthetic turns. */
+  val SingleTaskRows: Long = 1L << 14
 
   /** `df` on one partition when the query reads at most
     * [[SingleTaskRows]] rows (`rows`, an estimate): the fold above it
@@ -1564,9 +1568,10 @@ object Searcher {
 
   /** Split q into k+1 near-equal contiguous pieces (pigeonhole candidate
     * filter for edit distance <= k). An empty piece (q shorter than k+1)
-    * degrades to contains("") == full scan — still correct. */
+    * degrades to contains("") == full scan — still correct, so at most
+    * q.length + 1 pieces are cut. */
   def pigeonPieces(q: String, k: Int): Seq[String] = {
-    val n = k + 1
+    val n = math.min(k, q.length) + 1
     val cuts = (0 to n).map(i => i * q.length / n)
     (0 until n).map(i => q.substring(cuts(i), cuts(i + 1))).distinct
   }

@@ -52,6 +52,29 @@ class FieldCodecsSpec extends AnyFunSuite {
     assert(got.getString(2) == "2025-03-07 04:35:00")
   }
 
+  test("DateTools.keyBounds hold every timestamp a whole key admits") {
+    val full = java.time.format.DateTimeFormatter
+      .ofPattern("uuuuMMddHHmmssSSS").withZone(java.time.ZoneOffset.UTC)
+    val lens = Map("year" -> 4, "month" -> 6, "day" -> 8, "hour" -> 10)
+    val rnd = new scala.util.Random(7)
+    val base = java.time.Instant.parse("2004-01-01T00:00:00Z")
+    def at() = base.plusSeconds(rnd.nextInt(3 * 365 * 86400))
+    (0 until 2000).foreach { _ =>
+      val (res, n) = lens.toSeq(rnd.nextInt(lens.size))
+      val t = at()
+      val v = full.format(at()).take(Seq(4, 6, 8, 10)(rnd.nextInt(4)))
+      val key = full.format(t).take(n)
+      val Some((from, until)) = DateTools.keyBounds(v, res): @unchecked
+      if (key >= v) assert(!t.isBefore(from), s"$key >= $v at $res")
+      if (key <= v) assert(t.isBefore(until), s"$key <= $v at $res")
+    }
+    // a partial key is not padded: "20041" would start at 2004-11-01,
+    // but the month key "200410" (October) is >= "20041"
+    assert(DateTools.keyBounds("20041", "month").isEmpty)
+    assert(DateTools.keyBounds("2004101", "day").isEmpty)
+    assert(DateTools.keyBounds("200413", "month").isEmpty)
+  }
+
   test("long encoding: order, round-trip, column == driver twin, extremes") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)

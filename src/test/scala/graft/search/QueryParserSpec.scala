@@ -200,10 +200,15 @@ class QueryParserSpec extends AnyFunSuite {
         val e = intercept[IllegalArgumentException](QueryParser.parse(q))
         assert(e.getMessage.contains(s"at $at"), s"$q: ${e.getMessage}")
     }
-    // a number too large for a double, and an edit distance too large
-    // for an int
+    // a number too large for a double, and edit distances too large
+    // for an int or for the fuzzy candidate filter
     intercept[IllegalArgumentException](QueryParser.parse("foo^" + "9" * 400))
     intercept[IllegalArgumentException](QueryParser.parse("tble~99999999999"))
+    intercept[IllegalArgumentException](QueryParser.parse("tble~2000000000"))
+    intercept[IllegalArgumentException](QueryParser.parse(
+      s"tble~${QueryParser.MaxFuzzyEdits + 1}"))
+    assert(QueryParser.parse(s"tble~${QueryParser.MaxFuzzyEdits}") ==
+      FuzzyQ("tble", QueryParser.MaxFuzzyEdits))
   }
 
   test("fuzz: random strings over the query alphabet parse or fail cleanly") {

@@ -12,7 +12,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  Exchange}
 import org.apache.spark.sql.functions.{col, date_format}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -98,6 +100,12 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     case _ => false
   }
 
+  private def dictAggOrBroadcast(plans: Seq[SparkPlan]): Seq[String] =
+    plans.flatMap(p => collect(p) {
+      case n @ (_: BaseAggregateExec | _: BroadcastExchangeExec)
+          if find(n)(isDictScan).isDefined => n.nodeName
+    })
+
   private def exchanges(plans: Seq[SparkPlan]): Seq[String] =
     plans.flatMap(p => collect(p) { case e: Exchange => e.nodeName })
 
@@ -123,7 +131,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     phraseOf(1, 3),
     phraseOf(2, 2, slop = 2),
     PrefixQ("de", AutoRewrite), // expands to a scored term set
-    PrefixQ("", AutoRewrite), // past the cap: constant score
+    PrefixQ("de", ConstantScore),
     BoolQ(must = Seq(KeywordQ("role", "assistant"), TermQ("error"))))
 
   /** Every point query, on a fresh Searcher over `index` (its resident
@@ -157,18 +165,82 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assertOneJobEach(idx)
   }
 
-  test("on a store with deletes every point query still runs one job") {
+  private val gone = Transcripts.vocabulary(40)
+
+  /** The same corpus with every doc holding `gone` deleted. */
+  private lazy val deleted = {
     val root = Files.createTempDirectory("graft_plan_del_").toString
     IndexBuilder.buildSegments(spark,
       Transcripts.synthetic(spark, 1500, seed = 11L, partitions = 6), root,
       numBatches = 3, numPartitions = 4)
-    val gone = Transcripts.vocabulary(40)
     IndexBuilder.deleteByTerm(spark, root, gone)
-    val deleted = SegmentStore.open(spark, root)
+    SegmentStore.open(spark, root)
+  }
+
+  test("on a store with deletes every point query still runs one job") {
     assert(deleted.deletedIds.exists(_.nonEmpty))
     assertOneJobEach(deleted)
     // the delete set is applied
     assert(new Searcher(deleted).topK(TermQ(gone), 10).collect().isEmpty)
+  }
+
+  test("the resident read holds exactly up to its limit, in <= 2 jobs") {
+    val dictRows = deleted.dictRows.count()
+    val delRows = deleted.deleted.get.count()
+    assert(dictRows > delRows && delRows > 0)
+    val all = deleted.dictionary.get.withPrefix("").toSeq
+    // at the limit both fit; a partition above its share of the limit
+    // (limit / partitions) is re-read by a second job
+    val (atJobs, _) = record {
+      val at = deleted.copy(residentRows = dictRows.toInt)
+      assert(at.dictionary.get.withPrefix("").toSeq == all)
+      assert(at.deletedIds.get.toSeq == deleted.deletedIds.get.toSeq)
+    }
+    assert(atJobs >= 1 && atJobs <= 2)
+    // one row past it a side is not held; a side that fits still is
+    val past = deleted.copy(residentRows = delRows.toInt)
+    assert(past.dictionary.isEmpty)
+    assert(past.deletedIds.get.toSeq == deleted.deletedIds.get.toSeq)
+    val none = deleted.copy(residentRows = delRows.toInt - 1)
+    assert(none.dictionary.isEmpty && none.deletedIds.isEmpty)
+  }
+
+  test("above the resident limit, dictionary scans and delete anti-joins") {
+    def isDeleteScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.getName.startsWith("del_v"))
+      case _ => false
+    }
+    def top(s: Searcher, q: Query) =
+      s.topK(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    Seq(idx, deleted).foreach { index =>
+      val scan = index.copy(residentRows = 0)
+      assert(scan.dictionary.isEmpty)
+      assert(scan.deletedIds.isEmpty == index.deleted.isDefined)
+      val queries = pointQueries ++ Seq(
+        PrefixQ("de", ScoringBoolean), // every match, no cap
+        RegexQ("de.*", AutoRewrite), // matches up to the cap
+        FuzzyQ("eror", 1)) // candidates from the aggregated dictionary
+      queries.foreach { q =>
+        val want = top(new Searcher(index), q)
+        val s = new Searcher(scan)
+        val (_, plans) = record(assert(top(s, q) == want, s"$q"))
+        // the lookups read the dictionary table (a constant-score
+        // prefix looks up no df) ...
+        val looksUp = q != PrefixQ("de", ConstantScore)
+        assert(plans.exists(find(_)(isDictScan).isDefined) == looksUp, s"$q")
+        // ... as plain scans, but for the fuzzy candidates' aggregate
+        if (!q.isInstanceOf[FuzzyQ])
+          assert(dictAggOrBroadcast(plans).isEmpty, s"$q")
+        assert(plans.exists(find(_)(isDeleteScan).isDefined) ==
+          index.deleted.isDefined, s"$q")
+        // a repeat finds its df memoized on the Searcher
+        if (q.isInstanceOf[TermQ]) {
+          val (_, again) = record(assert(top(s, q) == want, s"$q"))
+          assert(!again.exists(find(_)(isDictScan).isDefined), s"$q")
+        }
+      }
+    }
   }
 
   test("a same-shape query on other terms compiles no class") {
@@ -212,6 +284,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       BoolQ(must = Seq(TermQ("spark")), should = Seq(TermQ("table")),
         mustNot = Seq(TermQ("merge"))),
       PrefixQ("s", AutoRewrite),
+      PrefixQ("", AutoRewrite), // past the cap: constant score
       PrefixQ("de", ScoringBoolean),
       RegexQ("de.*", AutoRewrite),
       WildcardQ("sp?rk*", AutoRewrite))
