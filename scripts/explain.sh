@@ -3,7 +3,7 @@
 # (graft.Explain) so pushdown/broadcast/codegen properties can be audited.
 # Usage: explain.sh [sfDir]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.001}
 PKG_LOG=$(sbt -batch package 2>&1) || {
   echo "$PKG_LOG" | tail -20 >&2

@@ -4,7 +4,7 @@
 # Writes stdout (the one-line compact JSON) to /tmp/bench_stdout.txt and
 # the Spark log to /tmp/bench_stderr.log; BENCH_SELF.json lands in the
 # repo root. Scaling numbers need the machine otherwise idle.
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.1}
 CPUS=${2:-32}
 ADD_OPENS=""

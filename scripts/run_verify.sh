@@ -2,7 +2,7 @@
 # Dev harness: package + run graft.Verify directly on the JVM (faster than
 # sbt runMain per iteration). Usage: run_verify.sh [sfDir] [outDir]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 PKG_LOG=$(sbt -batch package 2>&1) || {

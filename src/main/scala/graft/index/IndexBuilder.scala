@@ -6,6 +6,7 @@ import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Logical (table-agnostic) inverted index.
   *
@@ -164,24 +165,41 @@ object InvertedIndex {
     * not held on the driver. */
   val ResidentRows: Int = 1 << 20
 
-  /** A term dictionary on the driver: distinct terms in sorted order,
-    * each with its df summed over segments. */
+  /** A term dictionary on the driver: distinct terms in Spark's string
+    * order ([[Utf8Order]]), each with its df summed over segments, so a
+    * prefix and a term range are each one contiguous slice. */
   final class Dictionary private (terms: Array[String], dfs: Array[Long]) {
     private def search(t: String): Int =
-      java.util.Arrays.binarySearch(terms.asInstanceOf[Array[Object]], t)
+      java.util.Arrays.binarySearch(terms, t, Utf8Order)
 
     def df(t: String): Option[Long] = {
       val i = search(t)
       if (i >= 0) Some(dfs(i)) else None
     }
 
-    /** Every (term, df) whose term starts with `prefix`, in term order:
-      * one contiguous range of the sorted terms. */
-    def withPrefix(prefix: String): Iterator[(String, Long)] = {
-      val i = search(prefix)
-      Iterator.range(if (i >= 0) i else -i - 1, terms.length)
-        .takeWhile(j => terms(j).startsWith(prefix))
-        .map(j => (terms(j), dfs(j)))
+    /** Every (term, df) whose term starts with `prefix`, in term order. */
+    def withPrefix(prefix: String): Iterator[(String, Long)] =
+      from(prefix, inclusive = true).takeWhile(_._1.startsWith(prefix))
+
+    /** Every (term, df) between the bounds, in term order, comparing as
+      * Spark compares a term column with a string literal: a bound is
+      * first converted to UTF-8 as Spark converts it. */
+    def range(lo: Option[String], hi: Option[String], incLo: Boolean,
+        incHi: Boolean): Iterator[(String, Long)] = {
+      def utf8(v: String) = UTF8String.fromString(v).toString
+      val top = hi.map(utf8)
+      lo.fold(from("", inclusive = true))(v => from(utf8(v), incLo))
+        .takeWhile { case (t, _) => top.forall { v =>
+          val c = Utf8Order.compare(t, v)
+          c < 0 || incHi && c == 0
+        } }
+    }
+
+    /** The terms from `t` on (past it unless `inclusive`). */
+    private def from(t: String, inclusive: Boolean): Iterator[(String, Long)] = {
+      val i = search(t)
+      Iterator.range(if (i < 0) -i - 1 else if (inclusive) i else i + 1,
+        terms.length).map(j => (terms(j), dfs(j)))
     }
   }
 
@@ -189,8 +207,24 @@ object InvertedIndex {
     def apply(rows: Array[(String, Long)]): Dictionary = {
       val summed = rows.groupMapReduce(_._1)(_._2)(_ + _)
       val terms = summed.keys.toArray
-      java.util.Arrays.sort(terms.asInstanceOf[Array[Object]])
+      java.util.Arrays.sort(terms, Utf8Order)
       new Dictionary(terms, terms.map(summed))
+    }
+  }
+
+  /** Spark's string order, UTF-8 bytes — code point order — over Java
+    * strings. `String.compareTo` orders UTF-16 units instead, which
+    * differs only where a surrogate meets a unit in U+E000–U+FFFF: code
+    * point order puts the surrogate (a supplementary character) last. */
+  val Utf8Order: Ordering[String] = new Ordering[String] {
+    private def unit(c: Char): Int =
+      if (c < 0xd800) c else if (c < 0xe000) c + 0x2000 else c - 0x800
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i < n) unit(a.charAt(i)) - unit(b.charAt(i))
+      else a.length - b.length
     }
   }
 

@@ -1,8 +1,10 @@
 package graft.search
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  Row}
 import org.apache.spark.sql.api.java.{UDF0, UDF1}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,41 +14,46 @@ import graft.index.InvertedIndex
 
 /** Query execution: AST → (docid, score) DataFrame plans.
   *
-  * The reference scores every clause mix with one scorer tree
+  * The reference scores a document at a time in compiled scorers
   * (BooleanScorer2, BooleanQuery.cs:350-424; DisjunctionMaxQuery as a
-  * second fold over the same sub-scorers). Here that tree is one per-doc
-  * clause array ([[clauseArray]]): every clause of a boolean or DisMax
-  * node is a group of rows — (boosted) terms and one-level pure-term
-  * sub-booleans from one shared postings scan, every other clause from
-  * its own [[score]] frame — collected by one hash aggregate per doc.
-  * One group algebra ([[boolFold]], a higher-order fold driven by the
-  * node's group meta) gives each sub-boolean group's (ok, score); a
-  * clause that is one row per matching doc is its own result. The
-  * boolean fold (must/should/not counts, minShouldMatch, coord) or the
-  * DisMax fold (max + tie·(sum − max)) consumes them. [[topKBatch]]
-  * builds the same array for many queries, keyed by (qid, docid).
+  * second fold over the same sub-scorers; the exact and sloppy
+  * PhraseScorers walking position iterators). Here each of them is one
+  * typed per-doc fold ([[Searcher.perDoc]]): a `mapPartitions` that
+  * gathers each doc's rows in a hash map and folds them in plain Scala.
+  *  - Boolean and DisMax trees ([[Searcher.Fold]]): every (boosted) term
+  *    leaf, at any depth, is read by one [[termScores]] scan, and every
+  *    other leaf is its own [[score]] frame. Leaves are slots numbered in
+  *    clause order, and one walk of the tree over a doc's slots applies
+  *    the boolean algebra (must/should/not counts, minShouldMatch, coord)
+  *    or the DisMax one (max + tie·(sum − max)), nested nodes
+  *    recursively. [[topKBatch]] folds many queries' trees over one scan.
+  *  - A phrase reads the block table once for its distinct terms and
+  *    matches its slots' positions in the fold.
+  *  - An ordered sum (the scoring multi-term rewrites, the fuzzy queries)
+  *    adds a doc's term scores in Spark's string order.
   * Scoring is a pluggable [[Similarity]] strategy (Similarity.cs:398-503):
   * BM25 by default (coord intentionally dropped, BM25-era Lucene drops it;
   * SURVEY §7.7), the reference's classic TF-IDF with coord via
   * [[ClassicSim]].
   *
-  * Determinism: multi-part scores are summed in sorted clause order
-  * (sort_array(collect_list(...)) then an ordered fold) — float addition
-  * order is fixed regardless of shuffle layout, so scores are bit-stable
-  * run to run (SURVEY §7 hard-part #1).
+  * Determinism: every fold adds in a fixed order — a boolean's musts,
+  * then its shoulds, each in clause order; a sloppy phrase over its first
+  * slot's positions; an ordered sum by term — whatever the partition
+  * layout, so scores are bit-stable run to run (SURVEY §7 hard-part #1).
   *
   * Per-query fixed cost: a point query ([[topK]] of a term, boolean,
   * phrase, prefix or keyword-and-term query) is one Spark job with no
-  * exchange. df and prefix expansions come from the index's resident
-  * dictionary and deletes from its resident delete set (no dictionary
-  * or delete-set job), a query that reads at most
-  * [[Searcher.SingleTaskRows]] estimated rows folds in one task
-  * ([[Searcher.oneTask]]), and per-query numbers (df, idf sums) reach the
+  * exchange. df, prefix and range expansions come from the index's
+  * resident dictionary and deletes from its resident delete set (no
+  * dictionary or delete-set job); a fold that reads at most
+  * [[Searcher.SingleTaskRows]] estimated rows runs in one task
+  * ([[Searcher.oneTask]]), so its plan has no aggregate, exchange or
+  * adaptive wrapper; and per-query numbers (df, idf sums) reach the
   * generated code as lookups and parameters, not literals, so a
   * same-shape query compiles nothing new.
   */
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
-  import Searcher.{oneTask, param}
+  import Searcher.param
 
   /** Per-(term, docid) BM25 partial scores for a set of query terms.
     * df is resolved on the driver by [[dfOf]] (the TermInfosReader
@@ -79,34 +86,8 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   private def dfCol(dfs: Map[String, Long]): Column =
     Searcher.lookup(dfs, col("term"), LongType)
 
-  /** `scored` (which has a `term` column) with one row per posting and
-    * clause its term sits in, the clause fields as columns `names`. The
-    * clause rows, keyed by term, ride in a hash map captured in the task
-    * closure and are exploded per posting: a broadcast join of the same
-    * driver-built rows would cost a job per query. */
-  private def perClause(scored: DataFrame,
-      clauses: Seq[(String, (String, Int, Int, String, Double))],
-      names: String*): DataFrame = {
-    val byTerm = clauses.groupMap(_._1)(_._2)
-    scored
-      .select(col("*"), explode(Searcher.lookup(byTerm, col("term"),
-        Searcher.ClauseRowsType)).as("__c"))
-      .select(scored.columns.map(col).toSeq ++ names.zipWithIndex.map {
-        case (n, i) => col("__c").getField(s"_${i + 1}").as(n)
-      }: _*)
-  }
-
-  /** The deterministic-fold aggregate shared by the multi-term scorers:
-    * collect the group's (ord, score) pairs, sort by ord, left-fold —
-    * fixed float addition order regardless of shuffle layout, so scores
-    * are bit-stable run to run (SURVEY §7 hard-part #1). */
-  private def ordSumAgg: Column =
-    aggregate(
-      sort_array(collect_list(struct(col("ord"), col("score")))),
-      lit(0.0), (acc, x) => acc + x.getField("score"))
-
-  /** TermQ, possibly boost-wrapped — the clause shape the shared scan of
-    * [[clauseArray]] reads. */
+  /** TermQ, possibly boost-wrapped — the leaf shape the shared scan of
+    * [[foldTrees]] reads. */
   private def asSimpleTerm(q: Query): Option[(String, Double)] = q match {
     case TermQ(t) => Some((t, 1.0))
     case BoostQ(sub, b) => asSimpleTerm(sub).map { case (t, b0) => (t, b0 * b) }
@@ -114,159 +95,73 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** A BoolQ's clauses tagged m/s/n, in (must, should, mustNot) order. */
-  private def clausesOf(q: BoolQ): Seq[(Query, String)] = {
+  private def clausesOf(q: BoolQ): Seq[(Query, Char)] = {
     require(q.must.nonEmpty || q.should.nonEmpty, "empty BooleanQuery")
-    val cl = q.must.map((_, "m")) ++ q.should.map((_, "s")) ++
-      q.mustNot.map((_, "n"))
+    val cl = q.must.map((_, 'm')) ++ q.should.map((_, 's')) ++
+      q.mustNot.map((_, 'n'))
     require(cl.size <= Searcher.MaxClauseCount,
       s"too many boolean clauses (maxClauseCount=${Searcher.MaxClauseCount})")
     cl
   }
 
-  /** The term rows (term, ord, occur, boost) and (nMust, nShould, msm)
-    * of a clause the shared scan can read: a (boosted) term — one must
-    * row — or a boolean whose clauses all are (boosted) terms. */
-  private def scanClause(c: Query)
-      : Option[(Seq[(String, Int, String, Double)], (Int, Int, Int))] =
-    asSimpleTerm(c).map { case (t, b) => (Seq((t, 0, "m", b)), (1, 0, 0)) }
-      .orElse(c match {
-        case sub: BoolQ if sub.must.nonEmpty || sub.should.nonEmpty =>
-          val rows = clausesOf(sub).zipWithIndex.map { case ((x, oc), j) =>
-            asSimpleTerm(x).map { case (t, b) => (t, j, oc, b) }
-          }
-          Option.when(rows.forall(_.isDefined))((rows.flatten,
-            (sub.must.size, sub.should.size, sub.minShouldMatch)))
-        case _ => None
-      })
-
-  /** The per-doc clause array of one node per `qid`, each node a list of
-    * occur-tagged clauses. Clause i is group `gid` = i, and a
-    * sub-boolean's clause j is its row `ord` = j, so (gid, ord) order is
-    * clause order. A group's term rows come from ONE [[termScores]] scan
-    * over every node's terms, exploded per clause with [[perClause]] (a
-    * term in several clauses yields several rows); any other clause is
-    * its own [[score]] frame, unioned in as one must row. One hash
-    * aggregate per docid — or (qid, docid) when `keyed` — collects the
-    * rows sorted by (gid, ord); [[membersOf]] then folds each group. An
-    * unkeyed array that reads few rows is built in one task
-    * ([[Searcher.oneTask]]), so the aggregate needs no exchange.
-    * Returns the array frame (key…, all), each node's group meta, and
-    * whether every node is flat: no clause is a sub-boolean, so every
-    * group is one row per matching doc. */
-  private def clauseArray(nodes: Seq[(String, Seq[(Query, String)])],
-      keyed: Boolean)
-      : (DataFrame, Map[String, Seq[Searcher.Group]], Boolean) = {
-    val key = if (keyed) Seq("qid", "docid") else Seq("docid")
-    val flat = nodes.forall(_._2.forall { case (c, _) =>
-      asSimpleTerm(c).isDefined || scanClause(c).isEmpty })
-    val terms = Seq.newBuilder[(String, (String, Int, Int, String, Double))]
+  /** The per-doc fold of boolean and DisMax trees, one per (qid, query),
+    * as (qid, docid, score) for every query a doc satisfies. BoolQ and
+    * DisMaxQ nodes recurse; every other clause is a leaf taking its
+    * query's next slot, so slots follow clause order, depth first. The
+    * term leaves of every tree are read by ONE [[termScores]] scan, and
+    * every other leaf is its own [[score]] frame unioned in. The fold
+    * runs in one task when the leaves read few rows, unless `parallel`. */
+  private def foldTrees(queries: Seq[(String, Query)],
+      parallel: Boolean): DataFrame = {
+    val terms = Seq.newBuilder[(String, (Int, Int, Double))]
     val frames = Seq.newBuilder[DataFrame]
-    val groups = nodes.map { case (qid, cl) =>
-      qid -> cl.zipWithIndex.map { case ((c, oc), gid) =>
-        val (nMust, nShould, msm) = scanClause(c) match {
-          case Some((rows, shape)) =>
-            // a flat node's rows are its members: they carry its occur
-            rows.foreach { case (t, o, occ, b) =>
-              terms += ((t, (qid, gid, o, if (flat) oc else occ, b))) }
-            shape
-          case None =>
-            frames += score(c).select(lit(qid).as("qid"), col("docid"),
-              lit(gid).as("gid"), lit(0).as("ord"),
-              lit(if (flat) oc else "m").as("occur"), col("score"))
-            (1, 0, 0)
-        }
-        Searcher.Group(gid, oc, nMust, nShould, msm)
+    var est = 0L
+    val trees = queries.zipWithIndex.map { case ((qid, q), qi) =>
+      var slots = 0
+      def treeOf(c: Query): Searcher.Fold = c match {
+        case b: BoolQ =>
+          Searcher.BoolNode(b.must.size, b.should.size, b.minShouldMatch,
+            clausesOf(b).map { case (x, occur) => (occur, treeOf(x)) })
+        case DisMaxQ(ds, tie) =>
+          require(ds.nonEmpty, "empty DisjunctionMaxQuery")
+          Searcher.MaxNode(tie, ds.map(treeOf))
+        case _ =>
+          val slot = slots
+          slots += 1
+          asSimpleTerm(c) match {
+            case Some((t, b)) => terms += ((t, (qi, slot, b)))
+            case None => frames += score(c).select(col("docid"),
+              lit(null).cast("string").as("term"), lit(qi).as("qi"),
+              lit(slot).as("slot"), col("score"))
+          }
+          est += estRows(c)
+          Searcher.Leaf(slot)
       }
-    }.toMap
+      (qid, treeOf(q))
+    }
     val ts = terms.result()
-    val scanned = Option.when(ts.nonEmpty)(
-      perClause(termScores(ts.map(_._1).toSet), ts,
-        "qid", "gid", "ord", "occur", "boost")
-        .select(col("qid"), col("docid"), col("gid"), col("ord"),
-          col("occur"), (col("tscore") * col("boost")).as("score")))
-    val rows = (scanned.toSeq ++ frames.result()).reduce(_ unionByName _)
-    val arr = (if (keyed) rows
-        else oneTask(rows,
-          nodes.flatMap(_._2).map { case (c, _) => estRows(c) }.sum))
-      .groupBy(key.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("gid"), col("ord"),
-        col("occur"), col("score")))).as("all"))
-    (arr, groups, flat)
-  }
-
-  /** BooleanScorer2's algebra (BooleanQuery.cs:350-424) as one ordered
-    * pass over a node's members `xs` (occur, score), of which `present`
-    * picks the node's own: every must member and at least msm should
-    * members (at least one when there is no must) present, no must-not
-    * member; the score adds the musts, then the shoulds, each in member
-    * order, and applies coord. `g` carries the node's (nMust, nShould,
-    * msm); `finish` maps (ok, score) to the result. One pass and a
-    * finish lambda, so nothing is evaluated twice per doc. */
-  private def boolFold(xs: Column, present: Column => Column, g: Column)(
-      finish: (Column, Column) => Column): Column = {
-    val zero = struct(lit(0).as("m"), lit(0).as("s"), lit(0).as("n"),
-      lit(0.0).as("sm"), lit(0.0).as("ss"), g.as("g"))
-    aggregate(xs, zero, (a, x) => {
-      def add(f: String, tag: String, v: Column): Column =
-        when(x.getField("occur") === tag, a.getField(f) + v)
-          .otherwise(a.getField(f)).as(f)
-      when(present(x), struct(add("m", "m", lit(1)), add("s", "s", lit(1)),
-        add("n", "n", lit(1)), add("sm", "m", x.getField("score")),
-        add("ss", "s", x.getField("score")), a.getField("g").as("g")))
-        .otherwise(a)
-    }, a => {
-      val (m, s, n) = (a.getField("m"), a.getField("s"), a.getField("n"))
-      val node = a.getField("g")
-      val (nMust, nShould, msm) = (node.getField("nMust"),
-        node.getField("nShould"), node.getField("msm"))
-      val ok = when(nMust > 0, m === nMust && (nShould === 0 || s >= msm))
-        .otherwise(s >= greatest(lit(1), msm)) && n === 0
-      finish(ok, sim.applyCoord(a.getField("sm") + a.getField("ss"), m + s,
-        nMust + nShould))
-    })
-  }
-
-  /** A node's fold members, each with an occur and a score, in clause
-    * order, and which of them are present. A flat node's rows are its
-    * members, all present; otherwise every group of `node` (a
-    * [[Searcher.Node]] column) is folded over its rows by [[boolFold]]
-    * to (occur, ok, score), present when ok. */
-  private def membersOf(node: Column,
-      flat: Boolean): (Column, Column => Column) =
-    if (flat) (col("all"), _ => lit(true))
-    else (transform(node.getField("groups"), g =>
-      boolFold(col("all"), _.getField("gid") === g.getField("gid"), g)(
-        (ok, sc) => struct(g.getField("occur").as("occur"), ok.as("ok"),
-          sc.as("score")))), _.getField("ok"))
-
-  /** The boolean fold of a node's members: (key…, score) per matching
-    * doc — a non-matching doc folds to an empty array, which `explode`
-    * drops. */
-  private def boolOf(arr: DataFrame, key: Seq[String], node: Column,
-      flat: Boolean): DataFrame = {
-    val (members, present) = membersOf(node, flat)
-    arr.select(key.map(col) :+ explode(
-      boolFold(members, present, node)((ok, sc) =>
-        when(ok, array(sc)).otherwise(array().cast("array<double>"))))
-      .as("score"): _*)
+    val scan = Option.when(ts.nonEmpty)(termScores(ts.map(_._1).toSet)
+      .select(col("docid"), col("term"), lit(0).as("qi"), lit(0).as("slot"),
+        col("tscore").as("score")))
+    Searcher.foldTrees((scan.toSeq ++ frames.result()).reduce(_ unionByName _),
+      if (parallel) Long.MaxValue else est, sim, trees.toArray,
+      ts.groupMap(_._1)(_._2).map { case (t, ls) => t -> ls.toArray })
   }
 
   /** Evaluate to one row per matching doc: (docid: long, score: double). */
   def score(q: Query): DataFrame = q match {
     case TermQ(t) =>
-      oneTask(termScores(Set(t)), estRows(q))
-        .select(col("docid"), col("tscore").as("score"))
+      termScores(Set(t)).select(col("docid"), col("tscore").as("score"))
 
-    case bq: BoolQ =>
-      val (arr, groups, flat) =
-        clauseArray(Seq("" -> clausesOf(bq)), keyed = false)
-      boolOf(arr, Seq("docid"), Searcher.nodeLit(Searcher.Node(bq.must.size,
-        bq.should.size, bq.minShouldMatch, groups(""))), flat)
+    case _: BoolQ | _: DisMaxQ =>
+      foldTrees(Seq("" -> q), parallel = false).select("docid", "score")
 
-    case p: PhraseQ => phrase(p)
+    case PhraseQ(ts, slop) =>
+      require(ts.nonEmpty, "empty phrase")
+      phrase(ts.map { case (t, off) => (Seq(t), off) }, slop)
 
     case PrefixQ(p, rw) =>
-      multiTerm(col("term").startsWith(p), rw, Some((p, None)))
+      multiTerm(col("term").startsWith(p), rw, Some(_.withPrefix(p)))
 
     case RegexQ(pat, rw) =>
       // whole-term match (RegexTermEnum anchors the pattern); a literal
@@ -456,18 +351,20 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       val pfx = pat.takeWhile(c => c != '*' && c != '?')
       val pred = col("term").rlike(rx)
       multiTerm(if (pfx.nonEmpty) col("term").startsWith(pfx) && pred else pred,
-        rw, Some((pfx, Some(rx))))
+        rw, Some(Searcher.matching(pfx, Some(rx))))
 
     case TermRangeQ(lo, hi, il, ih, rw, coll) =>
-      // collated variant (TermRangeQuery.cs:96): the dictionary compare
-      // runs under the ICU locale collation — native in Spark 4
-      // (collate() stays inside codegen), so the range is still a
-      // dictionary-scan predicate, never a driver loop
+      // an uncollated range is one slice of the resident dictionary,
+      // which keeps Spark's string order. The collated variant
+      // (TermRangeQuery.cs:96) compares under the ICU locale collation —
+      // native in Spark 4 (collate() stays inside codegen), so that range
+      // is a dictionary-scan predicate, never a driver loop
       val t = coll.map(c => collate(col("term"), c)).getOrElse(col("term"))
       val conds = Seq(
         lo.map(v => if (il) t >= v else t > v),
         hi.map(v => if (ih) t <= v else t < v)).flatten
-      multiTerm(conds.reduceOption(_ && _).getOrElse(lit(true)), rw, None)
+      multiTerm(conds.reduceOption(_ && _).getOrElse(lit(true)), rw,
+        Option.when(coll.isEmpty)(_.range(lo, hi, il, ih)))
 
     case FuzzyQ(t, maxEdits) =>
       // scoring-boolean rewrite with similarity boost (FuzzyTermEnum):
@@ -499,7 +396,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         .select(col("docid"), col("term").as("ord"),
           (sim.score(idx.numDocs, idx.avgdl, col("df"), col("tf"),
             col("len")) * col("boost")).as("score"))
-      scored.groupBy(col("docid")).agg(ordSumAgg.as("score"))
+      Searcher.ordSum(scored, idx.numDocs)
 
     case FuzzyLikeThisQ(text, maxEdits, maxNumTerms) =>
       // FuzzyLikeThisQuery.cs:190-318. Per analyzed source term:
@@ -566,13 +463,13 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         val spark = idx.docs.sparkSession
         import spark.implicits._
         val selDf = selRows.toSeq.toDF("src", "term", "vscore")
-        idx.postingsForScoring(selRows.map(_._2).distinct.toSeq)
+        Searcher.ordSum(idx.postingsForScoring(selRows.map(_._2).distinct.toSeq)
           .join(broadcast(selDf), Seq("term"))
           .select(col("docid"),
             concat(col("src"), lit("|"), col("term")).as("ord"),
             (col("vscore") *
-              sim.tfNorm(col("tf"), col("len"), idx.avgdl)).as("score"))
-          .groupBy(col("docid")).agg(ordSumAgg.as("score"))
+              sim.tfNorm(col("tf"), col("len"), idx.avgdl)).as("score")),
+          idx.numDocs)
       }
 
     case MatchAllQ =>
@@ -717,40 +614,21 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
 
     case SpanQ(sp) => spanQuery(sp)
 
-    case mp: MultiPhraseQ => multiPhrase(mp)
+    case MultiPhraseQ(slots) =>
+      require(slots.nonEmpty, "empty multi-phrase")
+      phrase(slots, 0)
 
     case MoreLikeThisQ(src, topN) => moreLikeThis(src, topN)
-
-    case DisMaxQ(ds, tie) =>
-      // DisjunctionMaxQuery over the same clause array: the max of the
-      // matching disjuncts plus tie × the rest, summed in clause order
-      require(ds.nonEmpty, "empty DisjunctionMaxQuery")
-      val (arr, groups, flat) =
-        clauseArray(Seq("" -> ds.map((_, "s"))), keyed = false)
-      val (members, present) =
-        membersOf(Searcher.nodeLit(Searcher.Node(0, 0, 0, groups(""))), flat)
-      val zero = struct(lit(0).as("n"), lit(null).cast("double").as("mx"),
-        lit(0.0).as("sm"))
-      arr.select(col("docid"), explode(aggregate(members, zero,
-        (a, x) => when(present(x), struct(
-          (a.getField("n") + 1).as("n"),
-          greatest(a.getField("mx"), x.getField("score")).as("mx"),
-          (a.getField("sm") + x.getField("score")).as("sm")))
-          .otherwise(a),
-        a => when(a.getField("n") > 0, array(a.getField("mx") +
-          lit(tie) * (a.getField("sm") - a.getField("mx"))))
-          .otherwise(array().cast("array<double>")))).as("score"))
   }
 
   /** Multi-term rewrite dispatch (MultiTermQuery.cs:58-200). The auto
     * heuristic enumerates the matched dictionary terms at PLAN time, as
     * the reference's term enum walk does at rewrite time: the matches
     * decide scoring vs constant and, when scoring, are also the literal
-    * term set of the postings scan. `local` is `dictPred` as a literal
-    * prefix plus an optional whole-term regex; with it the matches are a
-    * range of the resident dictionary ([[dictRange]]) and cost no job. */
+    * term set of the postings scan. `local` is `dictPred` as a walk of
+    * the resident dictionary; with it the matches cost no job. */
   private def multiTerm(dictPred: Column, rw: MultiTermRewrite,
-      local: Option[(String, Option[String])]): DataFrame =
+      local: Option[Searcher.Local]): DataFrame =
     dictRange(local) match {
       case Some(ms) =>
         if (rw == ScoringBoolean ||
@@ -769,18 +647,12 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       }
     }
 
-  /** The terms (with df) of the resident dictionary that start with a
-    * literal prefix and, when a regex is given, match it as a whole
-    * (java.util.regex, the engine `rlike` uses): a contiguous range of
-    * the sorted terms walked on the driver. None when the index holds no
-    * resident dictionary or there is no prefix form. */
-  private def dictRange(local: Option[(String, Option[String])])
+  /** The terms (with df) a [[Searcher.Local]] walk finds in the
+    * resident dictionary, on the driver. None when the index holds no
+    * resident dictionary or the query has no local form. */
+  private def dictRange(local: Option[Searcher.Local])
       : Option[Map[String, Long]] =
-    for (d <- idx.dictionary; (prefix, rx) <- local) yield {
-      val m = rx.map(java.util.regex.Pattern.compile(_).matcher(""))
-      d.withPrefix(prefix)
-        .filter { case (t, _) => m.forall(_.reset(t).find(0)) }.toMap
-    }
+    for (d <- idx.dictionary; walk <- local) yield walk(d).toMap
 
   /** Every dictionary term matching `pred`, with its df memoized for
     * [[dfOf]]; None once more than `cap` distinct terms match. The path
@@ -840,110 +712,59 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** Constant-score multi-term rewrite (MultiTermQuery.cs:84-114): match
-    * the dictionary predicate, semi-join into postings, dedup docs — in
-    * one task when the matched terms' postings (`rows`) are few. */
+    * the dictionary predicate, semi-join into postings, one row per doc
+    * — in one task when the matched terms' postings (`rows`) are few. */
   private def constantOverTerms(dictPred: Column, rows: Long): DataFrame =
-    oneTask(idx.postingsWhereTermScoring(dictPred), rows)
-      .select(col("docid")).distinct()
-      .select(col("docid"), lit(1.0).as("score"))
+    Searcher.perDoc[java.lang.Long, AnyRef, (Long, Double)](
+        idx.postingsWhereTermScoring(dictPred).select("docid"), rows,
+        Searcher.ScoreEnc)(() => None)((r, doc) => doc(r.getLong(0)))(
+        (docid, _) => Some((docid, 1.0)))
+      .toDF("docid", "score")
 
   /** Scoring-boolean multi-term rewrite (MultiTermQuery.cs:117-151)
     * over the expanded term set: every term is BM25-scored; per-doc sum
-    * in sorted term order (deterministic float fold, same as FuzzyQ). */
+    * in term order (deterministic float fold, same as FuzzyQ). */
   private def scoredOverTerms(terms: Set[String]): DataFrame =
-    oneTask(termScores(terms), dfOf(terms).values.sum)
-      .select(col("docid"), col("term").as("ord"), col("tscore").as("score"))
-      .groupBy(col("docid")).agg(ordSumAgg.as("score"))
+    Searcher.ordSum(termScores(terms).select(col("docid"),
+      col("term").as("ord"), col("tscore").as("score")),
+      dfOf(terms).values.sum)
 
   /** The rows a query's plan reads, estimated for [[Searcher.oneTask]]:
-    * Σ df of its terms from [[dfOf]] (a phrase reads each slot's
-    * postings), the matched terms' df for a prefix on the resident
+    * Σ df of its terms from [[dfOf]] (a phrase reads each distinct term
+    * once), the matched terms' df for a prefix on the resident
     * dictionary, and numDocs for any frame the dictionary cannot bound. */
   private def estRows(q: Query): Long = q match {
     case TermQ(t) => dfOf(Set(t)).getOrElse(t, 0L)
     case BoostQ(sub, _) => estRows(sub)
     case b: BoolQ => (b.must ++ b.should ++ b.mustNot).map(estRows).sum
     case DisMaxQ(ds, _) => ds.map(estRows).sum
-    case PhraseQ(ts, _) =>
-      val dfs = dfOf(ts.map(_._1).toSet)
-      ts.map { case (t, _) => dfs.getOrElse(t, 0L) }.sum
+    case PhraseQ(ts, _) => dfOf(ts.map(_._1).toSet).values.sum
+    case MultiPhraseQ(slots) => dfOf(slots.flatMap(_._1).toSet).values.sum
     case PrefixQ(p, _) =>
-      dictRange(Some((p, None))).fold(idx.numDocs)(_.values.sum)
+      dictRange(Some(_.withPrefix(p))).fold(idx.numDocs)(_.values.sum)
     case _ => idx.numDocs
   }
 
-  /** Phrase scoring. Exact (slop=0): gather each doc's position arrays
-    * of every slot (one aggregate over the slots' posting rows), then
-    * count aligned start positions with array expressions
-    * (positions stay packed — no row explosion). tf_phrase feeds the BM25
-    * tf slot with the SUMMED idf of all phrase terms (PhraseWeight
-    * semantics, PhraseQuery.cs:35). Sloppy (slop>0, 2 terms): freq =
-    * sum over driving positions of 1/(minDist+1) (DefaultSimilarity
-    * SloppyFreq, DefaultSimilarity.cs:69; greedy-repeat handling of the
-    * reference is intentionally simplified — documented deviation). */
-  private def phrase(p: PhraseQ): DataFrame = {
-    require(p.terms.nonEmpty, "empty phrase")
-    val dfs = dfOf(p.terms.map(_._1).toSet)
-    // a term absent from the dictionary makes the n-way join empty anyway;
-    // its idf contribution uses df=0 (irrelevant — no rows survive)
-    val sumIdf = p.terms
-      .map { case (t, _) => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L)) }.sum
-
-    // slot k's positions as `posk` for each doc holding every slot: one
-    // aggregate over the slots' posting rows, in one task when they are
-    // few. Not an n-way join: Spark shuffles a join of single-partition
-    // children once their estimated sizes, multiplied by each join,
-    // pass its single-partition limit
-    val n = p.terms.size
-    val rows = p.terms.zipWithIndex.map { case ((t, _), i) =>
-      idx.postingsFor(Seq(t))
-        .select(col("docid"), lit(i).as("slot"), col("positions"), col("len"))
-    }.reduce(_ unionByName _)
-    val joined = oneTask(rows, estRows(p))
-      .groupBy(col("docid"))
-      .agg(sort_array(collect_list(struct(col("slot"), col("positions"))))
-        .as("__slots"), max(col("len")).as("len"))
-      .filter(size(col("__slots")) === n)
-      .select(col("docid") +: col("len") +: (0 until n).map(k =>
-        col("__slots")(k).getField("positions").as(s"pos$k")): _*)
-    val off0 = p.terms.head._2
-
-    val tfp: Column =
-      if (p.slop == 0) {
-        // count p in pos0 s.t. every slot k has (p + offk - off0) in posk
-        val pred: Column => Column = pp =>
-          p.terms.zipWithIndex.tail.map { case ((_, offk), k) =>
-            array_contains(col(s"pos$k"), pp + lit(offk - off0))
-          }.reduceOption(_ && _).getOrElse(lit(true))
-        size(filter(col("pos0"), pred)).cast("double")
-      } else {
-        // N-term sloppy (generalizes the reference's 2-term common case;
-        // repeated terms allowed — each slot matches independently
-        // against its term's positions, a documented simplification of
-        // SloppyPhraseScorer.cs:26-120 repeat handling): per driving
-        // position of slot 0, each other slot contributes its minimal
-        // |displacement| (candidates pre-filtered to <= slop); the doc
-        // accrues 1/(totalDist+1) when every slot has a candidate and
-        // the summed displacement stays within slop.
-        val total: Column => Column = pp =>
-          p.terms.zipWithIndex.tail.map { case ((_, offk), k) =>
-            val gap = offk - off0
-            array_min(transform(
-              filter(col(s"pos$k"), j => abs(j - pp - lit(gap)) <= p.slop),
-              j => abs(j - pp - lit(gap)))).cast("double")
-          }.reduce(_ + _)
-        aggregate(col("pos0"), lit(0.0), (acc, pp) =>
-          acc + coalesce(
-            when(total(pp) <= p.slop, lit(1.0) / (total(pp) + lit(1.0))),
-            lit(0.0)))
-      }
-
-    joined
-      .withColumn("tfp", tfp)
-      .filter(col("tfp") > 0)
-      .select(col("docid"),
-        (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
-          .as("score"))
+  /** Phrase scoring (PhraseQuery.cs; ExactPhraseScorer and
+    * SloppyPhraseScorer; MultiPhraseQuery): one read of the block table
+    * for the distinct terms, and a per-doc fold that matches each slot's
+    * positions — the union of its terms' — against the first slot's
+    * ([[Searcher.phraseFreq]]). tf_phrase feeds the tf slot of the
+    * [[Similarity]] with the SUMMED idf of every slot term (PhraseWeight
+    * semantics, PhraseQuery.cs:35; MultiPhraseQuery.cs:40). A slot none
+    * of whose terms a doc holds rules the doc out. */
+  private def phrase(slots: Seq[(Seq[String], Int)], slop: Int): DataFrame = {
+    val all = slots.flatMap(_._1)
+    val dfs = dfOf(all.toSet)
+    val sumIdf = all.map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
+    val terms = all.distinct
+    val off0 = slots.head._2
+    Searcher.foldPhrase(
+      idx.postingsFor(terms)
+        .select(col("docid"), col("term"), col("positions"), col("len")),
+      dfs.values.sum, terms, slots.map { case (ts, off) =>
+        (ts.map(terms.indexOf).toArray, off - off0) }.toArray, slop,
+      sim, sumIdf, idx.avgdl)
   }
 
   /** General span-algebra evaluation (SpanQ): per doc, every sub-span
@@ -1121,38 +942,6 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
           .as("score"))
   }
 
-  /** MultiPhraseQuery: per slot, union the alternatives' occurrences
-    * (merged position arrays per doc), then the exact-phrase position
-    * intersect; weight = summed idf over every alternative term
-    * (MultiPhraseQuery.cs:40 weight semantics). */
-  private def multiPhrase(mp: MultiPhraseQ): DataFrame = {
-    require(mp.slots.nonEmpty, "empty multi-phrase")
-    val allTerms = mp.slots.flatMap(_._1)
-    val dfs = dfOf(allTerms.toSet)
-    val sumIdf = allTerms
-      .map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
-    val slots = mp.slots.zipWithIndex.map { case ((ts, _), i) =>
-      val agg = idx.postingsFor(ts)
-        .groupBy(col("docid"))
-        .agg(sort_array(array_distinct(flatten(collect_list(col("positions")))))
-          .as(s"pos$i"), max(col("len")).as(s"len$i"))
-      if (i == 0) agg.select(col("docid"), col(s"pos$i"), col(s"len$i").as("len"))
-      else agg.select(col("docid"), col(s"pos$i"))
-    }
-    val joined = slots.reduce((a, b) => a.join(b, Seq("docid")))
-    val off0 = mp.slots.head._2
-    val pred: Column => Column = pp =>
-      mp.slots.zipWithIndex.tail.map { case ((_, offk), k) =>
-        array_contains(col(s"pos$k"), pp + lit(offk - off0))
-      }.reduceOption(_ && _).getOrElse(lit(true))
-    joined
-      .withColumn("tfp", size(filter(col("pos0"), pred)).cast("double"))
-      .filter(col("tfp") > 0)
-      .select(col("docid"),
-        (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
-          .as("score"))
-  }
-
   /** MoreLikeThis: the source doc's text is fetched (one stored-fields
     * row — the term-vector analog since we keep forward data), analyzed
     * driver-side, its terms ranked by tf·idf (ties → term asc), and the
@@ -1215,10 +1004,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     *
     * Registry queries must be flat term-bag booleans (every clause a
     * possibly boosted TermQ, so every query reads the one shared scan).
-    * The registry is one [[clauseArray]] keyed by (qid, docid), each
-    * query's group meta looked up by qid in the task closure, and the
-    * same boolean fold as [[score]] — so each query's rows are rank-
-    * and score-identical to its own topK run.
+    * The registry is one [[foldTrees]] of every query's tree, its rows
+    * partitioned by docid and keyed by (query, docid) in the fold — the
+    * same fold as [[score]], so each query's rows are rank- and
+    * score-identical to its own topK run.
     *
     * Output (qid, rank, docid, score) ordered by (qid, rank). The
     * per-query rank is a window partitioned by qid — one sort shuffle
@@ -1228,25 +1017,14 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   def topKBatch(queries: Seq[(String, BoolQ)], k: Int): DataFrame = {
     require(queries.map(_._1).distinct.size == queries.size,
       "duplicate query ids in the batch registry")
-    val nodes = queries.map { case (qid, q) =>
-      val cl = clausesOf(q)
-      cl.zipWithIndex.foreach { case ((c, _), i) =>
+    queries.foreach { case (qid, q) =>
+      clausesOf(q).zipWithIndex.foreach { case ((c, _), i) =>
         require(asSimpleTerm(c).isDefined,
           s"topKBatch requires flat term-bag queries; clause $i of " +
             s"'$qid' is not a (boosted) TermQ")
       }
-      qid -> cl
     }
-    // every clause is a term, so the array is flat and a query's meta
-    // needs no groups
-    val (arr, _, flat) = clauseArray(nodes, keyed = true)
-    val meta = queries.map { case (qid, q) =>
-      qid -> Searcher.Node(q.must.size, q.should.size, q.minShouldMatch, Nil)
-    }.toMap
-    // the meta lookup in a projection of its own (see termScores)
-    boolOf(arr.withColumn("__node",
-        Searcher.lookup(meta, col("qid"), Searcher.NodeType)),
-      Seq("qid", "docid"), col("__node"), flat)
+    foldTrees(queries, parallel = true)
       .withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("docid").asc)).cast("long"))
       .filter(col("rank") <= k)
@@ -1365,7 +1143,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * `value`, and `value` must equal score(q) on every doc matching q.
     * Boolean trees are decomposed COMPOSITIONALLY (per-clause join +
     * msm/not algebra re-derived here), so the invariant cross-checks the
-    * clause-array fold of [[score]] against an independent
+    * per-doc tree fold of [[score]] against an independent
     * evaluation; non-decomposable scorers (phrase, span, dismax,
     * function) are single leaves carrying their full score. */
   def explain(q: Query): DataFrame =
@@ -1422,13 +1200,13 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       // sum): raw*(coord-1), so Σ parts == applyCoord(raw) — identity
       // (and no extra part) under Bm25Sim, the overlap/maxOverlap
       // factor under ClassicSim, keeping Explain==Score for EVERY
-      // Similarity (the scoring path coords in boolFold)
+      // Similarity (the scoring path coords in the tree fold)
       val rawParts = flatten(array(allParts: _*))
       val rawSum = aggregate(rawParts, lit(0.0),
         (a, x) => a + x.getField("value"))
       val overlap = lit(must.size.toLong) + scnt.cast("long")
       val maxOverlap = must.size + should.size
-      val coorded = sim.applyCoord(rawSum, overlap, lit(maxOverlap))
+      val coorded = sim.applyCoord(rawSum, overlap, maxOverlap)
       anti.select(col("docid"),
         when(coorded === rawSum, rawParts)
           .otherwise(concat(rawParts, array(struct(
@@ -1465,17 +1243,6 @@ object Searcher {
     def release(): Unit = bits.unpersist()
   }
 
-  /** One clause of a boolean or DisMax node as a group of the per-doc
-    * clause array: its occur in the node (m/s/n) and its own boolean
-    * algebra (nMust, nShould, msm) — (1, 0, 0) for a clause that is one
-    * row per matching doc. */
-  private[search] final case class Group(gid: Int, occur: String,
-      nMust: Int, nShould: Int, msm: Int)
-
-  /** A node's own (nMust, nShould, msm) and its groups in gid order. */
-  private[search] final case class Node(nMust: Int, nShould: Int, msm: Int,
-      groups: Seq[Group])
-
   /** BooleanQuery.maxClauseCount (BooleanQuery.cs:76). */
   val MaxClauseCount = 1024
 
@@ -1499,14 +1266,193 @@ object Searcher {
   val SingleTaskRows: Long = 1L << 14
 
   /** `df` on one partition when the query reads at most
-    * [[SingleTaskRows]] rows (`rows`, an estimate): the fold above it
-    * then runs in the scan's task — one partition satisfies every
-    * clustered distribution, so no exchange is planned, and a
-    * point query is one job of one task instead of a shuffle-map job
-    * plus a result job. Larger reads keep the parallel scan and its
-    * exchange. */
+    * [[SingleTaskRows]] rows (`rows`, an estimate), so the fold above it
+    * runs in the scan's task and a point query is one job of one task;
+    * else `df` partitioned by docid, one exchange. */
   private[search] def oneTask(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= SingleTaskRows) df.coalesce(1) else df
+    if (rows <= SingleTaskRows) df.coalesce(1)
+    else df.repartition(col("docid"))
+
+  /** Group `rows` — docid first — by a key in a hash map per partition
+    * of [[oneTask]], each key's state made by `init` and fed by `add`
+    * (which gets the row and the state of any key), then `fold` each
+    * key's state to at most one output row: the one per-doc evaluator of
+    * the query layer. */
+  private[search] def perDoc[K, S <: AnyRef, O](rows: DataFrame, est: Long,
+      enc: Encoder[O])(init: () => S)(add: (Row, K => S) => Unit)(
+      fold: (K, S) => Option[O]): Dataset[O] =
+    oneTask(rows, est).mapPartitions { (it: Iterator[Row]) =>
+      val docs = new java.util.HashMap[K, S]()
+      val state: K => S = k => {
+        val s = docs.get(k)
+        if (s != null) s else { val n = init(); docs.put(k, n); n }
+      }
+      it.foreach(add(_, state))
+      docs.entrySet.iterator.asScala.flatMap(e => fold(e.getKey, e.getValue))
+    }(enc)
+
+  /** A boolean or DisMax tree over one query's leaf slots. */
+  private[search] sealed trait Fold extends Serializable
+
+  /** A leaf: the doc's row at `slot`, if it has one. */
+  private[search] final case class Leaf(slot: Int) extends Fold
+
+  /** BooleanScorer2's algebra (BooleanQuery.cs:350-424) over members
+    * tagged m/s/n, in clause order. */
+  private[search] final case class BoolNode(nMust: Int, nShould: Int,
+      msm: Int, members: Seq[(Char, Fold)]) extends Fold
+
+  /** DisjunctionMaxQuery: the max of the matching members plus tie × the
+    * rest. */
+  private[search] final case class MaxNode(tie: Double, members: Seq[Fold])
+      extends Fold
+
+  /** One query's key in [[foldTrees]]: query `qi` of the fold, one doc. */
+  private final case class DocKey(qi: Int, docid: Long)
+
+  /** One walk of a tree over a doc's (slot, score) rows sorted by slot
+    * (a doc has each slot at most once): leaves are visited in slot
+    * order, so a cursor finds each leaf's row. `apply` tells whether a
+    * node matches and leaves its score in `score`; a node adds its
+    * members' scores in clause order, from 0.0 — a boolean its musts and
+    * its shoulds apart, then their sum times coord. */
+  private final class Eval(sim: Similarity,
+      rows: collection.IndexedSeq[(Int, Double)]) {
+    private var at = 0
+    var score = 0.0
+
+    def apply(f: Fold): Boolean = f match {
+      case Leaf(slot) =>
+        val hit = at < rows.size && rows(at)._1 == slot
+        if (hit) { score = rows(at)._2; at += 1 }
+        hit
+      case BoolNode(nMust, nShould, msm, members) =>
+        var (m, s, n, sm, ss) = (0, 0, 0, 0.0, 0.0)
+        members.foreach { case (occur, c) =>
+          if (apply(c)) occur match {
+            case 'm' => m += 1; sm += score
+            case 's' => s += 1; ss += score
+            case _ => n += 1
+          }
+        }
+        score = (sm + ss) * sim.coordD(m + s, nMust + nShould)
+        n == 0 && (if (nMust > 0) m == nMust && (nShould == 0 || s >= msm)
+          else s >= math.max(1, msm))
+      case MaxNode(tie, members) =>
+        var (n, mx, sm) = (0, 0.0, 0.0)
+        members.foreach { c =>
+          if (apply(c)) {
+            if (n == 0 || score > mx) mx = score
+            sm += score
+            n += 1
+          }
+        }
+        score = mx + tie * (sm - mx)
+        n > 0
+    }
+  }
+
+  /** The fold of `trees` (qid, tree), one per query, over rows (docid,
+    * term, qi, slot, score): a row with a term is that term's score,
+    * scaled by the boost of every (qi, slot, boost) leaf `byTerm` lists
+    * for it; a row without one is query `qi`'s leaf `slot`. Returns
+    * (qid, docid, score) for every query a doc satisfies. */
+  private[search] def foldTrees(rows: DataFrame, est: Long, sim: Similarity,
+      trees: Array[(String, Fold)],
+      byTerm: Map[String, Array[(Int, Int, Double)]]): DataFrame =
+    perDoc[DocKey, ArrayBuffer[(Int, Double)], (String, Long, Double)](rows,
+        est, TreeEnc)(() => ArrayBuffer.empty) { (r, hits) =>
+      val docid = r.getLong(0)
+      if (r.isNullAt(1))
+        hits(DocKey(r.getInt(2), docid)) += ((r.getInt(3), r.getDouble(4)))
+      else byTerm(r.getString(1)).foreach { case (qi, slot, b) =>
+        hits(DocKey(qi, docid)) += ((slot, r.getDouble(4) * b))
+      }
+    } { (k, hits) =>
+      val (qid, tree) = trees(k.qi)
+      val e = new Eval(sim, hits.sortBy(_._1))
+      Option.when(e(tree))((qid, k.docid, e.score))
+    }.toDF("qid", "docid", "score")
+
+  /** One doc's positions of each distinct phrase term, and its length. */
+  private final class PhraseDoc(terms: Int) {
+    val pos = new Array[Array[Int]](terms)
+    var len = 0L
+  }
+
+  /** A phrase's fold over (docid, term, positions, len) rows of its
+    * distinct `terms`; slot k is (term indices, offset from slot 0), its
+    * positions the sorted union of its terms'. A doc with a term in every
+    * slot and freq > 0 ([[phraseFreq]]) scores idfSum × tfNorm(freq, len). */
+  private[search] def foldPhrase(rows: DataFrame, est: Long,
+      terms: Seq[String], slots: Array[(Array[Int], Int)], slop: Int,
+      sim: Similarity, idfSum: Double, avgdl: Double): DataFrame = {
+    val termOf = terms.zipWithIndex.toMap
+    perDoc[java.lang.Long, PhraseDoc, (Long, Double)](rows, est, ScoreEnc)(
+        () => new PhraseDoc(terms.size)) { (r, docs) =>
+      val doc = docs(r.getLong(0))
+      doc.pos(termOf(r.getString(1))) = r.getSeq[Int](2).toArray
+      doc.len = r.getLong(3)
+    } { (docid, doc) =>
+      val pos = slots.map { case (ts, off) =>
+        (ts.flatMap(t => Option(doc.pos(t))).flatten.distinct.sorted, off) }
+      Option.when(pos.forall(_._1.nonEmpty))(phraseFreq(pos, slop))
+        .filter(_ > 0)
+        .map(f => (docid, idfSum * sim.tfNormD(f, doc.len, avgdl)))
+    }.toDF("docid", "score")
+  }
+
+  /** A doc's phrase freq from each slot's (ascending positions, offset
+    * from slot 0): Σ over slot 0's positions p of 1/(d + 1), where d sums
+    * each other slot's least displacement |j − p − offset| and counts
+    * only when every slot has one within `slop` and d ≤ slop. Exact
+    * (slop 0), that is the count of aligned starts; sloppy, it is
+    * DefaultSimilarity's SloppyFreq (DefaultSimilarity.cs:69) over N
+    * terms. Each slot matches its term's positions on its own, so a
+    * repeated term may reuse one occurrence — a documented
+    * simplification of SloppyPhraseScorer.cs:26-120 repeat handling. */
+  private[search] def phraseFreq(slots: Array[(Array[Int], Int)],
+      slop: Int): Double =
+    slots(0)._1.foldLeft(0.0) { (freq, p) =>
+      slots.iterator.drop(1).map { case (pos, off) =>
+        val i = java.util.Arrays.binarySearch(pos, p + off)
+        val j = if (i >= 0) i else -i - 1
+        Seq(j - 1, j).filter(pos.indices.contains)
+          .map(x => math.abs(pos(x) - p - off)).minOption.filter(_ <= slop)
+      }.foldLeft(Option(0.0))((d, x) => d.zip(x).map { case (a, b) => a + b })
+        .filter(_ <= slop).fold(freq)(d => freq + 1.0 / (d + 1.0))
+    }
+
+  /** Each doc's sum of its (docid, ord, score) rows from 0.0 in ord
+    * order: Spark's string order ([[InvertedIndex.Utf8Order]]), as
+    * `sort_array` orders a string. */
+  private[search] def ordSum(rows: DataFrame, est: Long): DataFrame =
+    perDoc[java.lang.Long, ArrayBuffer[(String, Double)], (Long, Double)](
+        rows, est, ScoreEnc)(() => ArrayBuffer.empty) { (r, docs) =>
+      docs(r.getLong(0)) += ((r.getString(1), r.getDouble(2)))
+    } { (docid, xs) =>
+      Some((docid, xs.sortBy(_._1)(InvertedIndex.Utf8Order)
+        .foldLeft(0.0)(_ + _._2)))
+    }.toDF("docid", "score")
+
+  private lazy val ScoreEnc =
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
+
+  private lazy val TreeEnc = Encoders.tuple(Encoders.STRING,
+    Encoders.scalaLong, Encoders.scalaDouble)
+
+  /** A multi-term query's matches as a walk of the resident dictionary:
+    * a prefix, a prefix and a regex, or a range. */
+  private[search] type Local = InvertedIndex.Dictionary => Iterator[(String, Long)]
+
+  /** The dictionary terms that start with a literal prefix and, when a
+    * regex is given, match it as a whole (java.util.regex, the engine
+    * `rlike` uses): a contiguous range of the sorted terms. */
+  private[search] def matching(prefix: String, rx: Option[String]): Local =
+    d => {
+      val m = rx.map(java.util.regex.Pattern.compile(_).matcher(""))
+      d.withPrefix(prefix).filter { case (t, _) => m.forall(_.reset(t).find(0)) }
+    }
 
   /** `m(key)` as a column of type `dt`: a hash lookup in the task
     * closure. A Java UDF with its type given, so building one derives
@@ -1527,36 +1473,18 @@ object Searcher {
       DoubleType)
       .asNondeterministic().apply()
 
-  /** A [[Node]] (whose groups are never empty) as a struct literal
-    * built from column literals — no reflection per call, unlike
-    * `typedLit`. */
-  private[search] def nodeLit(n: Node): Column = {
-    val groups = n.groups.map(g => struct(lit(g.gid).as("gid"),
-      lit(g.occur).as("occur"), lit(g.nMust).as("nMust"),
-      lit(g.nShould).as("nShould"), lit(g.msm).as("msm")))
-    struct(lit(n.nMust).as("nMust"), lit(n.nShould).as("nShould"),
-      lit(n.msm).as("msm"), array(groups: _*).as("groups"))
-  }
-
-  private[search] lazy val NodeType: StructType = Encoders.product[Node].schema
-
-  /** Type of a term's clause rows in `perClause`. */
-  private[search] lazy val ClauseRowsType: DataType = ArrayType(
-    Encoders.product[(String, Int, Int, String, Double)].schema)
-
   private[search] lazy val TermDfEnc = Encoders.product[(String, Long)]
 
-  /** A whole-term regex as (dictionary predicate, (literal prefix,
-    * regex)): the prefix is a startsWith pre-filter — a range on a
-    * term-sorted dictionary — and the regex is anchored, as
-    * RegexTermEnum matches whole terms. */
-  private[search] def regexMatch(pat: String)
-      : (Column, (String, Option[String])) = {
+  /** A whole-term regex as (dictionary predicate, dictionary walk): the
+    * literal prefix is a startsWith pre-filter — a range on a term-sorted
+    * dictionary — and the regex is anchored, as RegexTermEnum matches
+    * whole terms. */
+  private[search] def regexMatch(pat: String): (Column, Local) = {
     val rx = "^(?:" + pat + ")$"
     val pfx = regexLiteralPrefix(pat)
     val pred = col("term").rlike(rx)
     (if (pfx.nonEmpty) col("term").startsWith(pfx) && pred else pred,
-      (pfx, Some(rx)))
+      matching(pfx, Some(rx)))
   }
 
   /** Sort columns for a SortField spec + the mandatory docid tie-break. */

@@ -25,8 +25,11 @@ import org.apache.spark.sql.functions._
   *     the exact integer length, not the SmallFloat byte (the codec
   *     itself lives in [[graft.index.SmallFloat]]; same exact-length
   *     decision as BM25, SURVEY §1.1).
+  *
+  * Serializable: the Searcher's per-doc folds run the scalar twins
+  * ([[tfNormD]], [[coordD]]) in tasks.
   */
-trait Similarity {
+trait Similarity extends Serializable {
 
   /** Per-term inverse document frequency (driver-side, for weights
     * folded into literals). */
@@ -48,13 +51,12 @@ trait Similarity {
   /** Boolean overlap multiplier (DefaultSimilarity.Coord:81). Identity
     * under BM25 — kept OUT of the plan entirely then, so the default
     * strategy's physical plans are byte-identical to the pre-strategy
-    * engine. `maxOverlap` is a column: a node's clause count is data in
-    * the clause-array fold; pass `lit(n)` where it is known at plan time. */
-  def applyCoord(score: Column, overlap: Column, maxOverlap: Column): Column
+    * engine. */
+  def applyCoord(score: Column, overlap: Column, maxOverlap: Int): Column
 
-  /** Scalar twin of [[tfNorm]] for driver-side evaluators (the
-    * MemoryIndex single-doc scorer) — MUST mirror the column form's
-    * operand order exactly. */
+  /** Scalar twin of [[tfNorm]] for the plain-Scala evaluators (the
+    * MemoryIndex single-doc scorer, the Searcher's per-doc folds) — MUST
+    * mirror the column form's operand order exactly. */
   def tfNormD(tf: Double, len: Long, avgdl: Double): Double
 
   /** Scalar twin of [[applyCoord]] (same evaluators). */
@@ -67,7 +69,7 @@ object Bm25Sim extends Similarity {
   def idfCol(numDocs: Long, df: Column): Column = Bm25.idfCol(numDocs, df)
   def tfNorm(tf: Column, len: Column, avgdl: Double): Column =
     Bm25.tfNorm(tf, len, avgdl)
-  def applyCoord(score: Column, overlap: Column, maxOverlap: Column): Column =
+  def applyCoord(score: Column, overlap: Column, maxOverlap: Int): Column =
     score
   def tfNormD(tf: Double, len: Long, avgdl: Double): Double =
     (tf * (Bm25.K1 + 1)) /
@@ -88,8 +90,8 @@ object ClassicSim extends Similarity {
     * collection-independent). */
   def tfNorm(tf: Column, len: Column, avgdl: Double): Column =
     sqrt(tf) * (lit(1.0) / sqrt(len))
-  def applyCoord(score: Column, overlap: Column, maxOverlap: Column): Column =
-    score * (overlap.cast("double") / maxOverlap.cast("double"))
+  def applyCoord(score: Column, overlap: Column, maxOverlap: Int): Column =
+    score * (overlap.cast("double") / lit(maxOverlap.toDouble))
   def tfNormD(tf: Double, len: Long, avgdl: Double): Double =
     math.sqrt(tf) * (1.0 / math.sqrt(len.toDouble))
   def coordD(overlap: Int, maxOverlap: Int): Double =

@@ -11,8 +11,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
+  ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   Exchange}
 import org.apache.spark.sql.functions.{col, date_format}
@@ -27,8 +30,9 @@ import graft.model.Transcripts
   * scores with comes from the index's resident dictionary
   * ([[Searcher.dfOf]]), deletes are a lookup in its resident delete set,
   * a small point query folds in one task, and per-query numbers are plan
-  * parameters: a point query is one job with no exchange, reads no
-  * dictionary table, and a same-shape query compiles no new class. */
+  * parameters: a point query is one job with no exchange, aggregate or
+  * adaptive wrapper, reads no dictionary table, and a same-shape query
+  * compiles no new class. */
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkFixture.spark
 
@@ -337,11 +341,11 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       hot(rnd.nextInt(hot.length)) -> 1), rnd.nextInt(3))
     def role(): Query =
       KeywordQ("role", Seq("user", "assistant", "tool")(rnd.nextInt(3)))
-    // shapes whose clause-array fold adds clause scores in the same
+    // shapes whose tree fold adds clause scores in the same
     // order as explain's compositional sum (musts, then shoulds; at most
     // one should beside a must; a nested boolean first in its node), so
     // equality is exact. Every shape after the third mixes term clauses
-    // with clauses that are their own frames in the clause array.
+    // with clauses that are their own frames in the tree fold.
     val shapes: Seq[() => Query] = Seq(
       () => term(),
       () => BoolQ(should = Seq.fill(2 + rnd.nextInt(3))(term())),
@@ -401,7 +405,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a boolean of two terms and a two-term phrase reads the blocks three times") {
+  test("a boolean of two terms and a phrase reads the blocks twice") {
     val s = new Searcher(idx)
     def blockReads(q: Query): Int =
       collect(s.topK(q, 10).queryExecution.executedPlan) {
@@ -411,8 +415,124 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // one read of the block table is one scan per segment
     val perRead = blockReads(TermQ("error"))
     assert(perRead == 3)
-    // both terms in one scan, then one read per phrase slot
+    // both terms in one scan, then one read for the phrase's terms
     assert(blockReads(BoolQ(should = Seq(TermQ("error"), TermQ("deploy"),
-      PhraseQ(Seq("spark" -> 0, "table" -> 1))))) == 3 * perRead)
+      PhraseQ(Seq("spark" -> 0, "table" -> 1))))) == 2 * perRead)
+    // a repeated phrase term is read once
+    assert(blockReads(PhraseQ(Seq("spark" -> 0, "table" -> 1,
+      "spark" -> 2))) == perRead)
+  }
+
+  test("no single-task point query plans an object aggregate or AQE") {
+    idx.dictionary
+    pointQueries.foreach { q =>
+      val (_, plans) = record(new Searcher(idx).topK(q, 10).collect())
+      assert(plans.nonEmpty, s"$q")
+      plans.foreach { p =>
+        assert(!p.exists(n => n.isInstanceOf[AdaptiveSparkPlanExec] ||
+          n.isInstanceOf[ObjectHashAggregateExec]), s"$q\n$p")
+      }
+    }
+  }
+
+  test("ClassicSim coord below 1 equals explain exactly") {
+    val s = new Searcher(idx, ClassicSim)
+    val rnd = new Random(7)
+    val words = Seq("error", "warning", "query", "table", "spark", "index",
+      "merge", "batch", "deploy") ++ Transcripts.vocabulary.slice(40, 60)
+    def term(): Query = {
+      val t = TermQ(words(rnd.nextInt(words.size)))
+      if (rnd.nextBoolean()) t else BoostQ(t, 0.5 + rnd.nextInt(4))
+    }
+    // overlap / maxOverlap stays >= 1/2, so explain's correction part
+    // (coorded - raw) is exact (Sterbenz) and raw + it rounds to coorded
+    val shapes: Seq[() => Query] = Seq(
+      () => BoolQ(should = Seq(term(), term())),
+      () => BoolQ(should = Seq(term(), term(), term()), minShouldMatch = 2),
+      () => BoolQ(must = Seq(term()), should = Seq(term())))
+    var coorded = 0
+    (0 until 12).foreach { i =>
+      val q = shapes(i % shapes.size)()
+      val ex = s.explain(q).collect().map(r => r.getLong(0) -> (r.getDouble(2),
+        r.getSeq[Row](1).exists(_.getString(0).startsWith("coord(")))).toMap
+      s.topK(q, 10).collect().foreach { r =>
+        val (value, coord) = ex(r.getLong(0))
+        assert(value == r.getDouble(1), s"$q doc ${r.getLong(0)}")
+        if (coord) coorded += 1
+      }
+    }
+    assert(coorded > 10)
+  }
+
+  test("above the single-task rows the partitioned fold equals one task") {
+    val s = new Searcher(idx)
+    val sloppy = phraseOf(12, 3, slop = 2)
+    val queries = Seq(
+      BoolQ(must = Seq(BoolQ(should = Seq(
+          BoolQ(should = Seq(TermQ("error"), TermQ("deploy"))),
+          phraseOf(10, 2, slop = 1)))),
+        should = Seq(TermQ("spark"))),
+      DisMaxQ(Seq(TermQ("error"), phraseOf(11, 2, slop = 1),
+        BoolQ(must = Seq(TermQ("spark")), should = Seq(TermQ("deploy"))),
+        KeywordQ("role", "tool")), 0.25),
+      sloppy)
+    // must-not clauses that match nothing, each estimated at numDocs
+    // rows: they lift the estimate past the limit and leave the score
+    // bits alone (a lone must is 0.0 + score, times a coord of 1)
+    val pads = Seq.fill((Searcher.SingleTaskRows / idx.numDocs + 1).toInt)(
+      KeywordQ("role", "nobody"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    queries.foreach { q =>
+      val one = s.score(q)
+      val wide = s.score(BoolQ(must = Seq(q), mustNot = pads))
+      assert(exchanges(Seq(one.queryExecution.executedPlan)).isEmpty, s"$q")
+      assert(exchanges(Seq(wide.queryExecution.executedPlan)).nonEmpty, s"$q")
+      val want = rows(one)
+      assert(want.nonEmpty && rows(wide) == want, s"$q")
+    }
+    // the phrase fold itself, one task against partitioned by docid
+    val terms = sloppy.terms.map(_._1).distinct
+    def phrase(est: Long) = rows(Searcher.foldPhrase(
+      idx.postingsFor(terms)
+        .select(col("docid"), col("term"), col("positions"), col("len")),
+      est, terms, sloppy.terms.map { case (t, off) =>
+        (Array(terms.indexOf(t)), off - sloppy.terms.head._2) }.toArray,
+      sloppy.slop, Bm25Sim, 1.5, idx.avgdl))
+    val want = phrase(0)
+    assert(want.nonEmpty && phrase(Long.MaxValue) == want)
+  }
+
+  test("the resident dictionary keeps Spark's string order") {
+    import spark.implicits._
+    // U+FFFD sorts before a supplementary character in UTF-8, after its
+    // surrogates in UTF-16
+    val terms = Seq("a", "\uFFFD", "\uD83D\uDE00", "\uFF21b", "ab", "\u00E9")
+    val d = graft.index.InvertedIndex.Dictionary(terms.map(_ -> 1L).toArray)
+    val sorted = terms.toDF("t").orderBy("t").as[String].collect().toSeq
+    assert(d.withPrefix("").map(_._1).toSeq == sorted)
+    assert(d.range(Some("\uFFFD"), None, false, true).map(_._1).toSeq ==
+      Seq("\uD83D\uDE00"))
+  }
+
+  test("an uncollated term range runs one job, as the dictionary scan answers") {
+    idx.dictionary
+    def top(s: Searcher, q: Query) =
+      s.topK(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val scan = idx.copy(residentRows = 0)
+    val hits = Seq(
+      TermRangeQ(Some("de"), Some("dz"), true, true, AutoRewrite, None),
+      TermRangeQ(Some("deploy"), Some("dog"), false, false, ScoringBoolean,
+        None),
+      TermRangeQ(Some("sp"), Some("sq"), true, true, ConstantScore, None),
+      TermRangeQ(None, Some("ab"), true, false, AutoRewrite, None)).map { q =>
+      val s = new Searcher(idx)
+      var got = Seq.empty[(Long, Double)]
+      val (jobs, _) = record { got = top(s, q) }
+      assert(jobs == 1, s"$q")
+      assert(got == top(new Searcher(scan), q), s"$q")
+      got.size
+    }
+    assert(hits.take(3).forall(_ > 0), s"$hits")
   }
 }

@@ -79,7 +79,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("coord reaches the compositional (non-flattenable) boolean path too") {
     val (idx, _) = fixture
-    // a phrase clause is its own frame in the boolean clause array
+    // a phrase clause is its own frame in the boolean tree fold
     val toks = fixture._2.flatMap { case (_, ts) => ts.zip(ts.drop(1)) }
       .filter(p => p._1 != p._2)
     val (a, b) = toks.groupBy(identity).maxBy(_._2.size)._1
