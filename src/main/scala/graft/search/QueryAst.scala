@@ -162,10 +162,10 @@ final case class SNear(clauses: Seq[Span], slop: Int,
 final case class SFirst(s: Span, end: Int) extends Span
 /** SpanNotQuery.cs:31 — include spans overlapping no exclude span. */
 final case class SNot(include: Span, exclude: Span) extends Span
-/** SpanOrQuery.cs:32 as a NESTABLE node (the flat [[SpanOrQ]] keeps the
-  * single-scan fast path for the top-level all-term case): the union of
-  * the clause span sets. A doc matches if ANY clause matches, so clause
-  * leaves join optionally (left), never gating the doc set. */
+/** SpanOrQuery.cs:32 as a NESTABLE node: the union of the clause span
+  * sets, reduced like any [[SpanQ]]'s spans (the flat [[SpanOrQ]] sums
+  * tf instead). A doc matches if ANY clause matches, so none of the
+  * clause leaves gates the doc set. */
 final case class SOr(clauses: Seq[Span]) extends Span
 /** contrib Regex/SpanRegexQuery.cs:33 — a regex multi-term span leaf.
   * The reference rewrites RegexQuery's SCORING_BOOLEAN expansion into a
@@ -195,8 +195,9 @@ object Spans {
     case SOr(cs) => cs.flatMap(leaves)
     case SRegex(_) => Nil // expanded to SOr(STerm*) before leaf collection
   }
-  /** Leaves on the REQUIRED side only (SNot excludes join optionally;
-    * SOr clauses match any-of, so none of their leaves is required —
+  /** Leaves on the REQUIRED side only (an SNot's exclude side never
+    * gates a doc; SOr clauses match any-of, so none of their leaves is
+    * required —
     * this also keeps minW identical between the engine's expanded tree
     * and the oracle's static one). */
   def requiredLeaves(s: Span): Seq[SLeaf] = s match {

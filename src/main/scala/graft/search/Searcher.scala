@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
   Row}
-import org.apache.spark.sql.api.java.{UDF0, UDF1}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,9 +17,10 @@ import graft.index.InvertedIndex
   * The reference scores a document at a time in compiled scorers
   * (BooleanScorer2, BooleanQuery.cs:350-424; DisjunctionMaxQuery as a
   * second fold over the same sub-scorers; the exact and sloppy
-  * PhraseScorers walking position iterators). Here each of them is one
-  * typed per-doc fold ([[Searcher.perDoc]]): a `mapPartitions` that
-  * gathers each doc's rows in a hash map and folds them in plain Scala.
+  * PhraseScorers, SpanScorer and the payload scorers walking position
+  * iterators). Here each of them is one typed per-doc fold
+  * ([[Searcher.perDoc]]): a `mapPartitions` that gathers each doc's rows
+  * in a hash map and folds them in plain Scala.
   *  - Boolean and DisMax trees ([[Searcher.Fold]]): every (boosted) term
   *    leaf, at any depth, is read by one [[termScores]] scan, and every
   *    other leaf is its own [[score]] frame. Leaves are slots numbered in
@@ -27,8 +28,12 @@ import graft.index.InvertedIndex
   *    the boolean algebra (must/should/not counts, minShouldMatch, coord)
   *    or the DisMax one (max + tie·(sum − max)), nested nodes
   *    recursively. [[topKBatch]] folds many queries' trees over one scan.
-  *  - A phrase reads the block table once for its distinct terms and
-  *    matches its slots' positions in the fold.
+  *  - A phrase, span or payload query ([[positions]]) reads the block
+  *    table once for its distinct terms (decoding payloads only for the
+  *    payload family), and scores each doc's view — its positions per
+  *    leaf and its length — with a scalar function: the phrase freq, the
+  *    flat span freqs, the span algebra's (start, end) intervals, the
+  *    payload functions. No position query joins posting frames.
   *  - An ordered sum (the scoring multi-term rewrites, the fuzzy queries)
   *    adds a doc's term scores in Spark's string order.
   * Scoring is a pluggable [[Similarity]] strategy (Similarity.cs:398-503):
@@ -38,8 +43,9 @@ import graft.index.InvertedIndex
   *
   * Determinism: every fold adds in a fixed order — a boolean's musts,
   * then its shoulds, each in clause order; a sloppy phrase over its first
-  * slot's positions; an ordered sum by term — whatever the partition
-  * layout, so scores are bit-stable run to run (SURVEY §7 hard-part #1).
+  * slot's positions; a span query over its starts, ascending; an ordered
+  * sum by term — whatever the partition layout, so scores are bit-stable
+  * run to run (SURVEY §7 hard-part #1).
   *
   * Per-query fixed cost: a point query ([[topK]] of a term, boolean,
   * phrase, prefix or keyword-and-term query) is one Spark job with no
@@ -48,13 +54,11 @@ import graft.index.InvertedIndex
   * dictionary or delete-set job); a fold that reads at most
   * [[Searcher.SingleTaskRows]] estimated rows runs in one task
   * ([[Searcher.oneTask]]), so its plan has no aggregate, exchange or
-  * adaptive wrapper; and per-query numbers (df, idf sums) reach the
-  * generated code as lookups and parameters, not literals, so a
+  * adaptive wrapper; and per-query numbers reach the plan as lookups
+  * (df) or inside a fold's closure (idf sums), never as literals, so a
   * same-shape query compiles nothing new.
   */
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
-  import Searcher.param
-
   /** Per-(term, docid) BM25 partial scores for a set of query terms.
     * df is resolved on the driver by [[dfOf]] (the TermInfosReader
     * lookup, SURVEY §4.2) and enters the plan through [[dfCol]], so the
@@ -156,9 +160,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     case _: BoolQ | _: DisMaxQ =>
       foldTrees(Seq("" -> q), parallel = false).select("docid", "score")
 
-    case PhraseQ(ts, slop) =>
-      require(ts.nonEmpty, "empty phrase")
-      phrase(ts.map { case (t, off) => (Seq(t), off) }, slop)
+    case _: PhraseQ | _: MultiPhraseQ | _: SpanFirstQ | _: SpanNearQ |
+        _: SpanNotQ | _: SpanOrQ | _: SpanQ | _: PayloadTermQ |
+        _: PayloadNearQ | _: PayloadSpanNearQ =>
+      positions(q)
 
     case PrefixQ(p, rw) =>
       multiTerm(col("term").startsWith(p), rw, Some(_.withPrefix(p)))
@@ -180,167 +185,6 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         .join(idx.docs.select(col("docid"),
           expr(e).cast("double").as("__cs")), Seq("docid"))
         .select(col("docid"), (col("score") * col("__cs")).as("score"))
-
-    case PayloadTermQ(t, fn, includeSpan) =>
-      // PayloadTermQuery.cs:26-40 — one payload-materializing postings
-      // scan; payloads reduce per doc IN STORED (position) ORDER, so the
-      // float fold is deterministic
-      val payD = col("payloads").cast("array<double>")
-      val payScore = fn match {
-        case PayAvg =>
-          aggregate(payD, lit(0.0), (a, x) => a + x) /
-            size(col("payloads")).cast("double")
-        case PayMin => array_min(payD)
-        case PayMax => array_max(payD)
-      }
-      val base =
-        if (includeSpan)
-          sim.score(idx.numDocs, idx.avgdl, dfCol(dfOf(Set(t))), col("tf"),
-            col("len"))
-        else lit(1.0)
-      idx.postingsForPay(Seq(t))
-        .select(col("docid"), (base * payScore).as("score"))
-
-    case PayloadNearQ(a, b, slop, fn, includeSpan) =>
-      // PayloadNearQuery.cs:52 — ordered 2-term span-near (SpanNearQ
-      // min-gap semantics), payloads of BOTH span ends collected per
-      // matched span in posA order (deterministic fold)
-      val dfs = dfOf(Set(a, b))
-      val sumIdf = Seq(a, b)
-        .map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
-      val pa = idx.postingsForPay(Seq(a))
-        .select(col("docid"), col("positions").as("posA"),
-          col("payloads").as("payA"), col("len"))
-      val pb = idx.postingsForPay(Seq(b))
-        .select(col("docid"), col("positions").as("posB"),
-          col("payloads").as("payB"))
-      val mapB = map_from_arrays(col("posB"), col("payB"))
-      def qual(p: Column): Column =
-        filter(col("posB"), q => q > p && (q - p - 1) <= slop)
-      val spans = filter(
-        zip_with(col("posA"), col("payA"), (p, w) =>
-          struct(p.as("p"), array_min(qual(p)).as("q"), w.as("w"))),
-        s => s.getField("q").isNotNull)
-      val tfp = aggregate(col("spans"), lit(0.0), (acc, s) =>
-        acc + lit(1.0) /
-          (s.getField("q") - s.getField("p")).cast("double"))
-      val pays = flatten(transform(col("spans"), s =>
-        array(s.getField("w").cast("double"),
-          element_at(mapB, s.getField("q")).cast("double"))))
-      val payScore = fn match {
-        case PayAvg =>
-          aggregate(col("pays"), lit(0.0), (acc, x) => acc + x) /
-            size(col("pays")).cast("double")
-        case PayMin => array_min(col("pays"))
-        case PayMax => array_max(col("pays"))
-      }
-      val base =
-        if (includeSpan)
-          param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl)
-        else lit(1.0)
-      pa.join(pb, Seq("docid"))
-        .withColumn("spans", spans)
-        .withColumn("tfp", tfp)
-        .withColumn("pays", pays)
-        .filter(col("tfp") > 0)
-        .select(col("docid"), (base * payScore).as("score"))
-
-    case PayloadSpanNearQ(ts, slop, fn, includeSpan, inOrder) =>
-      require(ts.size >= 2, "payload span-near needs >= 2 clauses")
-      val n = ts.size
-      val dfs = dfOf(ts.toSet)
-      if (!ts.forall(dfs.contains))
-        return idx.docs.select(col("docid"), lit(1.0).as("score"))
-          .filter(lit(false))
-      val sumIdf = ts.map(t => sim.idf(idx.numDocs, dfs(t))).sum
-      // one payload-postings frame per clause (duplicate terms get their
-      // own aliased columns); the first carries len
-      val joined = ts.zipWithIndex.map { case (t, i) =>
-        val base = idx.postingsForPay(Seq(t))
-          .select(col("docid"), col("positions").as(s"pos$i"),
-            col("payloads").as(s"pay$i"), col("len"))
-        if (i == 0) base else base.drop("len")
-      }.reduce((a, b) => a.join(b, Seq("docid")))
-      // ordered: min-chain per first-clause occurrence, struct(ok, last,
-      // ms); unordered: every qualifying combination's envelope,
-      // struct(lo, hi, ms) — in both, `ms` holds one member position per
-      // clause in clause order and (hi|last) − (lo|ms[1]) is the width
-      val chains =
-        if (inOrder) {
-          // TOTAL-gap constraint across the chain (NearSpansOrdered
-          // semantics — the struct's g accumulates Σ gaps); greedy min
-          // next-occurrence stays exact: the smallest qualifying
-          // position minimizes both this gap and every later one
-          val chained = (1 until n).foldLeft(
-            transform(col("pos0"), p =>
-              struct(lit(true).as("ok"), p.as("lo"), p.as("hi"),
-                array(p).as("ms"), lit(0).as("g")))) {
-            (acc, k) =>
-              transform(acc, c => {
-                val q = array_min(filter(col(s"pos$k"), x =>
-                  x > c.getField("hi") &&
-                    c.getField("g") + (x - c.getField("hi") - 1) <= slop))
-                struct((c.getField("ok") && q.isNotNull).as("ok"),
-                  c.getField("lo").as("lo"),
-                  coalesce(q, lit(Int.MaxValue)).as("hi"),
-                  when(q.isNotNull,
-                    concat(c.getField("ms"), array(q)))
-                    .otherwise(c.getField("ms")).as("ms"),
-                  when(q.isNotNull,
-                    c.getField("g") + q - c.getField("hi") - 1)
-                    .otherwise(c.getField("g")).as("g"))
-              })
-          }
-          filter(chained, c => c.getField("ok"))
-        } else {
-          val combined = (1 until n).foldLeft(
-            transform(col("pos0"), p =>
-              struct(lit(true).as("ok"), p.as("lo"), p.as("hi"),
-                array(p).as("ms")))) {
-            (acc, k) =>
-              flatten(transform(acc, c =>
-                transform(col(s"pos$k"), x => struct(
-                  lit(true).as("ok"),
-                  least(c.getField("lo"), x).as("lo"),
-                  greatest(c.getField("hi"), x).as("hi"),
-                  concat(c.getField("ms"), array(x)).as("ms")))))
-          }
-          filter(combined, c =>
-            c.getField("hi") - c.getField("lo") + lit(1) - lit(n) <= slop)
-        }
-      // sloppy freq per chain/combination over total width (for ordered
-      // N=2: 1/(q-p), the PayloadNearQ formula). The distance is clamped
-      // at 0: duplicate query terms let an unordered combination reuse
-      // one occurrence for two clauses, making envelope − (n−1) negative
-      // — unclamped that is a zero/negative denominator (Infinity or
-      // negative scores). Ordered chains are strictly increasing and
-      // never need the clamp.
-      val tfp = aggregate(chains, lit(0.0), (acc, c) =>
-        acc + lit(1.0) / (lit(1.0) +
-          greatest(lit(0.0), (c.getField("hi") - c.getField("lo") -
-            lit(n - 1)).cast("double"))))
-      // payloads of every chain member, via per-clause pos→pay maps
-      val pays = flatten(transform(chains, c =>
-        array((0 until n).map { k =>
-          element_at(map_from_arrays(col(s"pos$k"), col(s"pay$k")),
-            element_at(c.getField("ms"), k + 1)).cast("double")
-        }: _*)))
-      val payScore = fn match {
-        case PayAvg =>
-          aggregate(col("pays"), lit(0.0), (acc, x) => acc + x) /
-            size(col("pays")).cast("double")
-        case PayMin => array_min(col("pays"))
-        case PayMax => array_max(col("pays"))
-      }
-      val base =
-        if (includeSpan)
-          param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl)
-        else lit(1.0)
-      joined
-        .withColumn("tfp", tfp)
-        .withColumn("pays", pays)
-        .filter(col("tfp") > 0)
-        .select(col("docid"), (base * payScore).as("score"))
 
     case WildcardQ(pat, rw) =>
       // constant-prefix pushdown (WildcardTermEnum.cs:32: the enum seeks
@@ -530,94 +374,6 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
           when(col("__ctx").isNotNull, col("score") * demote)
             .otherwise(col("score")).as("score"))
 
-    case SpanFirstQ(t, end) =>
-      val idf = sim.idf(idx.numDocs, dfOf(Set(t)).getOrElse(t, 0L))
-      idx.postingsFor(Seq(t))
-        .withColumn("tfp",
-          size(filter(col("positions"), p => p < end)).cast("double"))
-        .filter(col("tfp") > 0)
-        .select(col("docid"),
-          (param(idf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
-            .as("score"))
-
-    case SpanNearQ(a, b, slop, inOrder) =>
-      val dfs = dfOf(Set(a, b))
-      val sumIdf = Seq(a, b)
-        .map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
-      val pa = idx.postingsFor(Seq(a))
-        .select(col("docid"), col("positions").as("posA"), col("len"))
-      val pb = idx.postingsFor(Seq(b))
-        .select(col("docid"), col("positions").as("posB"))
-      // per occurrence of a: min gap to a qualifying b; Σ 1/(1+gap)
-      val gaps: Column => Column = p =>
-        if (inOrder)
-          transform(
-            filter(col("posB"), q => q > p && (q - p - 1) <= slop),
-            q => q - p - 1)
-        else
-          transform(
-            filter(col("posB"),
-              q => q =!= p && (abs(q - p) - 1) <= slop),
-            q => abs(q - p) - 1)
-      val tfp = aggregate(col("posA"), lit(0.0), (acc, p) =>
-        acc + coalesce(
-          lit(1.0) / (array_min(gaps(p)).cast("double") + lit(1.0)),
-          lit(0.0)))
-      pa.join(pb, Seq("docid"))
-        .withColumn("tfp", tfp)
-        .filter(col("tfp") > 0)
-        .select(col("docid"),
-          (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
-            .as("score"))
-
-    case SpanNotQ(a, b, slop, exc) =>
-      val dfs = dfOf(Set(a, b))
-      val sumIdf = Seq(a, b)
-        .map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
-      val pa = idx.postingsFor(Seq(a))
-        .select(col("docid"), col("positions").as("posA"), col("len"))
-      val pb = idx.postingsFor(Seq(b))
-        .select(col("docid"), col("positions").as("posB"))
-      val pe = idx.postingsFor(Seq(exc))
-        .select(col("docid"), col("positions").as("posE"))
-      // qualifying b after p: ordered, gap<=slop, and no exclude
-      // occurrence inside the [p, q] span
-      val gaps: Column => Column = p =>
-        transform(
-          filter(col("posB"), q => q > p && (q - p - 1) <= slop &&
-            !coalesce(exists(col("posE"), e => e >= p && e <= q),
-              lit(false))),
-          q => q - p - 1)
-      val tfp = aggregate(col("posA"), lit(0.0), (acc, p) =>
-        acc + coalesce(
-          lit(1.0) / (array_min(gaps(p)).cast("double") + lit(1.0)),
-          lit(0.0)))
-      pa.join(pb, Seq("docid"))
-        .join(pe, Seq("docid"), "left")
-        .withColumn("tfp", tfp)
-        .filter(col("tfp") > 0)
-        .select(col("docid"),
-          (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
-            .as("score"))
-
-    case SpanOrQ(ts) =>
-      val dfs = dfOf(ts.toSet)
-      val sumIdf = ts.distinct
-        .map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
-      idx.postingsFor(ts)
-        .groupBy(col("docid"))
-        .agg(sum(col("tf")).cast("double").as("tfp"),
-          max(col("len")).as("len"))
-        .select(col("docid"),
-          (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
-            .as("score"))
-
-    case SpanQ(sp) => spanQuery(sp)
-
-    case MultiPhraseQ(slots) =>
-      require(slots.nonEmpty, "empty multi-phrase")
-      phrase(slots, 0)
-
     case MoreLikeThisQ(src, topN) => moreLikeThis(src, topN)
   }
 
@@ -745,35 +501,142 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     case _ => idx.numDocs
   }
 
+  /** The phrase, span and payload families (PhraseQuery.cs, SpanScorer.cs:28,
+    * NearSpansOrdered.cs:47, NearSpansUnordered.cs:32,
+    * PayloadNearQuery.cs:52), each a scalar function of one doc's view
+    * ([[Searcher.LeafDoc]]: its positions per leaf, payloads in a payload
+    * query, and its length) in one per-doc fold ([[positional]]). A doc
+    * whose freq is positive scores idfSum × tfNorm(freq, len), times the
+    * payload function in a payload query (or that alone, without
+    * includeSpanScore). The flat and payload queries sum idf over their
+    * clauses as given, a repeated term each time; `est` overrides the
+    * fold's estimated rows. */
+  private[search] def positions(q: Query, est: Option[Long] = None)
+      : DataFrame = {
+    import Spans.TermLeaf
+    def payWeighted(idf: Double, fn: PayloadFn, inc: Boolean) =
+      Searcher.payWeighted(sim, idf, idx.avgdl, fn, inc) _
+    q match {
+      case PhraseQ(ts, slop) =>
+        require(ts.nonEmpty, "empty phrase")
+        phrase(ts.map { case (t, off) => (Seq(t), off) }, slop, est)
+      case MultiPhraseQ(slots) =>
+        require(slots.nonEmpty, "empty multi-phrase")
+        phrase(slots, 0, est)
+      case SpanFirstQ(t, end) =>
+        positional(Seq(TermLeaf(t)), est)(weighted(idfOf(Seq(t)))(
+          _.pos(0).count(_ < end).toDouble))
+      case SpanNearQ(a, b, slop, inOrder) =>
+        positional(Seq(a, b).map(TermLeaf), est)(weighted(idfOf(Seq(a, b)))(
+          d => Searcher.nearFreq(d.pos(0), d.pos(1), slop, inOrder,
+            Array.emptyIntArray)))
+      case SpanNotQ(a, b, slop, exc) =>
+        positional(Seq(a, b, exc).map(TermLeaf), est)(
+          weighted(idfOf(Seq(a, b)))(d => Searcher.nearFreq(d.pos(0), d.pos(1), slop, true, d.pos(2))))
+      case SpanOrQ(ts) =>
+        // SpanOrQuery's freq: the summed tf of its distinct terms
+        positional(ts.distinct.map(TermLeaf), est)(weighted(idfOf(ts.distinct))(
+          _.pos.map(_.length.toLong).sum.toDouble))
+      case SpanQ(sp) => spanQuery(sp, est)
+      case PayloadTermQ(t, fn, inc) =>
+        // PayloadTermQuery.cs:26-40: the term's bm25 times fn of its
+        // payloads, in position order. Its idf is the plan's idfCol
+        // (StrictMath's log, which can differ from the driver's idf in
+        // the last bit), folded from a one-row local relation: no job.
+        val idf = idx.docs.sparkSession.createDataFrame(
+            Seq(Row(dfOf(Set(t)).getOrElse(t, 0L))).asJava,
+            StructType(Seq(StructField("df", LongType))))
+          .select(sim.idfCol(idx.numDocs, col("df"))).collect()(0).getDouble(0)
+        positional(Seq(TermLeaf(t)), est, pay = true)(
+          payWeighted(idf, fn, inc)(d =>
+            (d.pos(0).length.toDouble, d.pay(0).map(_.toDouble))))
+      case PayloadNearQ(a, b, slop, fn, inc) =>
+        // the ordered two-clause PayloadSpanNearQ
+        positional(Seq(a, b).map(TermLeaf), est, pay = true)(
+          payWeighted(idfOf(Seq(a, b)), fn, inc)(d =>
+            Searcher.payNear(d.pos, d.pay, slop, inOrder = true)))
+      case PayloadSpanNearQ(ts, slop, fn, inc, inOrder) =>
+        require(ts.size >= 2, "payload span-near needs >= 2 clauses")
+        positional(ts.map(TermLeaf), est, pay = true)(
+          payWeighted(idfOf(ts), fn, inc)(d =>
+            Searcher.payNear(d.pos, d.pay, slop, inOrder)))
+      case other => sys.error(s"not a position query: $other")
+    }
+  }
+
+  /** idfSum × tfNorm(freq, len) of each doc whose `freq` is positive. */
+  private def weighted(idfSum: Double) =
+    Searcher.weighted(sim, idfSum, idx.avgdl) _
+
+  /** Σ idf of `ts` in order; a term absent from the dictionary adds
+    * idf(df = 0). */
+  private def idfOf(ts: Seq[String]): Double = {
+    val dfs = dfOf(ts.toSet)
+    ts.map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
+  }
+
+  /** The per-doc fold of a position query over `leaves`: ONE read of the
+    * block table for their distinct terms (with payloads when `pay`),
+    * and, unioned in, a row at position 0 for each doc a mask leaf
+    * matches — its length from docLens when `maskLens`, as a doc matched
+    * through masks alone may hold none of the terms. Leaf i is index i of
+    * each doc's [[Searcher.LeafDoc]] (a term listed twice fills both);
+    * `score` gives a doc's score or none. The rows estimate is Σ df of
+    * the terms plus numDocs for each mask. */
+  private def positional(leaves: Seq[Spans.SLeaf], est: Option[Long],
+      pay: Boolean = false, maskLens: Boolean = false)(
+      score: Searcher.LeafDoc => Option[Double]): DataFrame = {
+    import Spans.{MaskLeaf, TermLeaf}
+    val terms = leaves.collect { case TermLeaf(t) => t }.distinct
+    val posts = (if (pay) idx.postingsForPay(terms) else idx.postingsFor(terms))
+      .select((Seq("docid", "term", "positions", "len") ++
+        Option.when(pay)("payloads")).map(col): _*)
+    val masks = leaves.zipWithIndex.collect { case (MaskLeaf(f, v), i) =>
+      val docs = idx.docs.filter(col(f) === v).select("docid")
+      (if (maskLens) docs.join(idx.docLens, Seq("docid"))
+        else docs.withColumn("len", lit(null).cast("long")))
+        .select(col("docid"), lit(null).cast("string").as("term"),
+          array(lit(0)).as("positions"), col("len"), lit(i).as("leaf"))
+    }
+    // a mask row has no term and carries its leaf; a payload query has no
+    // masks, so column 4 is either the leaf or the payloads
+    val leafOf = leaves.zipWithIndex.collect { case (TermLeaf(t), i) => t -> i }
+      .groupMap(_._1)(_._2).map { case (t, is) => t -> is.toArray }
+    val n = leaves.size
+    Searcher.perDoc[java.lang.Long, Searcher.LeafDoc, (Long, Double)](
+        if (masks.isEmpty) posts
+        else (posts.withColumn("leaf", lit(-1)) +: masks).reduce(_ unionByName _),
+        est.getOrElse(dfOf(terms.toSet).values.sum + masks.size * idx.numDocs),
+        Searcher.ScoreEnc)(() => new Searcher.LeafDoc(n)) { (r, docs) =>
+      val doc = docs(r.getLong(0))
+      val pos = r.getSeq[Int](2).toArray
+      val pays = if (pay) r.getSeq[Float](4).toArray else null
+      (if (r.isNullAt(1)) Array(r.getInt(4)) else leafOf(r.getString(1)))
+        .foreach { l => doc.pos(l) = pos; doc.pay(l) = pays }
+      if (!r.isNullAt(3)) doc.len = r.getLong(3)
+    } { (docid, doc) => score(doc).map((docid, _)) }.toDF("docid", "score")
+  }
+
   /** Phrase scoring (PhraseQuery.cs; ExactPhraseScorer and
-    * SloppyPhraseScorer; MultiPhraseQuery): one read of the block table
-    * for the distinct terms, and a per-doc fold that matches each slot's
-    * positions — the union of its terms' — against the first slot's
+    * SloppyPhraseScorer; MultiPhraseQuery): each slot's positions — the
+    * union of its terms' — matched against the first slot's
     * ([[Searcher.phraseFreq]]). tf_phrase feeds the tf slot of the
     * [[Similarity]] with the SUMMED idf of every slot term (PhraseWeight
     * semantics, PhraseQuery.cs:35; MultiPhraseQuery.cs:40). A slot none
     * of whose terms a doc holds rules the doc out. */
-  private def phrase(slots: Seq[(Seq[String], Int)], slop: Int): DataFrame = {
+  private def phrase(slots: Seq[(Seq[String], Int)], slop: Int,
+      est: Option[Long]): DataFrame = {
     val all = slots.flatMap(_._1)
-    val dfs = dfOf(all.toSet)
-    val sumIdf = all.map(t => sim.idf(idx.numDocs, dfs.getOrElse(t, 0L))).sum
     val terms = all.distinct
     val off0 = slots.head._2
-    Searcher.foldPhrase(
-      idx.postingsFor(terms)
-        .select(col("docid"), col("term"), col("positions"), col("len")),
-      dfs.values.sum, terms, slots.map { case (ts, off) =>
-        (ts.map(terms.indexOf).toArray, off - off0) }.toArray, slop,
-      sim, sumIdf, idx.avgdl)
+    val ks = slots.map { case (ts, off) =>
+      (ts.map(terms.indexOf).toArray, off - off0) }.toArray
+    positional(terms.map(Spans.TermLeaf), est)(weighted(idfOf(all)) { d =>
+      Searcher.phraseFreq(ks.map { case (ts, off) =>
+        (ts.flatMap(d.pos(_)).distinct.sorted, off) }, slop)
+    })
   }
 
-  /** General span-algebra evaluation (SpanQ): per doc, every sub-span
-    * evaluates to a packed array of [s, e] intervals built with array
-    * expressions over the joined position columns — no row explosion,
-    * nesting is plain expression composition. Spans are deduped, sorted,
-    * and reduced greedily (per start keep the min end — the "driving
-    * position" rule of the flat span family); freq = Σ 1/(1 + totalGap)
-    * where totalGap = e - s - (#leaf positions - 1). */
   /** SpanRegexQuery.cs:33 rewrite: each regex leaf becomes the SOr of
     * the dictionary terms matching the anchored pattern (literal-prefix
     * pushdown bounds the dictionary scan, maxClauseCount bounds the
@@ -797,149 +660,25 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     case leaf => leaf
   }
 
-  private def spanQuery(sp0: Span): DataFrame = {
-    import Spans.{MaskLeaf, SLeaf, TermLeaf}
+  /** SpanQ: a doc's distinct spans of the regex-expanded tree
+    * ([[Searcher.spanSet]]) reduce to its freq ([[Searcher.spanFreq]]),
+    * weighted by the summed idf of the distinct scoring terms (SpanWeight
+    * sums idf over every scoring-side leaf — SOr branches included, the
+    * SNot exclude side and masked keyword leaves not); a term absent from
+    * the dictionary adds none. */
+  private def spanQuery(sp0: Span, est: Option[Long]): DataFrame = {
     val sp = expandSpanRegexes(sp0)
+    val leaves = Spans.leaves(sp).distinct
+    val at = leaves.zipWithIndex.toMap
     val req = Spans.requiredLeaves(sp)
-    // term leaves first: the head leaf's posting rows carry `len` for
-    // tfNorm without a docLens join (masks have no len column)
-    val reqD = req.distinct.sortBy { case TermLeaf(_) => 0; case _ => 1 }
-    val excl = (Spans.leaves(sp).distinct.toSet -- reqD.toSet).toSeq
-      .sortBy(_.toString)
-    val reqTerms = Spans.termsOf(reqD)
-    // scoring terms ⊇ required terms: SOr branch terms carry idf too
-    // (SpanWeight sums idf over every scoring-side leaf); absent
-    // OPTIONAL terms just contribute nothing
-    val scoringTs = Spans.scoringTerms(sp).distinct
-    val dfs = dfOf((reqTerms ++ scoringTs).toSet)
-    if (!reqTerms.forall(dfs.contains))
-      return idx.docs.select(col("docid"), lit(1.0).as("score"))
-        .filter(lit(false))
-    // masked keyword leaves contribute no idf (keyword semantics)
-    val sumIdf = scoringTs.filter(dfs.contains)
-      .map(t => sim.idf(idx.numDocs, dfs(t))).sum
-
-    // one position column per distinct leaf; required leaves inner-join,
-    // exclude-only leaves left-join (missing -> empty array)
-    val colOf: Map[SLeaf, String] =
-      (reqD ++ excl).zipWithIndex.map { case (l, i) => l -> s"pos$i" }.toMap
-    def sourceOf(l: SLeaf): DataFrame = l match {
-      case TermLeaf(t) => idx.postingsFor(Seq(t))
-        .select(col("docid"), col("positions").as(colOf(l)), col("len"))
-      case MaskLeaf(f, v) => idx.docs.filter(col(f) === v)
-        .select(col("docid"),
-          array(lit(0)).cast("array<int>").as(colOf(l)))
-    }
-    // no required leaf at all (a pure SOr tree) = a disjunction: every
-    // live doc is a candidate (tfp > 0 prunes), like BoolQ(should)
-    val based =
-      if (reqD.isEmpty) idx.docLens
-      else {
-        val base = reqD.zipWithIndex.map { case (l, i) =>
-          val src = sourceOf(l)
-          if (i == 0) src else src.drop("len")
-        }.reduce((a, b) => a.join(b, Seq("docid")))
-        // an all-mask required set has no len column: fall back to docLens
-        if (reqD.headOption.exists(_.isInstanceOf[TermLeaf])) base
-        else base.join(idx.docLens, Seq("docid"))
-      }
-    val joined = excl.foldLeft(based) { (acc, l) =>
-      acc.join(sourceOf(l).drop("len"), Seq("docid"), "left")
-        .withColumn(colOf(l),
-          coalesce(col(colOf(l)), array().cast("array<int>")))
-    }
-
-    // ordered chaining with TOTAL-gap semantics (NearSpansOrdered.cs:47
-    // shrinkToAfterShortestMatch: matchLength = Σ inter-clause gaps ≤
-    // slop, not each gap separately): the accumulator carries the gap
-    // sum so far, which also prunes dead chains early. For 2 clauses
-    // this is identical to the per-gap rule.
-    def chainG(a: Column, b: Column, slop: Int): Column =
-      flatten(transform(a, x =>
-        transform(
-          filter(b, y => y.getField("s") > x.getField("e") &&
-            x.getField("g") + y.getField("s") - x.getField("e") - 1 <= slop),
-          y => struct(x.getField("s").as("s"), y.getField("e").as("e"),
-            (x.getField("g") + y.getField("s") - x.getField("e") - 1)
-              .as("g")))))
-    def withG(a: Column): Column =
-      transform(a, x => struct(x.getField("s").as("s"),
-        x.getField("e").as("e"), lit(0).as("g")))
-    def dropG(a: Column): Column =
-      array_distinct(transform(a, x =>
-        struct(x.getField("s").as("s"), x.getField("e").as("e"))))
-
-    def spansOf(s: Span): Column = s match {
-      case STerm(t) =>
-        transform(col(colOf(TermLeaf(t))), p => struct(p.as("s"), p.as("e")))
-      case SMask(f, v) =>
-        transform(col(colOf(MaskLeaf(f, v))), p => struct(p.as("s"), p.as("e")))
-      case SOr(cs) =>
-        // nestable SpanOrQuery: union of clause span sets
-        cs.map(spansOf).reduceOption((a, b) => array_distinct(concat(a, b)))
-          .getOrElse(array().cast("array<struct<s:int,e:int>>"))
-      case SRegex(p) =>
-        sys.error(s"unexpanded span regex '$p'") // rewritten at entry
-      case SNear(cs, slop, true) =>
-        dropG(cs.tail.foldLeft(withG(spansOf(cs.head))) {
-          (acc, c) => chainG(acc, spansOf(c), slop)
-        })
-      case SNear(Seq(a, b), slop, false) =>
-        array_distinct(concat(
-          dropG(chainG(withG(spansOf(a)), spansOf(b), slop)),
-          dropG(chainG(withG(spansOf(b)), spansOf(a), slop))))
-      case SNear(cs, slop, false) =>
-        // NearSpansUnordered.cs:32 envelope semantics for N>=3: one span
-        // per clause in any order (overlap allowed — the reference's
-        // documented quirk), envelope [min s, max e], match iff
-        // envelopeWidth - Σ clauseWidths <= slop. Combination product
-        // over per-clause span arrays — per-doc occurrence counts are
-        // small (position arrays), never a row explosion.
-        val init = transform(spansOf(cs.head), x =>
-          struct(x.getField("s").as("s"), x.getField("e").as("e"),
-            (x.getField("e") - x.getField("s") + lit(1)).as("cov")))
-        val combined = cs.tail.foldLeft(init) { (acc, c) =>
-          flatten(transform(acc, a => transform(spansOf(c), y =>
-            struct(least(a.getField("s"), y.getField("s")).as("s"),
-              greatest(a.getField("e"), y.getField("e")).as("e"),
-              (a.getField("cov") + y.getField("e") - y.getField("s") +
-                lit(1)).as("cov")))))
-        }
-        array_distinct(transform(
-          filter(combined, z =>
-            z.getField("e") - z.getField("s") + lit(1) - z.getField("cov")
-              <= slop),
-          z => struct(z.getField("s").as("s"), z.getField("e").as("e"))))
-      case SFirst(sub, end) =>
-        filter(spansOf(sub), x => x.getField("e") < end)
-      case SNot(inc, exc) =>
-        filter(spansOf(inc), a =>
-          !exists(spansOf(exc), b =>
-            b.getField("s") <= a.getField("e") &&
-              b.getField("e") >= a.getField("s")))
-    }
-
-    val minW = req.size - 1
-    val spans = sort_array(array_distinct(spansOf(sp)))
-    // width − minW clamped at 0: minW counts DUPLICATE leaves too, and
-    // an unordered combination may cover duplicate clauses with one
-    // occurrence, driving the raw distance negative (zero/negative
-    // sloppy-freq denominator → Infinity / negative scores)
-    val tfp = aggregate(spans,
-      struct(lit(-1).as("ls"), lit(0.0).as("acc")),
-      (st, x) => when(x.getField("s") === st.getField("ls"), st)
-        .otherwise(struct(x.getField("s").as("ls"),
-          (st.getField("acc") + lit(1.0) /
-            (lit(1.0) + greatest(lit(0.0),
-              (x.getField("e") - x.getField("s") - lit(minW))
-                .cast("double")))).as("acc"))),
-      st => st.getField("acc"))
-    joined
-      .withColumn("tfp", tfp)
-      .filter(col("tfp") > 0)
-      .select(col("docid"),
-        (param(sumIdf) * sim.tfNorm(col("tfp"), col("len"), idx.avgdl))
-          .as("score"))
+    val scoring = Spans.scoringTerms(sp).distinct
+    // a doc matches only if it holds every required leaf, so masks need
+    // their own length only when no term is required
+    positional(leaves, est,
+        maskLens = !req.exists(_.isInstanceOf[Spans.TermLeaf]))(
+      weighted(idfOf(scoring.filter(dfOf(scoring.toSet).contains))) { d =>
+        Searcher.spanFreq(Searcher.spanSet(sp, d, at), req.size - 1)
+      })
   }
 
   /** MoreLikeThis: the source doc's text is fetched (one stored-fields
@@ -1374,33 +1113,149 @@ object Searcher {
       Option.when(e(tree))((qid, k.docid, e.score))
     }.toDF("qid", "docid", "score")
 
-  /** One doc's positions of each distinct phrase term, and its length. */
-  private final class PhraseDoc(terms: Int) {
-    val pos = new Array[Array[Int]](terms)
+  /** One doc's view in a position query's fold ([[Searcher.positions]]):
+    * each leaf's ascending positions (empty when the doc lacks it), their
+    * payloads in a payload query, and the doc's length. */
+  private[search] final class LeafDoc(leaves: Int) {
+    val pos: Array[Array[Int]] = Array.fill(leaves)(Array.emptyIntArray)
+    val pay = new Array[Array[Float]](leaves)
     var len = 0L
   }
 
-  /** A phrase's fold over (docid, term, positions, len) rows of its
-    * distinct `terms`; slot k is (term indices, offset from slot 0), its
-    * positions the sorted union of its terms'. A doc with a term in every
-    * slot and freq > 0 ([[phraseFreq]]) scores idfSum × tfNorm(freq, len). */
-  private[search] def foldPhrase(rows: DataFrame, est: Long,
-      terms: Seq[String], slots: Array[(Array[Int], Int)], slop: Int,
-      sim: Similarity, idfSum: Double, avgdl: Double): DataFrame = {
-    val termOf = terms.zipWithIndex.toMap
-    perDoc[java.lang.Long, PhraseDoc, (Long, Double)](rows, est, ScoreEnc)(
-        () => new PhraseDoc(terms.size)) { (r, docs) =>
-      val doc = docs(r.getLong(0))
-      doc.pos(termOf(r.getString(1))) = r.getSeq[Int](2).toArray
-      doc.len = r.getLong(3)
-    } { (docid, doc) =>
-      val pos = slots.map { case (ts, off) =>
-        (ts.flatMap(t => Option(doc.pos(t))).flatten.distinct.sorted, off) }
-      Option.when(pos.forall(_._1.nonEmpty))(phraseFreq(pos, slop))
-        .filter(_ > 0)
-        .map(f => (docid, idfSum * sim.tfNormD(f, doc.len, avgdl)))
-    }.toDF("docid", "score")
+  /** idfSum × tfNorm(freq, len) for a doc whose `freq` is positive. */
+  private[search] def weighted(sim: Similarity, idfSum: Double,
+      avgdl: Double)(freq: LeafDoc => Double): LeafDoc => Option[Double] =
+    d => Some(freq(d)).filter(_ > 0)
+      .map(f => idfSum * sim.tfNormD(f, d.len, avgdl))
+
+  /** A payload query's score of a doc whose freq, from `spans` with its
+    * payloads, is positive: fn of the payloads (PayloadFunction.cs:30),
+    * times idfSum × tfNorm(freq, len) when `includeSpan`. */
+  private[search] def payWeighted(sim: Similarity, idfSum: Double,
+      avgdl: Double, fn: PayloadFn, includeSpan: Boolean)(
+      spans: LeafDoc => (Double, Array[Double])): LeafDoc => Option[Double] =
+    d => {
+      val (f, pays) = spans(d)
+      Option.when(f > 0)(
+        (if (includeSpan) idfSum * sim.tfNormD(f, d.len, avgdl) else 1.0) *
+          (fn match {
+            case PayAvg => pays.foldLeft(0.0)(_ + _) / pays.length
+            case PayMin => pays.reduceLeft((m, x) => if (x < m) x else m)
+            case PayMax => pays.reduceLeft((m, x) => if (x > m) x else m)
+          }))
+    }
+
+  /** The flat SpanNearQ and SpanNotQ freq: Σ over `a`'s positions p of
+    * 1/(g + 1), g the least gap to a `b` position within `slop` — after p
+    * when `inOrder`, whose span [p, q] then holds no `exc` position; else
+    * on either side of p. */
+  private[search] def nearFreq(a: Array[Int], b: Array[Int], slop: Int,
+      inOrder: Boolean, exc: Array[Int]): Double =
+    a.foldLeft(0.0) { (f, p) =>
+      b.iterator.collect {
+        case q if inOrder && q > p && q - p - 1 <= slop &&
+            !exc.exists(e => e >= p && e <= q) => q - p - 1
+        case q if !inOrder && q != p && math.abs(q - p) - 1 <= slop =>
+          math.abs(q - p) - 1
+      }.minOption.fold(f)(g => f + 1.0 / (g.toDouble + 1.0))
+    }
+
+  /** PayloadSpanNearQ's (freq, payloads) from each clause's positions and
+    * payloads. Ordered: per first-clause position, the chain of each next
+    * clause's least position after the last whose total gap stays within
+    * `slop` (NearSpansOrdered semantics). Unordered: every combination
+    * of one position per clause, first clause slowest, whose envelope
+    * width − (n − 1) ≤ slop. Each match adds 1/(1 + max(0, width −
+    * (n − 1))) — the clamp for one occurrence a repeated term covers
+    * twice — and its members' payloads in clause order. */
+  private[search] def payNear(pos: Array[Array[Int]],
+      pay: Array[Array[Float]], slop: Int,
+      inOrder: Boolean): (Double, Array[Double]) = {
+    val n = pos.length
+    // a match is one position index per clause
+    val matches: Seq[Vector[Int]] =
+      if (inOrder) pos(0).indices.flatMap { i =>
+        val lo = pos(0)(i)
+        (1 until n).foldLeft(Option(Vector(i))) { (m, k) =>
+          m.flatMap { ms =>
+            val hi = pos(k - 1)(ms.last)
+            // the gaps so far sum to hi − lo − (k − 1)
+            Some(pos(k).indexWhere(x => x > hi && x - lo - k <= slop))
+              .filter(_ >= 0).map(ms :+ _)
+          }
+        }
+      }
+      else (1 until n).foldLeft(pos(0).indices.map(Vector(_))) { (ms, k) =>
+        // an envelope only widens: a partial one past slop stays past it
+        ms.flatMap(m => pos(k).indices.map(m :+ _)).filter { m =>
+          val ps = m.indices.map(c => pos(c)(m(c)))
+          ps.max - ps.min + 1 - n <= slop
+        }
+      }
+    (matches.foldLeft(0.0) { (f, m) =>
+      val ps = m.indices.map(c => pos(c)(m(c)))
+      f + 1.0 / (1.0 + math.max(0.0, (ps.max - ps.min - (n - 1)).toDouble))
+    }, matches.flatMap(m => m.indices.map(c => pay(c)(m(c)).toDouble)).toArray)
   }
+
+  /** A doc's distinct (start, end) spans of `s` over its view, leaf `l`
+    * at index `at(l)`. A term or a mask is a width-0 span per position;
+    * SOr is the union; an ordered SNear chains spans that start after the
+    * last one's end with a TOTAL gap within slop (NearSpansOrdered.cs:47
+    * matchLength); a two-clause unordered SNear takes both orders; N ≥ 3
+    * unordered is the envelope of one span per clause in any order,
+    * overlaps allowed, whose width minus the summed clause widths is
+    * within slop (NearSpansUnordered.cs:32); SFirst keeps spans ending
+    * before `end`; SNot keeps include spans overlapping no exclude span. */
+  private[search] def spanSet(s: Span, d: LeafDoc,
+      at: Map[Spans.SLeaf, Int]): Set[(Int, Int)] = {
+    def of(x: Span): Set[(Int, Int)] = x match {
+      case STerm(t) => d.pos(at(Spans.TermLeaf(t))).map(p => (p, p)).toSet
+      case SMask(f, v) =>
+        d.pos(at(Spans.MaskLeaf(f, v))).map(p => (p, p)).toSet
+      case SOr(cs) => cs.flatMap(of).toSet
+      case SRegex(p) => sys.error(s"unexpanded span regex '$p'")
+      case SNear(cs, slop, true) =>
+        // each span's least total gap: it admits whatever a larger one does
+        cs.tail.foldLeft(of(cs.head).map(_ -> 0).toMap) { (acc, c) =>
+          val next = of(c)
+          acc.toSeq.flatMap { case ((s0, e), g) =>
+            next.collect { case (s1, e1) if s1 > e && g + s1 - e - 1 <= slop =>
+              ((s0, e1), g + s1 - e - 1) }
+          }.groupMapReduce(_._1)(_._2)(math.min)
+        }.keySet
+      case SNear(Seq(a, b), slop, false) =>
+        of(SNear(Seq(a, b), slop)) ++ of(SNear(Seq(b, a), slop))
+      case SNear(cs, slop, false) =>
+        // each envelope's greatest summed clause width: it admits
+        // whatever a smaller one does
+        cs.tail.foldLeft(of(cs.head).map { case (s0, e) =>
+            (s0, e) -> (e - s0 + 1) }.toMap) { (acc, c) =>
+          val next = of(c)
+          acc.toSeq.flatMap { case ((s0, e), w) =>
+            next.toSeq.map { case (s1, e1) =>
+              ((math.min(s0, s1), math.max(e, e1)), w + e1 - s1 + 1) }
+          }.groupMapReduce(_._1)(_._2)(math.max)
+        }.filter { case ((s0, e), w) => e - s0 + 1 - w <= slop }.keySet
+      case SFirst(sub, end) => of(sub).filter(_._2 < end)
+      case SNot(inc, exc) =>
+        val ex = of(exc)
+        of(inc).filter { case (s0, e) =>
+          !ex.exists { case (s1, e1) => s1 <= e && e1 >= s0 } }
+    }
+    of(s)
+  }
+
+  /** SpanQ's freq of a doc's spans: Σ over starts s, ascending, of
+    * 1/(1 + max(0, e − s − minW)) for the least end e at s (the
+    * flat span family's driving-position rule). The clamp: minW counts
+    * a repeated leaf each time, and an unordered match may cover it with
+    * one occurrence. */
+  private[search] def spanFreq(spans: Set[(Int, Int)], minW: Int): Double =
+    spans.groupMapReduce(_._1)(_._2)(math.min).toSeq.sorted
+      .foldLeft(0.0) { case (f, (s, e)) =>
+        f + 1.0 / (1.0 + math.max(0.0, (e - s - minW).toDouble))
+      }
 
   /** A doc's phrase freq from each slot's (ascending positions, offset
     * from slot 0): Σ over slot 0's positions p of 1/(d + 1), where d sums
@@ -1461,17 +1316,6 @@ object Searcher {
       dt: DataType): Column =
     udf(new UDF1[String, Any] { def call(k: String): Any = m(k) }, dt)
       .apply(key)
-
-  /** A per-query number (an idf or an idf sum) as a plan parameter. A
-    * literal would be inlined into the generated Java source, so each
-    * distinct value would compile a class of its own; this is a
-    * non-foldable call that returns `v`, and same-shape queries share
-    * one compiled plan. Marked nondeterministic only so the optimizer
-    * does not fold it back into a literal. */
-  private[search] def param(v: Double): Column =
-    udf(new UDF0[java.lang.Double] { def call(): java.lang.Double = v },
-      DoubleType)
-      .asNondeterministic().apply()
 
   private[search] lazy val TermDfEnc = Encoders.product[(String, Long)]
 

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 /** Pluggable scoring strategy — the reference exposes tf / idf /
   * length-norm / coord / sloppy-freq as an overridable `Similarity`
   * (/root/reference/src/core/Search/Similarity.cs:398-503) selected per
-  * searcher. The Searcher composes exactly those slots as Catalyst
-  * column expressions; swapping the strategy swaps every scoring site
-  * (term, phrase, span, dismax, MLT) at once.
+  * searcher. The Searcher composes those slots as Catalyst column
+  * expressions where a plan scores postings (term queries, multi-term
+  * rewrites, MLT) and as their scalar twins in its per-doc folds
+  * (booleans, DisMax, phrases, spans, payloads); swapping the strategy
+  * swaps every scoring site at once.
   *
   * Two published instances:
   *   - [[Bm25Sim]] — the engine default (SURVEY §1.1 chose BM25 over the

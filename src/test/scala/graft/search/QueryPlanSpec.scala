@@ -9,6 +9,8 @@ import scala.util.Random
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
+  ArrayFilter, ArrayTransform, Expression, MapFromArrays, ZipWith}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
 import org.apache.spark.sql.Row
@@ -18,6 +20,7 @@ import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
   ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   Exchange}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions.{col, date_format}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -491,16 +494,53 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val want = rows(one)
       assert(want.nonEmpty && rows(wide) == want, s"$q")
     }
-    // the phrase fold itself, one task against partitioned by docid
-    val terms = sloppy.terms.map(_._1).distinct
-    def phrase(est: Long) = rows(Searcher.foldPhrase(
-      idx.postingsFor(terms)
-        .select(col("docid"), col("term"), col("positions"), col("len")),
-      est, terms, sloppy.terms.map { case (t, off) =>
-        (Array(terms.indexOf(t)), off - sloppy.terms.head._2) }.toArray,
-      sloppy.slop, Bm25Sim, 1.5, idx.avgdl))
-    val want = phrase(0)
-    assert(want.nonEmpty && phrase(Long.MaxValue) == want)
+    // each position fold itself, one task against partitioned by docid
+    val Seq(a, b, c) = runs(13).take(3).map(_._1)
+    Seq(sloppy,
+      SpanQ(SNear(Seq(SNear(Seq(STerm(a), STerm(b)), 1), STerm(c)), 3)),
+      SpanNotQ(a, c, 3, "error"),
+      PayloadSpanNearQ(Seq(a, b, c), 4, PayMax, inOrder = false)).foreach { q =>
+      val wide = s.positions(q, Some(Long.MaxValue))
+      assert(exchanges(Seq(wide.queryExecution.executedPlan)).nonEmpty, s"$q")
+      val want = rows(s.positions(q, Some(0L)))
+      assert(want.nonEmpty && rows(wide) == want, s"$q")
+    }
+  }
+
+  test("every span and payload query is one job, with no join or array lambda") {
+    idx.dictionary
+    val Seq(a, b, c) = runs(13).take(3).map(_._1)
+    val queries = Seq(
+      SpanFirstQ(a, 8),
+      SpanNearQ(a, b, 2, inOrder = true),
+      SpanNearQ(a, b, 2, inOrder = false),
+      SpanNotQ(a, c, 3, "error"),
+      SpanOrQ(Seq(a, b, "error")),
+      SpanQ(SNear(Seq(SNear(Seq(STerm(a), STerm(b)), 2), STerm(c)), 3)),
+      SpanQ(SNot(SNear(Seq(STerm(a), STerm(b)), 3), STerm("error"))),
+      SpanQ(SNear(Seq(STerm(a), STerm(b), STerm(c)), 6, inOrder = false)),
+      SpanQ(SNear(Seq(SMask("role", "assistant"), STerm("error")), 30)),
+      SpanQ(SNear(Seq(SRegex(a.take(2) + ".*"), STerm(b)), 4)),
+      PayloadTermQ(a),
+      PayloadNearQ(a, b, 2),
+      PayloadSpanNearQ(Seq(a, b, c), 4),
+      PayloadSpanNearQ(Seq(a, b, c), 4, inOrder = false))
+    def lambda(e: Expression): Boolean = e match {
+      case _: ArrayTransform | _: ArrayFilter | _: ArrayAggregate |
+          _: ZipWith | _: MapFromArrays => true
+      case _ => false
+    }
+    queries.foreach { q =>
+      val s = new Searcher(idx)
+      val (jobs, plans) =
+        record(assert(s.topK(q, 10).collect().nonEmpty, s"$q"))
+      assert(jobs == 1, s"$q\n${plans.mkString("\n")}")
+      val nodes = plans.flatMap(collect(_) { case n => n })
+      assert(nodes.nonEmpty && !nodes.exists(_.isInstanceOf[BaseJoinExec]),
+        s"$q\n${plans.mkString("\n")}")
+      assert(!nodes.exists(_.expressions.exists(_.exists(lambda))),
+        s"$q\n${plans.mkString("\n")}")
+    }
   }
 
   test("the resident dictionary keeps Spark's string order") {

@@ -78,6 +78,15 @@ class SpanSpec extends AnyFunSuite {
     assert(math.abs(hits(6L) - want) < 1e-9)
   }
 
+  test("a flat span near sums idf over both clauses, a repeated term twice") {
+    // doc 6 "error error error error deploy": error@0-3. Each of 0, 1, 2
+    // has the next occurrence at gap 0 (slop 1): freq 3. The flat family
+    // weighs Seq(a, b) as given; SpanQ (above) sums distinct terms.
+    val hits = run(SpanNearQ("error", "error", 1, inOrder = true))
+    val want = 2 * idf("error") * tfNorm(3.0, 6)
+    assert(math.abs(hits(6L) - want) < 1e-9)
+  }
+
   test("span not: exclusion inside the span kills it") {
     // doc 9 "merge the table then merge again": merge@0, table@2 ->
     // ordered near (merge, table) slop 2 matches span [0,2]
