@@ -1,0 +1,123 @@
+#!/usr/bin/env python3
+"""Alternated A/B pairs of the benchmark: a base revision against the
+working checkout.
+
+    python3 scripts/ab_pairs.py REV --workload W --pairs N --seed0 S
+
+Exports REV (any git revision, say HEAD~1) with `git archive` into a fresh
+directory under the system temp dir (TMPDIR), then runs
+`python3 perfbench/run.py --workload W --seed S+i --seconds 5` once in that
+tree and once in this checkout for each pair i, both sides on the same
+seed, alternating which side runs first. Each tree builds its own engine
+and benchmark on its first run. Per end-to-end metric of BENCHMARK.json it
+prints both medians and quartiles, the base's IQR, the change's wins (the
+pairs in which the checkout did better), and whether the medians differ
+by more than the base's IQR. The export is deleted at the end; nothing
+tracked in either tree is written (perfbench writes only under its
+ignored out/ and target/ directories).
+
+Every run's result line is printed as it arrives, so a long session can
+be read while it runs. Exits 1 if any run fails or reports
+`correct: false`.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def export(rev, dest):
+    """The tree of `rev` under `dest`, as git archive writes it."""
+    archive = subprocess.Popen(["git", "-C", ROOT, "archive", rev],
+                               stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", dest], stdin=archive.stdout,
+                   check=True)
+    if archive.wait() != 0:
+        sys.exit(f"git archive {rev} failed")
+
+
+def run(tree, workload, seed, seconds):
+    """One benchmark run in `tree`: its result dict, or None on failure."""
+    p = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        cwd=tree, capture_output=True, text=True)
+    lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
+    if p.returncode != 0 or not lines:
+        sys.stderr.write(p.stderr[-2000:])
+        return None
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("rev", help="base revision, e.g. HEAD~1")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--seed0", type=int, required=True)
+    ap.add_argument("--seconds", type=float, default=5)
+    a = ap.parse_args()
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+    base = tempfile.mkdtemp(prefix="ab_pairs_")
+    ok = True
+    runs = {"base": [], "change": []}
+    try:
+        export(a.rev, base)
+        trees = {"base": base, "change": ROOT}
+        for i in range(a.pairs):
+            seed = a.seed0 + i
+            order = ("base", "change") if i % 2 == 0 else ("change", "base")
+            for side in order:
+                r = run(trees[side], a.workload, seed, a.seconds)
+                print(f"pair {i + 1} seed {seed} {side}: "
+                      f"{json.dumps(r, separators=(',', ':'))}", flush=True)
+                if r is None or not r.get("correct") or r.get("failed"):
+                    ok = False
+                runs[side].append(r)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+    pairs = [(b, c) for b, c in zip(runs["base"], runs["change"])
+             if b is not None and c is not None]
+    print(f"\n{a.workload}: {len(pairs)} complete pairs, base {a.rev}, "
+          f"seeds {a.seed0}-{a.seed0 + a.pairs - 1}")
+    print(f"{'metric':28} {'base q1/median/q3':>30} "
+          f"{'change q1/median/q3':>30} {'base IQR':>10} {'wins':>6} "
+          f"{'> IQR':>6}")
+    for m in metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        got = [(b["metrics"][name]["value"], c["metrics"][name]["value"])
+               for b, c in pairs
+               if name in b["metrics"] and name in c["metrics"]]
+        if not got:
+            continue
+        bq = quartiles([b for b, _ in got])
+        cq = quartiles([c for _, c in got])
+        wins = sum(1 for b, c in got if (c < b if lower else c > b))
+        iqr = bq[2] - bq[0]
+        fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
+        print(f"{name:28} {fmt(bq):>30} {fmt(cq):>30} {iqr:>10.4g} "
+              f"{wins:>3}/{len(got):<2} "
+              f"{'yes' if abs(cq[1] - bq[1]) > iqr else 'no':>6}")
+    if not ok:
+        print("some runs failed or reported correct: false")
+        sys.exit(1)
+
+
+if __name__ == "__main__":
+    main()

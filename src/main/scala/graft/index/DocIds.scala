@@ -15,11 +15,12 @@ import org.apache.spark.storage.StorageLevel
   * Scale note: a naive `row_number() OVER (ORDER BY ...)` collapses the
   * whole table into ONE partition — a non-starter at 10^12 rows. Instead:
   * range-shuffle on the key (globally ordered partition ranges), count
-  * rows per partition (tiny agg → driver), broadcast the cumulative
-  * offsets back, and add them to the partition-local row index. The local
-  * index comes from monotonically_increasing_id (partition ordinal in the
-  * upper bits, consecutive row ordinal in the low 33) — everything stays
-  * in Tungsten rows / codegen, no per-row Row materialization.
+  * rows per partition (tiny agg → driver), then add each row's partition
+  * offset, looked up in a literal array, to its partition-local index.
+  * The local index comes from monotonically_increasing_id (partition
+  * ordinal in the upper bits, consecutive row ordinal in the low 33) —
+  * everything stays in Tungsten rows / codegen, no per-row Row
+  * materialization.
   */
 object DocIds {
 
@@ -36,7 +37,6 @@ object DocIds {
 
   def assign(df: DataFrame, keys: Seq[Column], numPartitions: Int): Assigned = {
     val spark = df.sparkSession
-    import spark.implicits._
     // ONE materialization: the sorted, range-shuffled base with
     // partition-local ranks is pinned; the counts job below both
     // populates that cache and yields the per-partition offsets.
@@ -76,16 +76,13 @@ object DocIds {
     // one count per range partition; driver-side scan is O(numPartitions)
     val counts = marked.groupBy(col("__pid")).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until numPartitions)
-      .scanLeft(0L) { case (acc, p) => acc + counts.getOrElse(p, 0L) }
-    val offDf = broadcast(
-      offsets.dropRight(1).zipWithIndex
-        .map { case (off, p) => (p, off) }.toDF("__pid", "__off"))
-    // The global docid is a LAZY map-side projection over the pinned
-    // base (broadcast join on __pid + one add) — no second materialized
-    // copy of the table. Downstream reads pay one addition per row.
-    val out = marked.join(offDf, Seq("__pid"))
-      .withColumn("docid", col("__off") + col("__lrank"))
+    val offsets =
+      (0 until numPartitions).map(counts.getOrElse(_, 0L)).scanLeft(0L)(_ + _)
+    // docid = the partition's offset, looked up by __pid in a literal
+    // array, + the local rank: a LAZY projection over the pinned base
+    val out = marked
+      .withColumn("docid", element_at(typedLit(offsets.dropRight(1).toArray),
+        col("__pid") + 1) + col("__lrank"))
       .select(col("docid") +: df.columns.map(col): _*)
     Assigned(out, counts.values.sum, release)
   }

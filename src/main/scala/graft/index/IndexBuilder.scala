@@ -1,11 +1,11 @@
 package graft.index
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation,
+  SparkSession}
 import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Logical (table-agnostic) inverted index.
@@ -310,8 +310,9 @@ object IndexBuilder {
     val assigned = DocIds.assign(transcripts,
       Seq(col("conv_id"), col("turn_idx")), numPartitions)
     val docs = assigned.docs.cache()
-    val blocks = PostingBlocks.buildFromDocs(docs, numPartitions, assigner,
-      kind).toDF().cache()
+    val (built, releaseRuns) =
+      PostingBlocks.invert(docs, numPartitions, assigner, kind)
+    val blocks = built.toDF().cache()
     val termDict = PostingBlocks.dictFromBlocks(blocks).cache()
 
     // count() materializes the docs cache (MEMORY_AND_DISK — eviction
@@ -321,9 +322,11 @@ object IndexBuilder {
     require(n > 0, "empty input: refusing to build an index with no docs" +
       " (avgdl would be NaN and BM25 scores would silently propagate it)")
     // sumLen = Σ tf over postings ≡ Σ len over docs (integer arithmetic —
-    // exactly reproducible across engines)
+    // exactly reproducible across engines); the scan fills the blocks
+    // cache, so the runs can go
     val sumLen = blocks.agg(coalesce(sum(col("sum_tf")), lit(0L)))
       .collect()(0).getLong(0)
+    releaseRuns()
     val idx = InvertedIndex.ofBlocks(docs, blocks, termDict, n, sumLen)
     idx.docLens.cache()
     idx
@@ -371,28 +374,14 @@ object IndexBuilder {
           case Some(m) if m.lineage == lineage => Some(m) // resume: skip
           case _ =>
             val slice = docs.filter(col("docid") >= lo && col("docid") < hi)
-            // Tokenize+invert+encode+write in ONE pass: raw postings are
-            // never cached (a 10^12-turn batch would not fit anywhere);
-            // dict and stats derive from the compact block table
-            // afterwards, doc lengths are decoded from blocks on demand —
-            // the Lucene shape: segment files are written once, stats
-            // are read from the segment.
-            SegmentStore.writeTable(root, id, "blocks",
-              PostingBlocks.buildFromDocs(slice, numPartitions, assigner,
-                kind).toDF())
-            val blocksDf = SegmentStore.readTable(spark, root, id, "blocks")
-            SegmentStore.writeTable(root, id, "dict",
-              PostingBlocks.dictFromBlocks(blocksDf))
-            SegmentStore.writeTable(root, id, "docs", slice)
-            // docids are dense in [0, total): the slice size is exact
-            // arithmetic — no count job
-            val n = hi - lo
-            val sumLen = blocksDf.agg(coalesce(sum(col("sum_tf")), lit(0L)))
-              .collect()(0).getLong(0)
-            val meta = SegmentMeta(id, b.toLong, n, sumLen, lineage,
-              maxDocid = hi - 1)
-            SegmentStore.markComplete(root, meta)
-            Some(meta)
+            // one tokenize per turn, its compressed runs pinned only until
+            // the blocks are written; stats come from the segment as it is
+            // written, doc lengths from its blocks on demand (Lucene's shape)
+            Some(writeSegment(spark, root, id, slice,
+                PostingBlocks.invert(slice, numPartitions, assigner, kind)) {
+              (n, sumLen) => SegmentMeta(id, b.toLong, n, sumLen, lineage,
+                maxDocid = hi - 1)
+            })
         }
       }
     }
@@ -433,23 +422,15 @@ object IndexBuilder {
       return None
     }
     val docs = local.docs.withColumn("docid", col("docid") + lit(base))
-      .persist(StorageLevel.DISK_ONLY)
-    docs.count()    // materializes the outer pin …
-    local.release() // … so the inner range-shuffled base can go
     val id = f"seg_a$nextVer%04d_$nextOrd%05d"
-    SegmentStore.writeTable(root, id, "blocks",
-      PostingBlocks.buildFromDocs(docs, numPartitions).toDF())
-    val blocksDf = SegmentStore.readTable(spark, root, id, "blocks")
-    SegmentStore.writeTable(root, id, "dict",
-      PostingBlocks.dictFromBlocks(blocksDf))
-    SegmentStore.writeTable(root, id, "docs", docs)
-    val sumLen = blocksDf.agg(coalesce(sum(col("sum_tf")), lit(0L)))
-      .collect()(0).getLong(0)
-    val meta = SegmentMeta(id, nextOrd, n, sumLen,
-      s"$lineageTag ord=$nextOrd docids=[$base,${base + n})",
-      maxDocid = base + n - 1)
-    SegmentStore.markComplete(root, meta)
-    docs.unpersist(blocking = false)
+    val meta = writeSegment(spark, root, id, docs,
+        PostingBlocks.invert(docs, numPartitions, None,
+          graft.analysis.Analyzers.Standard)) { (_, sumLen) =>
+      SegmentMeta(id, nextOrd, n, sumLen,
+        s"$lineageTag ord=$nextOrd docids=[$base,${base + n})",
+        maxDocid = base + n - 1)
+    }
+    local.release()
     Some(meta)
   }
 
@@ -566,12 +547,35 @@ object IndexBuilder {
     next
   }
 
+  /** Write one segment, then its lineage marker: the one write of bulk
+    * builds, appends and merges (a segment flushed in one pass,
+    * FreqProxTermsWriter.cs:70-157). Blocks are written observing Σ sum_tf
+    * (the sumLen), then `blocks`' release runs; the dictionary aggregates
+    * the written blocks; docs are written observing their count, which
+    * with the sumLen makes the marker (`meta`). No stat costs a job. */
+  private def writeSegment(spark: SparkSession, root: String, id: String,
+      docs: DataFrame, blocks: (Dataset[BlockRow], () => Unit))
+      (meta: (Long, Long) => SegmentMeta): SegmentMeta = {
+    def observed(df: DataFrame, sub: String, stat: Column): Long = {
+      val o = Observation()
+      SegmentStore.writeTable(root, id, sub, df.observe(o, stat.as("v")))
+      o.get("v").asInstanceOf[Long]
+    }
+    val sumLen = observed(blocks._1.toDF(), "blocks",
+      coalesce(sum(col("sum_tf")), lit(0L)))
+    blocks._2()
+    SegmentStore.writeTable(root, id, "dict", PostingBlocks.dictFromBlocks(
+      SegmentStore.readBlocks(spark, root, id)))
+    val done = meta(observed(docs, "docs", count(lit(1))), sumLen)
+    SegmentStore.markComplete(root, done)
+    done
+  }
+
   private def doMerge(spark: SparkSession, root: String, m: Manifest,
       toMerge: Seq[SegmentMeta], numPartitions: Int): Manifest = {
     import spark.implicits._
-    def unionOf(sub: String): DataFrame =
-      toMerge.map(s => spark.read.parquet(s"$root/${s.id}/$sub"))
-        .reduce(_ unionByName _)
+    def unionOf(read: String => DataFrame): DataFrame =
+      toMerge.map(s => read(s.id)).reduce(_ unionByName _)
     val del: Option[DataFrame] =
       if (m.deletes.isEmpty) None
       else Some(m.deletes.map(d => spark.read.parquet(s"$root/$d"))
@@ -583,24 +587,11 @@ object IndexBuilder {
     // decode to raw (position blobs sliced, not materialized) →
     // expunge deletes → range-shuffle → re-encode: the SegmentMerger
     // sort-merge with deletion squeeze (SegmentMerger.cs:800-847)
-    val raw = live(PostingBlocks.toRaw(unionOf("blocks")).toDF())
+    val raw = live(PostingBlocks.toRaw(
+        unionOf(SegmentStore.readBlocks(spark, root, _))).toDF())
       .as[Codec.RawPosting]
-    val blocks = PostingBlocks.fromRaw(raw, numPartitions)
     val newOrd = toMerge.map(_.ord).min
     val id = f"seg_m${m.version + 1}%04d_$newOrd%05d"
-    val docs = live(unionOf("docs"))
-    SegmentStore.writeTable(root, id, "blocks", blocks.toDF())
-    val blocksDf = SegmentStore.readTable(spark, root, id, "blocks")
-    SegmentStore.writeTable(root, id, "dict",
-      PostingBlocks.dictFromBlocks(blocksDf))
-    SegmentStore.writeTable(root, id, "docs", docs)
-    val (n, sumLen) = del match {
-      case None => (toMerge.map(_.numDocs).sum, toMerge.map(_.sumLen).sum)
-      case Some(_) =>
-        (docs.count(),
-          blocksDf.agg(coalesce(sum(col("sum_tf")), lit(0L)))
-            .collect()(0).getLong(0))
-    }
     // streamBatch markers must SURVIVE merges: the streaming sink's
     // replay check scans lineages for `streamBatch=<id>`, and a
     // compaction that rewrote lineage before the stream checkpoint
@@ -608,15 +599,18 @@ object IndexBuilder {
     val carried = toMerge
       .flatMap(_.lineage.split(' ').filter(_.startsWith("streamBatch=")))
       .distinct
-    val meta = SegmentMeta(id, newOrd, n, sumLen,
-      s"merged=[${toMerge.map(_.id).mkString(",")}]" +
-        (if (del.isDefined) " expunged-deletes" else "") +
-        (if (carried.isEmpty) "" else carried.mkString(" ", " ", "")),
-      // the watermark NEVER shrinks on expunge: surviving docids keep
-      // their original values, so appends must still re-base past the
-      // pre-merge ceiling
-      maxDocid = toMerge.map(_.maxDocid).max)
-    SegmentStore.markComplete(root, meta)
+    val meta = writeSegment(spark, root, id,
+        live(unionOf(SegmentStore.readTable(spark, root, _, "docs"))),
+        (PostingBlocks.fromRaw(raw, numPartitions), () => ())) {
+      (n, sumLen) => SegmentMeta(id, newOrd, n, sumLen,
+        s"merged=[${toMerge.map(_.id).mkString(",")}]" +
+          (if (del.isDefined) " expunged-deletes" else "") +
+          (if (carried.isEmpty) "" else carried.mkString(" ", " ", "")),
+        // the watermark NEVER shrinks on expunge: surviving docids keep
+        // their original values, so appends must still re-base past the
+        // pre-merge ceiling
+        maxDocid = toMerge.map(_.maxDocid).max)
+    }
     val merged = toMerge.map(_.id).toSet
     val mergedAll = merged == m.segments.map(_.id).toSet
     val next = Manifest(m.version + 1,

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Block row as persisted (one term's ≤128 postings, compressed).
   * Skip/WAND stats travel as plain columns so pruning predicates stay in
@@ -54,7 +55,7 @@ object PostingBlocks {
   // the decode paths' encoders, derived once: `spark.implicits._`
   // derives a product encoder by runtime reflection on every call, and
   // the query layer decodes on every query
-  private lazy val BlockEnc: Encoder[BlockRow] = Encoders.product[BlockRow]
+  private[index] lazy val BlockEnc = Encoders.product[BlockRow]
   private lazy val PostingEnc: Encoder[PostingRow] =
     Encoders.product[PostingRow]
   private lazy val PayPostingEnc: Encoder[PayPostingRow] =
@@ -84,6 +85,12 @@ object PostingBlocks {
     * payloads for free (FreqProxTermsWriter.cs:70-157 threads payloads
     * the same way); without one, no payload array is allocated.
     *
+    * Each doc is tokenized once: the runs are pinned before the range
+    * shuffle (a DISK_ONLY RDD persist, about the index's size), so the
+    * partitioner's sampling job computes them and the shuffle-map stage
+    * reads them back. Spark's ContextCleaner drops the pin with the
+    * returned Dataset; the engine's writer drops it sooner ([[invert]]).
+    *
     * Scale properties: shuffle volume ≈ compressed index size (not
     * ~40 bytes × postings); hot terms still split across reducers by the
     * run-start component of the range key; map memory is one partition's
@@ -92,11 +99,17 @@ object PostingBlocks {
   def buildFromDocs(docs: DataFrame, numPartitions: Int,
       assigner: Option[graft.analysis.Payloads.Assigner] = None,
       kind: graft.analysis.Analyzers.Kind = graft.analysis.Analyzers.Standard)
-      : Dataset[BlockRow] = {
+      : Dataset[BlockRow] =
+    invert(docs, numPartitions, assigner, kind)._1
+
+  /** [[buildFromDocs]] and the release of its pinned runs. */
+  private[index] def invert(docs: DataFrame, numPartitions: Int,
+      assigner: Option[graft.analysis.Payloads.Assigner],
+      kind: graft.analysis.Analyzers.Kind): (Dataset[BlockRow], () => Unit) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val runs: Dataset[BlockRow] = docs.select(col("docid"), col("text"))
-      .as[(Long, String)]
+    val runs = docs.select(col("docid"), col("text"))
+      .as[(Long, String)].rdd
       .mapPartitions { it =>
         val builders = new java.util.LinkedHashMap[String, Codec.RunBuilder]
         it.foreach { case (docid, text) =>
@@ -125,7 +138,8 @@ object PostingBlocks {
             b.minLen, b.sumTf, b.docs, b.lens, b.pos)
         }
       }
-    runs
+      .persist(StorageLevel.DISK_ONLY)
+    val blocks = spark.createDataset(runs)(BlockEnc)
       .repartitionByRange(numPartitions, col("term"), col("min_docid"))
       .sortWithinPartitions(col("term"), col("min_docid"))
       .mapPartitions { it =>
@@ -160,6 +174,7 @@ object PostingBlocks {
           }
         }
       }
+    (blocks, () => { runs.unpersist(blocking = false); () })
   }
 
   /** Raw postings → block table (the merge path): positions are already

@@ -189,22 +189,17 @@ object SegmentStore {
       sub: String): DataFrame =
     spark.read.parquet(s"${segDir(root, id)}/$sub")
 
+  /** A segment's block table, read with its known schema: no job infers it. */
+  private[index] def readBlocks(spark: SparkSession, root: String,
+      id: String): DataFrame =
+    spark.read.schema(PostingBlocks.BlockEnc.schema)
+      .parquet(s"${segDir(root, id)}/blocks")
+
   /** The lineage marker is written LAST, after every table, so a crash
     * mid-write leaves an incomplete (ignored, re-buildable) dir. */
   def markComplete(root: String, meta: SegmentMeta): Unit =
     Files.writeString(Paths.get(segDir(root, meta.id), "_LINEAGE.json"),
       segJson(meta))
-
-  /** Convenience: write all tables then the marker. (No doclens table —
-    * doc lengths live inside the posting blocks and are decoded on
-    * demand.) */
-  def writeSegment(root: String, meta: SegmentMeta, docs: DataFrame,
-      blocks: DataFrame, dict: DataFrame): Unit = {
-    writeTable(root, meta.id, "docs", docs)
-    writeTable(root, meta.id, "blocks", blocks)
-    writeTable(root, meta.id, "dict", dict)
-    markComplete(root, meta)
-  }
 
   /** The per-segment DataFrames of one opened segment — the
     * SegmentReader analog. Immutable once committed, so a later commit

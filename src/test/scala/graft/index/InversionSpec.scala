@@ -1,6 +1,9 @@
 package graft.index
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -11,7 +14,10 @@ import graft.model.Transcripts
   * build flavor) against a scalar reference written here: each doc
   * tokenized alone by `Analyzers.tokenize(kind, text)` and grouped by
   * term in token order. Postings, payloads, dictionary and doc lengths
-  * must match row for row, for every (analyzer, assigner) pair. */
+  * must match row for row, for every (analyzer, assigner) pair in memory
+  * and for the persisted flavors (bulk segments, and an appended store
+  * after a delete and a merge), whose manifest numDocs and sumLen must
+  * match too. */
 class InversionSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
@@ -42,8 +48,27 @@ class InversionSpec extends AnyFunSuite {
       .map(_.toSeq.map { case s: Seq[_] => s.toList; case x => x }).toSeq
 
   private def check(kind: Analyzers.Kind,
+      assigner: Option[Payloads.Assigner]): Unit =
+    check(IndexBuilder.build(turns, 3, kind, assigner), kind, assigner)
+
+  /** A store's index, checked as [[check]] checks an in-memory one, and
+    * its manifest's numDocs and sumLen against the same reference. */
+  private def checkStore(root: String, kind: Analyzers.Kind,
       assigner: Option[Payloads.Assigner]): Unit = {
-    val idx = IndexBuilder.build(turns, 3, kind, assigner)
+    val idx = SegmentStore.open(spark, root)
+    check(idx, kind, assigner)
+    val m = SegmentStore.latest(root).get
+    val lens = idx.docs.select("text").collect()
+      .map(r => Analyzers.tokenize(kind, r.getString(0)).size.toLong)
+    assert(m.numDocs == lens.length)
+    assert(m.sumLen == lens.sum)
+  }
+
+  private def tmp(): String =
+    Files.createTempDirectory("graft_inversion_").toString
+
+  private def check(idx: InvertedIndex, kind: Analyzers.Kind,
+      assigner: Option[Payloads.Assigner]): Unit = {
     val docs = idx.docs.select("docid", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
     val want = reference(docs, kind, assigner)
@@ -85,5 +110,33 @@ class InversionSpec extends AnyFunSuite {
 
   test("Shingles(2) analyzer with positionBoost payloads") {
     check(Analyzers.Shingles(2), Some(boost))
+  }
+
+  test("buildSegments, one batch") {
+    val root = tmp()
+    IndexBuilder.buildSegments(spark, turns, root, numBatches = 1,
+      numPartitions = 3)
+    checkStore(root, Analyzers.Standard, None)
+  }
+
+  test("buildSegments, three batches, Shingles(2) with payloads") {
+    val root = tmp()
+    IndexBuilder.buildSegments(spark, turns, root, numBatches = 3,
+      numPartitions = 3, assigner = Some(boost), kind = Analyzers.Shingles(2),
+      payTag = "boost")
+    checkStore(root, Analyzers.Shingles(2), Some(boost))
+  }
+
+  test("appendSegment, deleteByTerm, then forceMerge") {
+    val root = tmp()
+    IndexBuilder.buildSegments(spark, turns.filter(col("conv_id") < "c000030"),
+      root, numBatches = 2, numPartitions = 3)
+    IndexBuilder.appendSegment(spark,
+      turns.filter(col("conv_id") >= "c000030"), root, numPartitions = 3)
+    IndexBuilder.deleteByTerm(spark, root, "deploy")
+    IndexBuilder.forceMerge(spark, root, numPartitions = 3)
+    val m = SegmentStore.latest(root).get
+    assert(m.segments.size == 1 && m.deletes.isEmpty)
+    checkStore(root, Analyzers.Standard, None)
   }
 }

@@ -1,18 +1,13 @@
 package graft.search
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import scala.collection.mutable
 import scala.util.Random
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
   ArrayFilter, ArrayTransform, Expression, MapFromArrays, ZipWith}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
-  SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
@@ -22,7 +17,6 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   Exchange}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions.{col, date_format}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -48,57 +42,11 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     SegmentStore.open(spark, root)
   }
 
-  private val TagKey = "graft.spec.tag"
-
-  /** Jobs started and physical plans executed while `body` runs. Jobs
-    * are matched by a local property set on this thread (Spark hands it
-    * to every job an action starts); plans come from a
-    * QueryExecutionListener. Both arrive over the asynchronous listener
-    * bus, so this waits until no job is open and the bus has been quiet
-    * for 300 ms. */
+  /** Jobs started and physical plans executed while `body` runs
+    * ([[SparkFixture.record]]). */
   private def record(body: => Unit): (Int, Seq[SparkPlan]) = {
-    val sc = spark.sparkContext
-    val tag = s"plan-${System.nanoTime()}"
-    val started, open, events = new AtomicInteger
-    val plans = mutable.ArrayBuffer.empty[SparkPlan]
-    def ours(props: java.util.Properties): Boolean =
-      props != null && props.getProperty(TagKey) == tag
-    val jobs = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) {
-          started.incrementAndGet(); open.incrementAndGet()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        open.updateAndGet(n => math.max(0, n - 1))
-      override def onOtherEvent(e: SparkListenerEvent): Unit =
-        events.incrementAndGet()
-    }
-    val queries = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan }
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    sc.addSparkListener(jobs)
-    spark.listenerManager.register(queries)
-    val prev = sc.getLocalProperty(TagKey)
-    sc.setLocalProperty(TagKey, tag)
-    try body
-    finally {
-      sc.setLocalProperty(TagKey, prev)
-      val deadline = System.nanoTime() + 10000000000L
-      var last = -1
-      var quietSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-        (open.get != 0 || System.nanoTime() - quietSince < 300000000L)) {
-        val seen = events.get + started.get + plans.synchronized(plans.size)
-        if (seen != last) { last = seen; quietSince = System.nanoTime() }
-        Thread.sleep(20)
-      }
-      spark.listenerManager.unregister(queries)
-      sc.removeSparkListener(jobs)
-    }
-    (started.get, plans.synchronized(plans.toSeq))
+    val r = SparkFixture.record(body)
+    (r.jobs, r.plans)
   }
 
   private def isDictScan(p: SparkPlan): Boolean = p match {
