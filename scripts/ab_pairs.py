@@ -12,7 +12,10 @@ seed, alternating which side runs first. Each tree builds its own engine
 and benchmark on its first run. Per end-to-end metric of BENCHMARK.json it
 prints both medians and quartiles, the base's IQR, the change's wins (the
 pairs in which the checkout did better), and whether the medians differ
-by more than the base's IQR. The export is deleted at the end; nothing
+by more than the base's IQR. Per pair it prints each side's `attempted`
+(the operations a run timed and checked) and flags a pair whose two sides
+differ in it: a time-limited workload lets a faster side run more steps,
+and later steps run warmer. The export is deleted at the end; nothing
 tracked in either tree is written (perfbench writes only under its
 ignored out/ and target/ directories).
 
@@ -96,6 +99,13 @@ def main():
              if b is not None and c is not None]
     print(f"\n{a.workload}: {len(pairs)} complete pairs, base {a.rev}, "
           f"seeds {a.seed0}-{a.seed0 + a.pairs - 1}")
+    print(f"{'pair':>4} {'seed':>6} {'base attempted':>15} "
+          f"{'change attempted':>17}")
+    for i, (b, c) in enumerate(zip(runs["base"], runs["change"])):
+        got = [None if r is None else r.get("attempted") for r in (b, c)]
+        flag = "  differs" if None not in got and got[0] != got[1] else ""
+        print(f"{i + 1:>4} {a.seed0 + i:>6} {str(got[0]):>15} "
+              f"{str(got[1]):>17}{flag}")
     print(f"{'metric':28} {'base q1/median/q3':>30} "
           f"{'change q1/median/q3':>30} {'base IQR':>10} {'wins':>6} "
           f"{'> IQR':>6}")

@@ -125,29 +125,21 @@ final case class InvertedIndex(
     * would read every block (TermInfosReader seek analog,
     * /root/reference/src/core/Index/TermInfosReader.cs:178-196). */
   def postingsFor(terms: Seq[String]): DataFrame =
-    live(PostingBlocks.toPostings(blocksOf(terms)))
+    live(PostingBlocks.toPostings(blocksFor(terms)))
 
-  private def blocksOf(terms: Seq[String]): DataFrame =
+  /** The block rows of a fixed term set, undecoded and with deleted docs
+    * still in them: the input of the query layer's per-doc fold, which
+    * decodes each block as it folds and skips the docs of the resident
+    * delete set ([[deletedIds]]). */
+  def blocksFor(terms: Seq[String]): DataFrame =
     blockTable.filter(col("term").isin(terms: _*))
 
   /** Scoring-only postings for a fixed term set: (term, docid, tf, len),
     * positions never decoded (TermDocs semantics — SegmentTermDocs.cs:30
-    * reads .frq without .prx). The BM25 paths use this. */
+    * reads .frq without .prx): the column-form term scores and explain
+    * read it. */
   def postingsForScoring(terms: Seq[String]): DataFrame =
-    live(PostingBlocks.toScoring(blocksOf(terms)))
-
-  /** Scoring-only postings for a computed (small) term-set DataFrame —
-    * broadcast semi-joined against the block table before decode. */
-  def postingsForTermSetScoring(terms: DataFrame): DataFrame =
-    live(PostingBlocks.toScoring(blockTable.join(broadcast(terms), Seq("term"))))
-
-  /** Scoring-only postings for every term matching a dictionary
-    * predicate (constant-score multi-term rewrites, MultiTermQuery.cs:84).
-    * The predicate is a pure function of `term`, so it applies to the
-    * block table directly — a pushed-down scan filter instead of a
-    * dictionary scan broadcast into the blocks. */
-  def postingsWhereTermScoring(dictPred: Column): DataFrame =
-    live(PostingBlocks.toScoring(blockTable.filter(dictPred)))
+    live(PostingBlocks.toScoring(blocksFor(terms)))
 
   /** Payload-materializing variant of [[postingsFor]] — adds the
     * `payloads` column (parallel to positions), decoded from the
@@ -155,7 +147,7 @@ final case class InvertedIndex(
     * reads as 1.0f, so an index built without an assigner scores every
     * payload neutrally. */
   def postingsForPay(terms: Seq[String]): DataFrame =
-    live(PostingBlocks.toPostingsPay(blocksOf(terms)))
+    live(PostingBlocks.toPostingsPay(blocksFor(terms)))
 }
 
 object InvertedIndex {
@@ -578,8 +570,8 @@ object IndexBuilder {
       toMerge.map(s => read(s.id)).reduce(_ unionByName _)
     val del: Option[DataFrame] =
       if (m.deletes.isEmpty) None
-      else Some(m.deletes.map(d => spark.read.parquet(s"$root/$d"))
-        .reduce(_ unionByName _).select("docid").distinct())
+      else Some(m.deletes.map(SegmentStore.readDeletes(spark, root, _))
+        .reduce(_ unionByName _).distinct())
     def live(df: DataFrame): DataFrame = del match {
       case Some(d) => df.join(d, Seq("docid"), "left_anti")
       case None => df

@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** One committed segment: a self-contained mini-index (docs + compressed
   * posting blocks + doclens + term dict), immutable once referenced by a
@@ -195,6 +197,20 @@ object SegmentStore {
     spark.read.schema(PostingBlocks.BlockEnc.schema)
       .parquet(s"${segDir(root, id)}/blocks")
 
+  /** A segment's (term, df, cf) dictionary, read with its known schema. */
+  private def readDict(spark: SparkSession, root: String,
+      id: String): DataFrame =
+    spark.read.schema(DictSchema).parquet(s"${segDir(root, id)}/dict")
+
+  private val DictSchema = StructType(Seq(StructField("term", StringType),
+    StructField("df", LongType), StructField("cf", LongType)))
+
+  /** A committed delete set's (docid) rows, read with their known schema. */
+  private[index] def readDeletes(spark: SparkSession, root: String,
+      dir: String): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("docid", LongType))))
+      .parquet(s"$root/$dir")
+
   /** The lineage marker is written LAST, after every table, so a crash
     * mid-write leaves an incomplete (ignored, re-buildable) dir. */
   def markComplete(root: String, meta: SegmentMeta): Unit =
@@ -215,7 +231,10 @@ object SegmentStore {
   /** Open the latest commit point as a logical InvertedIndex. Collection
     * stats (numDocs, avgdl) come from the manifest — no scan. The blocks
     * handle is kept so term lookups prune blocks BEFORE decoding
-    * (predicate pushdown can't cross the decode flatMap). */
+    * (predicate pushdown can't cross the decode flatMap). Blocks,
+    * dictionaries and delete sets are read with their known schemas, so
+    * only each segment's docs table (whose columns follow the ingested
+    * turns) runs a schema-inference job. */
   def open(spark: SparkSession, root: String): InvertedIndex =
     reopen(spark, root, None).index
 
@@ -238,8 +257,7 @@ object SegmentStore {
         s.id -> prevViews.getOrElse(s.id, {
           val d = segDir(root, s.id)
           SegmentView(spark.read.parquet(s"$d/docs"),
-            spark.read.parquet(s"$d/blocks"),
-            spark.read.parquet(s"$d/dict"))
+            readBlocks(spark, root, s.id), readDict(spark, root, s.id))
         })
       }
       OpenIndex(m.version, views, assemble(spark, root, m, views.map(_._2)))
@@ -263,9 +281,8 @@ object SegmentStore {
     // reference's behavior.
     val deleted: Option[DataFrame] =
       if (m.deletes.isEmpty) None
-      else Some(m.deletes
-        .map(d => spark.read.parquet(s"$root/$d"))
-        .reduce(_ unionByName _).select("docid"))
+      else Some(m.deletes.map(readDeletes(spark, root, _))
+        .reduce(_ unionByName _))
     InvertedIndex.ofBlocks(docs0, blocks, dict, m.numDocs, m.sumLen,
       deleted, segmentDicts = Some(segDicts))
   }

@@ -3,14 +3,14 @@ package graft.search
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
-  Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.index.InvertedIndex
+import graft.index.{Codec, InvertedIndex}
 
 /** Query execution: AST → (docid, score) DataFrame plans.
   *
@@ -19,11 +19,13 @@ import graft.index.InvertedIndex
   * second fold over the same sub-scorers; the exact and sloppy
   * PhraseScorers, SpanScorer and the payload scorers walking position
   * iterators). Here each of them is one typed per-doc fold
-  * ([[Searcher.perDoc]]): a `mapPartitions` that gathers each doc's rows
-  * in a hash map and folds them in plain Scala.
+  * ([[Searcher.perDoc]]): a `mapPartitions` over posting blocks that
+  * decodes each block, gathers each doc's postings in a hash map and
+  * folds them in plain Scala, a posting scoring [[Similarity.scoreD]].
   *  - Boolean and DisMax trees ([[Searcher.Fold]]): every (boosted) term
-  *    leaf, at any depth, is read by one [[termScores]] scan, and every
-  *    other leaf is its own [[score]] frame. Leaves are slots numbered in
+  *    leaf, at any depth, is read by one scan of the terms' blocks, and
+  *    every other leaf is its own [[score]] frame, unioned into the
+  *    fold's input as one-doc rows. Leaves are slots numbered in
   *    clause order, and one walk of the tree over a doc's slots applies
   *    the boolean algebra (must/should/not counts, minShouldMatch, coord)
   *    or the DisMax one (max + tie·(sum − max)), nested nodes
@@ -51,12 +53,15 @@ import graft.index.InvertedIndex
   * phrase, prefix or keyword-and-term query) is one Spark job with no
   * exchange. df, prefix and range expansions come from the index's
   * resident dictionary and deletes from its resident delete set (no
-  * dictionary or delete-set job); a fold that reads at most
-  * [[Searcher.SingleTaskRows]] estimated rows runs in one task
-  * ([[Searcher.oneTask]]), so its plan has no aggregate, exchange or
-  * adaptive wrapper; and per-query numbers reach the plan as lookups
-  * (df) or inside a fold's closure (idf sums), never as literals, so a
-  * same-shape query compiles nothing new.
+  * dictionary or delete-set job). A fold that reads at most
+  * [[Searcher.SingleTaskRows]] estimated rows is one block scan feeding
+  * one `mapPartitions` in one task: a filtered scan, `coalesce(1)`, one
+  * `DeserializeToObject`, the fold, which keeps a bounded heap of the k
+  * best docs, and nothing after it — no aggregate, exchange, adaptive
+  * wrapper or TakeOrderedAndProject (whose `takeOrdered` sends closures
+  * through Spark's ClosureCleaner on every query). Per-query numbers
+  * (df and idf, boosts) live in the fold's closure, never in literals,
+  * so a same-shape query compiles nothing new.
   */
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   /** Per-(term, docid) BM25 partial scores for a set of query terms.
@@ -108,19 +113,22 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     cl
   }
 
-  /** The per-doc fold of boolean and DisMax trees, one per (qid, query),
-    * as (qid, docid, score) for every query a doc satisfies. BoolQ and
+  /** The per-doc fold of boolean and DisMax trees, query `qi` the i-th
+    * of `queries`, as (qi, docid, score) for every query a doc satisfies
+    * — with `k`, each query's k best ([[Searcher.perDoc]]). BoolQ and
     * DisMaxQ nodes recurse; every other clause is a leaf taking its
     * query's next slot, so slots follow clause order, depth first. The
-    * term leaves of every tree are read by ONE [[termScores]] scan, and
-    * every other leaf is its own [[score]] frame unioned in. The fold
-    * runs in one task when the leaves read few rows, unless `parallel`. */
-  private def foldTrees(queries: Seq[(String, Query)],
-      parallel: Boolean): DataFrame = {
+    * term leaves of every tree are read by ONE scan of their blocks, each
+    * posting scored by [[Similarity.scoreD]], and every other leaf is its
+    * own [[score]] frame unioned in as one-doc rows. The fold runs in one
+    * task when the leaves read few rows, unless `parallel`. */
+  private def foldTrees(queries: Seq[Query], parallel: Boolean,
+      k: Option[Int]): DataFrame = {
     val terms = Seq.newBuilder[(String, (Int, Int, Double))]
     val frames = Seq.newBuilder[DataFrame]
+    val leaves = ArrayBuffer.empty[(Int, Int)]
     var est = 0L
-    val trees = queries.zipWithIndex.map { case ((qid, q), qi) =>
+    val trees = queries.zipWithIndex.map { case (q, qi) =>
       var slots = 0
       def treeOf(c: Query): Searcher.Fold = c match {
         case b: BoolQ =>
@@ -134,48 +142,45 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
           slots += 1
           asSimpleTerm(c) match {
             case Some((t, b)) => terms += ((t, (qi, slot, b)))
-            case None => frames += score(c).select(col("docid"),
-              lit(null).cast("string").as("term"), lit(qi).as("qi"),
-              lit(slot).as("slot"), col("score"))
+            case None =>
+              frames += score(c).select(col("docid"),
+                lit(leaves.size).as("leaf"), col("score"), lit(-1L).as("len"))
+              leaves += ((qi, slot))
           }
           est += estRows(c)
           Searcher.Leaf(slot)
       }
-      (qid, treeOf(q))
+      treeOf(q)
     }
-    val ts = terms.result()
-    val scan = Option.when(ts.nonEmpty)(termScores(ts.map(_._1).toSet)
-      .select(col("docid"), col("term"), lit(0).as("qi"), lit(0).as("slot"),
-        col("tscore").as("score")))
-    Searcher.foldTrees((scan.toSeq ++ frames.result()).reduce(_ unionByName _),
-      if (parallel) Long.MaxValue else est, sim, trees.toArray,
-      ts.groupMap(_._1)(_._2).map { case (t, ls) => t -> ls.toArray })
+    // a term posting scores idf × tfNorm(tf, len) (Similarity.scoreD),
+    // times the boost of each (qi, slot, boost) leaf of the term; a
+    // non-term row is the (qi, slot) leaf `leaves` numbers it
+    val dfs = dfOf(terms.result().map(_._1).toSet)
+    val byTerm = terms.result().groupMap(_._1)(_._2).collect {
+      case (t, ls) if dfs.contains(t) =>
+        t -> (sim.idfColD(idx.numDocs, dfs(t)), ls.toArray) }
+    val (s, avgdl, at, fold) = (sim, idx.avgdl, leaves.toArray, trees.toArray)
+    Searcher.perDoc[ArrayBuffer[(Int, Double)]](idx, Searcher.foldInput(
+        idx.blocksFor(byTerm.keys.toSeq.sorted), frames.result()),
+        if (parallel) Long.MaxValue else est, Searcher.Freqs, k,
+        queries.size)(() => ArrayBuffer.empty) { (h, hits) =>
+      if (h.term == null) {
+        val (qi, slot) = at(h.leaf)
+        hits(Searcher.DocKey(qi, h.docid)) += ((slot, h.score))
+      } else {
+        val (idf, ls) = byTerm(h.term)
+        val x = idf * s.tfNormD(h.tf.toDouble, h.len, avgdl)
+        ls.foreach { case (qi, slot, b) =>
+          hits(Searcher.DocKey(qi, h.docid)) += ((slot, x * b)) }
+      }
+    } { (key, hits) =>
+      val e = new Searcher.Eval(s, hits.sortBy(_._1))
+      Option.when(e(fold(key.qi)))(e.score)
+    }
   }
 
   /** Evaluate to one row per matching doc: (docid: long, score: double). */
-  def score(q: Query): DataFrame = q match {
-    case TermQ(t) =>
-      termScores(Set(t)).select(col("docid"), col("tscore").as("score"))
-
-    case _: BoolQ | _: DisMaxQ =>
-      foldTrees(Seq("" -> q), parallel = false).select("docid", "score")
-
-    case _: PhraseQ | _: MultiPhraseQ | _: SpanFirstQ | _: SpanNearQ |
-        _: SpanNotQ | _: SpanOrQ | _: SpanQ | _: PayloadTermQ |
-        _: PayloadNearQ | _: PayloadSpanNearQ =>
-      positions(q)
-
-    case PrefixQ(p, rw) =>
-      multiTerm(col("term").startsWith(p), rw, Some(_.withPrefix(p)))
-
-    case RegexQ(pat, rw) =>
-      // whole-term match (RegexTermEnum anchors the pattern); a literal
-      // pattern prefix becomes a startsWith pre-filter — a range scan on
-      // a term-sorted dictionary instead of a full regex scan (the
-      // WildcardTermEnum.cs:32 prefix-seek analog)
-      val (pred, local) = Searcher.regexMatch(pat)
-      multiTerm(pred, rw, Some(local))
-
+  def score(q: Query): DataFrame = folded(q, None).getOrElse(q match {
     case FunctionQ(e) =>
       // ValueSourceQuery: every live doc, score = f(forward columns)
       idx.docs.select(col("docid"), expr(e).cast("double").as("score"))
@@ -186,141 +191,10 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
           expr(e).cast("double").as("__cs")), Seq("docid"))
         .select(col("docid"), (col("score") * col("__cs")).as("score"))
 
-    case WildcardQ(pat, rw) =>
-      // constant-prefix pushdown (WildcardTermEnum.cs:32: the enum seeks
-      // to the literal prefix before matching): `spark*`-style patterns
-      // become a dictionary RANGE predicate + residual regex, not a full
-      // dictionary regex scan
-      val rx = Searcher.globToRegex(pat)
-      val pfx = pat.takeWhile(c => c != '*' && c != '?')
-      val pred = col("term").rlike(rx)
-      multiTerm(if (pfx.nonEmpty) col("term").startsWith(pfx) && pred else pred,
-        rw, Some(Searcher.matching(pfx, Some(rx))))
-
-    case TermRangeQ(lo, hi, il, ih, rw, coll) =>
-      // an uncollated range is one slice of the resident dictionary,
-      // which keeps Spark's string order. The collated variant
-      // (TermRangeQuery.cs:96) compares under the ICU locale collation —
-      // native in Spark 4 (collate() stays inside codegen), so that range
-      // is a dictionary-scan predicate, never a driver loop
-      val t = coll.map(c => collate(col("term"), c)).getOrElse(col("term"))
-      val conds = Seq(
-        lo.map(v => if (il) t >= v else t > v),
-        hi.map(v => if (ih) t <= v else t < v)).flatten
-      multiTerm(conds.reduceOption(_ && _).getOrElse(lit(true)), rw,
-        Option.when(coll.isEmpty)(_.range(lo, hi, il, ih)))
-
-    case FuzzyQ(t, maxEdits) =>
-      // scoring-boolean rewrite with similarity boost (FuzzyTermEnum):
-      // boost = 1 - dist / min(|candidate|, |query|). Candidate
-      // generation uses the pigeonhole filter (Navarro's partition
-      // lemma): split the query into maxEdits+1 contiguous pieces — any
-      // term within maxEdits edits contains >=1 piece EXACTLY, so the
-      // pre-filter has guaranteed recall and the expensive levenshtein
-      // DP runs once per surviving candidate, not per dictionary term.
-      // Results are therefore identical to a full scan. When the index
-      // carries a persisted trigram table (SpellChecker.cs:60 shape) and
-      // every piece is >= 3 chars, candidates come from a BOUNDED
-      // gram-range scan of that table (a contained piece implies its
-      // first trigram is shared) instead of a full-dictionary contains()
-      // scan — the 10^9-term path.
-      // boost <= 0 (dist >= min length) means "not similar at all": the
-      // reference's FuzzyTermEnum never yields such terms (its
-      // similarity threshold is positive), so they are EXCLUDED, not
-      // scored negatively
-      val cand = fuzzyCandidates(t, maxEdits)
-        .withColumn("dist", levenshtein(col("term"), lit(t)))
-        .filter(col("dist") <= maxEdits)
-        .withColumn("boost", lit(1.0) - col("dist").cast("double") /
-          least(length(col("term")), lit(t.length)).cast("double"))
-        .filter(col("boost") > 0)
-        .select(col("term"), col("df"), col("boost"))
-      val scored = idx.postingsForTermSetScoring(cand.select("term"))
-        .join(broadcast(cand), Seq("term"))
-        .select(col("docid"), col("term").as("ord"),
-          (sim.score(idx.numDocs, idx.avgdl, col("df"), col("tf"),
-            col("len")) * col("boost")).as("score"))
-      Searcher.ordSum(scored, idx.numDocs)
-
-    case FuzzyLikeThisQ(text, maxEdits, maxNumTerms) =>
-      // FuzzyLikeThisQuery.cs:190-318. Per analyzed source term:
-      // candidates within maxEdits (bounded trigram/pigeonhole scan, as
-      // FuzzyQ), similarity = 1 - dist/min-length; the source term's df
-      // (or, when absent from the dictionary, the INTEGER average of the
-      // variants' dfs — FuzzyLikeThisQuery.cs:236-240) feeds ONE shared
-      // idf, so vscore = sim² × idf(df_eff). Top 50 variants per source
-      // term, then the globally best maxNumTerms across all terms, each
-      // scoring docs as vscore × tf-norm — the variant's own idf is
-      // deliberately NOT applied (the reference's FuzzyTermQuery forces
-      // idf=1 because the source idf already sits in the boost).
-      val srcTerms =
-        graft.analysis.Analyzer.analyzeQuery(text).distinct
-      // stopword-only / empty text matches nothing (the MatchNoneQ
-      // convention the parser uses for the same input)
-      if (srcTerms.isEmpty)
-        return idx.docs.select(col("docid"), lit(1.0).as("score"))
-          .filter(lit(false))
-      require(srcTerms.size <= Searcher.MaxClauseCount,
-        s"too many fuzzified terms (maxClauseCount=${Searcher.MaxClauseCount})")
-      // sim <= 0 variants are excluded (not scored): squaring would
-      // otherwise turn "maximally dissimilar" into "exact match" — and
-      // the reference's enum never yields sub-threshold terms
-      val cand = srcTerms
-        .map(t => fuzzyCandidates(t, maxEdits).withColumn("src", lit(t)))
-        .reduce(_ unionByName _)
-        .withColumn("dist", levenshtein(col("term"), col("src")))
-        .filter(col("dist") <= maxEdits)
-        .withColumn("sim", lit(1.0) - col("dist").cast("double") /
-          least(length(col("term")), length(col("src"))).cast("double"))
-        .filter(col("sim") > 0)
-      // the candidate set is small (bounded per-term scans), so the
-      // per-source-term windows shuffle a tiny table, never postings
-      val bySrc = Window.partitionBy("src")
-      val sel = cand
-        .withColumn("src_df",
-          max(when(col("term") === col("src"), col("df"))).over(bySrc))
-        .withColumn("df_eff", coalesce(col("src_df"),
-          floor(sum(col("df")).over(bySrc).cast("double") /
-            count(lit(1)).over(bySrc)).cast("long")))
-        .withColumn("vscore", col("sim") * col("sim") *
-          sim.idfCol(idx.numDocs, col("df_eff")))
-        .withColumn("vrank", row_number().over(Window.partitionBy("src")
-          .orderBy(col("sim").desc, col("term").asc)))
-        .filter(col("vrank") <= Searcher.MaxVariantsPerTerm)
-        .orderBy(col("vscore").desc, col("term").asc, col("src").asc)
-        .limit(maxNumTerms)
-        .select(col("term"), col("src"), col("vscore"))
-      // the selection is <= maxNumTerms rows: collect it (the reference
-      // rewrite materializes the chosen variants the same way) so the
-      // final postings scan gets LITERAL term predicates — parquet
-      // pushdown + block pruning — instead of a join-filtered full
-      // block-table read. Per-(src, term) rows are kept (a term chosen
-      // for two source terms contributes twice, like the reference's
-      // separate FuzzyTermQuery instances) and the fold order (ord =
-      // src|term) is unchanged.
-      val selRows = sel.collect()
-        .map(r => (r.getString(1), r.getString(0), r.getDouble(2)))
-      if (selRows.isEmpty)
-        idx.docs.select(col("docid"), lit(1.0).as("score"))
-          .filter(lit(false))
-      else {
-        val spark = idx.docs.sparkSession
-        import spark.implicits._
-        val selDf = selRows.toSeq.toDF("src", "term", "vscore")
-        Searcher.ordSum(idx.postingsForScoring(selRows.map(_._2).distinct.toSeq)
-          .join(broadcast(selDf), Seq("term"))
-          .select(col("docid"),
-            concat(col("src"), lit("|"), col("term")).as("ord"),
-            (col("vscore") *
-              sim.tfNorm(col("tf"), col("len"), idx.avgdl)).as("score")),
-          idx.numDocs)
-      }
-
     case MatchAllQ =>
       idx.docs.select(col("docid"), lit(1.0).as("score"))
 
-    case MatchNoneQ =>
-      idx.docs.select(col("docid"), lit(1.0).as("score")).filter(lit(false))
+    case MatchNoneQ => noDocs
 
     case KeywordQ(field, value) =>
       idx.docs.filter(col(field) === value)
@@ -375,6 +249,187 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
             .otherwise(col("score")).as("score"))
 
     case MoreLikeThisQ(src, topN) => moreLikeThis(src, topN)
+
+    case other => sys.error(s"unsupported query: $other")
+  })
+
+  /** No doc, as (docid, score). */
+  private def noDocs: DataFrame =
+    idx.docs.select(col("docid"), lit(1.0).as("score")).filter(lit(false))
+
+  /** A query the per-doc fold scores — terms, booleans and DisMax, the
+    * position queries, the multi-term and fuzzy queries — as (docid,
+    * score) for every match or, with `k`, the k best in (score desc,
+    * docid asc) order ([[Searcher.perDoc]]); None for any other query. */
+  private def folded(q: Query, k: Option[Int]): Option[DataFrame] = q match {
+    case _: TermQ | _: BoolQ | _: DisMaxQ =>
+      Some(foldTrees(Seq(q), parallel = false, k).select("docid", "score"))
+
+    case _: PhraseQ | _: MultiPhraseQ | _: SpanFirstQ | _: SpanNearQ |
+        _: SpanNotQ | _: SpanOrQ | _: SpanQ | _: PayloadTermQ |
+        _: PayloadNearQ | _: PayloadSpanNearQ =>
+      Some(positions(q, None, k))
+
+    case PrefixQ(p, rw) =>
+      Some(multiTerm(col("term").startsWith(p), rw, Some(_.withPrefix(p)), k))
+
+    case RegexQ(pat, rw) =>
+      // whole-term match (RegexTermEnum anchors the pattern); a literal
+      // pattern prefix becomes a startsWith pre-filter — a range scan on
+      // a term-sorted dictionary instead of a full regex scan (the
+      // WildcardTermEnum.cs:32 prefix-seek analog)
+      val (pred, local) = Searcher.regexMatch(pat)
+      Some(multiTerm(pred, rw, Some(local), k))
+
+    case WildcardQ(pat, rw) =>
+      // constant-prefix pushdown (WildcardTermEnum.cs:32: the enum seeks
+      // to the literal prefix before matching): `spark*`-style patterns
+      // become a dictionary RANGE predicate + residual regex, not a full
+      // dictionary regex scan
+      val rx = Searcher.globToRegex(pat)
+      val pfx = pat.takeWhile(c => c != '*' && c != '?')
+      val pred = col("term").rlike(rx)
+      Some(multiTerm(
+        if (pfx.nonEmpty) col("term").startsWith(pfx) && pred else pred,
+        rw, Some(Searcher.matching(pfx, Some(rx))), k))
+
+    case TermRangeQ(lo, hi, il, ih, rw, coll) =>
+      // an uncollated range is one slice of the resident dictionary,
+      // which keeps Spark's string order. The collated variant
+      // (TermRangeQuery.cs:96) compares under the ICU locale collation —
+      // native in Spark 4 (collate() stays inside codegen), so that range
+      // is a dictionary-scan predicate, never a driver loop
+      val t = coll.map(c => collate(col("term"), c)).getOrElse(col("term"))
+      val conds = Seq(
+        lo.map(v => if (il) t >= v else t > v),
+        hi.map(v => if (ih) t <= v else t < v)).flatten
+      Some(multiTerm(conds.reduceOption(_ && _).getOrElse(lit(true)), rw,
+        Option.when(coll.isEmpty)(_.range(lo, hi, il, ih)), k))
+
+    case FuzzyQ(t, maxEdits) => Some(fuzzy(t, maxEdits, k))
+
+    case FuzzyLikeThisQ(text, maxEdits, maxNumTerms) =>
+      Some(fuzzyLikeThis(text, maxEdits, maxNumTerms, k))
+
+    case _ => None
+  }
+
+  /** FuzzyQ: the terms within `maxEdits` edits of `t`, each scoring its
+    * postings times its similarity boost, summed in term order. */
+  private def fuzzy(t: String, maxEdits: Int, k: Option[Int]): DataFrame = {
+    // scoring-boolean rewrite with similarity boost (FuzzyTermEnum):
+    // boost = 1 - dist / min(|candidate|, |query|). Candidate
+    // generation uses the pigeonhole filter (Navarro's partition
+    // lemma): split the query into maxEdits+1 contiguous pieces — any
+    // term within maxEdits edits contains >=1 piece EXACTLY, so the
+    // pre-filter has guaranteed recall and the expensive levenshtein
+    // DP runs once per surviving candidate, not per dictionary term.
+    // Results are therefore identical to a full scan. When the index
+    // carries a persisted trigram table (SpellChecker.cs:60 shape) and
+    // every piece is >= 3 chars, candidates come from a BOUNDED
+    // gram-range scan of that table (a contained piece implies its
+    // first trigram is shared) instead of a full-dictionary contains()
+    // scan — the 10^9-term path.
+    // boost <= 0 (dist >= min length) means "not similar at all": the
+    // reference's FuzzyTermEnum never yields such terms (its
+    // similarity threshold is positive), so they are EXCLUDED, not
+    // scored negatively. The candidates are few (bounded scans):
+    // collected, they are the literal term set of one block scan
+    val cand = fuzzyCandidates(t, maxEdits)
+      .withColumn("dist", levenshtein(col("term"), lit(t)))
+      .filter(col("dist") <= maxEdits)
+      .withColumn("boost", lit(1.0) - col("dist").cast("double") /
+        least(length(col("term")), lit(t.length)).cast("double"))
+      .filter(col("boost") > 0)
+      .select(col("term"), col("df"), col("boost")).collect()
+    ordSum(cand.toSeq.map(r => (r.getString(0), r.getString(0),
+      sim.idfColD(idx.numDocs, r.getLong(1)), r.getDouble(2))),
+      idx.numDocs, k)
+  }
+
+  /** FuzzyLikeThisQ: the best fuzzy variants of the analyzed `text`'s
+    * terms, each scoring its postings with its source term's weight. */
+  private def fuzzyLikeThis(text: String, maxEdits: Int, maxNumTerms: Int,
+    k: Option[Int]): DataFrame = {
+    // FuzzyLikeThisQuery.cs:190-318. Per analyzed source term:
+    // candidates within maxEdits (bounded trigram/pigeonhole scan, as
+    // FuzzyQ), similarity = 1 - dist/min-length; the source term's df
+    // (or, when absent from the dictionary, the INTEGER average of the
+    // variants' dfs — FuzzyLikeThisQuery.cs:236-240) feeds ONE shared
+    // idf, so vscore = sim² × idf(df_eff). Top 50 variants per source
+    // term, then the globally best maxNumTerms across all terms, each
+    // scoring docs as vscore × tf-norm — the variant's own idf is
+    // deliberately NOT applied (the reference's FuzzyTermQuery forces
+    // idf=1 because the source idf already sits in the boost).
+    val srcTerms =
+      graft.analysis.Analyzer.analyzeQuery(text).distinct
+    // stopword-only / empty text matches nothing (the MatchNoneQ
+    // convention the parser uses for the same input)
+    if (srcTerms.isEmpty) return noDocs
+    require(srcTerms.size <= Searcher.MaxClauseCount,
+      s"too many fuzzified terms (maxClauseCount=${Searcher.MaxClauseCount})")
+    // sim <= 0 variants are excluded (not scored): squaring would
+    // otherwise turn "maximally dissimilar" into "exact match" — and
+    // the reference's enum never yields sub-threshold terms
+    val cand = srcTerms
+      .map(t => fuzzyCandidates(t, maxEdits).withColumn("src", lit(t)))
+      .reduce(_ unionByName _)
+      .withColumn("dist", levenshtein(col("term"), col("src")))
+      .filter(col("dist") <= maxEdits)
+      .withColumn("sim", lit(1.0) - col("dist").cast("double") /
+        least(length(col("term")), length(col("src"))).cast("double"))
+      .filter(col("sim") > 0)
+    // the candidate set is small (bounded per-term scans), so the
+    // per-source-term windows shuffle a tiny table, never postings
+    val bySrc = Window.partitionBy("src")
+    val sel = cand
+      .withColumn("src_df",
+        max(when(col("term") === col("src"), col("df"))).over(bySrc))
+      .withColumn("df_eff", coalesce(col("src_df"),
+        floor(sum(col("df")).over(bySrc).cast("double") /
+          count(lit(1)).over(bySrc)).cast("long")))
+      .withColumn("vscore", col("sim") * col("sim") *
+        sim.idfCol(idx.numDocs, col("df_eff")))
+      .withColumn("vrank", row_number().over(Window.partitionBy("src")
+        .orderBy(col("sim").desc, col("term").asc)))
+      .filter(col("vrank") <= Searcher.MaxVariantsPerTerm)
+      .orderBy(col("vscore").desc, col("term").asc, col("src").asc)
+      .limit(maxNumTerms)
+      .select(col("term"), col("src"), col("vscore"))
+    // the selection is <= maxNumTerms rows: collect it (the reference
+    // rewrite materializes the chosen variants the same way) so the
+    // final postings scan gets LITERAL term predicates — parquet
+    // pushdown + block pruning — instead of a join-filtered full
+    // block-table read. Per-(src, term) rows are kept (a term chosen
+    // for two source terms contributes twice, like the reference's
+    // separate FuzzyTermQuery instances), each adding vscore ×
+    // tfNorm in the order of its ord, src|term.
+    val selRows = sel.collect()
+    if (selRows.isEmpty) noDocs
+    else ordSum(selRows.toSeq.map(r => (r.getString(0),
+      r.getString(1) + "|" + r.getString(0), r.getDouble(2), 1.0)),
+      idx.numDocs, k)
+  }
+
+  /** Each doc's sum from 0.0 of its postings' contributions in the order
+    * of their ords, Spark's string order ([[InvertedIndex.Utf8Order]]) as
+    * `sort_array` orders a string: a (term, ord, w, f) entry adds
+    * (w × tfNorm(tf, len)) × f for each posting of the term. `est` is the
+    * rows the fold reads. */
+  private def ordSum(entries: Seq[(String, String, Double, Double)],
+      est: Long, k: Option[Int]): DataFrame = {
+    val byTerm = entries.groupMap(_._1) { case (_, ord, w, f) => (ord, w, f) }
+      .map { case (t, es) => t -> es.toArray }
+    val (s, avgdl) = (sim, idx.avgdl)
+    Searcher.perDoc[ArrayBuffer[(String, Double)]](idx,
+        Searcher.foldInput(idx.blocksFor(byTerm.keys.toSeq.sorted)), est,
+        Searcher.Freqs, k)(() => ArrayBuffer.empty) { (h, docs) =>
+      val tfn = s.tfNormD(h.tf.toDouble, h.len, avgdl)
+      val xs = docs(Searcher.DocKey(0, h.docid))
+      byTerm(h.term).foreach { case (ord, w, f) => xs += ((ord, w * tfn * f)) }
+    } { (_, xs) =>
+      Some(xs.sortBy(_._1)(InvertedIndex.Utf8Order).foldLeft(0.0)(_ + _._2))
+    }.select("docid", "score")
   }
 
   /** Multi-term rewrite dispatch (MultiTermQuery.cs:58-200). The auto
@@ -384,21 +439,21 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * term set of the postings scan. `local` is `dictPred` as a walk of
     * the resident dictionary; with it the matches cost no job. */
   private def multiTerm(dictPred: Column, rw: MultiTermRewrite,
-      local: Option[Searcher.Local]): DataFrame =
+      local: Option[Searcher.Local], k: Option[Int]): DataFrame =
     dictRange(local) match {
       case Some(ms) =>
         if (rw == ScoringBoolean ||
             rw == AutoRewrite && ms.size <= Searcher.AutoRewriteTermCap)
-          scoredOverTerms(ms.keySet)
-        else constantOverTerms(dictPred, ms.values.sum)
+          scoredOverTerms(ms.keySet, k)
+        else constantOverTerms(dictPred, ms.values.sum, k)
       case None => rw match {
-        case ConstantScore => constantOverTerms(dictPred, Long.MaxValue)
+        case ConstantScore => constantOverTerms(dictPred, Long.MaxValue, k)
         case ScoringBoolean =>
-          scoredOverTerms(dictMatches(dictPred, None).get)
+          scoredOverTerms(dictMatches(dictPred, None).get, k)
         case AutoRewrite =>
           dictMatches(dictPred, Some(Searcher.AutoRewriteTermCap)) match {
-            case Some(terms) => scoredOverTerms(terms)
-            case None => constantOverTerms(dictPred, Long.MaxValue)
+            case Some(terms) => scoredOverTerms(terms, k)
+            case None => constantOverTerms(dictPred, Long.MaxValue, k)
           }
       }
     }
@@ -467,23 +522,28 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     }
   }
 
-  /** Constant-score multi-term rewrite (MultiTermQuery.cs:84-114): match
-    * the dictionary predicate, semi-join into postings, one row per doc
-    * — in one task when the matched terms' postings (`rows`) are few. */
-  private def constantOverTerms(dictPred: Column, rows: Long): DataFrame =
-    Searcher.perDoc[java.lang.Long, AnyRef, (Long, Double)](
-        idx.postingsWhereTermScoring(dictPred).select("docid"), rows,
-        Searcher.ScoreEnc)(() => None)((r, doc) => doc(r.getLong(0)))(
-        (docid, _) => Some((docid, 1.0)))
-      .toDF("docid", "score")
+  /** Constant-score multi-term rewrite (MultiTermQuery.cs:84-114): the
+    * blocks of the terms matching the dictionary predicate (a pushed-down
+    * scan filter), one row per doc at score 1.0 — in one task when the
+    * matched terms' postings (`rows`) are few. */
+  private def constantOverTerms(dictPred: Column, rows: Long,
+      k: Option[Int]): DataFrame =
+    Searcher.perDoc[AnyRef](idx,
+        Searcher.foldInput(idx.blockTable.filter(dictPred)),
+        rows, Searcher.Freqs, k)(() => None) { (h, docs) =>
+      docs(Searcher.DocKey(0, h.docid))
+    } { (_, _) => Some(1.0) }.select("docid", "score")
 
   /** Scoring-boolean multi-term rewrite (MultiTermQuery.cs:117-151)
-    * over the expanded term set: every term is BM25-scored; per-doc sum
-    * in term order (deterministic float fold, same as FuzzyQ). */
-  private def scoredOverTerms(terms: Set[String]): DataFrame =
-    Searcher.ordSum(termScores(terms).select(col("docid"),
-      col("term").as("ord"), col("tscore").as("score")),
-      dfOf(terms).values.sum)
+    * over the expanded term set: every posting scored as a term query's
+    * ([[Similarity.scoreD]]); per-doc sum in term order (deterministic
+    * float fold, same as FuzzyQ). */
+  private def scoredOverTerms(terms: Set[String], k: Option[Int])
+      : DataFrame = {
+    val dfs = dfOf(terms)
+    ordSum(dfs.toSeq.map { case (t, df) =>
+      (t, t, sim.idfColD(idx.numDocs, df), 1.0) }, dfs.values.sum, k)
+  }
 
   /** The rows a query's plan reads, estimated for [[Searcher.oneTask]]:
     * Σ df of its terms from [[dfOf]] (a phrase reads each distinct term
@@ -510,54 +570,51 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * payload function in a payload query (or that alone, without
     * includeSpanScore). The flat and payload queries sum idf over their
     * clauses as given, a repeated term each time; `est` overrides the
-    * fold's estimated rows. */
-  private[search] def positions(q: Query, est: Option[Long] = None)
-      : DataFrame = {
+    * fold's estimated rows, and with `k` only the k best docs are kept. */
+  private[search] def positions(q: Query, est: Option[Long] = None,
+      k: Option[Int] = None): DataFrame = {
     import Spans.TermLeaf
     def payWeighted(idf: Double, fn: PayloadFn, inc: Boolean) =
       Searcher.payWeighted(sim, idf, idx.avgdl, fn, inc) _
     q match {
       case PhraseQ(ts, slop) =>
         require(ts.nonEmpty, "empty phrase")
-        phrase(ts.map { case (t, off) => (Seq(t), off) }, slop, est)
+        phrase(ts.map { case (t, off) => (Seq(t), off) }, slop, est, k)
       case MultiPhraseQ(slots) =>
         require(slots.nonEmpty, "empty multi-phrase")
-        phrase(slots, 0, est)
+        phrase(slots, 0, est, k)
       case SpanFirstQ(t, end) =>
-        positional(Seq(TermLeaf(t)), est)(weighted(idfOf(Seq(t)))(
+        positional(Seq(TermLeaf(t)), est, k)(weighted(idfOf(Seq(t)))(
           _.pos(0).count(_ < end).toDouble))
       case SpanNearQ(a, b, slop, inOrder) =>
-        positional(Seq(a, b).map(TermLeaf), est)(weighted(idfOf(Seq(a, b)))(
+        positional(Seq(a, b).map(TermLeaf), est, k)(weighted(idfOf(Seq(a, b)))(
           d => Searcher.nearFreq(d.pos(0), d.pos(1), slop, inOrder,
             Array.emptyIntArray)))
       case SpanNotQ(a, b, slop, exc) =>
-        positional(Seq(a, b, exc).map(TermLeaf), est)(
+        positional(Seq(a, b, exc).map(TermLeaf), est, k)(
           weighted(idfOf(Seq(a, b)))(d => Searcher.nearFreq(d.pos(0), d.pos(1), slop, true, d.pos(2))))
       case SpanOrQ(ts) =>
         // SpanOrQuery's freq: the summed tf of its distinct terms
-        positional(ts.distinct.map(TermLeaf), est)(weighted(idfOf(ts.distinct))(
+        positional(ts.distinct.map(TermLeaf), est, k)(weighted(idfOf(ts.distinct))(
           _.pos.map(_.length.toLong).sum.toDouble))
-      case SpanQ(sp) => spanQuery(sp, est)
+      case SpanQ(sp) => spanQuery(sp, est, k)
       case PayloadTermQ(t, fn, inc) =>
         // PayloadTermQuery.cs:26-40: the term's bm25 times fn of its
-        // payloads, in position order. Its idf is the plan's idfCol
+        // payloads, in position order, weighted with the plan's idf
         // (StrictMath's log, which can differ from the driver's idf in
-        // the last bit), folded from a one-row local relation: no job.
-        val idf = idx.docs.sparkSession.createDataFrame(
-            Seq(Row(dfOf(Set(t)).getOrElse(t, 0L))).asJava,
-            StructType(Seq(StructField("df", LongType))))
-          .select(sim.idfCol(idx.numDocs, col("df"))).collect()(0).getDouble(0)
-        positional(Seq(TermLeaf(t)), est, pay = true)(
+        // the last bit)
+        val idf = sim.idfColD(idx.numDocs, dfOf(Set(t)).getOrElse(t, 0L))
+        positional(Seq(TermLeaf(t)), est, k, pay = true)(
           payWeighted(idf, fn, inc)(d =>
             (d.pos(0).length.toDouble, d.pay(0).map(_.toDouble))))
       case PayloadNearQ(a, b, slop, fn, inc) =>
         // the ordered two-clause PayloadSpanNearQ
-        positional(Seq(a, b).map(TermLeaf), est, pay = true)(
+        positional(Seq(a, b).map(TermLeaf), est, k, pay = true)(
           payWeighted(idfOf(Seq(a, b)), fn, inc)(d =>
             Searcher.payNear(d.pos, d.pay, slop, inOrder = true)))
       case PayloadSpanNearQ(ts, slop, fn, inc, inOrder) =>
         require(ts.size >= 2, "payload span-near needs >= 2 clauses")
-        positional(ts.map(TermLeaf), est, pay = true)(
+        positional(ts.map(TermLeaf), est, k, pay = true)(
           payWeighted(idfOf(ts), fn, inc)(d =>
             Searcher.payNear(d.pos, d.pay, slop, inOrder)))
       case other => sys.error(s"not a position query: $other")
@@ -576,45 +633,39 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** The per-doc fold of a position query over `leaves`: ONE read of the
-    * block table for their distinct terms (with payloads when `pay`),
-    * and, unioned in, a row at position 0 for each doc a mask leaf
-    * matches — its length from docLens when `maskLens`, as a doc matched
-    * through masks alone may hold none of the terms. Leaf i is index i of
-    * each doc's [[Searcher.LeafDoc]] (a term listed twice fills both);
-    * `score` gives a doc's score or none. The rows estimate is Σ df of
-    * the terms plus numDocs for each mask. */
+    * block table for their distinct terms (positions decoded, payloads
+    * too when `pay`), and, unioned in, a row at position 0 for each doc a
+    * mask leaf matches — its length from docLens when `maskLens`, as a
+    * doc matched through masks alone may hold none of the terms. Leaf i
+    * is index i of each doc's [[Searcher.LeafDoc]] (a term listed twice
+    * fills both); `score` gives a doc's score or none, and with `k` only
+    * the k best docs are kept. The rows estimate is Σ df of the terms
+    * plus numDocs for each mask. */
   private def positional(leaves: Seq[Spans.SLeaf], est: Option[Long],
-      pay: Boolean = false, maskLens: Boolean = false)(
+      k: Option[Int], pay: Boolean = false, maskLens: Boolean = false)(
       score: Searcher.LeafDoc => Option[Double]): DataFrame = {
     import Spans.{MaskLeaf, TermLeaf}
     val terms = leaves.collect { case TermLeaf(t) => t }.distinct
-    val posts = (if (pay) idx.postingsForPay(terms) else idx.postingsFor(terms))
-      .select((Seq("docid", "term", "positions", "len") ++
-        Option.when(pay)("payloads")).map(col): _*)
     val masks = leaves.zipWithIndex.collect { case (MaskLeaf(f, v), i) =>
       val docs = idx.docs.filter(col(f) === v).select("docid")
       (if (maskLens) docs.join(idx.docLens, Seq("docid"))
-        else docs.withColumn("len", lit(null).cast("long")))
-        .select(col("docid"), lit(null).cast("string").as("term"),
-          array(lit(0)).as("positions"), col("len"), lit(i).as("leaf"))
+        else docs.withColumn("len", lit(-1L)))
+        .select(col("docid"), lit(i).as("leaf"), lit(0.0).as("score"),
+          col("len"))
     }
-    // a mask row has no term and carries its leaf; a payload query has no
-    // masks, so column 4 is either the leaf or the payloads
     val leafOf = leaves.zipWithIndex.collect { case (TermLeaf(t), i) => t -> i }
       .groupMap(_._1)(_._2).map { case (t, is) => t -> is.toArray }
     val n = leaves.size
-    Searcher.perDoc[java.lang.Long, Searcher.LeafDoc, (Long, Double)](
-        if (masks.isEmpty) posts
-        else (posts.withColumn("leaf", lit(-1)) +: masks).reduce(_ unionByName _),
+    Searcher.perDoc[Searcher.LeafDoc](idx,
+        Searcher.foldInput(idx.blocksFor(terms), masks),
         est.getOrElse(dfOf(terms.toSet).values.sum + masks.size * idx.numDocs),
-        Searcher.ScoreEnc)(() => new Searcher.LeafDoc(n)) { (r, docs) =>
-      val doc = docs(r.getLong(0))
-      val pos = r.getSeq[Int](2).toArray
-      val pays = if (pay) r.getSeq[Float](4).toArray else null
-      (if (r.isNullAt(1)) Array(r.getInt(4)) else leafOf(r.getString(1)))
-        .foreach { l => doc.pos(l) = pos; doc.pay(l) = pays }
-      if (!r.isNullAt(3)) doc.len = r.getLong(3)
-    } { (docid, doc) => score(doc).map((docid, _)) }.toDF("docid", "score")
+        if (pay) Searcher.Payloads else Searcher.Positions, k)(
+        () => new Searcher.LeafDoc(n)) { (h, docs) =>
+      val doc = docs(Searcher.DocKey(0, h.docid))
+      (if (h.term == null) Array(h.leaf) else leafOf(h.term))
+        .foreach { l => doc.pos(l) = h.positions; doc.pay(l) = h.payloads }
+      if (h.len >= 0) doc.len = h.len
+    } { (_, doc) => score(doc) }.select("docid", "score")
   }
 
   /** Phrase scoring (PhraseQuery.cs; ExactPhraseScorer and
@@ -625,13 +676,13 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * semantics, PhraseQuery.cs:35; MultiPhraseQuery.cs:40). A slot none
     * of whose terms a doc holds rules the doc out. */
   private def phrase(slots: Seq[(Seq[String], Int)], slop: Int,
-      est: Option[Long]): DataFrame = {
+      est: Option[Long], k: Option[Int]): DataFrame = {
     val all = slots.flatMap(_._1)
     val terms = all.distinct
     val off0 = slots.head._2
     val ks = slots.map { case (ts, off) =>
       (ts.map(terms.indexOf).toArray, off - off0) }.toArray
-    positional(terms.map(Spans.TermLeaf), est)(weighted(idfOf(all)) { d =>
+    positional(terms.map(Spans.TermLeaf), est, k)(weighted(idfOf(all)) { d =>
       Searcher.phraseFreq(ks.map { case (ts, off) =>
         (ts.flatMap(d.pos(_)).distinct.sorted, off) }, slop)
     })
@@ -666,7 +717,8 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * sums idf over every scoring-side leaf — SOr branches included, the
     * SNot exclude side and masked keyword leaves not); a term absent from
     * the dictionary adds none. */
-  private def spanQuery(sp0: Span, est: Option[Long]): DataFrame = {
+  private def spanQuery(sp0: Span, est: Option[Long], k: Option[Int])
+      : DataFrame = {
     val sp = expandSpanRegexes(sp0)
     val leaves = Spans.leaves(sp).distinct
     val at = leaves.zipWithIndex.toMap
@@ -674,7 +726,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     val scoring = Spans.scoringTerms(sp).distinct
     // a doc matches only if it holds every required leaf, so masks need
     // their own length only when no term is required
-    positional(leaves, est,
+    positional(leaves, est, k,
         maskLens = !req.exists(_.isInstanceOf[Spans.TermLeaf]))(
       weighted(idfOf(scoring.filter(dfOf(scoring.toSet).contains))) { d =>
         Searcher.spanFreq(Searcher.spanSet(sp, d, at), req.size - 1)
@@ -696,10 +748,8 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     val ranked = tfMap.toSeq.map { case (t, tf) =>
       (t, tf * sim.idf(idx.numDocs, dfs.getOrElse(t, 0L)))
     }.sortBy { case (t, w) => (-w, t) }.take(topN).map(_._1)
-    if (ranked.isEmpty)
-      return idx.docs.select(col("docid"), lit(1.0).as("score"))
-        .filter(lit(false))
-    scoredOverTerms(ranked.toSet).filter(col("docid") =!= src)
+    if (ranked.isEmpty) noDocs
+    else scoredOverTerms(ranked.toSet, None).filter(col("docid") =!= src)
   }
 
   /** Driver-side dictionary lookup (TermInfosReader analog, SURVEY
@@ -728,11 +778,16 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** Top-k with the mandatory (score desc, docid asc) tie-break
-    * (TopScoreDocCollector.cs:56-64,90). Catalyst compiles orderBy.limit
-    * to TakeOrderedAndProject: per-partition heaps merged at the driver —
-    * exactly the reference's MultiSearcher merge. */
+    * (TopScoreDocCollector.cs:56-64,90), best first. A query the per-doc
+    * fold scores keeps a bounded heap of its k best docs as it folds —
+    * the reference's TopScoreDocCollector — so a single-task fold's rows
+    * are the answer as they come, and above the single-task limit each
+    * partition's k best are merged by one TakeOrderedAndProject (the
+    * reference's MultiSearcher merge). Any other query is scored in full
+    * and ordered the same way. */
   def topK(q: Query, k: Int): DataFrame =
-    score(q).orderBy(col("score").desc, col("docid").asc).limit(k)
+    folded(q, Some(k)).getOrElse(
+      score(q).orderBy(col("score").desc, col("docid").asc).limit(k))
 
   /** Batched multi-query top-k: ONE postings scan over the union of a
     * query registry's terms scores EVERY query at once — the query-set
@@ -746,13 +801,12 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * The registry is one [[foldTrees]] of every query's tree, its rows
     * partitioned by docid and keyed by (query, docid) in the fold — the
     * same fold as [[score]], so each query's rows are rank- and
-    * score-identical to its own topK run.
+    * score-identical to its own topK run. Each partition's fold keeps
+    * only each query's k best docs.
     *
     * Output (qid, rank, docid, score) ordered by (qid, rank). The
-    * per-query rank is a window partitioned by qid — one sort shuffle
-    * over all candidates of all queries; size the registry per job run
-    * accordingly (the scan amortization is the win, the window is the
-    * bound). */
+    * per-query rank is a window partitioned by query — one sort shuffle
+    * over at most k × partitions rows per query. */
   def topKBatch(queries: Seq[(String, BoolQ)], k: Int): DataFrame = {
     require(queries.map(_._1).distinct.size == queries.size,
       "duplicate query ids in the batch registry")
@@ -763,11 +817,13 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
             s"'$qid' is not a (boosted) TermQ")
       }
     }
-    foldTrees(queries, parallel = true)
-      .withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
+    val qids = queries.map(_._1).zipWithIndex.map(_.swap).toMap
+    foldTrees(queries.map(_._2), parallel = true, Some(k))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("qi"))
         .orderBy(col("score").desc, col("docid").asc)).cast("long"))
       .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("docid"), col("score"))
+      .select(Searcher.lookup(qids, col("qi"), StringType).as("qid"),
+        col("rank"), col("docid"), col("score"))
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -1004,31 +1060,151 @@ object Searcher {
     * 300k synthetic turns. */
   val SingleTaskRows: Long = 1L << 14
 
-  /** `df` on one partition when the query reads at most
+  /** `ds` on one partition when the query reads at most
     * [[SingleTaskRows]] rows (`rows`, an estimate), so the fold above it
     * runs in the scan's task and a point query is one job of one task;
-    * else `df` partitioned by docid, one exchange. */
-  private[search] def oneTask(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= SingleTaskRows) df.coalesce(1)
-    else df.repartition(col("docid"))
+    * else `ds` partitioned by docid, one exchange. */
+  private[search] def oneTask[T](ds: Dataset[T], rows: Long): Dataset[T] =
+    if (rows <= SingleTaskRows) ds.coalesce(1)
+    else ds.repartition(col("docid"))
 
-  /** Group `rows` — docid first — by a key in a hash map per partition
-    * of [[oneTask]], each key's state made by `init` and fed by `add`
-    * (which gets the row and the state of any key), then `fold` each
-    * key's state to at most one output row: the one per-doc evaluator of
-    * the query layer. */
-  private[search] def perDoc[K, S <: AnyRef, O](rows: DataFrame, est: Long,
-      enc: Encoder[O])(init: () => S)(add: (Row, K => S) => Unit)(
-      fold: (K, S) => Option[O]): Dataset[O] =
-    oneTask(rows, est).mapPartitions { (it: Iterator[Row]) =>
-      val docs = new java.util.HashMap[K, S]()
-      val state: K => S = k => {
-        val s = docs.get(k)
-        if (s != null) s else { val n = init(); docs.put(k, n); n }
+  /** A fold's input: `blocks`, and unioned in, the (docid, leaf, score,
+    * len) rows of its non-term leaves. */
+  private[search] def foldInput(blocks: DataFrame,
+      leaves: Seq[DataFrame] = Nil): Dataset[FoldIn] =
+    (blocks.select(col("term"), col("n"), col("min_docid").as("docid"),
+        col("docs"), col("lens"), col("pos"), lit(-1).as("leaf"),
+        lit(0.0).as("score"), lit(-1L).as("len")) +:
+      leaves.map(_.select(lit(null).cast("string").as("term"),
+        lit(0).as("n"), col("docid"), lit(null).cast("binary").as("docs"),
+        lit(null).cast("binary").as("lens"),
+        lit(null).cast("binary").as("pos"), col("leaf"), col("score"),
+        col("len"))))
+      .reduce(_ unionByName _).as(FoldInEnc)
+
+  /** One row of a fold's input ([[perDoc]]): a posting block of a query
+    * term, `docid` its first docid; or, `term` null, one doc of a
+    * non-term leaf numbered `leaf` — a keyword, range or function frame
+    * with its `score`, or a span mask with the doc's length `len` when
+    * known (else -1). */
+  final case class FoldIn(term: String, n: Int, docid: Long,
+      docs: Array[Byte], lens: Array[Byte], pos: Array[Byte], leaf: Int,
+      score: Double, len: Long)
+
+  /** One decoded row of a fold: a term's posting (`leaf` -1; positions
+    * and payloads when the fold decodes them, else null), or a non-term
+    * leaf's doc at position 0. */
+  final case class Hit(docid: Long, term: String, tf: Long, len: Long,
+      positions: Array[Int], payloads: Array[Float], leaf: Int,
+      score: Double)
+
+  /** What a fold decodes of each posting: tf and length, positions too,
+    * or positions and payloads. */
+  private[search] sealed trait Decode extends Serializable
+  private[search] case object Freqs extends Decode
+  private[search] case object Positions extends Decode
+  private[search] case object Payloads extends Decode
+
+  /** The hits of one fold input row; a posting of a doc in the sorted
+    * delete set `deleted` is skipped. */
+  private def hitsOf(r: FoldIn, what: Decode, deleted: Array[Long])
+      : Iterator[Hit] =
+    if (r.term == null)
+      Iterator.single(Hit(r.docid, null, 1L, r.len, Array(0), null, r.leaf,
+        r.score))
+    else {
+      val b = Codec.Block(r.term, r.n, r.docid, 0L, 0L, 0L, 0L, r.docs,
+        r.lens, r.pos)
+      val all = what match {
+        case Freqs => Codec.decodeScoring(b).map { case (d, tf, len) =>
+          Hit(d, r.term, tf, len, null, null, -1, 0.0) }
+        case Positions => Codec.decode(b).map(p =>
+          Hit(p.docid, r.term, p.tf, p.len, p.positions, null, -1, 0.0))
+        case Payloads => Codec.decodePay(b).map(p => Hit(p.docid, r.term,
+          p.tf, p.len, p.positions, p.payloads, -1, 0.0))
+      }
+      if (deleted.isEmpty) all
+      else all.filter(h => java.util.Arrays.binarySearch(deleted, h.docid) < 0)
+    }
+
+  /** The one per-doc evaluator of the query layer. Each of `in`'s rows
+    * is decoded to hits ([[Hit]]), skipping deleted docs; each hit goes
+    * to `add` with the state of any key, made by `init` in a hash map per
+    * partition; then `fold` turns each key's state into its score or
+    * none. Returns (qi, docid, score); with `k`, only each query's k best
+    * docs (score desc, docid asc), kept in a bounded heap as they come.
+    *
+    * At most [[SingleTaskRows]] estimated rows (`est`) fold in the task
+    * that reads the blocks, which decodes each block as it folds, and
+    * with `k` the rows come out best first: the answer. Above, a typed
+    * decode step feeds `repartition(docid)`, each partition folds its
+    * docs, and a single query's (`queries` 1) k best of every partition
+    * are merged by TakeOrderedAndProject. A delete set too large to hold
+    * is anti-joined with the decoded hits instead. */
+  private[search] def perDoc[S <: AnyRef](idx: InvertedIndex,
+      in: Dataset[FoldIn], est: Long, what: Decode, k: Option[Int],
+      queries: Int = 1)(init: () => S)(add: (Hit, DocKey => S) => Unit)(
+      fold: (DocKey, S) => Option[Double]): DataFrame = {
+    val run: Iterator[Hit] => Iterator[(Int, Long, Double)] = it => {
+      val docs = new java.util.HashMap[DocKey, S]()
+      val state: DocKey => S = key => {
+        val s = docs.get(key)
+        if (s != null) s else { val n = init(); docs.put(key, n); n }
       }
       it.foreach(add(_, state))
-      docs.entrySet.iterator.asScala.flatMap(e => fold(e.getKey, e.getValue))
-    }(enc)
+      val scored = docs.entrySet.iterator.asScala.flatMap(e =>
+        fold(e.getKey, e.getValue).map((e.getKey.qi, e.getKey.docid, _)))
+      k.fold(scored)(best(_, scored))
+    }
+    val one = est <= SingleTaskRows
+    val out = idx.deletedIds match {
+      case Some(ids) if one =>
+        in.coalesce(1).mapPartitions(it =>
+          run(it.flatMap(hitsOf(_, what, ids))))(OutEnc)
+      case ids =>
+        val decoded = in.mapPartitions(_.flatMap(hitsOf(_, what,
+          ids.getOrElse(Array.emptyLongArray))))(HitEnc)
+        oneTask(if (ids.isDefined) decoded
+          else idx.live(decoded.toDF()).as(HitEnc), est)
+          .mapPartitions(run)(OutEnc)
+    }
+    val rows = out.toDF("qi", "docid", "score")
+    k match {
+      case Some(n) if !one && queries == 1 =>
+        rows.orderBy(col("score").desc, col("docid").asc).limit(n)
+      case _ => rows
+    }
+  }
+
+  /** Each query's k best of `rows` (qi, docid, score), best first: a
+    * heap per query holding its k best so far, its worst at the head. */
+  private def best(k: Int, rows: Iterator[(Int, Long, Double)])
+      : Iterator[(Int, Long, Double)] = {
+    val heaps = new java.util.HashMap[Int,
+      java.util.PriorityQueue[(Int, Long, Double)]]()
+    if (k > 0) rows.foreach { r =>
+      var h = heaps.get(r._1)
+      if (h == null) {
+        h = new java.util.PriorityQueue(k, Ranked.reverse)
+        heaps.put(r._1, h)
+      }
+      if (h.size < k) h.add(r)
+      else if (Ranked.lt(r, h.peek)) { h.poll(); h.add(r) }
+    }
+    heaps.values.iterator.asScala.flatMap(_.asScala.toArray.sorted(Ranked))
+  }
+
+  /** (score desc, docid asc), scores compared as Spark's sort compares
+    * doubles (-0.0 equals 0.0, NaN above every number). */
+  private val Ranked: Ordering[(Int, Long, Double)] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(b._3, a._3)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  private lazy val FoldInEnc = Encoders.product[FoldIn]
+  private lazy val HitEnc = Encoders.product[Hit]
+  private lazy val OutEnc = Encoders.tuple(Encoders.scalaInt,
+    Encoders.scalaLong, Encoders.scalaDouble)
 
   /** A boolean or DisMax tree over one query's leaf slots. */
   private[search] sealed trait Fold extends Serializable
@@ -1046,8 +1222,11 @@ object Searcher {
   private[search] final case class MaxNode(tie: Double, members: Seq[Fold])
       extends Fold
 
-  /** One query's key in [[foldTrees]]: query `qi` of the fold, one doc. */
-  private final case class DocKey(qi: Int, docid: Long)
+  /** A fold's key: query `qi` of the fold (0 for a point query), one
+    * doc. */
+  private[search] final case class DocKey(qi: Int, docid: Long) {
+    override def hashCode: Int = java.lang.Long.hashCode(docid) * 31 + qi
+  }
 
   /** One walk of a tree over a doc's (slot, score) rows sorted by slot
     * (a doc has each slot at most once): leaves are visited in slot
@@ -1055,7 +1234,7 @@ object Searcher {
     * node matches and leaves its score in `score`; a node adds its
     * members' scores in clause order, from 0.0 — a boolean its musts and
     * its shoulds apart, then their sum times coord. */
-  private final class Eval(sim: Similarity,
+  private[search] final class Eval(sim: Similarity,
       rows: collection.IndexedSeq[(Int, Double)]) {
     private var at = 0
     var score = 0.0
@@ -1090,28 +1269,6 @@ object Searcher {
         n > 0
     }
   }
-
-  /** The fold of `trees` (qid, tree), one per query, over rows (docid,
-    * term, qi, slot, score): a row with a term is that term's score,
-    * scaled by the boost of every (qi, slot, boost) leaf `byTerm` lists
-    * for it; a row without one is query `qi`'s leaf `slot`. Returns
-    * (qid, docid, score) for every query a doc satisfies. */
-  private[search] def foldTrees(rows: DataFrame, est: Long, sim: Similarity,
-      trees: Array[(String, Fold)],
-      byTerm: Map[String, Array[(Int, Int, Double)]]): DataFrame =
-    perDoc[DocKey, ArrayBuffer[(Int, Double)], (String, Long, Double)](rows,
-        est, TreeEnc)(() => ArrayBuffer.empty) { (r, hits) =>
-      val docid = r.getLong(0)
-      if (r.isNullAt(1))
-        hits(DocKey(r.getInt(2), docid)) += ((r.getInt(3), r.getDouble(4)))
-      else byTerm(r.getString(1)).foreach { case (qi, slot, b) =>
-        hits(DocKey(qi, docid)) += ((slot, r.getDouble(4) * b))
-      }
-    } { (k, hits) =>
-      val (qid, tree) = trees(k.qi)
-      val e = new Eval(sim, hits.sortBy(_._1))
-      Option.when(e(tree))((qid, k.docid, e.score))
-    }.toDF("qid", "docid", "score")
 
   /** One doc's view in a position query's fold ([[Searcher.positions]]):
     * each leaf's ascending positions (empty when the doc lacks it), their
@@ -1278,24 +1435,6 @@ object Searcher {
         .filter(_ <= slop).fold(freq)(d => freq + 1.0 / (d + 1.0))
     }
 
-  /** Each doc's sum of its (docid, ord, score) rows from 0.0 in ord
-    * order: Spark's string order ([[InvertedIndex.Utf8Order]]), as
-    * `sort_array` orders a string. */
-  private[search] def ordSum(rows: DataFrame, est: Long): DataFrame =
-    perDoc[java.lang.Long, ArrayBuffer[(String, Double)], (Long, Double)](
-        rows, est, ScoreEnc)(() => ArrayBuffer.empty) { (r, docs) =>
-      docs(r.getLong(0)) += ((r.getString(1), r.getDouble(2)))
-    } { (docid, xs) =>
-      Some((docid, xs.sortBy(_._1)(InvertedIndex.Utf8Order)
-        .foldLeft(0.0)(_ + _._2)))
-    }.toDF("docid", "score")
-
-  private lazy val ScoreEnc =
-    Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-
-  private lazy val TreeEnc = Encoders.tuple(Encoders.STRING,
-    Encoders.scalaLong, Encoders.scalaDouble)
-
   /** A multi-term query's matches as a walk of the resident dictionary:
     * a prefix, a prefix and a regex, or a range. */
   private[search] type Local = InvertedIndex.Dictionary => Iterator[(String, Long)]
@@ -1312,10 +1451,9 @@ object Searcher {
   /** `m(key)` as a column of type `dt`: a hash lookup in the task
     * closure. A Java UDF with its type given, so building one derives
     * no encoder by reflection. */
-  private[search] def lookup[V](m: Map[String, V], key: Column,
+  private[search] def lookup[K, V](m: Map[K, V], key: Column,
       dt: DataType): Column =
-    udf(new UDF1[String, Any] { def call(k: String): Any = m(k) }, dt)
-      .apply(key)
+    udf(new UDF1[K, Any] { def call(k: K): Any = m(k) }, dt).apply(key)
 
   private[search] lazy val TermDfEnc = Encoders.product[(String, Long)]
 

@@ -29,7 +29,12 @@ import org.apache.spark.sql.functions._
   *     decision as BM25, SURVEY §1.1).
   *
   * Serializable: the Searcher's per-doc folds run the scalar twins
-  * ([[tfNormD]], [[coordD]]) in tasks.
+  * ([[idfColD]], [[tfNormD]], [[scoreD]], [[coordD]]) in tasks. A point
+  * query scores each posting with [[scoreD]], which equals the column
+  * form [[score]] bit for bit: same operand order, and the log of
+  * [[idfColD]] is StrictMath's, as Catalyst's `Log` computes it. The
+  * driver's [[idf]] (math.log, a JIT intrinsic) can differ from both in
+  * the last bit; phrases and spans weight with it.
   */
 trait Similarity extends Serializable {
 
@@ -39,6 +44,10 @@ trait Similarity extends Serializable {
 
   /** Column twin of [[idf]] for in-plan df columns. */
   def idfCol(numDocs: Long, df: Column): Column
+
+  /** Scalar twin of [[idfCol]], equal to it bit for bit: its operand
+    * order, with StrictMath.log. */
+  def idfColD(numDocs: Long, df: Long): Double
 
   /** Term-frequency × length-norm factor. `tf` may be fractional
     * (sloppy-phrase freq = sum 1/(distance+1), SloppyPhraseScorer.cs /
@@ -61,6 +70,12 @@ trait Similarity extends Serializable {
     * mirror the column form's operand order exactly. */
   def tfNormD(tf: Double, len: Long, avgdl: Double): Double
 
+  /** Scalar twin of [[score]] for one posting, equal to it bit for bit
+    * ([[idfColD]] × [[tfNormD]]). */
+  final def scoreD(numDocs: Long, avgdl: Double, df: Long, tf: Long,
+      len: Long): Double =
+    idfColD(numDocs, df) * tfNormD(tf.toDouble, len, avgdl)
+
   /** Scalar twin of [[applyCoord]] (same evaluators). */
   def coordD(overlap: Int, maxOverlap: Int): Double
 }
@@ -69,6 +84,9 @@ trait Similarity extends Serializable {
 object Bm25Sim extends Similarity {
   def idf(numDocs: Long, df: Long): Double = Bm25.idf(numDocs, df)
   def idfCol(numDocs: Long, df: Column): Column = Bm25.idfCol(numDocs, df)
+  def idfColD(numDocs: Long, df: Long): Double =
+    StrictMath.log(1.0 + (numDocs.toDouble - df.toDouble + 0.5) /
+      (df.toDouble + 0.5))
   def tfNorm(tf: Column, len: Column, avgdl: Double): Column =
     Bm25.tfNorm(tf, len, avgdl)
   def applyCoord(score: Column, overlap: Column, maxOverlap: Int): Column =
@@ -88,6 +106,8 @@ object ClassicSim extends Similarity {
     1.0 + math.log(numDocs.toDouble / (df + 1))
   def idfCol(numDocs: Long, df: Column): Column =
     lit(1.0) + log(lit(numDocs.toDouble) / (df + lit(1)))
+  def idfColD(numDocs: Long, df: Long): Double =
+    1.0 + StrictMath.log(numDocs.toDouble / (df + 1).toDouble)
   /** sqrt(tf) × 1/sqrt(len); avgdl unused (classic norms are
     * collection-independent). */
   def tfNorm(tf: Column, len: Column, avgdl: Double): Column =

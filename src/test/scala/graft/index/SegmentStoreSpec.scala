@@ -432,6 +432,27 @@ class SegmentStoreSpec extends AnyFunSuite {
       s"uniform corpus should keep ~all blocks, kept $kU of $tU")
   }
 
+  test("open infers only the docs tables' schemas: one job per segment") {
+    val root = tmp()
+    IndexBuilder.buildSegments(spark, turns, root, 3, 4)
+    IndexBuilder.deleteByTerm(spark, root, "deploy")
+    val m = SegmentStore.latest(root).get
+    assert(m.segments.size == 3 && m.deletes.size == 1)
+    // warm: the first open of a session loads what every open shares
+    SegmentStore.open(spark, root)
+    var idx: InvertedIndex = null
+    val r = SparkFixture.record { idx = SegmentStore.open(spark, root) }
+    assert(r.jobs == 3, s"${r.jobs} jobs at open")
+    // the known schemas read the same tables
+    def fields(t: org.apache.spark.sql.types.StructType) =
+      t.map(f => (f.name, f.dataType))
+    assert(fields(idx.blockTable.schema) ==
+      fields(PostingBlocks.BlockEnc.schema))
+    assert(idx.segmentDicts.get.columns.toSeq == Seq("term", "df", "cf"))
+    assert(new Searcher(idx).score(TermQ("deploy")).count() == 0)
+    assert(idx.termDict.filter(col("term") === "deploy").count() == 1)
+  }
+
   private def deleteRec(p: Path): Unit = {
     if (Files.isDirectory(p))
       Files.list(p).iterator().asScala.toSeq.foreach(deleteRec)

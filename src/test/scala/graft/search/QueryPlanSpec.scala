@@ -7,7 +7,8 @@ import scala.util.Random
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
   ArrayFilter, ArrayTransform, Expression, MapFromArrays, ZipWith}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{DeserializeToObjectExec,
+  FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
@@ -16,7 +17,8 @@ import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   Exchange}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
-import org.apache.spark.sql.functions.{col, date_format}
+import org.apache.spark.sql.functions.{array, col, date_format, element_at,
+  lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -102,6 +104,77 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(plans.nonEmpty && exchanges(plans).isEmpty,
         s"$q: ${exchanges(plans)}")
     }
+  }
+
+  /** (docid, score bits) rows, best first. */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(1)))).toSeq
+
+  /** score(q)'s k best, ordered by Catalyst. */
+  private def scoreTop(s: Searcher, q: Query, k: Int) =
+    s.score(q).orderBy(col("score").desc, col("docid").asc).limit(k)
+
+  /** The same corpus in one segment. */
+  private lazy val oneSegment = {
+    val root = Files.createTempDirectory("graft_plan_one_").toString
+    IndexBuilder.buildSegments(spark,
+      Transcripts.synthetic(spark, 1500, seed = 11L, partitions = 6), root,
+      numBatches = 1, numPartitions = 4)
+    SegmentStore.open(spark, root)
+  }
+
+  /** Turns that repeat four texts in two segments: every doc that
+    * matches a query ties with about a quarter of the corpus or more. */
+  private lazy val tied = {
+    val root = Files.createTempDirectory("graft_plan_tied_").toString
+    val texts = Seq("error deploy spark merge table", "spark table query error",
+      "deploy merge error error", "the spark table deploy error builds")
+    IndexBuilder.buildSegments(spark,
+      Transcripts.synthetic(spark, 400, seed = 5L, partitions = 2)
+        .withColumn("text", element_at(array(texts.map(lit): _*),
+          (col("turn_idx") % 4 + 1).cast("int"))),
+      root, numBatches = 2, numPartitions = 2)
+    SegmentStore.open(spark, root)
+  }
+
+  /** Every shape of the benchmark's point-query mix on the tied corpus. */
+  private def tiedQueries: Seq[Query] = Seq(
+    TermQ("error"),
+    BoolQ(must = Seq(TermQ("error"), TermQ("deploy"))),
+    BoolQ(should = Seq(TermQ("error"), TermQ("deploy"), TermQ("query"))),
+    BoolQ(must = Seq(TermQ("spark")), mustNot = Seq(TermQ("query"))),
+    PhraseQ(Seq("spark" -> 0, "table" -> 1)),
+    PhraseQ(Seq("deploy" -> 0, "merge" -> 1, "error" -> 2)),
+    PhraseQ(Seq("error" -> 0, "table" -> 1), 3),
+    PrefixQ("de", AutoRewrite),
+    PrefixQ("de", ConstantScore),
+    BoolQ(must = Seq(KeywordQ("role", "assistant"), TermQ("error"))))
+
+  test("a single-task topK is one fold keeping its k best, as score's top k") {
+    val k = 10
+    val cases = Seq(oneSegment, idx, deleted).flatMap(i =>
+      pointQueries.map(i -> _)) ++ tiedQueries.map(tied -> _)
+    var tiedAtK = 0
+    cases.foreach { case (index, q) =>
+      index.dictionary; index.deletedIds
+      val s = new Searcher(index)
+      val top = s.topK(q, k)
+      val plan = top.queryExecution.executedPlan
+      assert(exchanges(Seq(plan)).isEmpty, s"$q\n$plan")
+      assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.isEmpty,
+        s"$q\n$plan")
+      assert(collect(plan) { case d: DeserializeToObjectExec => d }.size == 1,
+        s"$q\n$plan")
+      val got = ranked(top)
+      assert(got.nonEmpty && got == ranked(scoreTop(s, q, k)), s"$q")
+      // a tie at the k-th score that the docid order breaks
+      val all = s.score(q).collect().map(_.getDouble(1))
+      if ((index eq tied) && got.size == k &&
+          all.count(_ == java.lang.Double.longBitsToDouble(got.last._2)) >
+            got.count(_._2 == got.last._2)) tiedAtK += 1
+    }
+    assert(tiedAtK >= tiedQueries.size / 2, s"$tiedAtK")
   }
 
   test("a warm term query runs one job, a warm two-term boolean two") {
@@ -436,11 +509,17 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     queries.foreach { q =>
       val one = s.score(q)
-      val wide = s.score(BoolQ(must = Seq(q), mustNot = pads))
+      val padded = BoolQ(must = Seq(q), mustNot = pads)
+      val wide = s.score(padded)
       assert(exchanges(Seq(one.queryExecution.executedPlan)).isEmpty, s"$q")
       assert(exchanges(Seq(wide.queryExecution.executedPlan)).nonEmpty, s"$q")
       val want = rows(one)
       assert(want.nonEmpty && rows(wide) == want, s"$q")
+      // each partition keeps its 10 best, merged by TakeOrderedAndProject
+      val top = s.topK(padded, 10)
+      assert(collect(top.queryExecution.executedPlan) {
+        case t: TakeOrderedAndProjectExec => t }.size == 1, s"$q")
+      assert(ranked(top) == ranked(scoreTop(s, q, 10)), s"$q")
     }
     // each position fold itself, one task against partitioned by docid
     val Seq(a, b, c) = runs(13).take(3).map(_._1)
@@ -452,6 +531,9 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(exchanges(Seq(wide.queryExecution.executedPlan)).nonEmpty, s"$q")
       val want = rows(s.positions(q, Some(0L)))
       assert(want.nonEmpty && rows(wide) == want, s"$q")
+      assert(ranked(s.positions(q, Some(Long.MaxValue), Some(10))) ==
+        ranked(s.positions(q, Some(0L)).orderBy(col("score").desc,
+          col("docid").asc).limit(10)), s"$q")
     }
   }
 

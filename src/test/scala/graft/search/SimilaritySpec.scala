@@ -95,4 +95,41 @@ class SimilaritySpec extends AnyFunSuite {
     termOnly.foreach { d =>
       assert(math.abs(cl(d) - term(d)("table") * 0.5) < 1e-9, s"doc $d") }
   }
+
+  test("the scalar per-posting score equals the column form bit for bit") {
+    import org.apache.spark.sql.functions.col
+    // tf 1-50 by len 0-2000 (every 11th and the edges), as a plan column
+    val postings = spark.range(1, 51).toDF("tf")
+      .crossJoin(spark.range(0, 2001).toDF("len")
+        .filter(col("len") % 11 === 0 || col("len") < 3 || col("len") > 1997))
+    var compared = 0L
+    for {
+      sim <- Seq(Bm25Sim, ClassicSim)
+      numDocs <- Seq(1L, 2L, 7L, 1000L, 12345L, 1000003L, 3000000019L)
+      avgdl <- Seq(1.0, 3.7, 42.123, 1234.5)
+    } {
+      val dfs = Seq(1L, 2L, numDocs / 3, numDocs - 1, numDocs)
+        .filter(_ >= 1).distinct
+      // a posting's length is at least its tf, and 1/sqrt(0) is a
+      // division by zero in the classic column form, so ClassicSim
+      // starts at len 1
+      val rows = postings.crossJoin(spark.createDataFrame(
+          dfs.map(Tuple1(_))).toDF("df"))
+        .filter(col("len") >= (if (sim == ClassicSim) 1 else 0))
+        .select(col("df"), col("tf"), col("len"),
+          sim.score(numDocs, avgdl, col("df"), col("tf"), col("len")))
+        .collect()
+      rows.foreach { r =>
+        val (df, tf, len) = (r.getLong(0), r.getLong(1), r.getLong(2))
+        val want = r.getDouble(3)
+        val got = sim.scoreD(numDocs, avgdl, df, tf, len)
+        assert(java.lang.Double.doubleToRawLongBits(got) ==
+          java.lang.Double.doubleToRawLongBits(want),
+          s"$sim numDocs=$numDocs avgdl=$avgdl df=$df tf=$tf len=$len: " +
+            s"$got != $want")
+      }
+      compared += rows.length
+    }
+    assert(compared > 400000)
+  }
 }
