@@ -2,7 +2,7 @@
 """Alternated A/B pairs of the benchmark: a base revision against the
 working checkout.
 
-    python3 scripts/ab_pairs.py REV --workload W --pairs N --seed0 S
+    python3 scripts/ab_pairs.py REV --workload W --pairs N --seed0 S [--trace]
 
 Exports REV (any git revision, say HEAD~1) with `git archive` into a fresh
 directory under the system temp dir (TMPDIR), then runs
@@ -15,7 +15,11 @@ pairs in which the checkout did better), and whether the medians differ
 by more than the base's IQR. Per pair it prints each side's `attempted`
 (the operations a run timed and checked) and flags a pair whose two sides
 differ in it: a time-limited workload lets a faster side run more steps,
-and later steps run warmer. The export is deleted at the end; nothing
+and later steps run warmer. With --trace, every run is a traced one
+(`--trace 1`), whose result line carries the per-layer metrics instead of
+the end-to-end ones, and the table is of BENCHMARK.json's per-layer
+metrics (say `search.plan_ms`, `search.exec_ms`, `search.scan_bytes_read`),
+so a speedup can be read next to the layer that moved with it. The export is deleted at the end; nothing
 tracked in either tree is written (perfbench writes only under its
 ignored out/ and target/ directories).
 
@@ -45,11 +49,12 @@ def export(rev, dest):
         sys.exit(f"git archive {rev} failed")
 
 
-def run(tree, workload, seed, seconds):
+def run(tree, workload, seed, seconds, trace):
     """One benchmark run in `tree`: its result dict, or None on failure."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds),
+         "--trace", "1" if trace else "0"],
         cwd=tree, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or not lines:
@@ -72,10 +77,12 @@ def main():
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, required=True)
     ap.add_argument("--seconds", type=float, default=5)
+    ap.add_argument("--trace", action="store_true",
+                    help="traced runs; compare the per-layer metrics")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        metrics = json.load(f)["per_layer" if a.trace else "end_to_end"]
     base = tempfile.mkdtemp(prefix="ab_pairs_")
     ok = True
     runs = {"base": [], "change": []}
@@ -86,7 +93,7 @@ def main():
             seed = a.seed0 + i
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             for side in order:
-                r = run(trees[side], a.workload, seed, a.seconds)
+                r = run(trees[side], a.workload, seed, a.seconds, a.trace)
                 print(f"pair {i + 1} seed {seed} {side}: "
                       f"{json.dumps(r, separators=(',', ':'))}", flush=True)
                 if r is None or not r.get("correct") or r.get("failed"):
@@ -106,7 +113,7 @@ def main():
         flag = "  differs" if None not in got and got[0] != got[1] else ""
         print(f"{i + 1:>4} {a.seed0 + i:>6} {str(got[0]):>15} "
               f"{str(got[1]):>17}{flag}")
-    print(f"{'metric':28} {'base q1/median/q3':>30} "
+    print(f"{'metric':34} {'base q1/median/q3':>30} "
           f"{'change q1/median/q3':>30} {'base IQR':>10} {'wins':>6} "
           f"{'> IQR':>6}")
     for m in metrics:
@@ -121,7 +128,7 @@ def main():
         wins = sum(1 for b, c in got if (c < b if lower else c > b))
         iqr = bq[2] - bq[0]
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
-        print(f"{name:28} {fmt(bq):>30} {fmt(cq):>30} {iqr:>10.4g} "
+        print(f"{name:34} {fmt(bq):>30} {fmt(cq):>30} {iqr:>10.4g} "
               f"{wins:>3}/{len(got):<2} "
               f"{'yes' if abs(cq[1] - bq[1]) > iqr else 'no':>6}")
     if not ok:

@@ -225,6 +225,22 @@ object Codec {
         docsB.toArray, lensB.toArray, posB.toArray)
   }
 
+  /** A corrupt block: an IllegalArgumentException naming the block's
+    * term and first docid, so a bad stored block fails its own query or
+    * check as a clean error instead of an allocation the JVM cannot
+    * survive. */
+  private def corrupt(b: Block, what: String): Nothing =
+    throw new IllegalArgumentException(
+      s"corrupt posting block term=${b.term} min_docid=${b.minDocid}: $what")
+
+  /** A posting's tf, checked before anything is allocated or looped
+    * for it: at most the bytes left in the position stream from `pp`,
+    * since every position takes at least one byte. */
+  private def checkPositions(b: Block, tf: Long, pp: Int): Unit =
+    if (tf < 0 || tf > b.pos.length - pp)
+      corrupt(b, s"tf $tf exceeds the ${b.pos.length - pp} bytes left in " +
+        "the position stream")
+
   /** Decode to raw postings (position blobs sliced, never materialized
     * as ints) — the merge path's decode: re-encoding concatenates the
     * slices straight back. */
@@ -242,6 +258,7 @@ object Codec {
         if ((code & 1L) == 1L) 1L
         else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
       val (len, lp1) = readVLong(b.lens, lp); lp = lp1
+      checkPositions(b, tf, pp)
       val start = pp
       var k = 0L
       while (k < tf) {
@@ -266,6 +283,7 @@ object Codec {
       private var dp = 0
       private var lp = 0
       private var docid = b.minDocid
+      private var tfs = 0L
       override def hasNext: Boolean = i < b.n
       override def next(): (Long, Long, Long) = {
         val (code, dp1) = readVLong(b.docs, dp); dp = dp1
@@ -273,8 +291,15 @@ object Codec {
         val tf =
           if ((code & 1L) == 1L) 1L
           else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
+        // the tfs of a block add up to its sum_tf: no tf may pass what
+        // is left of it, and the last one must reach it
+        if (tf < 0 || tf > b.sumTf - tfs)
+          corrupt(b, s"tf $tf exceeds the ${b.sumTf - tfs} left of sum_tf ${b.sumTf}")
+        tfs += tf
         val (len, lp1) = readVLong(b.lens, lp); lp = lp1
         i += 1
+        if (i == b.n && tfs != b.sumTf)
+          corrupt(b, s"tfs sum to $tfs, not to sum_tf ${b.sumTf}")
         (docid, tf, len)
       }
     }
@@ -312,6 +337,7 @@ object Codec {
         if ((code & 1L) == 1L) 1L
         else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
       val (len, lp1) = readVLong(b.lens, lp); lp = lp1
+      checkPositions(b, tf, pp)
       val positions = new Array[Int](tf.toInt)
       var prevPos = 0L
       var k = 0
@@ -352,6 +378,7 @@ object Codec {
         if ((code & 1L) == 1L) 1L
         else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
       val (len, lp1) = readVLong(b.lens, lp); lp = lp1
+      checkPositions(b, tf, pp)
       val positions = new Array[Int](tf.toInt)
       val payloads = new Array[Float](tf.toInt)
       var prevPos = 0L

@@ -1,9 +1,16 @@
 package graft.index
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation,
   SparkSession}
 import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Union}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,7 +42,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * read once, on first use, and held on the driver (the reference keeps
   * the term index and the deleted-docs BitVector in RAM per open
   * reader, TermInfosReader.cs / BitVector.cs), so every Searcher,
-  * Highlight and Wand over it shares them. A reopen after a write is a
+  * Highlight and Wand over it shares them. The same commit point also
+  * holds the block table as one prepared scan ([[preparedBlocks]]:
+  * planned, its Hadoop configuration broadcast, once) and, read by the
+  * same job as the dictionary, which of that scan's partitions hold each
+  * term ([[partitionsOf]]). Together they are the reference's TermInfo
+  * file pointers: TermInfosReader maps a term to its df and to where its
+  * postings start, and a point query seeks there instead of being
+  * planned (TermInfosReader.cs:178-224). A reopen after a write is a
   * new value and reads them afresh.
   */
 final case class InvertedIndex(
@@ -82,13 +96,100 @@ final case class InvertedIndex(
     * [[residentRows]] rows (then [[live]] anti-joins [[deleted]]). */
   lazy val deletedIds: Option[Array[Long]] =
     if (deleted.isEmpty) Some(Array.emptyLongArray)
-    else resident(1).map(_.map(_._2).distinct.sorted)
+    else resident(2).map(_.map(_._2).distinct.sorted)
 
-  /** The (term, df) dictionary rows and the (null, docid) delete rows,
-    * read together on first use of either. */
+  /** The block table as one prepared scan, planned on first use and
+    * shared by every query of this commit point: a point query prunes it
+    * to the partitions that hold its terms ([[partitionsOf]]) and folds
+    * them in one task, so it pays for no analysis, optimization, codegen
+    * or broadcast of the scan. It has no term filter: a task reads its
+    * partitions whole. Its rows are the [[BlockRow]] columns as Spark's
+    * internal rows, so a task reads each row's term in place and builds a
+    * block ([[InvertedIndex.blockOf]]) only for its own terms. */
+  @transient lazy val preparedBlocks: RDD[InternalRow] = scanFiles(identity)
+
+  /** [[preparedBlocks]] with `pos` null, in the same partitions: the
+    * scan of a fold that decodes only tfs and lengths, which then skips
+    * decoding and copying the position stream (about 8% of a one-term
+    * scan's time on a 300k-turn store). */
+  @transient private[graft] lazy val preparedFreqs: RDD[InternalRow] =
+    scanFiles(_.withColumn("pos", lit(null).cast("binary")))
+
+  /** `project` of the block table's [[BlockRow]] columns, as one RDD with
+    * one partition per block file (or per split of a file too large for
+    * one) when the table is a union of plain file scans, else as the
+    * table's own scan. A file scan would pack small files into one
+    * partition, and a task would read files none of whose terms it needs.
+    * Each file is planned on its own, so every file's generated scan code
+    * is the same class: in one plan each would be a codegen stage of its
+    * own, a class per file that Spark's code cache can evict. */
+  private def scanFiles(project: DataFrame => DataFrame): RDD[InternalRow] = {
+    def rows(df: DataFrame) = project(df.select(
+      PostingBlocks.BlockEnc.schema.fieldNames.toSeq.map(col): _*))
+      .queryExecution.toRdd
+    val plain = !blockTable.queryExecution.analyzed.exists {
+      case _: Union | _: LogicalRelation => false
+      case p: Project => !p.projectList.forall(_.isInstanceOf[Attribute])
+      case _ => true
+    }
+    val files = blockTable.inputFiles.sorted.toSeq
+    val spark = blockTable.sparkSession
+    if (!plain || files.isEmpty) rows(blockTable)
+    else spark.sparkContext.union(files.map(f =>
+      rows(spark.read.schema(PostingBlocks.BlockEnc.schema).parquet(f))))
+  }
+
+  /** The partitions of [[preparedBlocks]] that hold blocks of any of
+    * `terms`, ascending: those whose recorded term runs cover a term.
+    * Every partition when the runs were not held (more than
+    * [[residentRows]] of them) or were read over another partition
+    * layout. A term absent from the index may still fall inside a run,
+    * so callers drop terms the dictionary lacks first. */
+  private[graft] def partitionsOf(terms: Iterable[String]): Array[Int] = {
+    val parts = preparedBlocks.getNumPartitions
+    termRuns.filter(_.parts == parts)
+      .fold(Array.range(0, parts))(_.partitionsOf(terms))
+  }
+
+  /** Each block partition's term runs ([[InvertedIndex.TermRuns]]). */
+  private lazy val termRuns: Option[InvertedIndex.TermRuns] =
+    resident(1).map(InvertedIndex.TermRuns(_, runScan.getNumPartitions))
+
+  /** A term-only scan of the block table, laid out in the same
+    * partitions as [[preparedBlocks]] (a file scan splits by file size,
+    * not by the columns it reads): per partition, each run of ascending
+    * terms as a (first term, 2p) and a (last term, 2p + 1) row. Blocks
+    * are written sorted by (term, min_docid), so a partition holds one
+    * run per block file or file split it reads. */
+  @transient private lazy val runScan: RDD[(String, Long)] =
+    scanFiles(_.select(col("term"))).mapPartitionsWithIndex { (p, rows) =>
+      val out = ArrayBuffer.empty[(String, Long)]
+      var first: UTF8String = null
+      var last: UTF8String = null
+      def close(): Unit = if (first != null) {
+        out += ((first.toString, 2L * p))
+        out += ((last.toString, 2L * p + 1))
+      }
+      rows.foreach { r =>
+        val t = r.getUTF8String(0)
+        if (last == null || t.compareTo(last) < 0) {
+          close()
+          first = t.clone()
+        }
+        last = t.clone()
+      }
+      close()
+      out.iterator
+    }
+
+  /** The (term, df) dictionary rows, the block partitions' term runs and
+    * the (null, docid) delete rows, read together by one job on first
+    * use of any. */
   private lazy val resident = InvertedIndex.collectBounded(
-    dictRows.select(col("term"), col("df")) +:
-      deleted.toSeq.map(_.select(lit(null).cast("string"), col("docid"))),
+    Seq(InvertedIndex.pairs(dictRows.select(col("term"), col("df"))),
+      runScan) ++
+      deleted.toSeq.map(d => InvertedIndex.pairs(
+        d.select(lit(null).cast("string"), col("docid")))),
     residentRows)
 
   /** Drop the rows of deleted docs (deleted docs are skipped at
@@ -128,9 +229,7 @@ final case class InvertedIndex(
     live(PostingBlocks.toPostings(blocksFor(terms)))
 
   /** The block rows of a fixed term set, undecoded and with deleted docs
-    * still in them: the input of the query layer's per-doc fold, which
-    * decodes each block as it folds and skips the docs of the resident
-    * delete set ([[deletedIds]]). */
+    * still in them: a plain Parquet filter, pushed down to the scan. */
   def blocksFor(terms: Seq[String]): DataFrame =
     blockTable.filter(col("term").isin(terms: _*))
 
@@ -220,16 +319,47 @@ object InvertedIndex {
     }
   }
 
-  /** Each frame's (string, long) rows on the driver, or None for a
-    * frame with more than `cap` rows. One job reads every frame: a task
-    * ships at most its share of `cap` (cap / the frame's partitions) and
+  /** A block partition's term runs, sorted by first term: partition
+    * `part(i)` holds only terms from `lo(i)` to `hi(i)`, in Spark's
+    * string order, and every term it holds lies in one of its runs. */
+  private[index] final class TermRuns private (lo: Array[String],
+      hi: Array[String], part: Array[Int], val parts: Int) {
+    def partitionsOf(terms: Iterable[String]): Array[Int] =
+      terms.iterator.flatMap { t =>
+        lo.indices.iterator.filter(i => Utf8Order.lteq(lo(i), t) &&
+          Utf8Order.lteq(t, hi(i))).map(part)
+      }.toArray.distinct.sorted
+  }
+
+  private[index] object TermRuns {
+    /** From [[InvertedIndex.runScan]]'s rows, in partition order. */
+    def apply(rows: Array[(String, Long)], parts: Int): TermRuns = {
+      val runs = rows.grouped(2).map { case Array((a, p), (b, _)) =>
+        (a, b, (p / 2).toInt) }.toArray.sortBy(_._1)(Utf8Order)
+      new TermRuns(runs.map(_._1), runs.map(_._2), runs.map(_._3), parts)
+    }
+  }
+
+  /** A row of [[InvertedIndex.preparedBlocks]] or
+    * [[InvertedIndex.preparedFreqs]] as its codec block. */
+  private[graft] def blockOf(r: InternalRow): Codec.Block =
+    Codec.Block(r.getUTF8String(0).toString, r.getInt(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getBinary(7),
+      r.getBinary(8), r.getBinary(9))
+
+  /** A frame's first two columns, a string and a long, as pairs. */
+  private def pairs(df: DataFrame): RDD[(String, Long)] =
+    df.rdd.map(r => (r.getString(0), r.getLong(1)))
+
+  /** Each RDD's rows on the driver, in partition order, or None for an
+    * RDD with more than `cap` rows. One job reads every RDD: a task
+    * ships at most its share of `cap` (cap / the RDD's partitions) and
     * counts the rest, stopping once it alone has passed `cap`, so the
-    * driver receives at most about `cap` rows per frame. A frame that
+    * driver receives at most about `cap` rows per RDD. An RDD that
     * fits but had a partition above its share re-reads just those
     * partitions in a second job. */
-  private[index] def collectBounded(frames: Seq[DataFrame], cap: Int)
+  private[index] def collectBounded(rdds: Seq[RDD[(String, Long)]], cap: Int)
       : Seq[Option[Array[(String, Long)]]] = {
-    val rdds = frames.map(_.rdd.map(r => (r.getString(0), r.getLong(1))))
     val all = rdds.head.sparkContext.union(rdds)
     // UnionRDD lays out each frame's partitions in turn
     val owner =

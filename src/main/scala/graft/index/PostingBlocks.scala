@@ -17,7 +17,12 @@ final case class BlockRow(
     sum_tf: Long,
     docs: Array[Byte],
     lens: Array[Byte],
-    pos: Array[Byte])
+    pos: Array[Byte]) {
+
+  /** This row as the codec's block. */
+  def block: Codec.Block = Codec.Block(term, n, min_docid, max_docid,
+    max_tf, min_len, sum_tf, docs, lens, pos)
+}
 
 /** Decoded posting row (the logical postings view the query layer sees). */
 final case class PostingRow(
@@ -161,9 +166,7 @@ object PostingBlocks {
                 prevMax = r.max_docid
               }
               val raw = termRuns.iterator.flatMap { r =>
-                Codec.decodeRaw(Codec.Block(r.term, r.n, r.min_docid,
-                  r.max_docid, r.max_tf, r.min_len, r.sum_tf, r.docs,
-                  r.lens, r.pos))
+                Codec.decodeRaw(r.block)
               }
               cur = raw.grouped(Codec.BlockSize)
                 .map(g => Codec.encodeRaw(term, g.iterator).next())
@@ -209,8 +212,7 @@ object PostingBlocks {
   /** Decode a block table back to the logical postings view. */
   def toPostings(blocks: DataFrame): DataFrame =
     blocks.as(BlockEnc).flatMap { r =>
-      Codec.decode(Codec.Block(r.term, r.n, r.min_docid, r.max_docid,
-        r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
+      Codec.decode(r.block)
         .map(p => PostingRow(r.term, p.docid, p.tf, p.len,
           p.positions.toSeq))
     }(PostingEnc).toDF()
@@ -221,8 +223,7 @@ object PostingBlocks {
     * for queries that don't inspect positions. */
   def toScoring(blocks: DataFrame): DataFrame =
     blocks.as(BlockEnc).flatMap { r =>
-      Codec.decodeScoring(Codec.Block(r.term, r.n, r.min_docid,
-        r.max_docid, r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
+      Codec.decodeScoring(r.block)
         .map { case (docid, tf, len) => (r.term, docid, tf, len) }
     }(ScoringEnc).toDF("term", "docid", "tf", "len")
 
@@ -231,8 +232,7 @@ object PostingBlocks {
     * skips payload bytes in-stream). */
   def toPostingsPay(blocks: DataFrame): DataFrame =
     blocks.as(BlockEnc).flatMap { r =>
-      Codec.decodePay(Codec.Block(r.term, r.n, r.min_docid, r.max_docid,
-        r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
+      Codec.decodePay(r.block)
         .map(p => PayPostingRow(r.term, p.docid, p.tf, p.len,
           p.positions.toSeq, p.payloads.toSeq))
     }(PayPostingEnc).toDF()
@@ -243,8 +243,7 @@ object PostingBlocks {
     val spark = blocks.sparkSession
     import spark.implicits._
     blocks.as[BlockRow].flatMap { r =>
-      Codec.decodeRaw(Codec.Block(r.term, r.n, r.min_docid, r.max_docid,
-        r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
+      Codec.decodeRaw(r.block)
     }
   }
 
@@ -261,8 +260,7 @@ object PostingBlocks {
     * from the docs table. */
   def docLensFromBlocks(blocks: DataFrame, docs: DataFrame): DataFrame = {
     val pairs = blocks.as(BlockEnc).flatMap { r =>
-      Codec.decodeDocLens(Codec.Block(r.term, r.n, r.min_docid,
-        r.max_docid, r.max_tf, r.min_len, r.sum_tf, r.docs, r.lens, r.pos))
+      Codec.decodeDocLens(r.block)
     }(DocLenEnc).toDF("docid", "len")
     docs.select(col("docid"))
       .join(pairs.groupBy(col("docid")).agg(max(col("len")).as("len")),

@@ -84,32 +84,59 @@ object SegmentStore {
       s""""segments":[$segs],"deletes":[$dels]}"""
   }
 
+  // number fields are captured loosely and parsed by [[longField]], so a
+  // mistyped or out-of-range number is named rather than unmatched
   private val SegRe =
-    ("""\{"id":"((?:[^"\\]|\\.)*)","ord":(\d+),"numDocs":(\d+),""" +
-      """"sumLen":(\d+),"maxDocid":(-?\d+),"lineage":"((?:[^"\\]|\\.)*)"\}""").r
-  private val VerRe = """"version":(\d+)""".r
+    ("""\{"id":"((?:[^"\\]|\\.)*)","ord":([^,]*),"numDocs":([^,]*),""" +
+      """"sumLen":([^,]*),"maxDocid":([^,]*),"lineage":"((?:[^"\\]|\\.)*)"\}""").r
 
   private def unesc(s: String): String =
     s.replace("\\\"", "\"").replace("\\\\", "\\")
 
-  private val DelsRe = """"deletes":\[([^\]]*)\]""".r
   private val DelRe = """"((?:[^"\\]|\\.)*)"""".r
 
-  private val FmtRe = """"format":(\d+)""".r
+  private val FmtRe = """"format":([^,}]*)""".r
 
+  /** The whole manifest, as [[toJson]] writes it: anything shorter (a
+    * truncated file) or shaped otherwise does not match. Strings inside
+    * are escaped, so `],"deletes":[` can only end the segment list. */
+  private val ManifestRe =
+    """(?s)\{"format":[^,]*,"version":([^,]*),"segments":\[(.*)\],"deletes":\[(.*)\]\}""".r
+
+  private def bad(what: String): Nothing =
+    throw new IllegalArgumentException(s"bad manifest: $what")
+
+  /** A manifest number field: a decimal 64-bit integer, else an error
+    * that names the field. */
+  private def longField(field: String, raw: String): Long =
+    Option.when(raw.matches("-?\\d+"))(raw.toLongOption).flatten
+      .getOrElse(bad(s"field $field is not a 64-bit integer: ${raw.take(40)}"))
+
+  /** One segment object matched by [[SegRe]]. */
+  private def segOf(m: scala.util.matching.Regex.Match): SegmentMeta = {
+    val id = unesc(m.group(1))
+    def num(i: Int, field: String) = longField(s"$field of segment $id", m.group(i))
+    SegmentMeta(id, num(2, "ord"), num(3, "numDocs"), num(4, "sumLen"),
+      unesc(m.group(6)), num(5, "maxDocid"))
+  }
+
+  /** Parse a manifest. A codec format other than [[FormatVersion]], a
+    * truncated or malformed manifest, and a number field that is not a
+    * 64-bit integer are each an IllegalArgumentException naming what is
+    * wrong. */
   def fromJson(json: String): Manifest = {
-    val fmt = FmtRe.findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(0)
+    val fmt = FmtRe.findFirstMatchIn(json)
+      .map(m => longField("format", m.group(1))).getOrElse(0L)
     if (fmt != FormatVersion)
-      sys.error(s"segment store codec format $fmt != supported " +
+      bad(s"segment store codec format $fmt != supported " +
         s"$FormatVersion — refusing to open (rebuild the store; a " +
         s"mismatched position codec would silently decode garbage)")
-    val version = VerRe.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(sys.error(s"bad manifest: $json"))
-    val segs = SegRe.findAllMatchIn(json).map { m =>
-      SegmentMeta(unesc(m.group(1)), m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toLong, unesc(m.group(6)), m.group(5).toLong)
-    }.toSeq.sortBy(_.ord)
+    val (ver, segsJson, delsJson) = json.trim match {
+      case ManifestRe(v, ss, ds) => (v, ss, ds)
+      case _ => bad(s"truncated or malformed: ${json.take(200)}")
+    }
+    val version = longField("version", ver)
+    val segs = SegRe.findAllMatchIn(segsJson).map(segOf).toSeq.sortBy(_.ord)
     // parse-completeness guard: a manifest written by an older/newer
     // format (e.g. missing maxDocid) would match ZERO segment objects and
     // silently read as an empty store — appendSegment would then re-base
@@ -118,15 +145,12 @@ object SegmentStore {
     // loudly on any mismatch (loud format error > silent data loss).
     // (a bare `"id":"` can only open a segment object: strings inside the
     // manifest are escaped, so an embedded quote is always `\"`)
-    val rawIds = """"id":"""".r.findAllMatchIn(json).size
+    val rawIds = """"id":"""".r.findAllMatchIn(segsJson).size
     if (rawIds != segs.size)
-      sys.error(s"manifest format mismatch: $rawIds segment ids present " +
-        s"but only ${segs.size} parsed — refusing to open (json: $json)")
-    val dels = DelsRe.findFirstMatchIn(json)
-      .map(m => DelRe.findAllMatchIn(m.group(1)).map(x => unesc(x.group(1)))
-        .toSeq)
-      .getOrElse(Nil)
-    Manifest(version, segs, dels)
+      bad(s"format mismatch: $rawIds segment ids present but only " +
+        s"${segs.size} parsed — refusing to open (json: ${json.take(200)})")
+    Manifest(version, segs,
+      DelRe.findAllMatchIn(delsJson).map(x => unesc(x.group(1))).toSeq)
   }
 
   // ---- commit protocol ----
@@ -177,10 +201,7 @@ object SegmentStore {
   def readLineage(root: String, id: String): Option[SegmentMeta] = {
     val p = Paths.get(segDir(root, id), "_LINEAGE.json")
     if (!Files.exists(p)) None
-    else SegRe.findFirstMatchIn(Files.readString(p)).map { m =>
-      SegmentMeta(unesc(m.group(1)), m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toLong, unesc(m.group(6)), m.group(5).toLong)
-    }
+    else SegRe.findFirstMatchIn(Files.readString(p)).map(segOf)
   }
 
   /** Write one table of a segment-in-progress. */

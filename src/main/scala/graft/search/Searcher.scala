@@ -3,12 +3,16 @@ package graft.search
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.{Codec, InvertedIndex}
 
@@ -53,15 +57,29 @@ import graft.index.{Codec, InvertedIndex}
   * phrase, prefix or keyword-and-term query) is one Spark job with no
   * exchange. df, prefix and range expansions come from the index's
   * resident dictionary and deletes from its resident delete set (no
-  * dictionary or delete-set job). A fold that reads at most
-  * [[Searcher.SingleTaskRows]] estimated rows is one block scan feeding
-  * one `mapPartitions` in one task: a filtered scan, `coalesce(1)`, one
-  * `DeserializeToObject`, the fold, which keeps a bounded heap of the k
-  * best docs, and nothing after it — no aggregate, exchange, adaptive
-  * wrapper or TakeOrderedAndProject (whose `takeOrdered` sends closures
-  * through Spark's ClosureCleaner on every query). Per-query numbers
-  * (df and idf, boosts) live in the fold's closure, never in literals,
-  * so a same-shape query compiles nothing new.
+  * dictionary or delete-set job). A fold of term blocks alone that reads
+  * at most [[Searcher.SingleTaskRows]] estimated rows — a term, boolean or
+  * DisMax of terms, a scored or constant multi-term rewrite, a fuzzy
+  * query, a phrase, span or payload query without masks — is served
+  * without planning: the index holds its block table as one prepared
+  * scan ([[InvertedIndex.preparedBlocks]], planned once per commit point)
+  * and, read with the dictionary, which of that scan's partitions hold
+  * each term ([[InvertedIndex.partitionsOf]]), the analog of the
+  * reference's TermInfo file pointers (TermInfosReader.cs:178-224: term
+  * → df and where its postings start). The query prunes the scan to its
+  * terms' partitions, coalesces them into one task that drops other
+  * terms' rows, decodes and folds its own and keeps a bounded heap of the
+  * k best docs, and returns a DataFrame over that RDD: no analysis,
+  * optimization, codegen or Hadoop-configuration broadcast of a scan per
+  * query. A single-task fold with non-term leaves (keyword, range and
+  * function frames, span masks) is one planned block scan feeding one
+  * `mapPartitions`: a filtered scan, `coalesce(1)`, one
+  * `DeserializeToObject`, the fold, and nothing after it — no aggregate,
+  * exchange, adaptive wrapper or TakeOrderedAndProject (whose
+  * `takeOrdered` sends closures through Spark's ClosureCleaner on every
+  * query). Per-query numbers (df and idf, boosts) live in the fold's
+  * closure, never in literals, so a same-shape query compiles nothing
+  * new.
   */
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   /** Per-(term, docid) BM25 partial scores for a set of query terms.
@@ -160,8 +178,8 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       case (t, ls) if dfs.contains(t) =>
         t -> (sim.idfColD(idx.numDocs, dfs(t)), ls.toArray) }
     val (s, avgdl, at, fold) = (sim, idx.avgdl, leaves.toArray, trees.toArray)
-    Searcher.perDoc[ArrayBuffer[(Int, Double)]](idx, Searcher.foldInput(
-        idx.blocksFor(byTerm.keys.toSeq.sorted), frames.result()),
+    Searcher.perDoc[ArrayBuffer[(Int, Double)]](idx,
+        Searcher.Blocks.of(byTerm.keys.toSeq.sorted), frames.result(),
         if (parallel) Long.MaxValue else est, Searcher.Freqs, k,
         queries.size)(() => ArrayBuffer.empty) { (h, hits) =>
       if (h.term == null) {
@@ -422,7 +440,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
       .map { case (t, es) => t -> es.toArray }
     val (s, avgdl) = (sim, idx.avgdl)
     Searcher.perDoc[ArrayBuffer[(String, Double)]](idx,
-        Searcher.foldInput(idx.blocksFor(byTerm.keys.toSeq.sorted)), est,
+        Searcher.Blocks.of(byTerm.keys.toSeq.sorted), Nil, est,
         Searcher.Freqs, k)(() => ArrayBuffer.empty) { (h, docs) =>
       val tfn = s.tfNormD(h.tf.toDouble, h.len, avgdl)
       val xs = docs(Searcher.DocKey(0, h.docid))
@@ -445,15 +463,19 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
         if (rw == ScoringBoolean ||
             rw == AutoRewrite && ms.size <= Searcher.AutoRewriteTermCap)
           scoredOverTerms(ms.keySet, k)
-        else constantOverTerms(dictPred, ms.values.sum, k)
+        else constantOverTerms(
+          Searcher.Blocks(Some(ms.keys.toSeq.sorted), dictPred),
+          ms.values.sum, k)
       case None => rw match {
-        case ConstantScore => constantOverTerms(dictPred, Long.MaxValue, k)
+        case ConstantScore =>
+          constantOverTerms(Searcher.Blocks(None, dictPred), Long.MaxValue, k)
         case ScoringBoolean =>
           scoredOverTerms(dictMatches(dictPred, None).get, k)
         case AutoRewrite =>
           dictMatches(dictPred, Some(Searcher.AutoRewriteTermCap)) match {
             case Some(terms) => scoredOverTerms(terms, k)
-            case None => constantOverTerms(dictPred, Long.MaxValue, k)
+            case None => constantOverTerms(Searcher.Blocks(None, dictPred),
+              Long.MaxValue, k)
           }
       }
     }
@@ -523,14 +545,14 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   }
 
   /** Constant-score multi-term rewrite (MultiTermQuery.cs:84-114): the
-    * blocks of the terms matching the dictionary predicate (a pushed-down
-    * scan filter), one row per doc at score 1.0 — in one task when the
-    * matched terms' postings (`rows`) are few. */
-  private def constantOverTerms(dictPred: Column, rows: Long,
+    * blocks of the matched terms — the term set a resident dictionary
+    * lists, else the dictionary predicate as a pushed-down scan filter —
+    * one row per doc at score 1.0; in one task when the matched terms'
+    * postings (`rows`) are few. */
+  private def constantOverTerms(blocks: Searcher.Blocks, rows: Long,
       k: Option[Int]): DataFrame =
-    Searcher.perDoc[AnyRef](idx,
-        Searcher.foldInput(idx.blockTable.filter(dictPred)),
-        rows, Searcher.Freqs, k)(() => None) { (h, docs) =>
+    Searcher.perDoc[AnyRef](idx, blocks, Nil, rows, Searcher.Freqs, k)(
+        () => None) { (h, docs) =>
       docs(Searcher.DocKey(0, h.docid))
     } { (_, _) => Some(1.0) }.select("docid", "score")
 
@@ -656,8 +678,7 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     val leafOf = leaves.zipWithIndex.collect { case (TermLeaf(t), i) => t -> i }
       .groupMap(_._1)(_._2).map { case (t, is) => t -> is.toArray }
     val n = leaves.size
-    Searcher.perDoc[Searcher.LeafDoc](idx,
-        Searcher.foldInput(idx.blocksFor(terms), masks),
+    Searcher.perDoc[Searcher.LeafDoc](idx, Searcher.Blocks.of(terms), masks,
         est.getOrElse(dfOf(terms.toSet).values.sum + masks.size * idx.numDocs),
         if (pay) Searcher.Payloads else Searcher.Positions, k)(
         () => new Searcher.LeafDoc(n)) { (h, docs) =>
@@ -1068,26 +1089,37 @@ object Searcher {
     if (rows <= SingleTaskRows) ds.coalesce(1)
     else ds.repartition(col("docid"))
 
+  /** The posting blocks a fold reads: those of the terms `pred` matches,
+    * which are `terms` when the driver knows them. */
+  private[search] final case class Blocks(terms: Option[Seq[String]],
+      pred: Column)
+
+  private[search] object Blocks {
+    def of(terms: Seq[String]): Blocks =
+      Blocks(Some(terms), col("term").isin(terms: _*))
+  }
+
   /** A fold's input: `blocks`, and unioned in, the (docid, leaf, score,
     * len) rows of its non-term leaves. */
   private[search] def foldInput(blocks: DataFrame,
       leaves: Seq[DataFrame] = Nil): Dataset[FoldIn] =
     (blocks.select(col("term"), col("n"), col("min_docid").as("docid"),
-        col("docs"), col("lens"), col("pos"), lit(-1).as("leaf"),
-        lit(0.0).as("score"), lit(-1L).as("len")) +:
+        col("sum_tf"), col("docs"), col("lens"), col("pos"),
+        lit(-1).as("leaf"), lit(0.0).as("score"), lit(-1L).as("len")) +:
       leaves.map(_.select(lit(null).cast("string").as("term"),
-        lit(0).as("n"), col("docid"), lit(null).cast("binary").as("docs"),
+        lit(0).as("n"), col("docid"), lit(0L).as("sum_tf"),
+        lit(null).cast("binary").as("docs"),
         lit(null).cast("binary").as("lens"),
         lit(null).cast("binary").as("pos"), col("leaf"), col("score"),
         col("len"))))
       .reduce(_ unionByName _).as(FoldInEnc)
 
   /** One row of a fold's input ([[perDoc]]): a posting block of a query
-    * term, `docid` its first docid; or, `term` null, one doc of a
-    * non-term leaf numbered `leaf` — a keyword, range or function frame
-    * with its `score`, or a span mask with the doc's length `len` when
-    * known (else -1). */
-  final case class FoldIn(term: String, n: Int, docid: Long,
+    * term, `docid` its first docid and `sum_tf` its tfs' sum; or, `term`
+    * null, one doc of a non-term leaf numbered `leaf` — a keyword, range
+    * or function frame with its `score`, or a span mask with the doc's
+    * length `len` when known (else -1). */
+  final case class FoldIn(term: String, n: Int, docid: Long, sum_tf: Long,
       docs: Array[Byte], lens: Array[Byte], pos: Array[Byte], leaf: Int,
       score: Double, len: Long)
 
@@ -1112,38 +1144,51 @@ object Searcher {
     if (r.term == null)
       Iterator.single(Hit(r.docid, null, 1L, r.len, Array(0), null, r.leaf,
         r.score))
-    else {
-      val b = Codec.Block(r.term, r.n, r.docid, 0L, 0L, 0L, 0L, r.docs,
-        r.lens, r.pos)
-      val all = what match {
-        case Freqs => Codec.decodeScoring(b).map { case (d, tf, len) =>
-          Hit(d, r.term, tf, len, null, null, -1, 0.0) }
-        case Positions => Codec.decode(b).map(p =>
-          Hit(p.docid, r.term, p.tf, p.len, p.positions, null, -1, 0.0))
-        case Payloads => Codec.decodePay(b).map(p => Hit(p.docid, r.term,
-          p.tf, p.len, p.positions, p.payloads, -1, 0.0))
-      }
-      if (deleted.isEmpty) all
-      else all.filter(h => java.util.Arrays.binarySearch(deleted, h.docid) < 0)
-    }
+    else blockHits(Codec.Block(r.term, r.n, r.docid, 0L, 0L, 0L, r.sum_tf,
+      r.docs, r.lens, r.pos), what, deleted)
 
-  /** The one per-doc evaluator of the query layer. Each of `in`'s rows
-    * is decoded to hits ([[Hit]]), skipping deleted docs; each hit goes
-    * to `add` with the state of any key, made by `init` in a hash map per
-    * partition; then `fold` turns each key's state into its score or
-    * none. Returns (qi, docid, score); with `k`, only each query's k best
-    * docs (score desc, docid asc), kept in a bounded heap as they come.
+  /** The hits of one posting block, decoded as `what` asks, skipping the
+    * docs of the sorted delete set `deleted`. */
+  private def blockHits(b: Codec.Block, what: Decode, deleted: Array[Long])
+      : Iterator[Hit] = {
+    val all = what match {
+      case Freqs => Codec.decodeScoring(b).map { case (d, tf, len) =>
+        Hit(d, b.term, tf, len, null, null, -1, 0.0) }
+      case Positions => Codec.decode(b).map(p =>
+        Hit(p.docid, b.term, p.tf, p.len, p.positions, null, -1, 0.0))
+      case Payloads => Codec.decodePay(b).map(p => Hit(p.docid, b.term,
+        p.tf, p.len, p.positions, p.payloads, -1, 0.0))
+    }
+    if (deleted.isEmpty) all
+    else all.filter(h => java.util.Arrays.binarySearch(deleted, h.docid) < 0)
+  }
+
+  /** The one per-doc evaluator of the query layer. Its input is the
+    * posting `blocks` and, unioned in, the one-doc rows of its non-term
+    * `leaves` ([[foldInput]]). Each row is decoded to hits ([[Hit]]),
+    * skipping deleted docs; each hit goes to `add` with the state of any
+    * key, made by `init` in a hash map per partition; then `fold` turns
+    * each key's state into its score or none. Returns (qi, docid,
+    * score); with `k`, only each query's k best docs (score desc, docid
+    * asc), kept in a bounded heap as they come.
     *
     * At most [[SingleTaskRows]] estimated rows (`est`) fold in the task
     * that reads the blocks, which decodes each block as it folds, and
-    * with `k` the rows come out best first: the answer. Above, a typed
-    * decode step feeds `repartition(docid)`, each partition folds its
-    * docs, and a single query's (`queries` 1) k best of every partition
-    * are merged by TakeOrderedAndProject. A delete set too large to hold
-    * is anti-joined with the decoded hits instead. */
+    * with `k` the rows come out best first: the answer. A fold of term
+    * blocks alone over a resident dictionary and delete set reads the
+    * index's prepared scan ([[InvertedIndex.preparedBlocks]]) pruned to
+    * the partitions that hold its terms, coalesced into its one task,
+    * and is returned as a DataFrame over that RDD: no plan of the scan
+    * is made for the query. Any other single-task fold is a filtered
+    * scan and `coalesce(1)`. Above the limit, a typed decode step feeds
+    * `repartition(docid)`, each partition folds its docs, and a single
+    * query's (`queries` 1) k best of every partition are merged by
+    * TakeOrderedAndProject. A delete set too large to hold is anti-joined
+    * with the decoded hits instead. */
   private[search] def perDoc[S <: AnyRef](idx: InvertedIndex,
-      in: Dataset[FoldIn], est: Long, what: Decode, k: Option[Int],
-      queries: Int = 1)(init: () => S)(add: (Hit, DocKey => S) => Unit)(
+      blocks: Blocks, leaves: Seq[DataFrame], est: Long, what: Decode,
+      k: Option[Int], queries: Int = 1)(init: () => S)(
+      add: (Hit, DocKey => S) => Unit)(
       fold: (DocKey, S) => Option[Double]): DataFrame = {
     val run: Iterator[Hit] => Iterator[(Int, Long, Double)] = it => {
       val docs = new java.util.HashMap[DocKey, S]()
@@ -1157,18 +1202,30 @@ object Searcher {
       k.fold(scored)(best(_, scored))
     }
     val one = est <= SingleTaskRows
-    val out = idx.deletedIds match {
-      case Some(ids) if one =>
+    lazy val in = foldInput(idx.blockTable.filter(blocks.pred), leaves)
+    val rows = (blocks.terms, idx.dictionary, idx.deletedIds) match {
+      case (Some(terms), Some(dict), Some(ids)) if one && leaves.isEmpty =>
+        // a term the dictionary lacks has no blocks: it reads nothing
+        val present = terms.filter(dict.df(_).isDefined)
+        val wanted = present.map(UTF8String.fromString).toSet
+        val scan = if (what == Freqs) idx.preparedFreqs else idx.preparedBlocks
+        idx.blockTable.sparkSession.createDataFrame(new FoldRDD(
+            PartitionPruningRDD.create(scan, idx.partitionsOf(present).toSet)
+              .coalesce(1),
+            it => run(it.filter(r => wanted(r.getUTF8String(0)))
+              .flatMap(r => blockHits(InvertedIndex.blockOf(r), what, ids)))),
+          OutSchema)
+      case (_, _, Some(ids)) if one =>
         in.coalesce(1).mapPartitions(it =>
           run(it.flatMap(hitsOf(_, what, ids))))(OutEnc)
-      case ids =>
+          .toDF("qi", "docid", "score")
+      case (_, _, ids) =>
         val decoded = in.mapPartitions(_.flatMap(hitsOf(_, what,
           ids.getOrElse(Array.emptyLongArray))))(HitEnc)
         oneTask(if (ids.isDefined) decoded
           else idx.live(decoded.toDF()).as(HitEnc), est)
-          .mapPartitions(run)(OutEnc)
+          .mapPartitions(run)(OutEnc).toDF("qi", "docid", "score")
     }
-    val rows = out.toDF("qi", "docid", "score")
     k match {
       case Some(n) if !one && queries == 1 =>
         rows.orderBy(col("score").desc, col("docid").asc).limit(n)
@@ -1200,6 +1257,23 @@ object Searcher {
     val c = SQLOrderingUtil.compareDoubles(b._3, a._3)
     if (c != 0) c else java.lang.Long.compare(a._2, b._2)
   }
+
+  /** `fold` over each partition of `prev`, as (qi, docid, score) rows of
+    * [[OutSchema]]: a `mapPartitions` whose function skips Spark's
+    * closure cleaner, which parses the class file that defines a closure
+    * each time it is handed one — for a point query, on every query. */
+  private final class FoldRDD(prev: RDD[InternalRow],
+      fold: Iterator[InternalRow] => Iterator[(Int, Long, Double)])
+      extends RDD[Row](prev) {
+    override protected def getPartitions: Array[Partition] = prev.partitions
+    override def compute(split: Partition, ctx: TaskContext): Iterator[Row] =
+      fold(prev.iterator(split, ctx)).map { case (qi, docid, score) =>
+        Row(qi, docid, score) }
+  }
+
+  private val OutSchema = StructType(Seq(StructField("qi", IntegerType, false),
+    StructField("docid", LongType, false),
+    StructField("score", DoubleType, false)))
 
   private lazy val FoldInEnc = Encoders.product[FoldIn]
   private lazy val HitEnc = Encoders.product[Hit]

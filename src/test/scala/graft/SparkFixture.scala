@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart}
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -27,9 +27,10 @@ object SparkFixture {
   }
 
   /** What [[record]] saw: the number of jobs started, and the physical
-    * plan and action name of every query executed. */
+    * plan and action name of every query executed; the tasks those jobs
+    * ran and the input records they read. */
   final case class Recorded(jobs: Int, plans: Seq[SparkPlan],
-      actions: Seq[String])
+      actions: Seq[String], tasks: Int = 0, recordsRead: Long = 0L)
 
   private val TagKey = "graft.spec.tag"
 
@@ -42,14 +43,23 @@ object SparkFixture {
   def record(body: => Unit): Recorded = {
     val sc = spark.sparkContext
     val tag = s"plan-${System.nanoTime()}"
-    val started, open, events = new AtomicInteger
+    val started, open, events, tasks = new AtomicInteger
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val plans = mutable.ArrayBuffer.empty[(String, SparkPlan)]
     def ours(props: java.util.Properties): Boolean =
       props != null && props.getProperty(TagKey) == tag
     val jobs = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (ours(e.properties)) {
+          e.stageIds.foreach(stages.add)
           started.incrementAndGet(); open.incrementAndGet()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          if (e.taskMetrics != null)
+            read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         open.updateAndGet(n => math.max(0, n - 1))
@@ -82,6 +92,6 @@ object SparkFixture {
       sc.removeSparkListener(jobs)
     }
     val ps = plans.synchronized(plans.toSeq)
-    Recorded(started.get, ps.map(_._2), ps.map(_._1))
+    Recorded(started.get, ps.map(_._2), ps.map(_._1), tasks.get, read.get)
   }
 }

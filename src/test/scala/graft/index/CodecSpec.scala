@@ -119,6 +119,52 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  /** A one-posting block whose docs stream claims `tf`, over a
+    * three-byte position stream; `sumTf` as the block row records it. */
+  private def corrupt(tf: Long, sumTf: Long = 3L): Codec.Block = {
+    val docs = new ArrayBuffer[Byte]
+    Codec.writeVLong(docs, 0L) // gap 0, tf follows
+    Codec.writeVLong(docs, tf)
+    Codec.Block("hot", 1, 4242L, 4242L, 3L, 5L, sumTf, docs.toArray,
+      Array[Byte](5), Codec.encodePositions(Array(1, 2, 3)))
+  }
+
+  private val decoders: Seq[(String, Codec.Block => Iterator[Any])] = Seq(
+    "decode" -> Codec.decode, "decodePay" -> Codec.decodePay,
+    "decodeRaw" -> Codec.decodeRaw, "decodeScoring" -> Codec.decodeScoring)
+
+  test("a corrupt tf fails every decoder cleanly, naming the block") {
+    Seq((1L << 31) - 1, 1L << 28, (1L << 32) + 5).foreach { tf =>
+      decoders.foreach { case (name, dec) =>
+        val e = intercept[IllegalArgumentException](dec(corrupt(tf)).toList)
+        assert(e.getMessage.contains("term=hot") &&
+          e.getMessage.contains("min_docid=4242"), s"$name tf=$tf: $e")
+      }
+    }
+    // the sound block decodes; tfs that fall short of sum_tf do not
+    decoders.foreach { case (name, dec) =>
+      assert(dec(corrupt(3L)).size == 1, name)
+    }
+    val e = intercept[IllegalArgumentException](
+      Codec.decodeScoring(corrupt(2L)).toList)
+    assert(e.getMessage.contains("sum_tf 3"), e.getMessage)
+  }
+
+  test("a corrupt block fails its Spark task, not the JVM") {
+    val sc = graft.SparkFixture.spark.sparkContext
+    val bad = corrupt((1L << 31) - 1)
+    decoders.foreach { case (name, dec) =>
+      val e = intercept[org.apache.spark.SparkException](
+        sc.parallelize(Seq(0, 1), 2)
+          .map(i => if (i == 1) dec(bad).size else 0).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains("term=hot min_docid=4242")), s"$name: $e")
+    }
+    // the context still runs jobs
+    assert(sc.parallelize(1 to 4, 2).map(_ * 2).sum() == 20)
+  }
+
   test("compression: dense tf=1 lists cost ~1 byte per posting") {
     val ps = (0L until 1000L).map(d => Codec.Posting(d, 1L, 10L, Array(0)))
     val blocks = Codec.encode("t", ps.iterator).toList

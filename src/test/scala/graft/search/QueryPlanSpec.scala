@@ -8,7 +8,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
   ArrayFilter, ArrayTransform, Expression, MapFromArrays, ZipWith}
 import org.apache.spark.sql.execution.{DeserializeToObjectExec,
-  FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
+  FileSourceScanExec, RDDScanExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions.{array, col, date_format, element_at,
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
-import graft.index.{IndexBuilder, SegmentStore}
+import graft.index.{IndexBuilder, InvertedIndex, SegmentStore}
 import graft.model.Transcripts
 
 /** Plan shape of the query layer on a segmented store. Every df a query
@@ -31,7 +31,9 @@ import graft.model.Transcripts
   * a small point query folds in one task, and per-query numbers are plan
   * parameters: a point query is one job with no exchange, aggregate or
   * adaptive wrapper, reads no dictionary table, and a same-shape query
-  * compiles no new class. */
+  * compiles no new class. A point query of term blocks alone reads the
+  * index's prepared block scan, pruned to the partitions its terms'
+  * pointers name, in one task. */
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkFixture.spark
 
@@ -91,18 +93,70 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     PrefixQ("de", ConstantScore),
     BoolQ(must = Seq(KeywordQ("role", "assistant"), TermQ("error"))))
 
-  /** Every point query, on a fresh Searcher over `index` (its resident
-    * dictionary and delete set already read), runs one job and executes
-    * no exchange. */
-  private def assertOneJobEach(index: graft.index.InvertedIndex): Unit = {
+  /** A point query the prepared block scan serves: every shape of the
+    * mix but `+role:`, whose keyword frame keeps the Dataset plan. */
+  private def routed(q: Query): Boolean = q match {
+    case b: BoolQ => !b.must.exists(_.isInstanceOf[KeywordQ])
+    case _ => true
+  }
+
+  /** The index terms a point query of the mix reads. */
+  private def termsOf(q: Query, index: InvertedIndex): Set[String] = q match {
+    case TermQ(t) => Set(t)
+    case b: BoolQ => (b.must ++ b.should ++ b.mustNot).flatMap(termsOf(_, index)).toSet
+    case PhraseQ(ts, _) => ts.map(_._1).toSet
+    case PrefixQ(p, _) => index.dictionary.get.withPrefix(p).map(_._1).toSet
+    case _ => Set.empty
+  }
+
+  /** Each partition of the index's prepared block scan: its rows and the
+    * terms it holds, by a full scan. */
+  private def partitionTerms(index: InvertedIndex): Array[(Long, Set[String])] =
+    index.preparedBlocks.mapPartitions { it =>
+      val ts = scala.collection.mutable.Set.empty[String]
+      var n = 0L
+      it.foreach { r => n += 1; ts += r.getUTF8String(0).toString }
+      Iterator.single((n, ts.toSet))
+    }.collect()
+
+  private def fileScans(plans: Seq[SparkPlan]): Int =
+    plans.map(p => collect(p) { case f: FileSourceScanExec => f }.size).sum
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** On a fresh Searcher over `index` (its resident dictionary and delete
+    * set already read), every routed point query is one job of one task
+    * that reads the prepared scan's partitions its terms' pointers name —
+    * a superset of those holding its terms — and no file scan of a plan
+    * of its own, compiling no class once one routed query has run; the
+    * `+role:` shape is one job with no exchange. Returns how many routed
+    * queries read fewer partitions than all. */
+  private def assertRouted(index: InvertedIndex): Int = {
     index.dictionary; index.deletedIds
-    pointQueries.foreach { q =>
+    val full = partitionTerms(index)
+    new Searcher(index).topK(TermQ("error"), 10).collect()
+    pointQueries.count { q =>
       val s = new Searcher(index)
-      val (jobs, plans) =
-        record(assert(s.topK(q, 10).collect().nonEmpty, s"$q"))
-      assert(jobs == 1, s"$q\n${plans.mkString("\n")}")
-      assert(plans.nonEmpty && exchanges(plans).isEmpty,
-        s"$q: ${exchanges(plans)}")
+      val before = compiles
+      val r = SparkFixture.record(
+        assert(s.topK(q, 10).collect().nonEmpty, s"$q"))
+      assert(r.jobs == 1, s"$q\n${r.plans.mkString("\n")}")
+      assert(r.plans.nonEmpty && exchanges(r.plans).isEmpty,
+        s"$q: ${exchanges(r.plans)}")
+      if (!routed(q)) {
+        assert(fileScans(r.plans) > 0, s"$q")
+        false
+      } else {
+        assert(compiles == before, s"$q compiled a class")
+        assert(r.tasks == 1 && fileScans(r.plans) == 0,
+          s"$q: ${r.tasks} tasks\n${r.plans.mkString("\n")}")
+        val terms = termsOf(q, index)
+        val parts = index.partitionsOf(terms)
+        assert(full.indices.filter(p => full(p)._2.exists(terms))
+          .forall(parts.contains), s"$q: ${parts.toSeq}")
+        assert(r.recordsRead == parts.map(full(_)._1).sum, s"$q")
+        parts.length < full.length
+      }
     }
   }
 
@@ -151,7 +205,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     PrefixQ("de", ConstantScore),
     BoolQ(must = Seq(KeywordQ("role", "assistant"), TermQ("error"))))
 
-  test("a single-task topK is one fold keeping its k best, as score's top k") {
+  test("a point query's topK is its fold's k best, as score's top k") {
     val k = 10
     val cases = Seq(oneSegment, idx, deleted).flatMap(i =>
       pointQueries.map(i -> _)) ++ tiedQueries.map(tied -> _)
@@ -164,8 +218,13 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(exchanges(Seq(plan)).isEmpty, s"$q\n$plan")
       assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.isEmpty,
         s"$q\n$plan")
-      assert(collect(plan) { case d: DeserializeToObjectExec => d }.size == 1,
-        s"$q\n$plan")
+      if (routed(q))
+        // a DataFrame over the pruned prepared scan: no plan of its own
+        assert(collect(plan) { case r: RDDScanExec => r }.size == 1 &&
+          fileScans(Seq(plan)) == 0, s"$q\n$plan")
+      else
+        assert(collect(plan) { case d: DeserializeToObjectExec => d }.size == 1,
+          s"$q\n$plan")
       val got = ranked(top)
       assert(got.nonEmpty && got == ranked(scoreTop(s, q, k)), s"$q")
       // a tie at the k-th score that the docid order breaks
@@ -189,8 +248,9 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(boolJobs <= 2)
   }
 
-  test("every point query shape runs one job with no exchange") {
-    assertOneJobEach(idx)
+  test("a routed point query is one job of one task over its terms' partitions") {
+    val pruned = assertRouted(idx)
+    assert(pruned == pointQueries.count(routed), s"$pruned")
   }
 
   private val gone = Transcripts.vocabulary(40)
@@ -207,7 +267,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("on a store with deletes every point query still runs one job") {
     assert(deleted.deletedIds.exists(_.nonEmpty))
-    assertOneJobEach(deleted)
+    assertRouted(deleted)
     // the delete set is applied
     assert(new Searcher(deleted).topK(TermQ(gone), 10).collect().isEmpty)
   }
@@ -430,21 +490,64 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a boolean of two terms and a phrase reads the blocks twice") {
+    idx.dictionary
     val s = new Searcher(idx)
-    def blockReads(q: Query): Int =
-      collect(s.topK(q, 10).queryExecution.executedPlan) {
+    def reads(q: Query): (Int, Int) = {
+      val plan = s.topK(q, 10).queryExecution.executedPlan
+      (collect(plan) {
         case f: FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.getName == "blocks") => f
-      }.size
-    // one read of the block table is one scan per segment
-    val perRead = blockReads(TermQ("error"))
-    assert(perRead == 3)
-    // both terms in one scan, then one read for the phrase's terms
-    assert(blockReads(BoolQ(should = Seq(TermQ("error"), TermQ("deploy"),
-      PhraseQ(Seq("spark" -> 0, "table" -> 1))))) == 2 * perRead)
-    // a repeated phrase term is read once
-    assert(blockReads(PhraseQ(Seq("spark" -> 0, "table" -> 1,
-      "spark" -> 2))) == perRead)
+      }.size, collect(plan) { case r: RDDScanExec => r }.size)
+    }
+    // a planned read of the block table is one scan per segment
+    val role = BoolQ(must = Seq(KeywordQ("role", "user"), TermQ("error")))
+    assert(reads(role) == (3, 0))
+    // both terms in one planned scan; the phrase, a frame of its own,
+    // reads the prepared scan
+    assert(reads(BoolQ(should = Seq(TermQ("error"), TermQ("deploy"),
+      PhraseQ(Seq("spark" -> 0, "table" -> 1))))) == (3, 1))
+    // a phrase alone, a repeated term too, is one read of the prepared scan
+    assert(reads(PhraseQ(Seq("spark" -> 0, "table" -> 1, "spark" -> 2))) ==
+      (0, 1))
+  }
+
+  test("term pointers name every partition of a term, none for an absent term") {
+    // three segments with deletes; four texts, so every term fills
+    // blocks and a hot term's blocks cross a partition boundary
+    val root = Files.createTempDirectory("graft_plan_ptr_").toString
+    val texts = Seq("error deploy spark merge table", "spark table query error",
+      "deploy merge error error", "the spark table deploy error builds")
+    IndexBuilder.buildSegments(spark,
+      Transcripts.synthetic(spark, 1500, seed = 3L, partitions = 6)
+        .withColumn("text", element_at(array(texts.map(lit): _*),
+          (col("turn_idx") % 4 + 1).cast("int"))),
+      root, numBatches = 3, numPartitions = 4)
+    IndexBuilder.deleteByKeyword(spark, root, "role", "tool")
+    val index = SegmentStore.open(spark, root)
+    val dict = index.dictionary.get.withPrefix("").map(_._1).toSeq
+    assert(index.deletedIds.exists(_.nonEmpty))
+    // one partition per block file
+    val files = index.blockTable.inputFiles.length
+    assert(index.preparedBlocks.getNumPartitions == files && files == 12)
+    assert(index.preparedFreqs.getNumPartitions == files)
+    val full = partitionTerms(index)
+    val holding = dict.map(t => t -> full.indices.filter(full(_)._2(t))).toMap
+    assert(holding.values.exists(_.size > 3), s"$holding")
+    dict.foreach { t =>
+      val parts = index.partitionsOf(Seq(t))
+      assert(holding(t).forall(parts.contains), s"$t: ${parts.toSeq}")
+    }
+    // a term absent from the dictionary reads no partition, even one that
+    // sorts inside a partition's run
+    val s = new Searcher(index)
+    Seq("errors", "sparkle", "zzz").foreach { t =>
+      val r = SparkFixture.record(assert(s.topK(TermQ(t), 10).collect().isEmpty))
+      assert(r.tasks == 0 && r.recordsRead == 0, s"$t")
+    }
+    val r = SparkFixture.record(s.topK(BoolQ(should =
+      Seq(TermQ("errors"), TermQ("merge"))), 10).collect())
+    assert(r.recordsRead ==
+      index.partitionsOf(Seq("merge")).map(full(_)._1).sum)
   }
 
   test("no single-task point query plans an object aggregate or AQE") {
