@@ -2,6 +2,8 @@ package graft.index
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.hadoop.fs.FileStatus
+
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation,
@@ -10,7 +12,8 @@ import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Union}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.unsafe.types.UTF8String
@@ -71,7 +74,11 @@ final case class InvertedIndex(
     /** Rows above which the dictionary or the delete set is not held on
       * the driver: [[InvertedIndex.ResidentRows]]; a spec lowers it to
       * run the scan and anti-join fallbacks on a small corpus. */
-    private[graft] val residentRows: Int = InvertedIndex.ResidentRows) {
+    private[graft] val residentRows: Int = InvertedIndex.ResidentRows,
+    /** Bytes of pointed-to block partitions above which a point query
+      * plans its scan instead of reading [[preparedBlocks]]:
+      * [[InvertedIndex.RoutedBytes]]; a spec lowers it. */
+    private[graft] val routedBytes: Long = InvertedIndex.RoutedBytes) {
 
   /** [[blockTable]] as an Option; kept only for the benchmark program
     * (perfbench), which reads `blocks.get`. */
@@ -89,14 +96,14 @@ final case class InvertedIndex(
     * summed over segments, sorted. None when it has more than
     * [[residentRows]] per-segment rows; callers then scan [[dictRows]]. */
   lazy val dictionary: Option[InvertedIndex.Dictionary] =
-    resident.head.map(InvertedIndex.Dictionary(_))
+    resident._1.head.map(InvertedIndex.Dictionary(_))
 
   /** The live delete set held on the driver, sorted: Some(empty) when
     * nothing is deleted, None when the set has more than
     * [[residentRows]] rows (then [[live]] anti-joins [[deleted]]). */
   lazy val deletedIds: Option[Array[Long]] =
     if (deleted.isEmpty) Some(Array.emptyLongArray)
-    else resident(2).map(_.map(_._2).distinct.sorted)
+    else resident._1(2).map(_.map(_._2).distinct.sorted)
 
   /** The block table as one prepared scan, planned on first use and
     * shared by every query of this commit point: a point query prunes it
@@ -106,14 +113,15 @@ final case class InvertedIndex(
     * partitions whole. Its rows are the [[BlockRow]] columns as Spark's
     * internal rows, so a task reads each row's term in place and builds a
     * block ([[InvertedIndex.blockOf]]) only for its own terms. */
-  @transient lazy val preparedBlocks: RDD[InternalRow] = scanFiles(identity)
+  @transient lazy val preparedBlocks: RDD[InternalRow] = prepared._1
 
-  /** [[preparedBlocks]] with `pos` null, in the same partitions: the
-    * scan of a fold that decodes only tfs and lengths, which then skips
-    * decoding and copying the position stream (about 8% of a one-term
-    * scan's time on a 300k-turn store). */
-  @transient private[graft] lazy val preparedFreqs: RDD[InternalRow] =
-    scanFiles(_.withColumn("pos", lit(null).cast("binary")))
+  @transient private lazy val prepared = scanFiles(identity)
+
+  /** The bytes of the partitions `parts` of [[preparedBlocks]]: their
+    * block files' lengths, a file's shared evenly by its splits; 0 when
+    * the scan is not per file (an in-memory table). */
+  private[graft] def bytesOf(parts: Array[Int]): Long =
+    prepared._2.fold(0L)(b => parts.iterator.map(b(_)).sum)
 
   /** `project` of the block table's [[BlockRow]] columns, as one RDD with
     * one partition per block file (or per split of a file too large for
@@ -122,21 +130,44 @@ final case class InvertedIndex(
     * partition, and a task would read files none of whose terms it needs.
     * Each file is planned on its own, so every file's generated scan code
     * is the same class: in one plan each would be a codegen stage of its
-    * own, a class per file that Spark's code cache can evict. */
-  private def scanFiles(project: DataFrame => DataFrame): RDD[InternalRow] = {
+    * own, a class per file that Spark's code cache can evict. With the
+    * per-file scan, each partition's bytes. */
+  private def scanFiles(project: DataFrame => DataFrame)
+      : (RDD[InternalRow], Option[Array[Long]]) = {
     def rows(df: DataFrame) = project(df.select(
       PostingBlocks.BlockEnc.schema.fieldNames.toSeq.map(col): _*))
       .queryExecution.toRdd
-    val plain = !blockTable.queryExecution.analyzed.exists {
+    val spark = blockTable.sparkSession
+    blockFiles.filter(_.nonEmpty) match {
+      case None => (rows(blockTable), None)
+      case Some(files) =>
+        val scans = files.map(f => rows(spark.read
+          .schema(PostingBlocks.BlockEnc.schema).parquet(f.getPath.toString)))
+        (spark.sparkContext.union(scans), Some(files.zip(scans).flatMap {
+          case (f, r) =>
+            val n = r.getNumPartitions
+            Seq.fill(n)(f.getLen / n)
+        }.toArray))
+    }
+  }
+
+  /** The block table's files in path order, when the table is a union of
+    * plain file scans. Their Hadoop paths, not `inputFiles`, whose URIs
+    * are escaped: read back as paths they would be escaped twice. */
+  private lazy val blockFiles: Option[Seq[FileStatus]] = {
+    val plan = blockTable.queryExecution.analyzed
+    val listed = plan.collect { case l: LogicalRelation => l.relation match {
+      case HadoopFsRelation(f: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        Some(f.allFiles())
+      case _ => None
+    } }
+    val plain = !plan.exists {
       case _: Union | _: LogicalRelation => false
       case p: Project => !p.projectList.forall(_.isInstanceOf[Attribute])
       case _ => true
     }
-    val files = blockTable.inputFiles.sorted.toSeq
-    val spark = blockTable.sparkSession
-    if (!plain || files.isEmpty) rows(blockTable)
-    else spark.sparkContext.union(files.map(f =>
-      rows(spark.read.schema(PostingBlocks.BlockEnc.schema).parquet(f))))
+    if (!plain || listed.contains(None)) None
+    else Some(listed.flatten.flatten.sortBy(_.getPath.toString))
   }
 
   /** The partitions of [[preparedBlocks]] that hold blocks of any of
@@ -153,44 +184,23 @@ final case class InvertedIndex(
 
   /** Each block partition's term runs ([[InvertedIndex.TermRuns]]). */
   private lazy val termRuns: Option[InvertedIndex.TermRuns] =
-    resident(1).map(InvertedIndex.TermRuns(_, runScan.getNumPartitions))
+    resident._1(1).map(InvertedIndex.TermRuns(_, resident._2))
 
-  /** A term-only scan of the block table, laid out in the same
-    * partitions as [[preparedBlocks]] (a file scan splits by file size,
-    * not by the columns it reads): per partition, each run of ascending
-    * terms as a (first term, 2p) and a (last term, 2p + 1) row. Blocks
-    * are written sorted by (term, min_docid), so a partition holds one
-    * run per block file or file split it reads. */
-  @transient private lazy val runScan: RDD[(String, Long)] =
-    scanFiles(_.select(col("term"))).mapPartitionsWithIndex { (p, rows) =>
-      val out = ArrayBuffer.empty[(String, Long)]
-      var first: UTF8String = null
-      var last: UTF8String = null
-      def close(): Unit = if (first != null) {
-        out += ((first.toString, 2L * p))
-        out += ((last.toString, 2L * p + 1))
-      }
-      rows.foreach { r =>
-        val t = r.getUTF8String(0)
-        if (last == null || t.compareTo(last) < 0) {
-          close()
-          first = t.clone()
-        }
-        last = t.clone()
-      }
-      close()
-      out.iterator
-    }
-
-  /** The (term, df) dictionary rows, the block partitions' term runs and
-    * the (null, docid) delete rows, read together by one job on first
-    * use of any. */
-  private lazy val resident = InvertedIndex.collectBounded(
-    Seq(InvertedIndex.pairs(dictRows.select(col("term"), col("df"))),
-      runScan) ++
-      deleted.toSeq.map(d => InvertedIndex.pairs(
-        d.select(lit(null).cast("string"), col("docid")))),
-    residentRows)
+  /** The (term, df) dictionary rows, the block partitions' term runs
+    * ([[InvertedIndex.runsOf]] over a term-only scan laid out in the same
+    * partitions as [[preparedBlocks]]: a file scan splits by file size,
+    * not by the columns it reads) and the (null, docid) delete rows, read
+    * together by one job on first use of any; with the term scan's
+    * partition count. The term scan is not kept: it runs once. */
+  private lazy val resident: (Seq[Option[Array[(String, Long)]]], Int) = {
+    val runs = InvertedIndex.runsOf(scanFiles(_.select(col("term")))._1)
+    (InvertedIndex.collectBounded(
+      Seq(InvertedIndex.pairs(dictRows.select(col("term"), col("df"))),
+        runs) ++
+        deleted.toSeq.map(d => InvertedIndex.pairs(
+          d.select(lit(null).cast("string"), col("docid")))),
+      residentRows), runs.getNumPartitions)
+  }
 
   /** Drop the rows of deleted docs (deleted docs are skipped at
     * iteration, stats stay stale until merge — SegmentTermDocs.Next /
@@ -256,6 +266,24 @@ object InvertedIndex {
     * not held on the driver. */
   val ResidentRows: Int = 1 << 20
 
+  /** Bytes of pointed-to block partitions at or below which a point query
+    * reads the prepared scan ([[InvertedIndex.preparedBlocks]]), which
+    * reads its partitions whole; above, it plans a scan whose term filter
+    * Parquet applies to row-group statistics. The measured crossover, on
+    * 4 local cores and a 300k-turn synthetic store of 16 block files of
+    * about 3.7 MB each: written with 256 KB row groups, an OR of 1, 2
+    * and 4 terms in as many files took 88, 108 and 153 ms (medians of 3
+    * alternated runs, each the median of 18 queries) reading 4.0, 7.3 and
+    * 14.4 MB through the prepared scan, against 146, 149 and 158 ms for
+    * the planned scan reading 1.1, 1.5 and 2.2 MB of row groups: the
+    * prepared scan costs about 6 ms more per MB and, extrapolated, loses
+    * from about 16 MB (an OR of more terms passes
+    * [[graft.search.Searcher.SingleTaskRows]] there). With one row group
+    * per file the planned scan reads whole files too, and the prepared
+    * one won at every size (63, 80 and 116 against 147, 150 and 169 ms,
+    * one run each). */
+  val RoutedBytes: Long = 16L << 20
+
   /** A term dictionary on the driver: distinct terms in Spark's string
     * order ([[Utf8Order]]), each with its df summed over segments, so a
     * prefix and a term range are each one contiguous slice. */
@@ -319,29 +347,58 @@ object InvertedIndex {
     }
   }
 
-  /** A block partition's term runs, sorted by first term: partition
-    * `part(i)` holds only terms from `lo(i)` to `hi(i)`, in Spark's
-    * string order, and every term it holds lies in one of its runs. */
+  /** The block partitions' term runs: partition `part(i)` holds only
+    * terms from `lo(i)` to `hi(i)`, in Spark's string order, and every
+    * term a partition holds lies in one of its runs. */
   private[index] final class TermRuns private (lo: Array[String],
       hi: Array[String], part: Array[Int], val parts: Int) {
-    def partitionsOf(terms: Iterable[String]): Array[Int] =
-      terms.iterator.flatMap { t =>
-        lo.indices.iterator.filter(i => Utf8Order.lteq(lo(i), t) &&
-          Utf8Order.lteq(t, hi(i))).map(part)
-      }.toArray.distinct.sorted
+    /** A run holds a term iff the least of `terms` at or above its first
+      * term is at or below its last: a binary search per run. */
+    def partitionsOf(terms: Iterable[String]): Array[Int] = {
+      val ts = terms.toArray.sorted(Utf8Order)
+      lo.indices.filter { i =>
+        val at = java.util.Arrays.binarySearch(ts, lo(i), Utf8Order)
+        val j = if (at >= 0) at else -at - 1
+        j < ts.length && Utf8Order.lteq(ts(j), hi(i))
+      }.map(part).distinct.sorted.toArray
+    }
   }
 
   private[index] object TermRuns {
-    /** From [[InvertedIndex.runScan]]'s rows, in partition order. */
+    /** From [[InvertedIndex.runsOf]]'s rows, in partition order. */
     def apply(rows: Array[(String, Long)], parts: Int): TermRuns = {
       val runs = rows.grouped(2).map { case Array((a, p), (b, _)) =>
-        (a, b, (p / 2).toInt) }.toArray.sortBy(_._1)(Utf8Order)
+        (a, b, (p / 2).toInt) }.toArray
       new TermRuns(runs.map(_._1), runs.map(_._2), runs.map(_._3), parts)
     }
   }
 
-  /** A row of [[InvertedIndex.preparedBlocks]] or
-    * [[InvertedIndex.preparedFreqs]] as its codec block. */
+  /** Per partition of a term-only block scan, each run of ascending
+    * terms as a (first term, 2p) and a (last term, 2p + 1) row. Blocks
+    * are written sorted by (term, min_docid), so a partition holds one
+    * run per block file or file split it reads. */
+  private def runsOf(terms: RDD[InternalRow]): RDD[(String, Long)] =
+    terms.mapPartitionsWithIndex { (p, rows) =>
+      val out = ArrayBuffer.empty[(String, Long)]
+      var first: UTF8String = null
+      var last: UTF8String = null
+      def close(): Unit = if (first != null) {
+        out += ((first.toString, 2L * p))
+        out += ((last.toString, 2L * p + 1))
+      }
+      rows.foreach { r =>
+        val t = r.getUTF8String(0)
+        if (last == null || t.compareTo(last) < 0) {
+          close()
+          first = t.clone()
+        }
+        last = t.clone()
+      }
+      close()
+      out.iterator
+    }
+
+  /** A row of [[InvertedIndex.preparedBlocks]] as its codec block. */
   private[graft] def blockOf(r: InternalRow): Codec.Block =
     Codec.Block(r.getUTF8String(0).toString, r.getInt(1), r.getLong(2),
       r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getBinary(7),

@@ -71,9 +71,12 @@ import graft.index.{Codec, InvertedIndex}
   * terms' rows, decodes and folds its own and keeps a bounded heap of the
   * k best docs, and returns a DataFrame over that RDD: no analysis,
   * optimization, codegen or Hadoop-configuration broadcast of a scan per
-  * query. A single-task fold with non-term leaves (keyword, range and
-  * function frames, span masks) is one planned block scan feeding one
-  * `mapPartitions`: a filtered scan, `coalesce(1)`, one
+  * query. The prepared scan reads its partitions whole, so a fold whose
+  * terms' partitions hold more than [[InvertedIndex.RoutedBytes]] plans
+  * its scan instead, and Parquet skips the row groups its term filter
+  * excludes. That, and a single-task fold with non-term leaves (keyword,
+  * range and function frames, span masks), is one planned block scan
+  * feeding one `mapPartitions`: a filtered scan, `coalesce(1)`, one
   * `DeserializeToObject`, the fold, and nothing after it — no aggregate,
   * exchange, adaptive wrapper or TakeOrderedAndProject (whose
   * `takeOrdered` sends closures through Spark's ClosureCleaner on every
@@ -1175,12 +1178,13 @@ object Searcher {
     * At most [[SingleTaskRows]] estimated rows (`est`) fold in the task
     * that reads the blocks, which decodes each block as it folds, and
     * with `k` the rows come out best first: the answer. A fold of term
-    * blocks alone over a resident dictionary and delete set reads the
-    * index's prepared scan ([[InvertedIndex.preparedBlocks]]) pruned to
-    * the partitions that hold its terms, coalesced into its one task,
-    * and is returned as a DataFrame over that RDD: no plan of the scan
-    * is made for the query. Any other single-task fold is a filtered
-    * scan and `coalesce(1)`. Above the limit, a typed decode step feeds
+    * blocks alone over a resident dictionary and delete set, whose
+    * terms' partitions hold at most [[InvertedIndex.RoutedBytes]], reads
+    * the index's prepared scan ([[InvertedIndex.preparedBlocks]]) pruned
+    * to those partitions, coalesced into its one task, and is returned
+    * as a DataFrame over that RDD: no plan of the scan is made for the
+    * query. Any other single-task fold is a filtered scan and
+    * `coalesce(1)`. Above the limit, a typed decode step feeds
     * `repartition(docid)`, each partition folds its docs, and a single
     * query's (`queries` 1) k best of every partition are merged by
     * TakeOrderedAndProject. A delete set too large to hold is anti-joined
@@ -1202,30 +1206,34 @@ object Searcher {
       k.fold(scored)(best(_, scored))
     }
     val one = est <= SingleTaskRows
-    lazy val in = foldInput(idx.blockTable.filter(blocks.pred), leaves)
-    val rows = (blocks.terms, idx.dictionary, idx.deletedIds) match {
+    val routed = (blocks.terms, idx.dictionary, idx.deletedIds) match {
       case (Some(terms), Some(dict), Some(ids)) if one && leaves.isEmpty =>
         // a term the dictionary lacks has no blocks: it reads nothing
         val present = terms.filter(dict.df(_).isDefined)
+        val parts = idx.partitionsOf(present)
         val wanted = present.map(UTF8String.fromString).toSet
-        val scan = if (what == Freqs) idx.preparedFreqs else idx.preparedBlocks
-        idx.blockTable.sparkSession.createDataFrame(new FoldRDD(
-            PartitionPruningRDD.create(scan, idx.partitionsOf(present).toSet)
-              .coalesce(1),
-            it => run(it.filter(r => wanted(r.getUTF8String(0)))
-              .flatMap(r => blockHits(InvertedIndex.blockOf(r), what, ids)))),
-          OutSchema)
-      case (_, _, Some(ids)) if one =>
+        Option.when(idx.bytesOf(parts) <= idx.routedBytes)(
+          idx.blockTable.sparkSession.createDataFrame(new FoldRDD(
+              PartitionPruningRDD.create(idx.preparedBlocks, parts.toSet)
+                .coalesce(1),
+              it => run(it.filter(r => wanted(r.getUTF8String(0))).flatMap(r =>
+                blockHits(InvertedIndex.blockOf(r), what, ids)))),
+            OutSchema))
+      case _ => None
+    }
+    lazy val in = foldInput(idx.blockTable.filter(blocks.pred), leaves)
+    val rows = routed.getOrElse(idx.deletedIds match {
+      case Some(ids) if one =>
         in.coalesce(1).mapPartitions(it =>
           run(it.flatMap(hitsOf(_, what, ids))))(OutEnc)
           .toDF("qi", "docid", "score")
-      case (_, _, ids) =>
+      case ids =>
         val decoded = in.mapPartitions(_.flatMap(hitsOf(_, what,
           ids.getOrElse(Array.emptyLongArray))))(HitEnc)
         oneTask(if (ids.isDefined) decoded
           else idx.live(decoded.toDF()).as(HitEnc), est)
           .mapPartitions(run)(OutEnc).toDF("qi", "docid", "score")
-    }
+    })
     k match {
       case Some(n) if !one && queries == 1 =>
         rows.orderBy(col("score").desc, col("docid").asc).limit(n)

@@ -529,7 +529,6 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // one partition per block file
     val files = index.blockTable.inputFiles.length
     assert(index.preparedBlocks.getNumPartitions == files && files == 12)
-    assert(index.preparedFreqs.getNumPartitions == files)
     val full = partitionTerms(index)
     val holding = dict.map(t => t -> full.indices.filter(full(_)._2(t))).toMap
     assert(holding.values.exists(_.size > 3), s"$holding")
@@ -537,6 +536,10 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val parts = index.partitionsOf(Seq(t))
       assert(holding(t).forall(parts.contains), s"$t: ${parts.toSeq}")
     }
+    // a term set's partitions are its terms' partitions, in any order
+    val some = new Random(5).shuffle(dict).take(dict.size / 3) ++ dict.take(2)
+    assert(index.partitionsOf(some).toSeq ==
+      some.flatMap(t => index.partitionsOf(Seq(t))).distinct.sorted)
     // a term absent from the dictionary reads no partition, even one that
     // sorts inside a partition's run
     val s = new Searcher(index)
@@ -548,6 +551,55 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Seq(TermQ("errors"), TermQ("merge"))), 10).collect())
     assert(r.recordsRead ==
       index.partitionsOf(Seq("merge")).map(full(_)._1).sum)
+  }
+
+  test("past its routed bytes a point query plans its scan, with the same rows") {
+    idx.dictionary; idx.deletedIds
+    // a partition's bytes are its block file's length
+    val all = Array.range(0, idx.preparedBlocks.getNumPartitions)
+    assert(idx.bytesOf(all) == idx.blockTable.inputFiles
+      .map(f => new java.io.File(new java.net.URI(f)).length).sum)
+    def planned(index: InvertedIndex, q: Query) = {
+      val top = new Searcher(index).topK(q, 10)
+      val plan = top.queryExecution.executedPlan
+      (fileScans(Seq(plan)) > 0, collect(plan) { case r: RDDScanExec => r }.size,
+        ranked(top))
+    }
+    pointQueries.filter(routed).foreach { q =>
+      val bytes = idx.bytesOf(idx.partitionsOf(termsOf(q, idx)))
+      assert(bytes > 0, s"$q")
+      val (_, scans, rows) = planned(idx, q)
+      assert(scans == 1 && rows.nonEmpty, s"$q")
+      // at the bound the prepared scan, past it a planned one
+      assert(planned(idx.copy(routedBytes = bytes), q) == ((false, 1, rows)),
+        s"$q")
+      assert(planned(idx.copy(routedBytes = bytes - 1), q) == ((true, 0, rows)),
+        s"$q")
+    }
+  }
+
+  test("a store under a root with a space and a percent sign serves routed queries") {
+    // "%20" in the name, not a space: the per-file reads must neither
+    // escape the root a second time nor unescape it
+    val root = Files.createTempDirectory("graft plan 100%20 ").toString
+    IndexBuilder.buildSegments(spark,
+      Transcripts.synthetic(spark, 400, seed = 7L, partitions = 2), root,
+      numBatches = 2, numPartitions = 2)
+    IndexBuilder.deleteByKeyword(spark, root, "role", "tool")
+    val index = SegmentStore.open(spark, root)
+    assert(index.deletedIds.exists(_.nonEmpty) && index.dictionary.nonEmpty)
+    // one partition per block file: the per-file reads, not the fallback
+    assert(index.preparedBlocks.getNumPartitions ==
+      index.blockTable.inputFiles.length)
+    val s = new Searcher(index)
+    Seq(TermQ("error"), BoolQ(should = Seq(TermQ("error"), TermQ("deploy"))),
+        PrefixQ("de", AutoRewrite), PrefixQ("de", ConstantScore)).foreach { q =>
+      val top = s.topK(q, 10)
+      assert(collect(top.queryExecution.executedPlan) {
+        case r: RDDScanExec => r }.size == 1, s"$q")
+      val got = ranked(top)
+      assert(got.nonEmpty && got == ranked(scoreTop(s, q, 10)), s"$q")
+    }
   }
 
   test("no single-task point query plans an object aggregate or AQE") {
