@@ -23,6 +23,15 @@ so a speedup can be read next to the layer that moved with it. The export is del
 tracked in either tree is written (perfbench writes only under its
 ignored out/ and target/ directories).
 
+For `search` without --trace it also reads each run's record
+(perfbench/out/search-seed<S>-trace0.json), whose timed `calls` are in
+the mix's order, and prints per query shape (term, AND, OR, NOT, phrase,
+sloppy, prefix, role: call index mod 8) each side's median over its runs
+of the run's median `wall_ms`, the base's IQR of those run medians and the
+change's wins, so a change to one shape can be told from the others. A run
+whose call count is not a multiple of 8 (a failed call drops out of the
+record) is warned about, as its shapes would be misaligned.
+
 Every run's result line is printed as it arrives, so a long session can
 be read while it runs. Exits 1 if any run fails or reports
 `correct: false`.
@@ -63,6 +72,28 @@ def run(tree, workload, seed, seconds, trace):
     return json.loads(lines[-1])
 
 
+SHAPES = ("term", "AND", "OR", "NOT", "phrase", "sloppy", "prefix", "role")
+
+
+def shape_walls(tree, seed, label):
+    """Each mix shape's median wall_ms over the timed calls of the
+    untraced search run of `seed` in `tree`, or None without a record."""
+    path = os.path.join(tree, "perfbench", "out",
+                        f"search-seed{seed}-trace0.json")
+    try:
+        with open(path) as f:
+            calls = json.load(f)["calls"]
+    except (OSError, ValueError, KeyError):
+        print(f"warning: {label}: no record at {path}")
+        return None
+    if not calls or len(calls) % len(SHAPES):
+        print(f"warning: {label}: {len(calls)} timed calls, not a multiple "
+              f"of {len(SHAPES)}; the shapes are misaligned")
+    return [statistics.median(c["wall_ms"] for c in calls[i::len(SHAPES)])
+            if calls[i::len(SHAPES)] else None
+            for i in range(len(SHAPES))]
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -86,6 +117,8 @@ def main():
     base = tempfile.mkdtemp(prefix="ab_pairs_")
     ok = True
     runs = {"base": [], "change": []}
+    shapes = {"base": [], "change": []}
+    per_shape = a.workload == "search" and not a.trace
     try:
         export(a.rev, base)
         trees = {"base": base, "change": ROOT}
@@ -99,6 +132,9 @@ def main():
                 if r is None or not r.get("correct") or r.get("failed"):
                     ok = False
                 runs[side].append(r)
+                if per_shape:
+                    shapes[side].append(shape_walls(
+                        trees[side], seed, f"pair {i + 1} seed {seed} {side}"))
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -131,6 +167,21 @@ def main():
         print(f"{name:34} {fmt(bq):>30} {fmt(cq):>30} {iqr:>10.4g} "
               f"{wins:>3}/{len(got):<2} "
               f"{'yes' if abs(cq[1] - bq[1]) > iqr else 'no':>6}")
+    if per_shape:
+        print(f"\n{'shape':8} {'base q1/median/q3 wall_ms':>30} "
+              f"{'change median':>14} {'change/base':>12} {'base IQR':>10} "
+              f"{'wins':>6}")
+        for i, name in enumerate(SHAPES):
+            got = [(b[i], c[i]) for b, c in zip(shapes["base"], shapes["change"])
+                   if b and c and b[i] is not None and c[i] is not None]
+            if not got:
+                continue
+            bq = quartiles([b for b, _ in got])
+            cm = statistics.median(c for _, c in got)
+            wins = sum(1 for b, c in got if c < b)
+            print(f"{name:8} {'/'.join(f'{x:.4g}' for x in bq):>30} "
+                  f"{cm:>14.4g} {cm / bq[1]:>12.3f} {bq[2] - bq[0]:>10.4g} "
+                  f"{wins:>3}/{len(got):<2}")
     if not ok:
         print("some runs failed or reported correct: false")
         sys.exit(1)

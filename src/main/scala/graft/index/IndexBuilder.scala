@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Project, Union}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BooleanType
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Logical (table-agnostic) inverted index.
@@ -52,8 +52,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * term ([[partitionsOf]]). Together they are the reference's TermInfo
   * file pointers: TermInfosReader maps a term to its df and to where its
   * postings start, and a point query seeks there instead of being
-  * planned (TermInfosReader.cs:178-224). A reopen after a write is a
-  * new value and reads them afresh.
+  * planned (TermInfosReader.cs:178-224). It also holds, per string
+  * keyword field a query tests, each value's docids ([[keywordDocs]]):
+  * the reference's FieldCache.StringIndex, un-inverted once per reader
+  * and held in RAM for FieldCacheTermsFilter (FieldCache.cs:375-589,
+  * FieldCacheTermsFilter.cs:97), bounded like the dictionary by
+  * [[residentRows]]. A reopen after a write is a new value and reads
+  * them afresh.
   */
 final case class InvertedIndex(
     storedDocs: DataFrame,
@@ -71,9 +76,10 @@ final case class InvertedIndex(
       * term appears once per segment that holds it; None when
       * `termDict` already has one row per term. */
     segmentDicts: Option[DataFrame] = None,
-    /** Rows above which the dictionary or the delete set is not held on
-      * the driver: [[InvertedIndex.ResidentRows]]; a spec lowers it to
-      * run the scan and anti-join fallbacks on a small corpus. */
+    /** Rows above which the dictionary, the delete set or a keyword
+      * field's doc sets are not held on the driver:
+      * [[InvertedIndex.ResidentRows]]; a spec lowers it to run the scan,
+      * anti-join and keyword-frame fallbacks on a small corpus. */
     private[graft] val residentRows: Int = InvertedIndex.ResidentRows,
     /** Bytes of pointed-to block partitions above which a point query
       * plans its scan instead of reading [[preparedBlocks]]:
@@ -221,6 +227,32 @@ final case class InvertedIndex(
   private lazy val notDeleted: Column =
     InvertedIndex.notIn(deletedIds.get)
 
+  /** A string keyword field's docids per value, held on the driver: read
+    * on the field's first use by one job over [[storedDocs]] (the
+    * (value, docid) pairs of its non-null values), so deleted docs are
+    * still in it, as they are in the blocks. A fold emits a value's docs
+    * in its own task only when it runs in one task
+    * ([[graft.search.Searcher.SingleTaskRows]] estimated rows, a value's
+    * docs counted), so no task carries more docids than that. None when
+    * `field` is not a string column of [[storedDocs]] or has more than
+    * [[residentRows]] non-null values; a query then tests the field with
+    * a frame. */
+  private[graft] def keywordDocs(field: String)
+      : Option[InvertedIndex.KeywordDocs] =
+    keywords.getOrElseUpdate(field, {
+      val string = storedDocs.schema.fields
+        .exists(f => f.name == field && f.dataType == StringType)
+      if (!string) None
+      else InvertedIndex.collectBounded(Seq(InvertedIndex.pairs(
+          storedDocs.filter(col(field).isNotNull)
+            .select(col(field), col("docid")))), residentRows)
+        .head.map(InvertedIndex.KeywordDocs(_))
+    })
+
+  @transient private lazy val keywords =
+    scala.collection.concurrent.TrieMap
+      .empty[String, Option[InvertedIndex.KeywordDocs]]
+
   /** Live stored documents. */
   lazy val docs: DataFrame = live(storedDocs)
 
@@ -329,6 +361,21 @@ object InvertedIndex {
       java.util.Arrays.sort(terms, Utf8Order)
       new Dictionary(terms, terms.map(summed))
     }
+  }
+
+  /** A keyword field's docids per value, each sorted ascending. */
+  final class KeywordDocs private (docs: Map[String, Array[Long]]) {
+    /** The docids whose value equals `value` as Spark compares a string
+      * column with a string literal: the literal first converted to
+      * UTF-8 as Spark converts it. */
+    def apply(value: String): Array[Long] = docs.getOrElse(
+      UTF8String.fromString(value).toString, Array.emptyLongArray)
+  }
+
+  object KeywordDocs {
+    def apply(rows: Array[(String, Long)]): KeywordDocs =
+      new KeywordDocs(rows.groupMap(_._1)(_._2).map { case (v, ds) =>
+        v -> ds.sorted })
   }
 
   /** Spark's string order, UTF-8 bytes — code point order — over Java

@@ -57,32 +57,42 @@ import graft.index.{Codec, InvertedIndex}
   * phrase, prefix or keyword-and-term query) is one Spark job with no
   * exchange. df, prefix and range expansions come from the index's
   * resident dictionary and deletes from its resident delete set (no
-  * dictionary or delete-set job). A fold of term blocks alone that reads
-  * at most [[Searcher.SingleTaskRows]] estimated rows — a term, boolean or
-  * DisMax of terms, a scored or constant multi-term rewrite, a fuzzy
-  * query, a phrase, span or payload query without masks — is served
-  * without planning: the index holds its block table as one prepared
-  * scan ([[InvertedIndex.preparedBlocks]], planned once per commit point)
-  * and, read with the dictionary, which of that scan's partitions hold
-  * each term ([[InvertedIndex.partitionsOf]]), the analog of the
-  * reference's TermInfo file pointers (TermInfosReader.cs:178-224: term
-  * → df and where its postings start). The query prunes the scan to its
-  * terms' partitions, coalesces them into one task that drops other
-  * terms' rows, decodes and folds its own and keeps a bounded heap of the
-  * k best docs, and returns a DataFrame over that RDD: no analysis,
-  * optimization, codegen or Hadoop-configuration broadcast of a scan per
-  * query. The prepared scan reads its partitions whole, so a fold whose
-  * terms' partitions hold more than [[InvertedIndex.RoutedBytes]] plans
-  * its scan instead, and Parquet skips the row groups its term filter
-  * excludes. That, and a single-task fold with non-term leaves (keyword,
-  * range and function frames, span masks), is one planned block scan
-  * feeding one `mapPartitions`: a filtered scan, `coalesce(1)`, one
+  * dictionary or delete-set job). A keyword leaf of a boolean or DisMax
+  * tree tests a string field's doc sets, which the index holds once per
+  * commit point ([[InvertedIndex.keywordDocs]], up to its resident rows):
+  * the reference's FieldCache.StringIndex, which FieldCacheTermsFilter
+  * matches docs against instead of reading stored fields
+  * (FieldCacheTermsFilter.cs:97, FieldCache.cs:375-589). Such a leaf
+  * estimates its value's docs, and in a fold of at most
+  * [[Searcher.SingleTaskRows]] estimated rows its docs are emitted in the
+  * fold's own task, so no task carries more docids than that; above it,
+  * and for a field not held, the leaf stays a frame of the docs table.
+  * A single-task fold of term blocks and held keyword leaves — a term,
+  * boolean or DisMax of terms and keywords, a scored or constant
+  * multi-term rewrite, a fuzzy query, a phrase, span or payload query
+  * without masks — is served without planning: the index holds its block
+  * table as one prepared scan ([[InvertedIndex.preparedBlocks]], planned
+  * once per commit point) and, read with the dictionary, which of that
+  * scan's partitions hold each term ([[InvertedIndex.partitionsOf]]), the
+  * analog of the reference's TermInfo file pointers
+  * (TermInfosReader.cs:178-224: term → df and where its postings start).
+  * The query prunes the scan to its terms' partitions, coalesces them
+  * into one task that drops other terms' rows, decodes and folds its own
+  * and keeps a bounded heap of the k best docs, and returns a DataFrame
+  * over that RDD: no analysis, optimization, codegen or
+  * Hadoop-configuration broadcast of a scan per query. The prepared scan
+  * reads its partitions whole, so a fold whose terms' partitions hold
+  * more than [[InvertedIndex.RoutedBytes]] plans its scan instead, and
+  * Parquet skips the row groups its term filter excludes. That, and a
+  * single-task fold with frames (keywords not held, range and function
+  * frames, span masks), is one planned block scan feeding one
+  * `mapPartitions`: a filtered scan, `coalesce(1)`, one
   * `DeserializeToObject`, the fold, and nothing after it — no aggregate,
   * exchange, adaptive wrapper or TakeOrderedAndProject (whose
   * `takeOrdered` sends closures through Spark's ClosureCleaner on every
-  * query). Per-query numbers (df and idf, boosts) live in the fold's
-  * closure, never in literals, so a same-shape query compiles nothing
-  * new.
+  * query). Per-query numbers (df and idf, boosts, held docids) live in
+  * the fold's closure, never in literals, so a same-shape query compiles
+  * nothing new.
   */
 final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   /** Per-(term, docid) BM25 partial scores for a set of query terms.
@@ -140,14 +150,15 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     * DisMaxQ nodes recurse; every other clause is a leaf taking its
     * query's next slot, so slots follow clause order, depth first. The
     * term leaves of every tree are read by ONE scan of their blocks, each
-    * posting scored by [[Similarity.scoreD]], and every other leaf is its
-    * own [[score]] frame unioned in as one-doc rows. The fold runs in one
-    * task when the leaves read few rows, unless `parallel`. */
+    * posting scored by [[Similarity.scoreD]]. The fold runs in one task
+    * when the leaves read few rows, unless `parallel`; there a keyword
+    * leaf whose docs the index holds ([[held]]) adds them in that task,
+    * and every other leaf is its own [[score]] frame unioned in as
+    * one-doc rows. */
   private def foldTrees(queries: Seq[Query], parallel: Boolean,
       k: Option[Int]): DataFrame = {
     val terms = Seq.newBuilder[(String, (Int, Int, Double))]
-    val frames = Seq.newBuilder[DataFrame]
-    val leaves = ArrayBuffer.empty[(Int, Int)]
+    val others = ArrayBuffer.empty[(Int, Int, Query)]
     var est = 0L
     val trees = queries.zipWithIndex.map { case (q, qi) =>
       var slots = 0
@@ -163,28 +174,37 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
           slots += 1
           asSimpleTerm(c) match {
             case Some((t, b)) => terms += ((t, (qi, slot, b)))
-            case None =>
-              frames += score(c).select(col("docid"),
-                lit(leaves.size).as("leaf"), col("score"), lit(-1L).as("len"))
-              leaves += ((qi, slot))
+            case None => others += ((qi, slot, c))
           }
           est += estRows(c)
           Searcher.Leaf(slot)
       }
       treeOf(q)
     }
+    // a non-term leaf, numbered in `others`, is held docs in a one-task
+    // fold, else a frame; no task carries more than SingleTaskRows docids
+    val one = !parallel && est <= Searcher.SingleTaskRows
+    val (heldLeaves, frames) = others.toSeq.zipWithIndex.partitionMap {
+      case ((_, _, c), leaf) =>
+        (if (one) held(c) else None) match {
+          case Some((docs, sc)) => Left((leaf, docs, sc))
+          case None => Right(score(c).select(col("docid"),
+            lit(leaf).as("leaf"), col("score"), lit(-1L).as("len")))
+        }
+    }
     // a term posting scores idf × tfNorm(tf, len) (Similarity.scoreD),
     // times the boost of each (qi, slot, boost) leaf of the term; a
-    // non-term row is the (qi, slot) leaf `leaves` numbers it
+    // non-term row is the (qi, slot) leaf `others` numbers it
     val dfs = dfOf(terms.result().map(_._1).toSet)
     val byTerm = terms.result().groupMap(_._1)(_._2).collect {
       case (t, ls) if dfs.contains(t) =>
         t -> (sim.idfColD(idx.numDocs, dfs(t)), ls.toArray) }
-    val (s, avgdl, at, fold) = (sim, idx.avgdl, leaves.toArray, trees.toArray)
+    val (s, avgdl, fold) = (sim, idx.avgdl, trees.toArray)
+    val at = others.map { case (qi, slot, _) => (qi, slot) }.toArray
     Searcher.perDoc[ArrayBuffer[(Int, Double)]](idx,
-        Searcher.Blocks.of(byTerm.keys.toSeq.sorted), frames.result(),
+        Searcher.Blocks.of(byTerm.keys.toSeq.sorted), frames,
         if (parallel) Long.MaxValue else est, Searcher.Freqs, k,
-        queries.size)(() => ArrayBuffer.empty) { (h, hits) =>
+        queries.size, heldLeaves)(() => ArrayBuffer.empty) { (h, hits) =>
       if (h.term == null) {
         val (qi, slot) = at(h.leaf)
         hits(Searcher.DocKey(qi, h.docid)) += ((slot, h.score))
@@ -573,9 +593,11 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
   /** The rows a query's plan reads, estimated for [[Searcher.oneTask]]:
     * Σ df of its terms from [[dfOf]] (a phrase reads each distinct term
     * once), the matched terms' df for a prefix on the resident
-    * dictionary, and numDocs for any frame the dictionary cannot bound. */
+    * dictionary, a held keyword's docs ([[held]]), and numDocs for any
+    * other frame. */
   private def estRows(q: Query): Long = q match {
     case TermQ(t) => dfOf(Set(t)).getOrElse(t, 0L)
+    case KeywordQ(_, _) => held(q).fold(idx.numDocs)(_._1.length.toLong)
     case BoostQ(sub, _) => estRows(sub)
     case b: BoolQ => (b.must ++ b.should ++ b.mustNot).map(estRows).sum
     case DisMaxQ(ds, _) => ds.map(estRows).sum
@@ -584,6 +606,17 @@ final class Searcher(idx: InvertedIndex, sim: Similarity = Bm25Sim) {
     case PrefixQ(p, _) =>
       dictRange(Some(_.withPrefix(p))).fold(idx.numDocs)(_.values.sum)
     case _ => idx.numDocs
+  }
+
+  /** A keyword leaf, possibly boost-wrapped, whose docs the index holds
+    * with its delete set ([[InvertedIndex.keywordDocs]]): its docids,
+    * deleted ones still in, and its score, 1.0 times each boost inside
+    * out, as its [[score]] frame computes it. None for any other leaf. */
+  private def held(q: Query): Option[(Array[Long], Double)] = q match {
+    case KeywordQ(f, v) if idx.deletedIds.isDefined =>
+      idx.keywordDocs(f).map(ds => (ds(v), 1.0))
+    case BoostQ(sub, b) => held(sub).map { case (ds, sc) => (ds, sc * b) }
+    case _ => None
   }
 
   /** The phrase, span and payload families (PhraseQuery.cs, SpanScorer.cs:28,
@@ -1177,21 +1210,25 @@ object Searcher {
     *
     * At most [[SingleTaskRows]] estimated rows (`est`) fold in the task
     * that reads the blocks, which decodes each block as it folds, and
-    * with `k` the rows come out best first: the answer. A fold of term
-    * blocks alone over a resident dictionary and delete set, whose
-    * terms' partitions hold at most [[InvertedIndex.RoutedBytes]], reads
-    * the index's prepared scan ([[InvertedIndex.preparedBlocks]]) pruned
-    * to those partitions, coalesced into its one task, and is returned
-    * as a DataFrame over that RDD: no plan of the scan is made for the
-    * query. Any other single-task fold is a filtered scan and
-    * `coalesce(1)`. Above the limit, a typed decode step feeds
-    * `repartition(docid)`, each partition folds its docs, and a single
-    * query's (`queries` 1) k best of every partition are merged by
-    * TakeOrderedAndProject. A delete set too large to hold is anti-joined
+    * with `k` the rows come out best first: the answer. In that task the
+    * `held` leaves — (leaf, sorted docids, score), a keyword's docs the
+    * index holds — add a hit per live doc, as a frame's rows would. A
+    * fold of term blocks and held leaves alone over a resident
+    * dictionary and delete set, whose terms' partitions hold at most
+    * [[InvertedIndex.RoutedBytes]], reads the index's prepared scan
+    * ([[InvertedIndex.preparedBlocks]]) pruned to those partitions,
+    * coalesced into its one task (an empty one when held leaves point to
+    * no partition), and is returned as a DataFrame over that RDD: no
+    * plan of the scan is made for the query. Any other single-task fold
+    * is a filtered scan and `coalesce(1)`. Above the limit, a typed
+    * decode step feeds `repartition(docid)`, each partition folds its
+    * docs, and a single query's (`queries` 1) k best of every partition
+    * are merged by TakeOrderedAndProject. A delete set too large to hold is anti-joined
     * with the decoded hits instead. */
   private[search] def perDoc[S <: AnyRef](idx: InvertedIndex,
       blocks: Blocks, leaves: Seq[DataFrame], est: Long, what: Decode,
-      k: Option[Int], queries: Int = 1)(init: () => S)(
+      k: Option[Int], queries: Int = 1,
+      held: Seq[(Int, Array[Long], Double)] = Nil)(init: () => S)(
       add: (Hit, DocKey => S) => Unit)(
       fold: (DocKey, S) => Option[Double]): DataFrame = {
     val run: Iterator[Hit] => Iterator[(Int, Long, Double)] = it => {
@@ -1206,18 +1243,30 @@ object Searcher {
       k.fold(scored)(best(_, scored))
     }
     val one = est <= SingleTaskRows
+    require(one || held.isEmpty, "held leaves fold in one task")
+    // a held leaf's live docs, as hitsOf makes a frame's rows
+    val heldHits: Array[Long] => Iterator[Hit] = ids =>
+      held.iterator.flatMap { case (leaf, docs, sc) =>
+        docs.iterator.filter(d => java.util.Arrays.binarySearch(ids, d) < 0)
+          .map(d => Hit(d, null, 1L, -1L, Array(0), null, leaf, sc))
+      }
     val routed = (blocks.terms, idx.dictionary, idx.deletedIds) match {
       case (Some(terms), Some(dict), Some(ids)) if one && leaves.isEmpty =>
         // a term the dictionary lacks has no blocks: it reads nothing
         val present = terms.filter(dict.df(_).isDefined)
         val parts = idx.partitionsOf(present)
         val wanted = present.map(UTF8String.fromString).toSet
+        // held leaves need their task even when no partition is pointed to
+        val scan =
+          if (parts.isEmpty && held.nonEmpty)
+            idx.preparedBlocks.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+          else PartitionPruningRDD.create(idx.preparedBlocks, parts.toSet)
+            .coalesce(1)
         Option.when(idx.bytesOf(parts) <= idx.routedBytes)(
-          idx.blockTable.sparkSession.createDataFrame(new FoldRDD(
-              PartitionPruningRDD.create(idx.preparedBlocks, parts.toSet)
-                .coalesce(1),
+          idx.blockTable.sparkSession.createDataFrame(new FoldRDD(scan,
               it => run(it.filter(r => wanted(r.getUTF8String(0))).flatMap(r =>
-                blockHits(InvertedIndex.blockOf(r), what, ids)))),
+                blockHits(InvertedIndex.blockOf(r), what, ids)) ++
+                heldHits(ids))),
             OutSchema))
       case _ => None
     }
@@ -1225,7 +1274,7 @@ object Searcher {
     val rows = routed.getOrElse(idx.deletedIds match {
       case Some(ids) if one =>
         in.coalesce(1).mapPartitions(it =>
-          run(it.flatMap(hitsOf(_, what, ids))))(OutEnc)
+          run(it.flatMap(hitsOf(_, what, ids)) ++ heldHits(ids)))(OutEnc)
           .toDF("qi", "docid", "score")
       case ids =>
         val decoded = in.mapPartitions(_.flatMap(hitsOf(_, what,

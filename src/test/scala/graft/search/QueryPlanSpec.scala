@@ -7,9 +7,9 @@ import scala.util.Random
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
   ArrayFilter, ArrayTransform, Expression, MapFromArrays, ZipWith}
-import org.apache.spark.sql.execution.{DeserializeToObjectExec,
-  FileSourceScanExec, RDDScanExec, SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec,
+  SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.{AnalysisException, Row}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
@@ -31,9 +31,9 @@ import graft.model.Transcripts
   * a small point query folds in one task, and per-query numbers are plan
   * parameters: a point query is one job with no exchange, aggregate or
   * adaptive wrapper, reads no dictionary table, and a same-shape query
-  * compiles no new class. A point query of term blocks alone reads the
-  * index's prepared block scan, pruned to the partitions its terms'
-  * pointers name, in one task. */
+  * compiles no new class. A point query of term blocks and held keyword
+  * docs reads the index's prepared block scan, pruned to the partitions
+  * its terms' pointers name, in one task. */
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkFixture.spark
 
@@ -93,13 +93,6 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     PrefixQ("de", ConstantScore),
     BoolQ(must = Seq(KeywordQ("role", "assistant"), TermQ("error"))))
 
-  /** A point query the prepared block scan serves: every shape of the
-    * mix but `+role:`, whose keyword frame keeps the Dataset plan. */
-  private def routed(q: Query): Boolean = q match {
-    case b: BoolQ => !b.must.exists(_.isInstanceOf[KeywordQ])
-    case _ => true
-  }
-
   /** The index terms a point query of the mix reads. */
   private def termsOf(q: Query, index: InvertedIndex): Set[String] = q match {
     case TermQ(t) => Set(t)
@@ -124,15 +117,15 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** On a fresh Searcher over `index` (its resident dictionary and delete
-    * set already read), every routed point query is one job of one task
-    * that reads the prepared scan's partitions its terms' pointers name —
-    * a superset of those holding its terms — and no file scan of a plan
-    * of its own, compiling no class once one routed query has run; the
-    * `+role:` shape is one job with no exchange. Returns how many routed
-    * queries read fewer partitions than all. */
+  /** On a fresh Searcher over `index` (its resident dictionary, delete
+    * set and role docs already read), every point query of the mix is
+    * one job of one task that reads the prepared scan's partitions its
+    * terms' pointers name — a superset of those holding its terms — and
+    * no file scan of a plan of its own, compiling no class once one
+    * routed query has run. Returns how many queries read fewer
+    * partitions than all. */
   private def assertRouted(index: InvertedIndex): Int = {
-    index.dictionary; index.deletedIds
+    index.dictionary; index.deletedIds; index.keywordDocs("role")
     val full = partitionTerms(index)
     new Searcher(index).topK(TermQ("error"), 10).collect()
     pointQueries.count { q =>
@@ -143,20 +136,15 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(r.jobs == 1, s"$q\n${r.plans.mkString("\n")}")
       assert(r.plans.nonEmpty && exchanges(r.plans).isEmpty,
         s"$q: ${exchanges(r.plans)}")
-      if (!routed(q)) {
-        assert(fileScans(r.plans) > 0, s"$q")
-        false
-      } else {
-        assert(compiles == before, s"$q compiled a class")
-        assert(r.tasks == 1 && fileScans(r.plans) == 0,
-          s"$q: ${r.tasks} tasks\n${r.plans.mkString("\n")}")
-        val terms = termsOf(q, index)
-        val parts = index.partitionsOf(terms)
-        assert(full.indices.filter(p => full(p)._2.exists(terms))
-          .forall(parts.contains), s"$q: ${parts.toSeq}")
-        assert(r.recordsRead == parts.map(full(_)._1).sum, s"$q")
-        parts.length < full.length
-      }
+      assert(compiles == before, s"$q compiled a class")
+      assert(r.tasks == 1 && fileScans(r.plans) == 0,
+        s"$q: ${r.tasks} tasks\n${r.plans.mkString("\n")}")
+      val terms = termsOf(q, index)
+      val parts = index.partitionsOf(terms)
+      assert(full.indices.filter(p => full(p)._2.exists(terms))
+        .forall(parts.contains), s"$q: ${parts.toSeq}")
+      assert(r.recordsRead == parts.map(full(_)._1).sum, s"$q")
+      parts.length < full.length
     }
   }
 
@@ -218,13 +206,9 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(exchanges(Seq(plan)).isEmpty, s"$q\n$plan")
       assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.isEmpty,
         s"$q\n$plan")
-      if (routed(q))
-        // a DataFrame over the pruned prepared scan: no plan of its own
-        assert(collect(plan) { case r: RDDScanExec => r }.size == 1 &&
-          fileScans(Seq(plan)) == 0, s"$q\n$plan")
-      else
-        assert(collect(plan) { case d: DeserializeToObjectExec => d }.size == 1,
-          s"$q\n$plan")
+      // a DataFrame over the pruned prepared scan: no plan of its own
+      assert(collect(plan) { case r: RDDScanExec => r }.size == 1 &&
+        fileScans(Seq(plan)) == 0, s"$q\n$plan")
       val got = ranked(top)
       assert(got.nonEmpty && got == ranked(scoreTop(s, q, k)), s"$q")
       // a tie at the k-th score that the docid order breaks
@@ -250,7 +234,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a routed point query is one job of one task over its terms' partitions") {
     val pruned = assertRouted(idx)
-    assert(pruned == pointQueries.count(routed), s"$pruned")
+    assert(pruned == pointQueries.size, s"$pruned")
   }
 
   private val gone = Transcripts.vocabulary(40)
@@ -499,9 +483,10 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
             if f.relation.location.rootPaths.exists(_.getName == "blocks") => f
       }.size, collect(plan) { case r: RDDScanExec => r }.size)
     }
-    // a planned read of the block table is one scan per segment
+    // a keyword the index holds is no read: one read of the prepared scan
     val role = BoolQ(must = Seq(KeywordQ("role", "user"), TermQ("error")))
-    assert(reads(role) == (3, 0))
+    assert(reads(role) == (0, 1))
+    // a planned read of the block table is one scan per segment
     // both terms in one planned scan; the phrase, a frame of its own,
     // reads the prepared scan
     assert(reads(BoolQ(should = Seq(TermQ("error"), TermQ("deploy"),
@@ -509,6 +494,123 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // a phrase alone, a repeated term too, is one read of the prepared scan
     assert(reads(PhraseQ(Seq("spark" -> 0, "table" -> 1, "spark" -> 2))) ==
       (0, 1))
+  }
+
+  /** The same corpus with every `tool` turn deleted. */
+  private lazy val noTool = {
+    val root = Files.createTempDirectory("graft_plan_notool_").toString
+    IndexBuilder.buildSegments(spark,
+      Transcripts.synthetic(spark, 1500, seed = 11L, partitions = 6), root,
+      numBatches = 3, numPartitions = 4)
+    IndexBuilder.deleteByKeyword(spark, root, "role", "tool")
+    SegmentStore.open(spark, root)
+  }
+
+  /** explain's (docid, value) of every doc `q` matches. */
+  private def explained(s: Searcher, q: Query): Map[Long, Double] =
+    s.explain(q).select("docid", "value").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** Scans of the docs table in a plan. */
+  private def docsScans(plan: SparkPlan): Int = collect(plan) {
+    case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.getName == "docs") => f
+  }.size
+
+  test("a held keyword leaf scores as its explained frame, in one routed task") {
+    def kw(v: String) = KeywordQ("role", v)
+    def shapes(v: String, t: String): Seq[Query] = Seq(
+      BoolQ(must = Seq(kw(v), TermQ(t))),
+      BoolQ(should = Seq(kw(v), TermQ(t))),
+      // an absent term points to no partition
+      BoolQ(should = Seq(kw(v), TermQ("zzabsent"))),
+      BoolQ(must = Seq(TermQ(t)), mustNot = Seq(kw(v))),
+      BoolQ(should = Seq(BoostQ(kw(v), 2.0), TermQ(t))),
+      DisMaxQ(Seq(TermQ(t), kw(v)), 0.25),
+      BoolQ(must = Seq(kw("nobody"), TermQ(t))),
+      BoolQ(must = Seq(kw("tool"), TermQ(t))))
+    // explain's k best: a DisMax explains as one leaf, its own fold, so
+    // its value is max + tie * (sum - max) of its disjuncts' explains
+    def expected(s: Searcher, q: Query): Seq[(Long, Long)] = {
+      val values = q match {
+        case DisMaxQ(ds, tie) =>
+          val each = ds.map(explained(s, _))
+          each.flatMap(_.keySet).distinct.map { d =>
+            val xs = each.flatMap(_.get(d))
+            d -> (xs.max + tie * (xs.foldLeft(0.0)(_ + _) - xs.max))
+          }.toMap
+        case _ => explained(s, q)
+      }
+      values.toSeq.sortBy { case (d, v) => (-v, d) }.take(10)
+        .map { case (d, v) => (d, java.lang.Double.doubleToRawLongBits(v)) }
+    }
+    Seq(idx, oneSegment, deleted, noTool).foreach { index =>
+      // a fresh commit point reads the role docs once, in one job
+      val fresh = index.copy()
+      fresh.dictionary; fresh.deletedIds
+      assert(record(fresh.keywordDocs("role"))._1 == 1)
+      assert(record(fresh.keywordDocs("role"))._1 == 0)
+      val s = new Searcher(fresh)
+      shapes("user", "error").zip(shapes("assistant", "deploy")).foreach {
+        case (q, other) =>
+          val top = s.topK(q, 10)
+          val plan = top.queryExecution.executedPlan
+          assert(collect(plan) { case r: RDDScanExec => r }.size == 1 &&
+            fileScans(Seq(plan)) == 0, s"$q\n$plan")
+          var got = Seq.empty[(Long, Long)]
+          val r = SparkFixture.record { got = ranked(top) }
+          assert(r.jobs == 1 && r.tasks == 1, s"$q: ${r.jobs} jobs, ${r.tasks} tasks")
+          // a same-shape query on another value and term compiles nothing
+          val before = compiles
+          s.topK(other, 10).collect()
+          assert(compiles == before, s"$other compiled a class")
+          assert(got == expected(s, q), s"$q")
+          q match {
+            case BoolQ(Seq(KeywordQ(_, "nobody"), _), _, _, _) =>
+              assert(got.isEmpty, s"$q")
+            case BoolQ(Seq(KeywordQ(_, "tool"), _), _, _, _) =>
+              assert(got.isEmpty == (index eq noTool), s"$q")
+            case BoolQ(_, Seq(_, TermQ("zzabsent")), _, _) =>
+              assert(got.size == 10 && r.recordsRead == 0, s"$q")
+            case _ => assert(got.nonEmpty, s"$q")
+          }
+      }
+    }
+  }
+
+  test("keyword leaves the index does not hold keep the frame's answers") {
+    val s = new Searcher(idx)
+    // a non-string column keeps Spark's cast equality, through the frame
+    assert(idx.keywordDocs("turn_idx").isEmpty)
+    val turn = BoolQ(must = Seq(KeywordQ("turn_idx", "3"), TermQ("error")))
+    val top = s.topK(turn, 10)
+    assert(docsScans(top.queryExecution.executedPlan) > 0)
+    val got = ranked(top)
+    assert(got.nonEmpty && got == explained(s, turn).toSeq
+      .sortBy { case (d, v) => (-v, d) }.take(10)
+      .map { case (d, v) => (d, java.lang.Double.doubleToRawLongBits(v)) })
+    val third = idx.docs.filter(col("turn_idx") === 3).select("docid")
+      .collect().map(_.getLong(0)).toSet
+    assert(got.forall(g => third(g._1)))
+    // an unknown field fails as its bare frame does
+    assert(idx.keywordDocs("nosuch").isEmpty)
+    val bare = intercept[AnalysisException](
+      s.score(KeywordQ("nosuch", "x")).collect())
+    val inFold = intercept[AnalysisException](s.topK(BoolQ(must =
+      Seq(KeywordQ("nosuch", "x"), TermQ("error"))), 10).collect())
+    assert(inFold.getCondition == bare.getCondition &&
+      inFold.getMessage == bare.getMessage, inFold.getMessage)
+    // below the field's row count the docs are not held: the frame path
+    val rows = idx.storedDocs.filter(col("role").isNotNull).count().toInt
+    val at = idx.copy(residentRows = rows)
+    val below = idx.copy(residentRows = rows - 1)
+    assert(at.keywordDocs("role").isDefined && below.keywordDocs("role").isEmpty)
+    val q = BoolQ(must = Seq(KeywordQ("role", "user"), TermQ("error")))
+    val held = new Searcher(at).topK(q, 10)
+    val framed = new Searcher(below).topK(q, 10)
+    assert(docsScans(held.queryExecution.executedPlan) == 0)
+    assert(docsScans(framed.queryExecution.executedPlan) > 0)
+    assert(ranked(held).nonEmpty && ranked(framed) == ranked(held))
   }
 
   test("term pointers name every partition of a term, none for an absent term") {
@@ -565,7 +667,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (fileScans(Seq(plan)) > 0, collect(plan) { case r: RDDScanExec => r }.size,
         ranked(top))
     }
-    pointQueries.filter(routed).foreach { q =>
+    pointQueries.foreach { q =>
       val bytes = idx.bytesOf(idx.partitionsOf(termsOf(q, idx)))
       assert(bytes > 0, s"$q")
       val (_, scans, rows) = planned(idx, q)
@@ -655,11 +757,12 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         BoolQ(must = Seq(TermQ("spark")), should = Seq(TermQ("deploy"))),
         KeywordQ("role", "tool")), 0.25),
       sloppy)
-    // must-not clauses that match nothing, each estimated at numDocs
-    // rows: they lift the estimate past the limit and leave the score
-    // bits alone (a lone must is 0.0 + score, times a coord of 1)
+    // must-not clauses that match nothing, each a frame the index does
+    // not hold, estimated at numDocs rows: they lift the estimate past the
+    // limit and leave the score bits alone (a lone must is 0.0 + score,
+    // times a coord of 1)
     val pads = Seq.fill((Searcher.SingleTaskRows / idx.numDocs + 1).toInt)(
-      KeywordQ("role", "nobody"))
+      RangeQ("turn_idx", Some("0"), Some("0")))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     queries.foreach { q =>
