@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * equal the decoded content and docids are strictly increasing inside
   * a block; (3) the persisted dictionary equals the one recomputed from
   * block stats; (4) docs docids are unique and within the watermark;
-  * (5) postings carry one row per (term, docid).
+  * (5) postings carry one row per (term, docid). A block the codec
+  * rejects (a stream cut short, a corrupt tf) is named by (2) and
+  * skipped by (5), so a damaged store gets a report, not an exception.
   */
 object CheckIndex {
 
@@ -43,10 +45,10 @@ object CheckIndex {
     // (2) block stats vs decoded content — one pass, partition-local
     val badBlocks = blocks.as[BlockRow].flatMap { r =>
       val errs = scala.collection.mutable.ArrayBuffer.empty[String]
-      // a block the codec rejects is named, not thrown
-      val ps = try Codec.decode(r.block).toVector
-        catch { case e: IllegalArgumentException =>
-          errs += e.getMessage; Vector.empty }
+      val ps = decoded(r)(Codec.decode) match {
+        case Right(ps) => ps
+        case Left(e) => errs += e; Vector.empty
+      }
       if (ps.size != r.n && errs.isEmpty) errs += s"${r.term}: n"
       if (ps.nonEmpty) {
         if (ps.head.docid != r.min_docid) errs += s"${r.term}: min_docid"
@@ -81,13 +83,25 @@ object CheckIndex {
       .filter(col("docid") < 0 || col("docid") > m.maxDocid).count()
     if (outOfRange != 0) v += s"docids beyond watermark: $outOfRange"
 
-    // (5) postings (term, docid) uniqueness
-    val postDup = idx.postings.groupBy("term", "docid").count()
+    // (5) postings (term, docid) uniqueness, over the blocks that decode
+    // (check 2 names the others)
+    val pairs = blocks.as[BlockRow].flatMap(r =>
+      decoded(r)(Codec.decodeDocLens).getOrElse(Vector.empty)
+        .map(p => (r.term, p._1)))
+    val postDup = idx.live(pairs.toDF("term", "docid"))
+      .groupBy("term", "docid").count()
       .filter(col("count") > 1).count()
     if (postDup != 0) v += s"duplicate (term, docid) postings: $postDup"
 
     Report(m.segments.size, idx.docs.count(), idx.termDict.count(), v.toSeq)
   }
+
+  /** A block's postings as `decode` reads them, or the error of a block
+    * the codec rejects: named, not thrown. */
+  private def decoded[T](r: BlockRow)(decode: BlockRow => Iterator[T])
+      : Either[String, Vector[T]] =
+    try Right(decode(r).toVector)
+    catch { case e: IllegalArgumentException => Left(e.getMessage) }
 
   /** Gate-shaped single-row report. */
   def reportDf(spark: SparkSession, root: String): DataFrame = {

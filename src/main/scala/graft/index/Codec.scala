@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Variable-byte posting-block codec — pure functions over byte arrays.
   *
   * Wire format reproduces the reference's semantics (not its files):
@@ -22,13 +20,25 @@ import scala.collection.mutable.ArrayBuffer
   *  - Doc-length stream (our norms analog — exact ints instead of the
   *    lossy norm byte, see SURVEY.md §1.1): VLong(len) per posting.
   *
-  * Blocks hold up to [[BlockSize]] postings of one term and carry
-  * skip/WAND stats: (min_docid, max_docid, max_tf, min_len). max_tf and
-  * min_len upper-bound the BM25 contribution of every posting in the
-  * block (tfNorm is monotone increasing in tf, decreasing in len) — the
-  * block-max WAND bound (Ding & Suel SIGIR'11), replacing the
+  * Blocks ([[BlockRow]]) hold up to [[BlockSize]] postings of one term
+  * and carry skip/WAND stats: (min_docid, max_docid, max_tf, min_len).
+  * max_tf and min_len upper-bound the BM25 contribution of every posting
+  * in the block (tfNorm is monotone increasing in tf, decreasing in len)
+  * — the block-max WAND bound (Ding & Suel SIGIR'11), replacing the
   * reference's multi-level skip lists
   * (/root/reference/src/core/Index/MultiLevelSkipListWriter.cs:28-65).
+  *
+  * Each stream is written in one place and read in one place, as the
+  * reference writes .frq in FormatPostingsDocsWriter and reads it in
+  * SegmentTermDocs, which SegmentTermPositions extends with .prx:
+  * [[RunBuilder]] is the one writer of the docs/lens/pos streams
+  * ([[encodeRaw]] chunks a run into blocks with it; [[encodePosPay]]
+  * writes the pos fragment of one posting it adds), and a private
+  * cursor is the one reader, which every decoder views. The cursor holds
+  * every check on stored bytes: a stream read past its end, a tf above
+  * the position bytes left or above what is left of sum_tf, and tfs that
+  * do not add up to sum_tf each fail as an IllegalArgumentException that
+  * names the block.
   */
 object Codec {
 
@@ -36,9 +46,29 @@ object Codec {
     * (TermInfosWriter.cs:63); a pragmatic VByte block size. */
   val BlockSize = 128
 
+  /** A growable byte array: each stream the codec writes. */
+  final class Bytes(initial: Int = 16) {
+    private var buf = new Array[Byte](initial)
+    private var n = 0
+
+    private def room(k: Int): Unit =
+      if (n + k > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, n + k))
+
+    def +=(b: Byte): Unit = { room(1); buf(n) = b; n += 1 }
+
+    def ++=(bs: Array[Byte]): Unit = {
+      room(bs.length)
+      System.arraycopy(bs, 0, buf, n, bs.length)
+      n += bs.length
+    }
+
+    def toArray: Array[Byte] = java.util.Arrays.copyOf(buf, n)
+  }
+
   // ---- VLong primitive ----
 
-  def writeVLong(buf: ArrayBuffer[Byte], v0: Long): Unit = {
+  def writeVLong(buf: Bytes, v0: Long): Unit = {
     require(v0 >= 0, s"VLong must be non-negative: $v0")
     var v = v0
     while ((v & ~0x7fL) != 0L) {
@@ -48,96 +78,28 @@ object Codec {
     buf += v.toByte
   }
 
-  /** Reads a VLong at pos; returns (value, nextPos). */
-  def readVLong(bytes: Array[Byte], pos: Int): (Long, Int) = {
-    var p = pos
-    var b = bytes(p); p += 1
-    var v = (b & 0x7f).toLong
-    var shift = 7
-    while ((b & 0x80) != 0) {
-      b = bytes(p); p += 1
-      v |= (b & 0x7f).toLong << shift
-      shift += 7
-    }
-    (v, p)
-  }
-
   // ---- one posting within a block ----
 
   final case class Posting(docid: Long, tf: Long, len: Long,
       positions: Array[Int])
 
-  /** One encoded block of ≤ BlockSize postings for a single term.
-    * sumTf lets the dictionary (df, cf) be derived from block stats
-    * alone — no decode pass. */
-  final case class Block(
-      term: String,
-      n: Int,
-      minDocid: Long,
-      maxDocid: Long,
-      maxTf: Long,
-      minLen: Long,
-      sumTf: Long,
-      docs: Array[Byte],
-      lens: Array[Byte],
-      pos: Array[Byte])
-
-  /** Encode postings (MUST be docid-ascending, one term) into blocks. */
-  def encode(term: String, postings: Iterator[Posting]): Iterator[Block] =
-    postings.grouped(BlockSize).map { group =>
-      val docsB = new ArrayBuffer[Byte](group.size * 2)
-      val lensB = new ArrayBuffer[Byte](group.size)
-      val posB = new ArrayBuffer[Byte](group.size * 2)
-      var prevDoc = group.head.docid // first gap = 0 relative to minDocid
-      var maxTf = 0L
-      var minLen = Long.MaxValue
-      var sumTf = 0L
-      var prev = -1L
-      group.foreach { p =>
-        require(p.docid > prev || prev == -1L,
-          s"postings not ascending for term=$term: ${p.docid} after $prev")
-        prev = p.docid
-        val gap = p.docid - prevDoc
-        prevDoc = p.docid
-        if (p.tf == 1L) writeVLong(docsB, (gap << 1) | 1L)
-        else { writeVLong(docsB, gap << 1); writeVLong(docsB, p.tf) }
-        writeVLong(lensB, p.len)
-        var prevPos = 0L
-        p.positions.foreach { pp =>
-          writeVLong(posB, (pp - prevPos).toLong << 1); prevPos = pp
-        }
-        if (p.tf > maxTf) maxTf = p.tf
-        if (p.len < minLen) minLen = p.len
-        sumTf += p.tf
-      }
-      Block(term, group.size, group.head.docid, group.last.docid,
-        maxTf, minLen, sumTf, docsB.toArray, lensB.toArray, posB.toArray)
-    }
-
   /** VByte-encode one posting's positions (deltas, prev starts at 0) —
     * the per-posting pos stream fragment; block encoding concatenates
     * these verbatim. Payload bit cleared on every occurrence. */
-  def encodePositions(positions: Array[Int]): Array[Byte] = {
-    val buf = new ArrayBuffer[Byte](positions.length + 2)
-    var prev = 0L
-    var k = 0
-    while (k < positions.length) {
-      writeVLong(buf, (positions(k) - prev) << 1); prev = positions(k); k += 1
-    }
-    buf.toArray
-  }
+  def encodePositions(positions: Array[Int]): Array[Byte] =
+    encodePosPay(positions, null)
 
   /** Positions + per-occurrence payloads (Float.NaN = this occurrence
     * carries none → payload bit 0, nothing stored). `payloads` is
-    * parallel to `positions`. */
+    * parallel to `positions`, or null for none at all. */
   def encodePosPay(positions: Array[Int], payloads: Array[Float]): Array[Byte] = {
-    require(positions.length == payloads.length,
+    require(payloads == null || positions.length == payloads.length,
       s"payloads not parallel to positions: ${payloads.length} vs ${positions.length}")
-    val buf = new ArrayBuffer[Byte](positions.length * 2 + 2)
+    val buf = new Bytes(positions.length * (if (payloads == null) 1 else 2) + 2)
     var prev = 0L
     var k = 0
     while (k < positions.length) {
-      val pay = payloads(k)
+      val pay = if (payloads == null) Float.NaN else payloads(k)
       val hasPay = !java.lang.Float.isNaN(pay)
       writeVLong(buf,
         ((positions(k) - prev) << 1) | (if (hasPay) 1L else 0L))
@@ -154,55 +116,40 @@ object Codec {
       len: Long, pos_blob: Array[Byte])
 
   /** Encode a docid-ascending run of one term's raw postings into blocks
-    * — doc/len streams built here, pos stream = blob concatenation. */
-  def encodeRaw(term: String, postings: Iterator[RawPosting]): Iterator[Block] =
-    postings.grouped(BlockSize).map { group =>
-      val docsB = new ArrayBuffer[Byte](group.size * 2)
-      val lensB = new ArrayBuffer[Byte](group.size)
-      var posLen = 0
-      group.foreach(p => posLen += p.pos_blob.length)
-      val posB = new Array[Byte](posLen)
-      var posOff = 0
-      var prevDoc = group.head.docid
-      var maxTf = 0L
-      var minLen = Long.MaxValue
-      var sumTf = 0L
-      var prev = -1L
-      group.foreach { p =>
-        require(p.docid > prev || prev == -1L,
-          s"postings not ascending for term=$term: ${p.docid} after $prev")
-        prev = p.docid
-        val gap = p.docid - prevDoc
-        prevDoc = p.docid
-        if (p.tf == 1L) writeVLong(docsB, (gap << 1) | 1L)
-        else { writeVLong(docsB, gap << 1); writeVLong(docsB, p.tf) }
-        writeVLong(lensB, p.len)
-        System.arraycopy(p.pos_blob, 0, posB, posOff, p.pos_blob.length)
-        posOff += p.pos_blob.length
-        if (p.tf > maxTf) maxTf = p.tf
-        if (p.len < minLen) minLen = p.len
-        sumTf += p.tf
+    * of at most [[BlockSize]] postings, one [[RunBuilder]] each. */
+  def encodeRaw(term: String, postings: Iterator[RawPosting]): Iterator[BlockRow] =
+    new Iterator[BlockRow] {
+      override def hasNext: Boolean = postings.hasNext
+      override def next(): BlockRow = {
+        val run = new RunBuilder(term)
+        while (run.size < BlockSize && postings.hasNext) {
+          val p = postings.next()
+          run.add(p.docid, p.tf, p.len, p.pos_blob)
+        }
+        run.build()
       }
-      Block(term, group.size, group.head.docid, group.last.docid,
-        maxTf, minLen, sumTf, docsB.toArray, lensB.toArray, posB)
     }
 
-  /** Incremental builder of one term's posting RUN (an unbounded Block):
-    * the map-side partial inversion unit. A whole input partition's
-    * postings for one term become ONE run row through the shuffle —
-    * delta+VByte-encoded already — instead of one row per posting
-    * (reference analog: the per-thread in-RAM segment that
-    * FreqProxTermsWriter flushes, FreqProxTermsWriter.cs:70-157). */
+  /** The one writer of a block's streams. It builds one term's posting
+    * RUN, an unbounded block: the map-side partial inversion unit, where
+    * a whole input partition's postings for one term become ONE run row
+    * through the shuffle — delta+VByte-encoded already — instead of one
+    * row per posting (reference analog: the per-thread in-RAM segment
+    * that FreqProxTermsWriter flushes, FreqProxTermsWriter.cs:70-157).
+    * [[encodeRaw]] bounds it to a block. */
   final class RunBuilder(term: String) {
-    private val docsB = new ArrayBuffer[Byte](16)
-    private val lensB = new ArrayBuffer[Byte](8)
-    private val posB = new ArrayBuffer[Byte](16)
+    private val docsB = new Bytes(16)
+    private val lensB = new Bytes(8)
+    private val posB = new Bytes(16)
     private var first = -1L
     private var prevDoc = 0L
     private var maxTf = 0L
     private var minLen = Long.MaxValue
     private var sumTf = 0L
     private var count = 0
+
+    /** Postings added so far. */
+    def size: Int = count
 
     def add(docid: Long, tf: Long, len: Long, posBlob: Array[Byte]): Unit = {
       require(docid > prevDoc || first == -1L,
@@ -220,138 +167,151 @@ object Codec {
       count += 1
     }
 
-    def build(): Block =
-      Block(term, count, first, prevDoc, maxTf, minLen, sumTf,
+    def build(): BlockRow =
+      BlockRow(term, count, first, prevDoc, maxTf, minLen, sumTf,
         docsB.toArray, lensB.toArray, posB.toArray)
   }
 
   /** A corrupt block: an IllegalArgumentException naming the block's
     * term and first docid, so a bad stored block fails its own query or
     * check as a clean error instead of an allocation the JVM cannot
-    * survive. */
-  private def corrupt(b: Block, what: String): Nothing =
+    * survive. `what` is built only on failure, so the cursor's
+    * per-posting methods stay small enough to inline. */
+  private def corrupt(b: BlockRow, what: => String): Nothing =
     throw new IllegalArgumentException(
-      s"corrupt posting block term=${b.term} min_docid=${b.minDocid}: $what")
+      s"corrupt posting block term=${b.term} min_docid=${b.min_docid}: $what")
 
-  /** A posting's tf, checked before anything is allocated or looped
-    * for it: at most the bytes left in the position stream from `pp`,
-    * since every position takes at least one byte. */
-  private def checkPositions(b: Block, tf: Long, pp: Int): Unit =
-    if (tf < 0 || tf > b.pos.length - pp)
-      corrupt(b, s"tf $tf exceeds the ${b.pos.length - pp} bytes left in " +
-        "the position stream")
+  /** The one reader of a block's streams: a cursor over its postings,
+    * and an iterator whose `next` is a decoder's view of each posting.
+    * [[advance]] reads the next posting's docid, tf and len; a view that
+    * reads positions says so, and then reads exactly tf occurrences with
+    * [[position]]; one that does not never touches the position stream
+    * (the reference reads .frq without .prx the same way: TermDocs vs
+    * TermPositions, SegmentTermDocs.cs:30 vs SegmentTermPositions.cs:28). */
+  private abstract class Cursor[T](b: BlockRow) extends Iterator[T] {
+    private var i = 0
+    private var dp = 0
+    private var lp = 0
+    /** The read offset in the position stream. */
+    protected var pp = 0
+    /** Where the last [[vlong]] ended. */
+    private var at = 0
+    private var tfs = 0L
+    private var prevPos = 0L
+    protected var docid: Long = b.min_docid
+    protected var tf = 0L
+    protected var len = 0L
+    /** The payload of the occurrence [[position]] read last; 1.0f when
+      * it stored none. */
+    protected var payload = 1.0f
+
+    final override def hasNext: Boolean = i < b.n
+
+    private def vlong(s: Array[Byte], p0: Int, stream: String): Long = {
+      var p = p0
+      var v = 0L
+      var shift = 0
+      var c = 0
+      // s(p)'s own bounds check finds a stream cut short (a compare per
+      // byte made the decoders 10-25% slower in a microbenchmark)
+      try {
+        do {
+          c = s(p); p += 1
+          v |= (c & 0x7fL) << shift
+          shift += 7
+        } while ((c & 0x80) != 0)
+      } catch {
+        case _: ArrayIndexOutOfBoundsException =>
+          corrupt(b, s"the $stream stream ends inside posting $i, at " +
+            s"byte ${s.length}")
+      }
+      at = p
+      v
+    }
+
+    protected final def advance(positions: Boolean): Unit = {
+      val code = vlong(b.docs, dp, "docs"); dp = at
+      docid += code >>> 1
+      tf =
+        if ((code & 1L) == 1L) 1L
+        else { val t = vlong(b.docs, dp, "docs"); dp = at; t }
+      // the tfs of a block add up to its sum_tf: no tf may pass what is
+      // left of it, and the last one must reach it
+      if (tf < 0 || tf > b.sum_tf - tfs)
+        corrupt(b,
+          s"tf $tf exceeds the ${b.sum_tf - tfs} left of sum_tf ${b.sum_tf}")
+      // checked before anything is allocated or looped for it: every
+      // position takes at least one byte
+      if (positions && tf > b.pos.length - pp)
+        corrupt(b, s"tf $tf exceeds the ${b.pos.length - pp} bytes left in " +
+          "the position stream")
+      tfs += tf
+      len = vlong(b.lens, lp, "lens"); lp = at
+      i += 1
+      if (i == b.n && tfs != b.sum_tf)
+        corrupt(b, s"tfs sum to $tfs, not to sum_tf ${b.sum_tf}")
+      prevPos = 0L
+    }
+
+    /** The current posting's next position; its payload goes to
+      * [[payload]]. */
+    protected final def position(): Int = {
+      val c = vlong(b.pos, pp, "pos"); pp = at
+      prevPos += c >>> 1
+      payload =
+        if ((c & 1L) == 1L) {
+          val bits = vlong(b.pos, pp, "pos"); pp = at
+          java.lang.Float.intBitsToFloat(bits.toInt)
+        } else 1.0f
+      prevPos.toInt
+    }
+  }
 
   /** Decode to raw postings (position blobs sliced, never materialized
     * as ints) — the merge path's decode: re-encoding concatenates the
     * slices straight back. */
-  def decodeRaw(b: Block): Iterator[RawPosting] = new Iterator[RawPosting] {
-    private var i = 0
-    private var dp = 0
-    private var lp = 0
-    private var pp = 0
-    private var docid = b.minDocid
-    override def hasNext: Boolean = i < b.n
-    override def next(): RawPosting = {
-      val (code, dp1) = readVLong(b.docs, dp); dp = dp1
-      docid += (code >>> 1)
-      val tf =
-        if ((code & 1L) == 1L) 1L
-        else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
-      val (len, lp1) = readVLong(b.lens, lp); lp = lp1
-      checkPositions(b, tf, pp)
-      val start = pp
-      var k = 0L
-      while (k < tf) {
-        val (code, p1) = readVLong(b.pos, pp); pp = p1
-        if ((code & 1L) == 1L) { val (_, p2) = readVLong(b.pos, pp); pp = p2 }
-        k += 1
+  def decodeRaw(b: BlockRow): Iterator[RawPosting] =
+    new Cursor[RawPosting](b) {
+      override def next(): RawPosting = {
+        advance(positions = true)
+        val start = pp
+        var k = 0L
+        while (k < tf) { position(); k += 1 }
+        RawPosting(b.term, docid, tf, len,
+          java.util.Arrays.copyOfRange(b.pos, start, pp))
       }
-      i += 1
-      RawPosting(b.term, docid, tf, len,
-        java.util.Arrays.copyOfRange(b.pos, start, pp))
     }
-  }
 
   /** Scoring-only decode: (docid, tf, len) with the position stream
     * never touched — BM25 needs nothing else, so the hot term/boolean
-    * scoring path skips the per-posting positions allocation entirely
-    * (the reference reads .frq without .prx the same way: TermDocs vs
-    * TermPositions, SegmentTermDocs.cs:30 vs SegmentTermPositions.cs:28). */
-  def decodeScoring(b: Block): Iterator[(Long, Long, Long)] =
-    new Iterator[(Long, Long, Long)] {
-      private var i = 0
-      private var dp = 0
-      private var lp = 0
-      private var docid = b.minDocid
-      private var tfs = 0L
-      override def hasNext: Boolean = i < b.n
+    * scoring path skips the per-posting positions allocation entirely. */
+  def decodeScoring(b: BlockRow): Iterator[(Long, Long, Long)] =
+    new Cursor[(Long, Long, Long)](b) {
       override def next(): (Long, Long, Long) = {
-        val (code, dp1) = readVLong(b.docs, dp); dp = dp1
-        docid += (code >>> 1)
-        val tf =
-          if ((code & 1L) == 1L) 1L
-          else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
-        // the tfs of a block add up to its sum_tf: no tf may pass what
-        // is left of it, and the last one must reach it
-        if (tf < 0 || tf > b.sumTf - tfs)
-          corrupt(b, s"tf $tf exceeds the ${b.sumTf - tfs} left of sum_tf ${b.sumTf}")
-        tfs += tf
-        val (len, lp1) = readVLong(b.lens, lp); lp = lp1
-        i += 1
-        if (i == b.n && tfs != b.sumTf)
-          corrupt(b, s"tfs sum to $tfs, not to sum_tf ${b.sumTf}")
-        (docid, tf, len)
+        advance(positions = false); (docid, tf, len)
       }
     }
 
   /** Decode only (docid, len) pairs — skips position materialization
     * (doc-length derivation from blocks). */
-  def decodeDocLens(b: Block): Iterator[(Long, Long)] =
-    new Iterator[(Long, Long)] {
-      private var i = 0
-      private var dp = 0
-      private var lp = 0
-      private var docid = b.minDocid
-      override def hasNext: Boolean = i < b.n
+  def decodeDocLens(b: BlockRow): Iterator[(Long, Long)] =
+    new Cursor[(Long, Long)](b) {
       override def next(): (Long, Long) = {
-        val (code, dp1) = readVLong(b.docs, dp); dp = dp1
-        docid += (code >>> 1)
-        if ((code & 1L) == 0L) { val (_, dp2) = readVLong(b.docs, dp); dp = dp2 }
-        val (len, lp1) = readVLong(b.lens, lp); lp = lp1
-        i += 1
-        (docid, len)
+        advance(positions = false); (docid, len)
       }
     }
 
-  def decode(b: Block): Iterator[Posting] = new Iterator[Posting] {
-    private var i = 0
-    private var dp = 0
-    private var lp = 0
-    private var pp = 0
-    private var docid = b.minDocid
-    override def hasNext: Boolean = i < b.n
-    override def next(): Posting = {
-      val (code, dp1) = readVLong(b.docs, dp); dp = dp1
-      docid += (code >>> 1)
-      val tf =
-        if ((code & 1L) == 1L) 1L
-        else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
-      val (len, lp1) = readVLong(b.lens, lp); lp = lp1
-      checkPositions(b, tf, pp)
-      val positions = new Array[Int](tf.toInt)
-      var prevPos = 0L
-      var k = 0
-      while (k < tf) {
-        val (code, pp1) = readVLong(b.pos, pp); pp = pp1
-        if ((code & 1L) == 1L) { val (_, pp2) = readVLong(b.pos, pp); pp = pp2 }
-        prevPos += code >>> 1
-        positions(k) = prevPos.toInt
-        k += 1
+  /** Decode with positions; payload bytes are skipped in-stream. */
+  def decode(b: BlockRow): Iterator[Posting] =
+    new Cursor[Posting](b) {
+      override def next(): Posting = {
+        advance(positions = true)
+        val ps = new Array[Int](tf.toInt)
+        var k = 0
+        while (k < ps.length) { ps(k) = position(); k += 1 }
+        Posting(docid, tf, len, ps)
       }
-      i += 1
-      Posting(docid, tf, len, positions)
     }
-  }
 
   /** A posting with its per-occurrence payloads materialized (1.0f for
     * occurrences that stored none: the reference's
@@ -364,38 +324,17 @@ object Codec {
     * (/root/reference/src/core/Index/SegmentTermPositions.cs:141-176).
     * Only payload queries pay for the float arrays; every other decode
     * skips payload bytes in-stream. */
-  def decodePay(b: Block): Iterator[PostingPay] = new Iterator[PostingPay] {
-    private var i = 0
-    private var dp = 0
-    private var lp = 0
-    private var pp = 0
-    private var docid = b.minDocid
-    override def hasNext: Boolean = i < b.n
-    override def next(): PostingPay = {
-      val (code, dp1) = readVLong(b.docs, dp); dp = dp1
-      docid += (code >>> 1)
-      val tf =
-        if ((code & 1L) == 1L) 1L
-        else { val (t, dp2) = readVLong(b.docs, dp); dp = dp2; t }
-      val (len, lp1) = readVLong(b.lens, lp); lp = lp1
-      checkPositions(b, tf, pp)
-      val positions = new Array[Int](tf.toInt)
-      val payloads = new Array[Float](tf.toInt)
-      var prevPos = 0L
-      var k = 0
-      while (k < tf) {
-        val (c, pp1) = readVLong(b.pos, pp); pp = pp1
-        prevPos += c >>> 1
-        positions(k) = prevPos.toInt
-        payloads(k) =
-          if ((c & 1L) == 1L) {
-            val (bits, pp2) = readVLong(b.pos, pp); pp = pp2
-            java.lang.Float.intBitsToFloat(bits.toInt)
-          } else 1.0f
-        k += 1
+  def decodePay(b: BlockRow): Iterator[PostingPay] =
+    new Cursor[PostingPay](b) {
+      override def next(): PostingPay = {
+        advance(positions = true)
+        val ps = new Array[Int](tf.toInt)
+        val pays = new Array[Float](tf.toInt)
+        var k = 0
+        while (k < ps.length) {
+          ps(k) = position(); pays(k) = payload; k += 1
+        }
+        PostingPay(docid, tf, len, ps, pays)
       }
-      i += 1
-      PostingPay(docid, tf, len, positions, payloads)
     }
-  }
 }

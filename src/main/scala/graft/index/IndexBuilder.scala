@@ -281,14 +281,6 @@ final case class InvertedIndex(
     * read it. */
   def postingsForScoring(terms: Seq[String]): DataFrame =
     live(PostingBlocks.toScoring(blocksFor(terms)))
-
-  /** Payload-materializing variant of [[postingsFor]] — adds the
-    * `payloads` column (parallel to positions), decoded from the
-    * position stream's payload bit; an occurrence that stored none
-    * reads as 1.0f, so an index built without an assigner scores every
-    * payload neutrally. */
-  def postingsForPay(terms: Seq[String]): DataFrame =
-    live(PostingBlocks.toPostingsPay(blocksFor(terms)))
 }
 
 object InvertedIndex {
@@ -445,9 +437,9 @@ object InvertedIndex {
       out.iterator
     }
 
-  /** A row of [[InvertedIndex.preparedBlocks]] as its codec block. */
-  private[graft] def blockOf(r: InternalRow): Codec.Block =
-    Codec.Block(r.getUTF8String(0).toString, r.getInt(1), r.getLong(2),
+  /** A row of [[InvertedIndex.preparedBlocks]] as its block. */
+  private[graft] def blockOf(r: InternalRow): BlockRow =
+    BlockRow(r.getUTF8String(0).toString, r.getInt(1), r.getLong(2),
       r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getBinary(7),
       r.getBinary(8), r.getBinary(9))
 

@@ -17,12 +17,7 @@ final case class BlockRow(
     sum_tf: Long,
     docs: Array[Byte],
     lens: Array[Byte],
-    pos: Array[Byte]) {
-
-  /** This row as the codec's block. */
-  def block: Codec.Block = Codec.Block(term, n, min_docid, max_docid,
-    max_tf, min_len, sum_tf, docs, lens, pos)
-}
+    pos: Array[Byte])
 
 /** Decoded posting row (the logical postings view the query layer sees). */
 final case class PostingRow(
@@ -31,17 +26,6 @@ final case class PostingRow(
     tf: Long,
     len: Long,
     positions: Seq[Int])
-
-/** Posting row with per-occurrence payloads (parallel to positions;
-  * 1.0f where the occurrence stored none) — only payload queries
-  * materialize this shape. */
-final case class PayPostingRow(
-    term: String,
-    docid: Long,
-    tf: Long,
-    len: Long,
-    positions: Seq[Int],
-    payloads: Seq[Float])
 
 /** Posting blocks: the at-rest representation of the inverted lists.
   *
@@ -63,8 +47,6 @@ object PostingBlocks {
   private[index] lazy val BlockEnc = Encoders.product[BlockRow]
   private lazy val PostingEnc: Encoder[PostingRow] =
     Encoders.product[PostingRow]
-  private lazy val PayPostingEnc: Encoder[PayPostingRow] =
-    Encoders.product[PayPostingRow]
   private lazy val ScoringEnc: Encoder[(String, Long, Long, Long)] =
     Encoders.product[(String, Long, Long, Long)]
   private lazy val DocLenEnc: Encoder[(Long, Long)] =
@@ -137,46 +119,24 @@ object PostingBlocks {
           }
         }
         import scala.jdk.CollectionConverters._
-        builders.values.iterator.asScala.map { rb =>
-          val b = rb.build()
-          BlockRow(b.term, b.n, b.minDocid, b.maxDocid, b.maxTf,
-            b.minLen, b.sumTf, b.docs, b.lens, b.pos)
-        }
+        builders.values.iterator.asScala.map(_.build())
       }
       .persist(StorageLevel.DISK_ONLY)
     val blocks = spark.createDataset(runs)(BlockEnc)
       .repartitionByRange(numPartitions, col("term"), col("min_docid"))
       .sortWithinPartitions(col("term"), col("min_docid"))
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[BlockRow] {
-          private var cur: Iterator[Codec.Block] = Iterator.empty
-          override def hasNext: Boolean = cur.hasNext || in.hasNext
-          override def next(): BlockRow = {
-            if (!cur.hasNext) {
-              // gather all consecutive runs of the next term, verify the
-              // docid ranges are disjoint+ascending, stitch + re-chunk
-              val term = in.head.term
-              val termRuns = new scala.collection.mutable.ArrayBuffer[BlockRow]
-              while (in.hasNext && in.head.term == term) termRuns += in.next()
-              var prevMax = -1L
-              termRuns.foreach { r =>
-                require(r.min_docid > prevMax,
-                  s"overlapping runs for term=$term: ${r.min_docid} <= $prevMax")
-                prevMax = r.max_docid
-              }
-              val raw = termRuns.iterator.flatMap { r =>
-                Codec.decodeRaw(r.block)
-              }
-              cur = raw.grouped(Codec.BlockSize)
-                .map(g => Codec.encodeRaw(term, g.iterator).next())
-            }
-            val b = cur.next()
-            BlockRow(b.term, b.n, b.minDocid, b.maxDocid, b.maxTf,
-              b.minLen, b.sumTf, b.docs, b.lens, b.pos)
-          }
-        }
-      }
+      .mapPartitions(it => termRuns(it.buffered)(_.term).flatMap {
+        case (term, rows) =>
+          // runs from distinct input partitions never overlap: one term's
+          // runs, in min_docid order, are its postings in docid order
+          var prevMax = -1L
+          Codec.encodeRaw(term, rows.flatMap { r =>
+            require(r.min_docid > prevMax,
+              s"overlapping runs for term=$term: ${r.min_docid} <= $prevMax")
+            prevMax = r.max_docid
+            Codec.decodeRaw(r)
+          })
+      })
     (blocks, () => { runs.unpersist(blocking = false); () })
   }
 
@@ -190,29 +150,31 @@ object PostingBlocks {
     raw
       .repartitionByRange(numPartitions, col("term"), col("docid"))
       .sortWithinPartitions(col("term"), col("docid"))
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[BlockRow] {
-          override def hasNext: Boolean = in.hasNext
-          override def next(): BlockRow = {
-            val term = in.head.term
-            val chunk = new scala.collection.mutable.ArrayBuffer[Codec.RawPosting](
-              Codec.BlockSize)
-            while (in.hasNext && in.head.term == term &&
-                chunk.size < Codec.BlockSize)
-              chunk += in.next()
-            val b = Codec.encodeRaw(term, chunk.iterator).next()
-            BlockRow(b.term, b.n, b.minDocid, b.maxDocid, b.maxTf,
-              b.minLen, b.sumTf, b.docs, b.lens, b.pos)
-          }
-        }
-      }
+      .mapPartitions(it => termRuns(it.buffered)(_.term).flatMap {
+        case (term, postings) => Codec.encodeRaw(term, postings)
+      })
   }
+
+  /** A term-sorted stream as (term, that term's rows) runs, in order.
+    * Each run reads through `in`, so it must be drained before the next
+    * run is taken. */
+  private def termRuns[T](in: BufferedIterator[T])(term: T => String)
+      : Iterator[(String, Iterator[T])] =
+    new Iterator[(String, Iterator[T])] {
+      override def hasNext: Boolean = in.hasNext
+      override def next(): (String, Iterator[T]) = {
+        val t = term(in.head)
+        (t, new Iterator[T] {
+          override def hasNext: Boolean = in.hasNext && term(in.head) == t
+          override def next(): T = in.next()
+        })
+      }
+    }
 
   /** Decode a block table back to the logical postings view. */
   def toPostings(blocks: DataFrame): DataFrame =
     blocks.as(BlockEnc).flatMap { r =>
-      Codec.decode(r.block)
+      Codec.decode(r)
         .map(p => PostingRow(r.term, p.docid, p.tf, p.len,
           p.positions.toSeq))
     }(PostingEnc).toDF()
@@ -223,28 +185,16 @@ object PostingBlocks {
     * for queries that don't inspect positions. */
   def toScoring(blocks: DataFrame): DataFrame =
     blocks.as(BlockEnc).flatMap { r =>
-      Codec.decodeScoring(r.block)
+      Codec.decodeScoring(r)
         .map { case (docid, tf, len) => (r.term, docid, tf, len) }
     }(ScoringEnc).toDF("term", "docid", "tf", "len")
-
-  /** Payload-materializing decode of a block table — the query path for
-    * payload queries only (everything else uses [[toPostings]], which
-    * skips payload bytes in-stream). */
-  def toPostingsPay(blocks: DataFrame): DataFrame =
-    blocks.as(BlockEnc).flatMap { r =>
-      Codec.decodePay(r.block)
-        .map(p => PayPostingRow(r.term, p.docid, p.tf, p.len,
-          p.positions.toSeq, p.payloads.toSeq))
-    }(PayPostingEnc).toDF()
 
   /** Block table → raw postings (blob positions, no int materialization)
     * — feed straight back into [[fromRaw]] for merges. */
   def toRaw(blocks: DataFrame): Dataset[Codec.RawPosting] = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    blocks.as[BlockRow].flatMap { r =>
-      Codec.decodeRaw(r.block)
-    }
+    blocks.as[BlockRow].flatMap(Codec.decodeRaw)
   }
 
   /** Term dictionary (term, df, cf) straight from block stats — no
@@ -259,9 +209,8 @@ object PostingBlocks {
     * untouched), padded with the zero-length docs (all-stopword turns)
     * from the docs table. */
   def docLensFromBlocks(blocks: DataFrame, docs: DataFrame): DataFrame = {
-    val pairs = blocks.as(BlockEnc).flatMap { r =>
-      Codec.decodeDocLens(r.block)
-    }(DocLenEnc).toDF("docid", "len")
+    val pairs = blocks.as(BlockEnc).flatMap(Codec.decodeDocLens)(DocLenEnc)
+      .toDF("docid", "len")
     docs.select(col("docid"))
       .join(pairs.groupBy(col("docid")).agg(max(col("len")).as("len")),
         Seq("docid"), "left")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.index.{Codec, InvertedIndex}
+import graft.index.{BlockRow, Codec, InvertedIndex}
 
 /** Query execution: AST → (docid, score) DataFrame plans.
   *
@@ -1180,12 +1180,12 @@ object Searcher {
     if (r.term == null)
       Iterator.single(Hit(r.docid, null, 1L, r.len, Array(0), null, r.leaf,
         r.score))
-    else blockHits(Codec.Block(r.term, r.n, r.docid, 0L, 0L, 0L, r.sum_tf,
+    else blockHits(BlockRow(r.term, r.n, r.docid, 0L, 0L, 0L, r.sum_tf,
       r.docs, r.lens, r.pos), what, deleted)
 
   /** The hits of one posting block, decoded as `what` asks, skipping the
     * docs of the sorted delete set `deleted`. */
-  private def blockHits(b: Codec.Block, what: Decode, deleted: Array[Long])
+  private def blockHits(b: BlockRow, what: Decode, deleted: Array[Long])
       : Iterator[Hit] = {
     val all = what match {
       case Freqs => Codec.decodeScoring(b).map { case (d, tf, len) =>

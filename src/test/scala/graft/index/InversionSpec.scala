@@ -78,9 +78,12 @@ class InversionSpec extends AnyFunSuite {
     assert(rows(idx.postings, "term", "docid", "tf", "len", "positions")
       .sortBy(key) ==
       want.map(w => Seq(w._1, w._2, w._3, w._4, w._5)).sortBy(key))
-    val terms = want.map(_._1).distinct
-    assert(rows(idx.postingsForPay(terms), "term", "docid", "positions",
-      "payloads").sortBy(key) ==
+    // payloads, decoded from the block rows, of the live docs
+    val live = docs.map(_._1).toSet
+    val pays = idx.blockTable.as(PostingBlocks.BlockEnc).collect().toSeq
+      .flatMap(b => Codec.decodePay(b).filter(p => live(p.docid))
+        .map(p => Seq(b.term, p.docid, p.positions.toList, p.payloads.toList)))
+    assert(pays.sortBy(key) ==
       want.map(w => Seq(w._1, w._2, w._5, w._6)).sortBy(key))
 
     // dictionary and doc lengths derive from the same block table

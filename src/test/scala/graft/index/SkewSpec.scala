@@ -58,7 +58,7 @@ class SkewSpec extends AnyFunSuite {
       assert(r.getAs[Long]("min_docid") > prevMax,
         "block ranges overlap across reducers")
       prevMax = r.getAs[Long]("max_docid")
-      Codec.decode(Codec.Block(r.getAs[String]("term"),
+      Codec.decode(BlockRow(r.getAs[String]("term"),
         r.getAs[Int]("n"), r.getAs[Long]("min_docid"),
         r.getAs[Long]("max_docid"), r.getAs[Long]("max_tf"),
         r.getAs[Long]("min_len"), r.getAs[Long]("sum_tf"),
