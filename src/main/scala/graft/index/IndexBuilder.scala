@@ -1,6 +1,7 @@
 package graft.index
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.fs.FileStatus
 
@@ -45,7 +46,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * read once, on first use, and held on the driver (the reference keeps
   * the term index and the deleted-docs BitVector in RAM per open
   * reader, TermInfosReader.cs / BitVector.cs), so every Searcher,
-  * Highlight and Wand over it shares them. The same commit point also
+  * Highlight and Wand over it shares them. When its block table is
+  * plain files of at most [[routedBytes]] together, the same job reads
+  * every block too, and the commit point holds them on the driver by
+  * term ([[heldBlocks]]): the reference's RAMDirectory holds the same
+  * segment files as FSDirectory, and a point query folds there with no
+  * Spark job. A larger commit point instead
   * holds the block table as one prepared scan ([[preparedBlocks]]:
   * planned, its Hadoop configuration broadcast, once) and, read by the
   * same job as the dictionary, which of that scan's partitions hold each
@@ -81,9 +87,11 @@ final case class InvertedIndex(
       * [[InvertedIndex.ResidentRows]]; a spec lowers it to run the scan,
       * anti-join and keyword-frame fallbacks on a small corpus. */
     private[graft] val residentRows: Int = InvertedIndex.ResidentRows,
-    /** Bytes of pointed-to block partitions above which a point query
-      * plans its scan instead of reading [[preparedBlocks]]:
-      * [[InvertedIndex.RoutedBytes]]; a spec lowers it. */
+    /** Bytes of block files at or below which the index holds its
+      * blocks ([[heldBlocks]]), and of pointed-to block partitions above
+      * which a point query plans its scan instead of reading
+      * [[preparedBlocks]]: [[InvertedIndex.RoutedBytes]]; a spec lowers
+      * it. */
     private[graft] val routedBytes: Long = InvertedIndex.RoutedBytes) {
 
   /** [[blockTable]] as an Option; kept only for the benchmark program
@@ -101,15 +109,24 @@ final case class InvertedIndex(
   /** The term dictionary held on the driver: every term with its df
     * summed over segments, sorted. None when it has more than
     * [[residentRows]] per-segment rows; callers then scan [[dictRows]]. */
-  lazy val dictionary: Option[InvertedIndex.Dictionary] =
-    resident._1.head.map(InvertedIndex.Dictionary(_))
+  lazy val dictionary: Option[InvertedIndex.Dictionary] = resident.dict
 
   /** The live delete set held on the driver, sorted: Some(empty) when
     * nothing is deleted, None when the set has more than
     * [[residentRows]] rows (then [[live]] anti-joins [[deleted]]). */
   lazy val deletedIds: Option[Array[Long]] =
-    if (deleted.isEmpty) Some(Array.emptyLongArray)
-    else resident._1(2).map(_.map(_._2).distinct.sorted)
+    if (deleted.isEmpty) Some(Array.emptyLongArray) else resident.deletes
+
+  /** The block table's posting blocks held on the driver, by term, when
+    * the table is plain files of at most [[routedBytes]] together: read
+    * by the job that reads the [[dictionary]], in place of the term runs
+    * behind [[partitionsOf]], each block's term the dictionary's own
+    * string. A point query then folds on the driver and plans no scan
+    * ([[graft.search.Searcher.perDoc]]): the reference's RAMDirectory,
+    * which holds the same segment files as FSDirectory (RAMDirectory.cs).
+    * None for a larger or an in-memory table, or past [[residentRows]]
+    * blocks; such an index reads [[preparedBlocks]]. */
+  def heldBlocks: Option[InvertedIndex.HeldBlocks] = resident.blocks
 
   /** The block table as one prepared scan, planned on first use and
     * shared by every query of this commit point: a point query prunes it
@@ -140,8 +157,7 @@ final case class InvertedIndex(
     * per-file scan, each partition's bytes. */
   private def scanFiles(project: DataFrame => DataFrame)
       : (RDD[InternalRow], Option[Array[Long]]) = {
-    def rows(df: DataFrame) = project(df.select(
-      PostingBlocks.BlockEnc.schema.fieldNames.toSeq.map(col): _*))
+    def rows(df: DataFrame) = project(InvertedIndex.blockColumns(df))
       .queryExecution.toRdd
     val spark = blockTable.sparkSession
     blockFiles.filter(_.nonEmpty) match {
@@ -179,33 +195,48 @@ final case class InvertedIndex(
   /** The partitions of [[preparedBlocks]] that hold blocks of any of
     * `terms`, ascending: those whose recorded term runs cover a term.
     * Every partition when the runs were not held (more than
-    * [[residentRows]] of them) or were read over another partition
-    * layout. A term absent from the index may still fall inside a run,
-    * so callers drop terms the dictionary lacks first. */
+    * [[residentRows]] of them, or the job read the blocks instead) or
+    * were read over another partition layout. A term absent from the
+    * index may still fall inside a run, so callers drop terms the
+    * dictionary lacks first. */
   private[graft] def partitionsOf(terms: Iterable[String]): Array[Int] = {
     val parts = preparedBlocks.getNumPartitions
-    termRuns.filter(_.parts == parts)
+    resident.runs.filter(_.parts == parts)
       .fold(Array.range(0, parts))(_.partitionsOf(terms))
   }
 
-  /** Each block partition's term runs ([[InvertedIndex.TermRuns]]). */
-  private lazy val termRuns: Option[InvertedIndex.TermRuns] =
-    resident._1(1).map(InvertedIndex.TermRuns(_, resident._2))
+  /** The block table is plain files of at most [[routedBytes]] together:
+    * its blocks are held ([[heldBlocks]]). */
+  private def holdsBlocks: Boolean =
+    blockFiles.exists(fs => fs.nonEmpty && fs.map(_.getLen).sum <= routedBytes)
 
-  /** The (term, df) dictionary rows, the block partitions' term runs
-    * ([[InvertedIndex.runsOf]] over a term-only scan laid out in the same
-    * partitions as [[preparedBlocks]]: a file scan splits by file size,
-    * not by the columns it reads) and the (null, docid) delete rows, read
-    * together by one job on first use of any; with the term scan's
-    * partition count. The term scan is not kept: it runs once. */
-  private lazy val resident: (Seq[Option[Array[(String, Long)]]], Int) = {
-    val runs = InvertedIndex.runsOf(scanFiles(_.select(col("term")))._1)
-    (InvertedIndex.collectBounded(
-      Seq(InvertedIndex.pairs(dictRows.select(col("term"), col("df"))),
-        runs) ++
-        deleted.toSeq.map(d => InvertedIndex.pairs(
-          d.select(lit(null).cast("string"), col("docid")))),
-      residentRows), runs.getNumPartitions)
+  /** The (term, df) dictionary rows, the (null, docid) delete rows and
+    * either every block row ([[holdsBlocks]]) or the block partitions'
+    * term runs ([[InvertedIndex.runsOf]] over a term-only scan laid out
+    * in the same partitions as [[preparedBlocks]]: a file scan splits by
+    * file size, not by the columns it reads), read together by one job
+    * on first use of any. Neither scan is kept: each runs once. */
+  private lazy val resident: InvertedIndex.Resident = {
+    import InvertedIndex.{HeldBlocks, Dictionary, TermRuns, pairs}
+    type Read = Either[(String, Long), BlockRow]
+    def left(r: RDD[(String, Long)]): RDD[Read] = r.map(Left(_))
+    val runs = Option.unless(holdsBlocks)(
+      InvertedIndex.runsOf(scanFiles(_.select(col("term")))._1))
+    val blocks: RDD[Read] = runs.fold(
+      InvertedIndex.blockColumns(blockTable).queryExecution.toRdd
+        .map(r => Right(InvertedIndex.blockOf(r)): Read))(left)
+    val got = InvertedIndex.collectBounded(
+      Seq(left(pairs(dictRows.select(col("term"), col("df")))), blocks) ++
+        deleted.toSeq.map(d => left(pairs(
+          d.select(lit(null).cast("string"), col("docid"))))),
+      residentRows)
+    def lefts(i: Int) = got.lift(i).flatten.map(_.collect { case Left(p) => p })
+    val dict = lefts(0).map(Dictionary(_))
+    InvertedIndex.Resident(dict,
+      for (d <- dict; bs <- got(1) if runs.isEmpty)
+        yield HeldBlocks(bs.collect { case Right(b) => b }, d),
+      for (r <- runs; rs <- lefts(1)) yield TermRuns(rs, r.getNumPartitions),
+      lefts(2).map(_.map(_._2).distinct.sorted))
   }
 
   /** Drop the rows of deleted docs (deleted docs are skipped at
@@ -290,10 +321,14 @@ object InvertedIndex {
     * not held on the driver. */
   val ResidentRows: Int = 1 << 20
 
-  /** Bytes of pointed-to block partitions at or below which a point query
-    * reads the prepared scan ([[InvertedIndex.preparedBlocks]]), which
-    * reads its partitions whole; above, it plans a scan whose term filter
-    * Parquet applies to row-group statistics. The measured crossover, on
+  /** Bytes of block files at or below which an index holds its blocks
+    * on the driver ([[InvertedIndex.heldBlocks]]), read once per commit
+    * point, and a point query folds there with no job; and bytes of
+    * pointed-to block partitions at or below which a point query of a
+    * larger index reads the prepared scan
+    * ([[InvertedIndex.preparedBlocks]]), which reads its partitions
+    * whole; above, it plans a scan whose term filter Parquet applies to
+    * row-group statistics. The measured crossover, on
     * 4 local cores and a 300k-turn synthetic store of 16 block files of
     * about 3.7 MB each: written with 256 KB row groups, an OR of 1, 2
     * and 4 terms in as many files took 88, 108 and 153 ms (medians of 3
@@ -311,12 +346,14 @@ object InvertedIndex {
   /** A term dictionary on the driver: distinct terms in Spark's string
     * order ([[Utf8Order]]), each with its df summed over segments, so a
     * prefix and a term range are each one contiguous slice. */
-  final class Dictionary private (terms: Array[String], dfs: Array[Long]) {
-    private def search(t: String): Int =
+  final class Dictionary private (private[index] val terms: Array[String],
+      dfs: Array[Long]) {
+    /** `t`'s index in [[terms]], or a negative insertion point. */
+    private[index] def indexOf(t: String): Int =
       java.util.Arrays.binarySearch(terms, t, Utf8Order)
 
     def df(t: String): Option[Long] = {
-      val i = search(t)
+      val i = indexOf(t)
       if (i >= 0) Some(dfs(i)) else None
     }
 
@@ -340,7 +377,7 @@ object InvertedIndex {
 
     /** The terms from `t` on (past it unless `inclusive`). */
     private def from(t: String, inclusive: Boolean): Iterator[(String, Long)] = {
-      val i = search(t)
+      val i = indexOf(t)
       Iterator.range(if (i < 0) -i - 1 else if (inclusive) i else i + 1,
         terms.length).map(j => (terms(j), dfs(j)))
     }
@@ -354,6 +391,47 @@ object InvertedIndex {
       new Dictionary(terms, terms.map(summed))
     }
   }
+
+  /** Posting blocks on the driver, each term's ascending by first docid,
+    * indexed by the [[Dictionary]] they were read with: `from(i)` until
+    * `from(i + 1)` are the blocks of its i-th term, whose string they
+    * share. */
+  final class HeldBlocks private (dict: Dictionary, from: Array[Int],
+      blocks: Array[BlockRow]) {
+    /** The blocks of `t`; none for a term the dictionary lacks. */
+    def apply(t: String): Iterator[BlockRow] = {
+      val i = dict.indexOf(t)
+      if (i < 0) Iterator.empty else Iterator.range(from(i), from(i + 1)).map(blocks)
+    }
+  }
+
+  object HeldBlocks {
+    def apply(rows: Array[BlockRow], dict: Dictionary): HeldBlocks = {
+      val sorted = rows.sorted(Ordering.by((b: BlockRow) => (b.term, b.min_docid))(
+        Ordering.Tuple2(Utf8Order, Ordering.Long)))
+      val terms = dict.terms
+      val from = new Array[Int](terms.length + 1)
+      val held = ArrayBuffer.empty[BlockRow]
+      var j = 0
+      terms.indices.foreach { i =>
+        // a block of a term the dictionary lacks is never asked for
+        while (j < sorted.length && Utf8Order.lt(sorted(j).term, terms(i))) j += 1
+        from(i) = held.size
+        while (j < sorted.length && sorted(j).term == terms(i)) {
+          held += sorted(j).copy(term = terms(i))
+          j += 1
+        }
+      }
+      from(terms.length) = held.size
+      new HeldBlocks(dict, from, held.toArray)
+    }
+  }
+
+  /** What the resident job of an index read: its dictionary, held
+    * blocks, term runs and delete set, each None when not held. */
+  private[index] final case class Resident(dict: Option[Dictionary],
+      blocks: Option[HeldBlocks], runs: Option[TermRuns],
+      deletes: Option[Array[Long]])
 
   /** A keyword field's docids per value, each sorted ascending. */
   final class KeywordDocs private (docs: Map[String, Array[Long]]) {
@@ -437,6 +515,10 @@ object InvertedIndex {
       out.iterator
     }
 
+  /** A block table's [[BlockRow]] columns, in order. */
+  private def blockColumns(df: DataFrame): DataFrame =
+    df.select(PostingBlocks.BlockEnc.schema.fieldNames.toSeq.map(col): _*)
+
   /** A row of [[InvertedIndex.preparedBlocks]] as its block. */
   private[graft] def blockOf(r: InternalRow): BlockRow =
     BlockRow(r.getUTF8String(0).toString, r.getInt(1), r.getLong(2),
@@ -454,8 +536,8 @@ object InvertedIndex {
     * driver receives at most about `cap` rows per RDD. An RDD that
     * fits but had a partition above its share re-reads just those
     * partitions in a second job. */
-  private[index] def collectBounded(rdds: Seq[RDD[(String, Long)]], cap: Int)
-      : Seq[Option[Array[(String, Long)]]] = {
+  private[index] def collectBounded[T: ClassTag](rdds: Seq[RDD[T]], cap: Int)
+      : Seq[Option[Array[T]]] = {
     val all = rdds.head.sparkContext.union(rdds)
     // UnionRDD lays out each frame's partitions in turn
     val owner =
@@ -463,10 +545,9 @@ object InvertedIndex {
     val share = owner.map(i => cap / rdds(i).getNumPartitions).toArray
     def read(parts: Seq[Int], keep: Array[Int]) =
       all.sparkContext.runJob(all,
-        (ctx: TaskContext, it: Iterator[(String, Long)]) => {
+        (ctx: TaskContext, it: Iterator[T]) => {
           val k = keep(ctx.partitionId)
-          val rows =
-            scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+          val rows = ArrayBuffer.empty[T]
           var n = 0L
           while (n <= cap && it.hasNext) {
             val r = it.next()
@@ -481,7 +562,7 @@ object InvertedIndex {
     val over = owner.indices
       .filter(p => fits(owner(p)) && first(p)._2 > share(p))
     // no job for an empty partition list: Spark would still post one
-    val again: Map[Int, (Array[(String, Long)], Long)] =
+    val again: Map[Int, (Array[T], Long)] =
       if (over.isEmpty) Map.empty
       else over.zip(read(over, Array.fill(owner.size)(cap))).toMap
     rdds.indices.map(i => Option.when(fits(i))(owner.indices

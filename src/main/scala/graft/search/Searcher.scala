@@ -54,8 +54,12 @@ import graft.index.{BlockRow, Codec, InvertedIndex}
   * run to run (SURVEY §7 hard-part #1).
   *
   * Per-query fixed cost: a point query ([[topK]] of a term, boolean,
-  * phrase, prefix or keyword-and-term query) is one Spark job with no
-  * exchange. df, prefix and range expansions come from the index's
+  * phrase, prefix or keyword-and-term query) on an index whose block
+  * files fit [[InvertedIndex.RoutedBytes]] runs no Spark job: it folds
+  * on the driver over the blocks the index holds
+  * ([[InvertedIndex.heldBlocks]]) and returns a local relation. On a
+  * larger index it is one Spark job with no exchange. df, prefix and
+  * range expansions come from the index's
   * resident dictionary and deletes from its resident delete set (no
   * dictionary or delete-set job). A keyword leaf of a boolean or DisMax
   * tree tests a string field's doc sets, which the index holds once per
@@ -70,7 +74,12 @@ import graft.index.{BlockRow, Codec, InvertedIndex}
   * A single-task fold of term blocks and held keyword leaves — a term,
   * boolean or DisMax of terms and keywords, a scored or constant
   * multi-term rewrite, a fuzzy query, a phrase, span or payload query
-  * without masks — is served without planning: the index holds its block
+  * without masks — is served without planning. An index whose block
+  * files together fit [[InvertedIndex.RoutedBytes]] holds its blocks on
+  * the driver, read with the dictionary once per commit point: the fold
+  * runs there, over its terms' held blocks, and its rows are a local
+  * relation whose collect starts no job (the reference's RAMDirectory,
+  * RAMDirectory.cs). A larger index holds its block
   * table as one prepared scan ([[InvertedIndex.preparedBlocks]], planned
   * once per commit point) and, read with the dictionary, which of that
   * scan's partitions hold each term ([[InvertedIndex.partitionsOf]]), the
@@ -1214,8 +1223,11 @@ object Searcher {
     * `held` leaves — (leaf, sorted docids, score), a keyword's docs the
     * index holds — add a hit per live doc, as a frame's rows would. A
     * fold of term blocks and held leaves alone over a resident
-    * dictionary and delete set, whose terms' partitions hold at most
-    * [[InvertedIndex.RoutedBytes]], reads the index's prepared scan
+    * dictionary and delete set runs on the driver when the index holds
+    * its blocks ([[InvertedIndex.heldBlocks]]), over its terms' blocks,
+    * and its rows are a local relation: no job. Otherwise, when its
+    * terms' partitions hold at most [[InvertedIndex.RoutedBytes]], it
+    * reads the index's prepared scan
     * ([[InvertedIndex.preparedBlocks]]) pruned to those partitions,
     * coalesced into its one task (an empty one when held leaves point to
     * no partition), and is returned as a DataFrame over that RDD: no
@@ -1250,24 +1262,34 @@ object Searcher {
         docs.iterator.filter(d => java.util.Arrays.binarySearch(ids, d) < 0)
           .map(d => Hit(d, null, 1L, -1L, Array(0), null, leaf, sc))
       }
+    val spark = idx.blockTable.sparkSession
     val routed = (blocks.terms, idx.dictionary, idx.deletedIds) match {
       case (Some(terms), Some(dict), Some(ids)) if one && leaves.isEmpty =>
         // a term the dictionary lacks has no blocks: it reads nothing
-        val present = terms.filter(dict.df(_).isDefined)
-        val parts = idx.partitionsOf(present)
-        val wanted = present.map(UTF8String.fromString).toSet
-        // held leaves need their task even when no partition is pointed to
-        val scan =
-          if (parts.isEmpty && held.nonEmpty)
-            idx.preparedBlocks.sparkContext.parallelize(Seq.empty[InternalRow], 1)
-          else PartitionPruningRDD.create(idx.preparedBlocks, parts.toSet)
-            .coalesce(1)
-        Option.when(idx.bytesOf(parts) <= idx.routedBytes)(
-          idx.blockTable.sparkSession.createDataFrame(new FoldRDD(scan,
-              it => run(it.filter(r => wanted(r.getUTF8String(0))).flatMap(r =>
-                blockHits(InvertedIndex.blockOf(r), what, ids)) ++
-                heldHits(ids))),
-            OutSchema))
+        val present = terms.filter(dict.df(_).isDefined).distinct
+        idx.heldBlocks match {
+          case Some(resident) =>
+            val rows = run(present.iterator.flatMap(resident(_))
+              .flatMap(blockHits(_, what, ids)) ++ heldHits(ids))
+            Some(spark.createDataFrame(rows.map { case (qi, docid, score) =>
+              Row(qi, docid, score) }.toSeq.asJava, OutSchema))
+          case None =>
+            val parts = idx.partitionsOf(present)
+            val wanted = present.map(UTF8String.fromString).toSet
+            // held leaves need their task even when no partition is
+            // pointed to
+            val scan =
+              if (parts.isEmpty && held.nonEmpty)
+                spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+              else PartitionPruningRDD.create(idx.preparedBlocks, parts.toSet)
+                .coalesce(1)
+            Option.when(idx.bytesOf(parts) <= idx.routedBytes)(
+              spark.createDataFrame(new FoldRDD(scan, it => run(
+                  it.filter(r => wanted(r.getUTF8String(0))).flatMap(r =>
+                    blockHits(InvertedIndex.blockOf(r), what, ids)) ++
+                    heldHits(ids))),
+                OutSchema))
+        }
       case _ => None
     }
     lazy val in = foldInput(idx.blockTable.filter(blocks.pred), leaves)

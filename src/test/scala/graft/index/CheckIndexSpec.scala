@@ -52,5 +52,21 @@ class CheckIndexSpec extends AnyFunSuite {
       val name = s"corrupt posting block term=${b.term} min_docid=${b.min_docid}"
       assert(r.violations.exists(_.contains(name)), s"$name in ${r.violations}")
     }
+
+    // served from the blocks the index holds on the driver, a query of
+    // a damaged block fails there with the codec's error; the same
+    // Searcher still answers a query on other terms
+    val idx = SegmentStore.open(spark, root)
+    assert(idx.heldBlocks.isDefined)
+    val s = new graft.search.Searcher(idx)
+    Seq(cut, tf).foreach { b =>
+      val e = intercept[IllegalArgumentException](
+        s.topK(graft.search.TermQ(b.term), 10).collect())
+      assert(e.getMessage.contains(
+        s"corrupt posting block term=${b.term} min_docid=${b.min_docid}"),
+        e.getMessage)
+    }
+    val other = rows.map(_.term).find(t => t != cut.term && t != tf.term).get
+    assert(s.topK(graft.search.TermQ(other), 10).collect().nonEmpty)
   }
 }

@@ -7,8 +7,8 @@ import scala.util.Random
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
   ArrayFilter, ArrayTransform, Expression, MapFromArrays, ZipWith}
-import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec,
-  SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec,
+  LocalTableScanExec, RDDScanExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.{AnalysisException, Row}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
@@ -32,8 +32,10 @@ import graft.model.Transcripts
   * parameters: a point query is one job with no exchange, aggregate or
   * adaptive wrapper, reads no dictionary table, and a same-shape query
   * compiles no new class. A point query of term blocks and held keyword
-  * docs reads the index's prepared block scan, pruned to the partitions
-  * its terms' pointers name, in one task. */
+  * docs folds on the driver over the index's held blocks when its block
+  * files fit the routed bytes, with no job; on a store past them it
+  * reads the index's prepared block scan, pruned to the partitions its
+  * terms' pointers name, in one task. */
 class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkFixture.spark
 
@@ -52,6 +54,17 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val r = SparkFixture.record(body)
     (r.jobs, r.plans)
   }
+
+  /** The summed length of `index`'s block files. */
+  private def blockBytes(index: InvertedIndex): Long =
+    index.blockTable.inputFiles
+      .map(f => new java.io.File(new java.net.URI(f)).length).sum
+
+  /** `index` with its routed bytes one below its block files' total: it
+    * holds no blocks, and a point query whose terms' partitions are
+    * fewer than all reads the prepared scan. */
+  private def prepared(index: InvertedIndex): InvertedIndex =
+    index.copy(routedBytes = blockBytes(index) - 1)
 
   private def isDictScan(p: SparkPlan): Boolean = p match {
     case s: FileSourceScanExec =>
@@ -157,6 +170,8 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def scoreTop(s: Searcher, q: Query, k: Int) =
     s.score(q).orderBy(col("score").desc, col("docid").asc).limit(k)
 
+  private lazy val idxP = prepared(idx)
+
   /** The same corpus in one segment. */
   private lazy val oneSegment = {
     val root = Files.createTempDirectory("graft_plan_one_").toString
@@ -180,6 +195,8 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     SegmentStore.open(spark, root)
   }
 
+  private lazy val tiedP = prepared(tied)
+
   /** Every shape of the benchmark's point-query mix on the tied corpus. */
   private def tiedQueries: Seq[Query] = Seq(
     TermQ("error"),
@@ -195,8 +212,15 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a point query's topK is its fold's k best, as score's top k") {
     val k = 10
-    val cases = Seq(oneSegment, idx, deleted).flatMap(i =>
-      pointQueries.map(i -> _)) ++ tiedQueries.map(tied -> _)
+    // every tied shape folds the held blocks too; the tied corpus's OR
+    // reads every partition, past any routed bytes that hold no blocks,
+    // so only its other shapes can take the prepared scan
+    val tiedRouted = tiedQueries.filter(q => tiedP.bytesOf(
+      tiedP.partitionsOf(termsOf(q, tiedP))) <= tiedP.routedBytes)
+    assert(tiedRouted.size >= tiedQueries.size / 2, s"$tiedRouted")
+    val cases = Seq(oneSegment, idx, deleted).map(prepared).flatMap(i =>
+      pointQueries.map(i -> _)) ++ tiedRouted.map(tiedP -> _) ++
+      tiedQueries.map(tied -> _)
     var tiedAtK = 0
     cases.foreach { case (index, q) =>
       index.dictionary; index.deletedIds
@@ -206,22 +230,91 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(exchanges(Seq(plan)).isEmpty, s"$q\n$plan")
       assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.isEmpty,
         s"$q\n$plan")
-      // a DataFrame over the pruned prepared scan: no plan of its own
-      assert(collect(plan) { case r: RDDScanExec => r }.size == 1 &&
-        fileScans(Seq(plan)) == 0, s"$q\n$plan")
+      // a DataFrame over the pruned prepared scan or the held blocks'
+      // fold: no plan of its own
+      val leaf = collect(plan) {
+        case r: RDDScanExec if index.heldBlocks.isEmpty => r
+        case l: LocalTableScanExec if index.heldBlocks.isDefined => l
+      }
+      assert(leaf.size == 1 && fileScans(Seq(plan)) == 0, s"$q\n$plan")
       val got = ranked(top)
       assert(got.nonEmpty && got == ranked(scoreTop(s, q, k)), s"$q")
       // a tie at the k-th score that the docid order breaks
       val all = s.score(q).collect().map(_.getDouble(1))
-      if ((index eq tied) && got.size == k &&
+      if (((index eq tied) || (index eq tiedP)) && got.size == k &&
           all.count(_ == java.lang.Double.longBitsToDouble(got.last._2)) >
             got.count(_._2 == got.last._2)) tiedAtK += 1
     }
-    assert(tiedAtK >= tiedQueries.size / 2, s"$tiedAtK")
+    assert(tiedAtK >= (tiedQueries.size + tiedRouted.size) / 2, s"$tiedAtK")
+  }
+
+  /** explain's k best of `q`, as (docid, score bits). */
+  private def explainTop(s: Searcher, q: Query, k: Int): Seq[(Long, Long)] =
+    explained(s, q).toSeq.sortBy { case (d, v) => (-v, d) }.take(k)
+      .map { case (d, v) => (d, java.lang.Double.doubleToRawLongBits(v)) }
+
+  test("a store within its routed bytes folds every point query on the driver, with no job") {
+    Seq((idx, idxP, pointQueries), (deleted, prepared(deleted), pointQueries),
+        (tied, tiedP, tiedQueries)).foreach { case (index, prep, queries) =>
+      index.dictionary; index.deletedIds; index.keywordDocs("role")
+      assert(blockBytes(index) <= index.routedBytes)
+      assert(index.heldBlocks.isDefined && prep.heldBlocks.isEmpty)
+      queries.foreach { q =>
+        val s = new Searcher(index)
+        var plan: SparkPlan = null
+        var got = Seq.empty[(Long, Long)]
+        val r = SparkFixture.record {
+          val top = s.topK(q, 10)
+          plan = top.queryExecution.executedPlan
+          got = ranked(top)
+        }
+        assert(r.jobs == 0 && r.tasks == 0, s"$q: ${r.jobs} jobs, ${r.tasks} tasks")
+        // a local relation: no scan of a file or of an RDD
+        assert(collect(plan) { case l: LocalTableScanExec => l }.size == 1 &&
+          collect(plan) { case x: RDDScanExec => x }.isEmpty &&
+          fileScans(Seq(plan)) == 0, s"$q\n$plan")
+        assert(got.nonEmpty, s"$q")
+        assert(got == ranked(new Searcher(prep).topK(q, 10)), s"$q")
+        assert(got == explainTop(s, q, 10), s"$q")
+      }
+    }
+  }
+
+  test("a resident commit point after an append and a delete serves the new docs, none deleted") {
+    val root = Files.createTempDirectory("graft_plan_held_").toString
+    IndexBuilder.buildSegments(spark,
+      Transcripts.synthetic(spark, 400, seed = 7L, partitions = 2), root,
+      numBatches = 2, numPartitions = 2)
+    val before = SegmentStore.open(spark, root)
+    val q = TermQ("error")
+    def docs(index: InvertedIndex): Map[Long, Double] =
+      new Searcher(index).score(q).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val old = docs(before)
+    val base = SegmentStore.latest(root).get.maxDocid + 1
+    IndexBuilder.appendSegment(spark,
+      Transcripts.synthetic(spark, 200, seed = 9L, partitions = 2), root,
+      numPartitions = 2)
+    IndexBuilder.deleteByKeyword(spark, root, "role", "tool")
+    val after = SegmentStore.open(spark, root)
+    assert(after.heldBlocks.isDefined && after.deletedIds.exists(_.nonEmpty))
+    val got = docs(after)
+    val gone = after.storedDocs.filter(col("role") === "tool").select("docid")
+      .collect().map(_.getLong(0)).toSet
+    assert(got.keys.exists(_ >= base) && !got.keys.exists(gone), s"$got")
+    // the scan and anti-join path answers the same, bit for bit
+    assert(got == docs(after.copy(residentRows = 0)))
+    // the earlier commit point still serves what it held
+    assert(docs(before) == old && old.keys.forall(_ < base))
+    // a copy is a commit point of its own: one job reads its blocks again
+    val copy = after.copy()
+    assert(SparkFixture.record(copy.heldBlocks).jobs == 1)
+    assert(!(copy.heldBlocks.get eq after.heldBlocks.get))
+    assert(docs(copy) == got)
   }
 
   test("a warm term query runs one job, a warm two-term boolean two") {
-    val s = new Searcher(idx)
+    val s = new Searcher(idxP)
     val term = TermQ("error")
     val bool = BoolQ(should = Seq(TermQ("error"), TermQ("deploy")))
     // the first run resolves df; the second is what a repeat costs
@@ -233,7 +326,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a routed point query is one job of one task over its terms' partitions") {
-    val pruned = assertRouted(idx)
+    val pruned = assertRouted(idxP)
     assert(pruned == pointQueries.size, s"$pruned")
   }
 
@@ -251,7 +344,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("on a store with deletes every point query still runs one job") {
     assert(deleted.deletedIds.exists(_.nonEmpty))
-    assertRouted(deleted)
+    assertRouted(prepared(deleted))
     // the delete set is applied
     assert(new Searcher(deleted).topK(TermQ(gone), 10).collect().isEmpty)
   }
@@ -474,8 +567,8 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a boolean of two terms and a phrase reads the blocks twice") {
-    idx.dictionary
-    val s = new Searcher(idx)
+    idxP.dictionary
+    val s = new Searcher(idxP)
     def reads(q: Query): (Int, Int) = {
       val plan = s.topK(q, 10).queryExecution.executedPlan
       (collect(plan) {
@@ -544,7 +637,8 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       values.toSeq.sortBy { case (d, v) => (-v, d) }.take(10)
         .map { case (d, v) => (d, java.lang.Double.doubleToRawLongBits(v)) }
     }
-    Seq(idx, oneSegment, deleted, noTool).foreach { index =>
+    val noToolP = prepared(noTool)
+    Seq(idxP, prepared(oneSegment), prepared(deleted), noToolP).foreach { index =>
       // a fresh commit point reads the role docs once, in one job
       val fresh = index.copy()
       fresh.dictionary; fresh.deletedIds
@@ -569,7 +663,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
             case BoolQ(Seq(KeywordQ(_, "nobody"), _), _, _, _) =>
               assert(got.isEmpty, s"$q")
             case BoolQ(Seq(KeywordQ(_, "tool"), _), _, _, _) =>
-              assert(got.isEmpty == (index eq noTool), s"$q")
+              assert(got.isEmpty == (index eq noToolP), s"$q")
             case BoolQ(_, Seq(_, TermQ("zzabsent")), _, _) =>
               assert(got.size == 10 && r.recordsRead == 0, s"$q")
             case _ => assert(got.nonEmpty, s"$q")
@@ -625,7 +719,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           (col("turn_idx") % 4 + 1).cast("int"))),
       root, numBatches = 3, numPartitions = 4)
     IndexBuilder.deleteByKeyword(spark, root, "role", "tool")
-    val index = SegmentStore.open(spark, root)
+    val index = prepared(SegmentStore.open(spark, root))
     val dict = index.dictionary.get.withPrefix("").map(_._1).toSeq
     assert(index.deletedIds.exists(_.nonEmpty))
     // one partition per block file
@@ -668,14 +762,14 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         ranked(top))
     }
     pointQueries.foreach { q =>
-      val bytes = idx.bytesOf(idx.partitionsOf(termsOf(q, idx)))
+      val bytes = idxP.bytesOf(idxP.partitionsOf(termsOf(q, idxP)))
       assert(bytes > 0, s"$q")
-      val (_, scans, rows) = planned(idx, q)
+      val (_, scans, rows) = planned(idxP, q)
       assert(scans == 1 && rows.nonEmpty, s"$q")
       // at the bound the prepared scan, past it a planned one
-      assert(planned(idx.copy(routedBytes = bytes), q) == ((false, 1, rows)),
+      assert(planned(idxP.copy(routedBytes = bytes), q) == ((false, 1, rows)),
         s"$q")
-      assert(planned(idx.copy(routedBytes = bytes - 1), q) == ((true, 0, rows)),
+      assert(planned(idxP.copy(routedBytes = bytes - 1), q) == ((true, 0, rows)),
         s"$q")
     }
   }
@@ -688,7 +782,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Transcripts.synthetic(spark, 400, seed = 7L, partitions = 2), root,
       numBatches = 2, numPartitions = 2)
     IndexBuilder.deleteByKeyword(spark, root, "role", "tool")
-    val index = SegmentStore.open(spark, root)
+    val index = prepared(SegmentStore.open(spark, root))
     assert(index.deletedIds.exists(_.nonEmpty) && index.dictionary.nonEmpty)
     // one partition per block file: the per-file reads, not the fallback
     assert(index.preparedBlocks.getNumPartitions ==
@@ -796,7 +890,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("every span and payload query is one job, with no join or array lambda") {
-    idx.dictionary
+    idxP.dictionary
     val Seq(a, b, c) = runs(13).take(3).map(_._1)
     val queries = Seq(
       SpanFirstQ(a, 8),
@@ -819,7 +913,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case _ => false
     }
     queries.foreach { q =>
-      val s = new Searcher(idx)
+      val s = new Searcher(idxP)
       val (jobs, plans) =
         record(assert(s.topK(q, 10).collect().nonEmpty, s"$q"))
       assert(jobs == 1, s"$q\n${plans.mkString("\n")}")
@@ -854,7 +948,7 @@ class QueryPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         None),
       TermRangeQ(Some("sp"), Some("sq"), true, true, ConstantScore, None),
       TermRangeQ(None, Some("ab"), true, false, AutoRewrite, None)).map { q =>
-      val s = new Searcher(idx)
+      val s = new Searcher(idxP)
       var got = Seq.empty[(Long, Double)]
       val (jobs, _) = record { got = top(s, q) }
       assert(jobs == 1, s"$q")
